@@ -131,7 +131,16 @@ object Extensions {
     * distributed lister; the knob parameterizes the crossover.
     * Set/restore is scoped to `body` — listing happens eagerly inside
     * `spark.read` resolution, so the restored conf never leaks into
-    * query execution. */
+    * query execution.
+    *
+    * Single-threaded assumption: the conf is SESSION-global, so the
+    * set/restore pair is only clean while no other thread plans on the
+    * same session. A serving process that reloads its indexes
+    * ([[TextIndex.loadSegments]], [[IvfIndex.load]]) while HTTP
+    * threads answer searches can plan a concurrent query under the
+    * raised threshold (harmless: it only moves where listing runs) or
+    * interleave two restores and leave the raised value behind —
+    * serialize reloads against each other when that matters. */
   private[graft] def withDriverListing[T](
       spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
     val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
@@ -144,6 +153,47 @@ object Extensions {
       case None    => spark.conf.unset(key)
     }
   }
+
+  /** Collect a small per-request frame ONCE and re-enter it as a local
+    * relation — the search paths' request binding
+    * ([[IvfIndex.resolveProbes]], [[HybridIndex.query]]). Downstream projections over the
+    * bound frame fold into the relation on the driver (no job), and
+    * the values travel through the search plan as DATA: a literal would
+    * be inlined into generated code and recompile every stage it
+    * reaches on every request. Collecting an already-local frame runs
+    * no job. */
+  private[graft] def bindLocal(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** Partition-pruning filter `c IN values` over an int partition
+    * column (IVF cells, term-hash buckets) — the one place a search
+    * plan carries request-derived literals, because only a literal
+    * partition filter prunes files. Written as `array_contains` over
+    * one array literal: file listing evaluates it through a generated
+    * predicate, and an array literal is bound by reference there
+    * (where `IN` inlines each value), so a new probe set reuses the
+    * compiled predicate instead of adding one class per request. */
+  private[graft] def partitionIn(c: String, values: Seq[Int]): Column =
+    array_contains(typedLit(values.toArray), col(c))
+
+  /** `c IN ids` for a request's id set with the set bound BY REFERENCE
+    * when `c` is a long column (Catalyst's InSet): the generated
+    * filter reads the set from its references array instead of
+    * inlining `c == 110L`, so every request reuses one compiled class,
+    * and the predicate still pushes into the parquet reader. Other id
+    * types take the plain `isin` (an int InSet codegens as an inlined
+    * switch anyway). */
+  private[graft] def idsIn(df: DataFrame, c: String,
+      ids: Seq[Long]): Column =
+    df.select(col(c)).schema.head.dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        import org.apache.spark.sql.graft.ColumnBridge
+        ColumnBridge.column(
+          org.apache.spark.sql.catalyst.expressions.InSet(
+            ColumnBridge.expression(col(c)), ids.toSet[Any]))
+      case _ => col(c).isin(ids: _*)
+    }
 
   private[graft] def widen(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
@@ -908,8 +958,8 @@ object Extensions {
       "minCosine must be in (0, 1) — at 0 the zero-norm convention " +
         "differs from the exact form; use cosineNearDups")
     require(nCells >= 2, "nCells must be >= 2")
-    requireNoReserved(emb, Seq("__n", "__u", "__vec", "__cell", "__cent",
-      "__ca", "__cb", "__r"))
+    requireNoReserved(emb, Seq("__n", "__u", "__h", "__vec", "__cell",
+      "__cent", "__ca", "__cb", "__r"))
     val spark = emb.sparkSession
     // unit vectors (via unitF below) feed the FIT only (k-means on the
     // unit sphere groups by direction); scoring always uses the raw
@@ -4147,12 +4197,13 @@ object Extensions {
   }
 
   /** Self-exclusion re-rank of a BM25 branch that asked for kBranch+1
-    * candidates ([[rrfFusion]], [[HybridIndex]]): the query doc is
-    * lexically its own best match but must not be its own candidate.
-    * Whether or not self made the heap, re-ranking the survivors and
-    * cutting at kBranch equals the direct top-kBranch over non-self
-    * candidates — so an oracle can take the direct form. The window
-    * partition is ≤ kBranch+1 rows by construction.
+    * candidates ([[rrfFusion]]): the query doc is lexically its own
+    * best match but must not be its own candidate. Whether or not self
+    * made the heap, re-ranking the survivors and cutting at kBranch
+    * equals the direct top-kBranch over non-self candidates — so an
+    * oracle can take the direct form, and [[HybridIndex.queryByIds]]
+    * does (it drops self before the heap, one window fewer). The
+    * window partition is ≤ kBranch+1 rows by construction.
     */
   private[engine] def deSelfRerank(ranked: DataFrame, idCol: String,
       kBranch: Int): DataFrame = {
@@ -4165,8 +4216,8 @@ object Extensions {
       .select(col("query_id"), col(idCol), col("lex_rank"))
   }
 
-  /** Shared RRF fusion tail ([[rrfFusion]], [[HybridIndex]]): full
-    * outer join of a (query_id, idCol, lex_rank) and a
+  /** Shared RRF fusion tail ([[rrfFusion]], [[HybridIndex]]): the
+    * full-outer union of a (query_id, idCol, lex_rank) and a
     * (query_id, idCol, vec_rank) branch ranking, Σ 1/(rrfK + rank)
     * over the union (absent rank contributes 0), final top-k with
     * ties to the smaller id. Both inputs are |Q|·kBranch-row rank
@@ -4178,7 +4229,19 @@ object Extensions {
     def branch(r: Column): Column =
       when(r.isNotNull, lit(1.0) / (lit(rrfK) + r.cast("double")))
         .otherwise(0.0)
-    val fused = lex.join(dense, Seq("query_id", idCol), "full_outer")
+    // union + per-(query, candidate) max == the full outer join on
+    // (query_id, idCol): each branch ranks a candidate at most once per
+    // query, so a group holds at most one rank per branch. Partitioning
+    // by query_id FIRST satisfies both the grouping and the rank
+    // window below — one exchange where the join paid three
+    val noRank = lit(null).cast("int")
+    val fused = lex.select(col("query_id"), col(idCol), col("lex_rank"),
+        noRank.as("vec_rank"))
+      .unionByName(dense.select(col("query_id"), col(idCol),
+        noRank.as("lex_rank"), col("vec_rank")))
+      .repartition(col("query_id"))
+      .groupBy(col("query_id"), col(idCol))
+      .agg(max("lex_rank").as("lex_rank"), max("vec_rank").as("vec_rank"))
       .withColumn("__rrf", branch(col("lex_rank")) + branch(col("vec_rank")))
     val wFuse = Window.partitionBy("query_id")
       .orderBy(desc("__rrf"), asc(idCol))

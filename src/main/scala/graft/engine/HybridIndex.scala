@@ -5,12 +5,28 @@ import org.apache.spark.sql.functions._
 
 /** Hybrid retrieval over PERSISTED indexes — the production 100 TB
   * search shape: the BM25 branch queries a [[TextIndex]] (term-hash
-  * bucket partitions, query vocabulary becomes literals so the scan
-  * file-prunes), the dense branch queries an [[IvfIndex]] (cell
-  * partitions, probed cells become literals likewise), and the two
-  * ≤ |Q|·kBranch-row rank tables fuse with reciprocal-rank fusion —
-  * the same tail as the in-memory [[Extensions.rrfFusion]], shared
-  * code, shared laws.
+  * bucket partitions), the dense branch queries an [[IvfIndex]] (cell
+  * partitions), and the two ≤ |Q|·kBranch-row rank tables fuse with
+  * reciprocal-rank fusion — the same tail as the in-memory
+  * [[Extensions.rrfFusion]], shared code, shared laws.
+  *
+  * Request resolution (the serving hot path): every per-request
+  * relation is derived ONCE on the driver, from one small collect
+  * each — the query rows, the query vocabulary (distinct (query, term)
+  * pairs and their bucket ids), the IVF probe set — by the same Spark
+  * expressions a plan would run, evaluated over local relations that
+  * the optimizer folds (no job). The search plan then binds those
+  * relations as DATA. The only request-derived literals left are the
+  * partition-pruning sets (probed cells, term buckets), because only a
+  * literal partition filter prunes files, and they never reach
+  * generated code ([[Extensions.partitionIn]]); the query-id lookups
+  * bind their id set by reference ([[Extensions.idsIn]]). Why: a
+  * literal is inlined into generated code, so each request compiled
+  * fresh classes for every stage its ids, terms or cells reached, and
+  * that per-request class working set kept the session's bounded
+  * codegen cache thrashing. Resolved once and bound as data, two
+  * requests on one layout compile identical code (HybridIndexSpec
+  * pins it) and a steady-state search compiles nothing.
   *
   * Both branches scan only PRUNED partitions of their saved layouts;
   * the fusion layer adds no corpus-sized work at all. Under exhaustive
@@ -91,9 +107,9 @@ object HybridIndex {
     * branch. Offset external ids (the catalog entry adds 10^6).
     *
     * Both branch scans file-prune the saved layouts exactly as
-    * [[queryByIds]]'s do — the query vocabulary and probed cells
-    * become literals; the fusion tail is the shared
-    * [[Extensions.rrfFuseRanked]]. Output:
+    * [[queryByIds]]'s do; the query frame is collected once and both
+    * branches resolve from that local relation. The fusion tail is the
+    * shared [[Extensions.rrfFuseRanked]]. Output:
     * (query_id, <text index idCol>, lex_rank, vec_rank, rrf_score,
     * rank ≤ k).
     */
@@ -104,14 +120,16 @@ object HybridIndex {
     require(kBranch >= 1 && k >= 1 && nprobe >= 1 && rrfK >= 1,
       "need kBranch >= 1, k >= 1, nprobe >= 1, rrfK >= 1")
     val idCol = textIndex.idCol
-    val lex = textIndex.query(
-        queries.select(col(queryIdCol).as("query_id"),
-          col(queryTextCol).as("__qtext")),
+    // ONE collect binds the query batch; both branches project the
+    // local relation (folded — no second evaluation of `queries`)
+    val bound = Extensions.bindLocal(queries.select(
+      col(queryIdCol).as("query_id"), col(queryTextCol).as("__qtext"),
+      col(queryVecCol).as("__q")))
+    val lex = textIndex.query(bound.select("query_id", "__qtext"),
         "__qtext", "query_id", kBranch)
       .select(col("query_id"), col(idCol), col("rank").as("lex_rank"))
-    val dense = ivfIndex.query(
-        queries.select(col(queryIdCol).as("query_id"),
-          col(queryVecCol).as("__q")), kBranch, nprobe)
+    val dense = ivfIndex.query(bound.select("query_id", "__q"), kBranch,
+        nprobe)
       .select(col("query_id"), col("neighbor_id").as(idCol),
         col("rank").as("vec_rank"))
     Extensions.rrfFuseRanked(lex, dense, idCol, k, rrfK)
@@ -120,8 +138,10 @@ object HybridIndex {
   /** RRF-fused top-k for query documents that are corpus members
     * (`queryIds` in the shared doc/vec id space): `queryDocs` supplies
     * the query TEXT (usually the documents table), the IVF index looks
-    * up the query VECTORS by the same ids. Self is excluded from both
-    * branches. Output matches [[Extensions.rrfFusion]]:
+    * up the query VECTORS by the same ids — one id-set lookup each,
+    * bound by reference, then resolved as [[query]]'s are. Self is
+    * excluded from both branches. Output matches
+    * [[Extensions.rrfFusion]]:
     * (query_id, <text index idCol>, lex_rank, vec_rank, rrf_score,
     * rank ≤ k).
     */
@@ -132,14 +152,18 @@ object HybridIndex {
     require(queryIds.nonEmpty && kBranch >= 1 && k >= 1 && rrfK >= 1,
       "need queryIds nonempty, kBranch >= 1, k >= 1, rrfK >= 1")
     val idCol = textIndex.idCol
-    val qDocs = queryDocs.filter(col(idCol).isin(queryIds: _*))
+    val qDocs = queryDocs
+      .filter(Extensions.idsIn(queryDocs, idCol, queryIds))
       .select(col(idCol).as("query_id"), col(queryTextCol).as("__qtext"))
-    // kBranch+1 then de-self, exactly as the in-memory form (see
-    // Extensions.deSelfRerank for why the cut is equivalent to direct
-    // non-self top-kBranch)
-    val lex = Extensions.deSelfRerank(
-      textIndex.query(qDocs, "__qtext", "query_id", kBranch + 1),
-      idCol, kBranch)
+    // self drops BEFORE the bounded-heap rank: the direct non-self
+    // top-kBranch, which is what the in-memory form's kBranch+1 heap +
+    // de-self re-rank computes (see Extensions.deSelfRerank) — one
+    // window exchange fewer
+    val lex = Extensions.bm25RankTail(
+        textIndex.scores(qDocs, "__qtext", "query_id")
+          .filter(col(idCol) =!= col("query_id")),
+        "query_id", idCol, kBranch)
+      .select(col("query_id"), col(idCol), col("rank").as("lex_rank"))
     // the IVF query path excludes self already
     val dense = ivfIndex.queryByIds(queryIds, kBranch, nprobe)
       .select(col("query_id"), col("neighbor_id").as(idCol),

@@ -3,7 +3,6 @@ package graft.engine
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Build-once / query-many IVF (inverted-file) similarity index over an
@@ -18,15 +17,19 @@ import org.apache.spark.sql.functions._
   *     cells;
   *   - '''save''': the corpus written parquet-partitioned BY CELL,
   *     beside the quantizer centroids;
-  *   - '''query''': rank centroids per query (tiny broadcast), then
+  *   - '''query''': resolve the probe once on the driver
+  *     ([[IvfIndex.resolveProbes]]: one collect of the query rows, the
+  *     centroid ranking evaluated over a folded local relation), then
   *     read ONLY the probed cells — on the saved layout that is
   *     file-level partition pruning: a 100 TB corpus probed at
   *     nprobe=4 of 256 cells touches ~1.6 TB of files, not 100 TB.
   *
-  * The only data that ever reaches the driver is the probed cell-id
-  * set (≤ queries × nprobe ints): materializing those ids as literals
-  * is exactly what turns the probe into a partition filter the scan
-  * can prune on. Corpus rows never leave the executors.
+  * The only data that ever reaches the driver is the query rows and
+  * the probe set (≤ queries × nprobe rows). The probe rows join the
+  * scan as a local relation — data, so two requests compile the same
+  * code — and only the probed cell ids become literals, as a partition
+  * filter, because that is what lets the scan prune files. Corpus rows
+  * never leave the executors.
   */
 final class IvfIndex private (
     centroids: Seq[(Int, Array[Float])],
@@ -58,7 +61,7 @@ final class IvfIndex private (
     * (query_id, neighbor_id, cosine_sim, rank).
     */
   def queryByIds(queryIds: Seq[Long], k: Int, nprobe: Int): DataFrame =
-    query(corpus.filter(col(idCol).isin(queryIds: _*))
+    query(corpus.filter(Extensions.idsIn(corpus, idCol, queryIds))
       .select(col(idCol).as("query_id"), col(embCol).as("__q")),
       k, nprobe)
 
@@ -67,63 +70,25 @@ final class IvfIndex private (
     */
   def query(queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
     require(k > 0 && nprobe > 0, "k and nprobe must be positive")
-    val spark = corpus.sparkSession
-    val probed = tree match {
-      case Some(tq) =>
-        // tree-mode probes (ADVICE r15): rank candidate cells by the
-        // TREE rule (top-superProbe groups, then their leaves), NOT a
-        // flat scan of all leaves — (a) a row's tree-assigned cell need
-        // not be its flat-nearest leaf, so flat ranking could skip the
-        // cell holding an exact duplicate at small nprobe; prepending
-        // the query's own tree-assigned cell restores the self-cell-
-        // first guarantee the flat layout had; (b) the flat scan was
-        // O(nCells·dim) per query — the very term the tree path cuts.
-        // Probe sets under pruning are a recall heuristic (the knnJoin
-        // contract); ranking here is tree-L2, self cell always first.
-        val probeArr =
-          if (nprobe >= tq.nLeaves)
-            typedLit((0 until tq.nLeaves).toList)
-          else {
-            val self = graft.functions.TreeCells.nearestLeaf(col("__q"),
-              tq.supFlat, tq.leafFlat, tq.groupStart, tq.dim)
-            val pr = graft.functions.TreeCells.probes(col("__q"),
-              tq.supFlat, tq.leafFlat, tq.groupStart, tq.dim, nprobe,
-              tq.superProbeFor(nprobe))
-            slice(array_distinct(concat(array(self), pr)), 1, nprobe)
-          }
-        queries.select(col("query_id"), col("__q"),
-          explode(probeArr).as("__cell"))
-      case None =>
-        val centDf = spark.createDataFrame(centroids)
-          .toDF("__cell", "__centroid")
-        // bounded rank window: the partition is one query crossed with
-        // the BROADCAST centroid table — exactly |centroids| rows, a
-        // build-time constant, never a function of corpus size
-        queries.crossJoin(broadcast(centDf))
-          .withColumn("__cdist",
-            -Extensions.cosine(col("__q"), col("__centroid")))
-          .withColumn("__crank", row_number().over(
-            Window.partitionBy("query_id")
-              .orderBy(asc("__cdist"), asc("__cell"))))
-          .filter(col("__crank") <= nprobe)
-          .select(col("query_id"), col("__q"), col("__cell"))
-    }
-    // the probe set is tiny by construction (queries × nprobe ints);
-    // cell ids must become LITERALS for the corpus scan to prune
-    // partitions — a join key can't prune files
-    val cells = probed.select("__cell").distinct()
-      .collect().map(_.getInt(0)).sorted
+    // the probe is resolved once on the driver (one collect of the
+    // query rows) and bound as a local relation; only the probed cell
+    // ids become literals, because only a partition filter prunes
+    // files. Catalyst also infers the cell filter across the __cell
+    // join onto the probe side: over a computed probe that inferred
+    // filter was a generated Filter with the cells inlined (one new
+    // class per request); over the local relation it folds on the
+    // driver, so no generated code ever sees a cell id
+    val probe = IvfIndex.resolveProbes(queries, centroids, tree, nprobe,
+      (q, c) => -Extensions.cosine(q, c))
     // norms hoisted to one per-row column (the knnJoin/annIvf
     // optimization): cosine() would refold |e| and |q| per candidate;
     // d / (ne * nq) with precomputed norms is the identical op
     // sequence, so scores are bit-unchanged (annIvf parity spec)
-    val probedN = probed.withColumn("__nq",
-      sqrt(Extensions.dot(col("__q"), col("__q"))))
-    corpus.filter(col("__cell").isin(cells.toSeq.map(Integer.valueOf): _*))
+    corpus.filter(Extensions.partitionIn("__cell", probe.cells))
       .select(col(idCol).as("neighbor_id"), col(embCol).as("__e"),
         sqrt(Extensions.dot(col(embCol), col(embCol))).as("__ne"),
         col("__cell"))
-      .join(broadcast(probedN), Seq("__cell"))
+      .join(broadcast(probe.probed), Seq("__cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(when(col("__ne") =!= 0 && col("__nq") =!= 0,
@@ -218,6 +183,72 @@ final class IvfIndex private (
 
 object IvfIndex {
 
+  /** A query batch's probe set, resolved once on the driver: `queries`
+    * is the bound (query_id, __q) local relation, `probed` the local
+    * (query_id, __q, __nq, __cell) rows, one per probed cell, and
+    * `cells` the sorted distinct probed cell ids. */
+  private[engine] final case class ResolvedProbes(queries: DataFrame,
+      probed: DataFrame, cells: Seq[Int])
+
+  /** The probe rule shared by [[IvfIndex.query]] and
+    * [[IvfPqIndex.query]]: ONE collect binds the query rows, then one
+    * projection over the local relation — folded by the optimizer, no
+    * job — evaluates each query's probed cells with Spark expressions:
+    *
+    *   - flat: (`dist(__q, centroid)`, cell) structs sorted ascending,
+    *     first nprobe — Spark's double ordering, ties to the lower
+    *     cell, the order of the former per-query rank window;
+    *   - tree: the query's own tree-assigned cell first, then the
+    *     two-level probes (ADVICE r15) — a row's tree-assigned cell
+    *     need not be its flat-nearest leaf, so flat ranking could skip
+    *     the cell holding an exact duplicate at small nprobe; probe
+    *     sets under pruning are a recall heuristic (the knnJoin
+    *     contract), self cell always first; `nprobe >= nLeaves` probes
+    *     every leaf.
+    *
+    * `__nq = sqrt(dot(__q, __q))` rides along, so scoring needs no
+    * per-candidate query norm. */
+  private[engine] def resolveProbes(queries: DataFrame,
+      centroids: Seq[(Int, Array[Float])],
+      tree: Option[Extensions.TreeQuantizer], nprobe: Int,
+      dist: (org.apache.spark.sql.Column, org.apache.spark.sql.Column)
+        => org.apache.spark.sql.Column): ResolvedProbes = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DoubleType, IntegerType,
+      StructField, StructType}
+    val bound = Extensions.bindLocal(
+      queries.select(col("query_id"), col("__q")))
+    val probeCells = tree match {
+      case Some(tq) if nprobe >= tq.nLeaves =>
+        typedLit((0 until tq.nLeaves).toList)
+      case Some(tq) =>
+        val self = graft.functions.TreeCells.nearestLeaf(col("__q"),
+          tq.supFlat, tq.leafFlat, tq.groupStart, tq.dim)
+        val pr = graft.functions.TreeCells.probes(col("__q"),
+          tq.supFlat, tq.leafFlat, tq.groupStart, tq.dim, nprobe,
+          tq.superProbeFor(nprobe))
+        slice(array_distinct(concat(array(self), pr)), 1, nprobe)
+      case None =>
+        val ranked = array_sort(array(centroids.sortBy(_._1).map {
+          case (cell, c) =>
+            struct(dist(col("__q"), typedLit(c)).as("d"), lit(cell).as("c"))
+        }: _*))
+        transform(slice(ranked, 1, nprobe), _.getField("c"))
+    }
+    val rows = bound.select(col("query_id"), col("__q"),
+        sqrt(Extensions.dot(col("__q"), col("__q"))).as("__nq"),
+        probeCells)
+      .collect().toSeq.flatMap { r =>
+        Option(r.getSeq[Any](3)).getOrElse(Nil)
+          .collect { case c: Int => Row(r.get(0), r.get(1), r.get(2), c) }
+      }
+    val probed = bound.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*),
+      StructType(bound.schema.fields ++ Seq(StructField("__nq", DoubleType),
+        StructField("__cell", IntegerType, nullable = false))))
+    ResolvedProbes(bound, probed, rows.map(_.getInt(3)).distinct.sorted)
+  }
+
   /** Fit the coarse quantizer and assign every corpus row to its cell.
     * Below [[Extensions.treeCellThreshold]] cells: a 1-in-4 hash-sample
     * MLlib fit (falling back to the full corpus when the sample is
@@ -271,7 +302,7 @@ object IvfIndex {
     require(nCells > 0 && nCells < Extensions.treeCellThreshold,
       "buildLocalFit is the flat-mode path; tree mode already fits locally")
     val clash = emb.columns.toSet
-      .intersect(Set("__vec", "__cell", "__q", "__e"))
+      .intersect(Set("__vec", "__cell", "__q", "__e", "__h"))
     require(clash.isEmpty,
       s"input uses reserved internal column names: ${clash.mkString(", ")}")
     val sample = emb
@@ -1305,66 +1336,40 @@ final class IvfPqIndex private[engine] (
   private def codesDf = IvfIndex.codesWithEpochs(spark, path)
 
   def queryByIds(queryIds: Seq[Long], k: Int, nprobe: Int,
-      refineFactor: Int = 8): DataFrame =
-    query(cellsDf.filter(col(idCol).isin(queryIds: _*))
+      refineFactor: Int = 8): DataFrame = {
+    val cells = cellsDf
+    query(cells.filter(Extensions.idsIn(cells, idCol, queryIds))
       .select(col(idCol).as("query_id"), col(embCol).as("__q")),
       k, nprobe, refineFactor)
+  }
 
   /** `queries` must carry (query_id, __q: array<float>). */
   def query(queries: DataFrame, k: Int, nprobe: Int,
       refineFactor: Int): DataFrame = {
     require(k > 0 && nprobe > 0 && refineFactor > 0,
       "k, nprobe and refineFactor must be positive")
-    // tree-built indexes rank probes by the TREE rule with the
-    // self-cell prepended (the IvfIndex.query tree branch, ADVICE r15)
-    val probed = tree match {
-      case Some(tq) =>
-        val probeArr =
-          if (nprobe >= tq.nLeaves)
-            typedLit((0 until tq.nLeaves).toList)
-          else {
-            val self = graft.functions.TreeCells.nearestLeaf(col("__q"),
-              tq.supFlat, tq.leafFlat, tq.groupStart, tq.dim)
-            val pr = graft.functions.TreeCells.probes(col("__q"),
-              tq.supFlat, tq.leafFlat, tq.groupStart, tq.dim, nprobe,
-              tq.superProbeFor(nprobe))
-            slice(array_distinct(concat(array(self), pr)), 1, nprobe)
-          }
-        queries.select(col("query_id"), col("__q"),
-          explode(probeArr).as("__cell"))
-      case None =>
-        val centDf = spark.createDataFrame(centroids)
-          .toDF("__cell", "__centroid")
-        // bounded rank window — |centroids| rows per query (IvfIndex)
-        queries.crossJoin(broadcast(centDf))
-          .withColumn("__cdist",
-            Extensions.pqSqDist(col("__q"), col("__centroid")))
-          .withColumn("__crank", row_number().over(
-            Window.partitionBy("query_id")
-              .orderBy(asc("__cdist"), asc("__cell"))))
-          .filter(col("__crank") <= nprobe)
-          .select(col("query_id"), col("__q"), col("__cell"))
-    }
-    // probed cell ids as LITERALS → file-level pruning on BOTH the
-    // codes scan and the re-rank's cells scan
-    val cells = probed.select("__cell").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val cellLits = cells.toSeq.map(Integer.valueOf)
+    // the shared driver-resolved probe (IvfIndex.resolveProbes), ranked
+    // by squared L2 on flat indexes; probed cell ids as LITERALS →
+    // file-level pruning on BOTH the codes scan and the re-rank's
+    // cells scan
+    val probe = IvfIndex.resolveProbes(queries, centroids, tree, nprobe,
+      Extensions.pqSqDist)
     val adc = graft.functions.PqOps.pqAdc(col("__q"), col("codes"),
       codebook)
-    val shortlist = codesDf.filter(col("__cell").isin(cellLits: _*))
+    val shortlist = codesDf
+      .filter(Extensions.partitionIn("__cell", probe.cells))
       .select(col(idCol).as("neighbor_id"), col("codes"), col("__cell"))
-      .join(broadcast(probed), Seq("__cell"))
+      .join(broadcast(probe.probed), Seq("__cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(adc, 6).as("adc_dist"))
       .transform(Extensions.topKBy(_, "query_id", "neighbor_id",
         "adc_dist", k * refineFactor, smallestFirst = true))
-    val full = cellsDf.filter(col("__cell").isin(cellLits: _*))
+    val full = cellsDf.filter(Extensions.partitionIn("__cell", probe.cells))
       .select(col(idCol).as("neighbor_id"), col(embCol).as("__e"))
     shortlist.select(col("query_id"), col("neighbor_id"))
       .join(full, Seq("neighbor_id"))
-      .join(queries.select(col("query_id"), col("__q")), Seq("query_id"))
+      .join(probe.queries, Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(Extensions.pqSqDist(col("__e"), col("__q")), 6)
           .as("l2_dist"))

@@ -14,8 +14,23 @@ trait Bm25Queryable {
   def nDocs: Long
   def sumDl: Long
   def idCol: String
-  def query(queries: DataFrame, queryTextCol: String,
-      queryIdCol: String, k: Int): DataFrame
+
+  /** BM25 top-k per query; `queries` carries (queryIdCol,
+    * queryTextCol). Output matches [[Extensions.bm25TopK]]:
+    * (queryIdCol, idCol, bm25, rank). */
+  def query(queries: DataFrame, queryTextCol: String, queryIdCol: String,
+      k: Int = 10): DataFrame = {
+    require(k > 0, "k must be positive")
+    Extensions.bm25RankTail(scores(queries, queryTextCol, queryIdCol),
+      queryIdCol, idCol, k)
+  }
+
+  /** The unranked (queryIdCol, idCol, __score_int) stream [[query]]
+    * ranks: integer micro-unit BM25 per (query, doc). Exposed to the
+    * engine so [[HybridIndex]] can drop self BEFORE the bounded-heap
+    * rank instead of re-ranking a kBranch+1 heap in a window. */
+  private[engine] def scores(queries: DataFrame, queryTextCol: String,
+      queryIdCol: String): DataFrame
 }
 
 /** Build-once / query-many inverted text index — the persisted form of
@@ -34,12 +49,16 @@ trait Bm25Queryable {
   *   - '''save''': postings parquet-partitioned by a term-hash bucket
   *     (`pmod(xxhash64(term), nBuckets)`), global stats beside them;
   *   - '''query''': the query vocabulary is tiny (distinct terms of
-  *     the query batch), so its bucket ids are materialized as
-  *     LITERALS — on the saved layout the scan prunes to the matching
-  *     bucket directories at the FILE level, then `term IN (...)`
-  *     pushes into the parquet row groups. A 100 TB posting store
-  *     queried with 20 terms over 256 buckets touches at most 20
-  *     bucket directories, not the whole store.
+  *     the query batch), so it is resolved ONCE on the driver
+  *     ([[TextIndex.queryVocabulary]]: one collect of the query ids
+  *     and their tokens, then the build's own bucket expression over a
+  *     folded local relation). The (query, term) pairs enter the plan
+  *     as a local relation — data, never generated code — and only the
+  *     bucket ids become literals, as a partition filter: on the saved
+  *     layout the scan prunes to the matching bucket directories at the
+  *     FILE level. A 100 TB posting store queried with 20 terms over
+  *     256 buckets touches at most 20 bucket directories, not the
+  *     whole store, and two requests compile the same code.
   *
   * Only query-derived term strings and bucket ids ever reach the
   * driver; postings stay on the executors. BM25 contributions are
@@ -63,9 +82,8 @@ final class TextIndex private[engine] (
     srcPath: Option[String] = None,
     consumedDeletes: Set[String] = Set.empty) extends Bm25Queryable {
 
-  /** BM25 top-k per query; `queries` carries (queryIdCol, queryTextCol).
-    * Output matches [[Extensions.bm25TopK]]:
-    * (queryIdCol, idCol, bm25, rank).
+  /** BM25 micro-unit scores per (query, doc) — [[Bm25Queryable.query]]
+    * ranks them.
     *
     * When the loaded layout carries committed take-down deletes
     * ([[TextIndex.delete]]), the deleted docs leave the result AND the
@@ -80,32 +98,21 @@ final class TextIndex private[engine] (
     * never-ingested law, TextIndexSpec). Without deletes the plan is
     * unchanged.
     */
-  def query(queries: DataFrame, queryTextCol: String, queryIdCol: String,
-      k: Int = 10): DataFrame = {
-    require(k > 0, "k must be positive")
-    val qterms = queries
-      .select(col(queryIdCol),
-        explode(Extensions.tokens(col(queryTextCol))).as("term"))
-      .filter(col("term") =!= "")
-      .distinct()
-    // the query vocabulary is small by construction; its bucket ids
-    // must become literals for the saved layout to prune partitions —
-    // a join key can't prune files
-    val buckets = qterms
-      .select(pmod(xxhash64(col("term")), lit(nBuckets)).cast("int")
-        .as("__bucket"))
-      .distinct().collect().map(_.getInt(0)).sorted
+  private[engine] def scores(queries: DataFrame, queryTextCol: String,
+      queryIdCol: String): DataFrame = {
+    val vocab = TextIndex.queryVocabulary(queries, queryTextCol,
+      queryIdCol, nBuckets)
     def idfOf(dfCol: org.apache.spark.sql.Column) = log(lit(1.0) +
       (lit(nDocs.toDouble) - dfCol + lit(0.5)) / (dfCol + lit(0.5)))
     val fTf = (col("tf") * lit(2.2)) /
       (col("tf") + lit(1.2) * (lit(0.25) +
         (lit(0.75) * col("dl")) / lit(sumDl.toDouble / nDocs)))
-    val pruned = postings
-      .filter(col("__bucket").isin(buckets.toSeq.map(Integer.valueOf): _*))
-    val scored = deleted match {
+    val pruned =
+      postings.filter(Extensions.partitionIn("__bucket", vocab.buckets))
+    deleted match {
       case None =>
         pruned
-          .join(broadcast(qterms), "term")
+          .join(broadcast(vocab.pairs), "term")
           .withColumn("__contrib",
             round(idfOf(col("df")) * fTf * lit(1000000.0)).cast("long"))
           .groupBy(col(queryIdCol), col(idCol))
@@ -125,23 +132,22 @@ final class TextIndex private[engine] (
         // stream — same integers (count of deleted postings per term;
         // a term with none counts 0, the old coalesce(_, 0L)) — and
         // the deleted rows drop AFTER the count, BEFORE the per-query
-        // fan-out (counting after the qterms fan-out would multiply
+        // fan-out (counting after the pairs fan-out would multiply
         // the correction by the number of queries sharing the term).
         val delKeyed = del.withColumnRenamed("__del_id", idCol)
         pruned
-          .join(broadcast(qterms.select("term").distinct()), "term")
+          .join(broadcast(vocab.terms), "term")
           .join(delKeyed.withColumn("__del", lit(1)), Seq(idCol), "left")
           .withColumn("__df_del", count(col("__del")).over(
             org.apache.spark.sql.expressions.Window.partitionBy("term")))
           .filter(col("__del").isNull)
-          .join(broadcast(qterms), "term")
+          .join(broadcast(vocab.pairs), "term")
           .withColumn("__contrib",
             round(idfOf(col("df") - col("__df_del")) * fTf *
               lit(1000000.0)).cast("long"))
           .groupBy(col(queryIdCol), col(idCol))
           .agg(sum("__contrib").as("__score_int"))
     }
-    Extensions.bm25RankTail(scored, queryIdCol, idCol, k)
   }
 
   /** Persist: postings partitioned by term-hash bucket + 1-row stats.
@@ -291,9 +297,9 @@ final class TextIndex private[engine] (
   * every probed term, across all segments.
   *
   * Trade vs [[TextIndex]]: no rebuild on append (the point), one extra
-  * per-term aggregation at query time (over the already-pruned
-  * postings — small). Scores are IDENTICAL to a fresh full build
-  * (TextIndexSpec pins it).
+  * per-term count at query time (a window over the already-pruned
+  * postings of the query terms). Scores are IDENTICAL to a fresh full
+  * build (TextIndexSpec pins it).
   */
 final class SegmentedTextIndex private[engine] (
     val nDocs: Long,
@@ -303,52 +309,44 @@ final class SegmentedTextIndex private[engine] (
     val nBuckets: Int,
     deleted: Option[DataFrame] = None) extends Bm25Queryable {
 
-  /** BM25 top-k; same output as [[TextIndex.query]]. Take-down
-    * deletes are simpler here than on the plain index: the segmented
-    * layout derives `df` from the probed postings at query time, so
-    * excluding deleted docs' postings BEFORE that aggregation makes
+  /** BM25 micro-unit scores per (query, doc), as [[TextIndex]]'s.
+    * Take-down deletes are simpler here than on the plain index: the
+    * segmented layout derives `df` from the probed postings at query
+    * time, so excluding deleted docs' postings BEFORE that count makes
     * the correction automatic — with `nDocs`/`sumDl` already adjusted
     * at load, scores equal a fresh build over the survivors bit for
     * bit (the never-ingested law). */
-  def query(queries: DataFrame, queryTextCol: String, queryIdCol: String,
-      k: Int = 10): DataFrame = {
-    require(k > 0, "k must be positive")
-    val qterms = queries
-      .select(col(queryIdCol),
-        explode(Extensions.tokens(col(queryTextCol))).as("term"))
-      .filter(col("term") =!= "")
-      .distinct()
-    val buckets = qterms
-      .select(pmod(xxhash64(col("term")), lit(nBuckets)).cast("int")
-        .as("__bucket"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val matched0 = postings
-      .filter(col("__bucket").isin(buckets.toSeq.map(Integer.valueOf): _*))
-      .join(broadcast(qterms.select("term").distinct()), "term")
-    val matched = deleted match {
-      case None => matched0
-      case Some(del) => matched0.join(
+  private[engine] def scores(queries: DataFrame, queryTextCol: String,
+      queryIdCol: String): DataFrame = {
+    val vocab = TextIndex.queryVocabulary(queries, queryTextCol,
+      queryIdCol, nBuckets)
+    val pruned =
+      postings.filter(Extensions.partitionIn("__bucket", vocab.buckets))
+    val live = deleted match {
+      case None => pruned
+      case Some(del) => pruned.join(
         del.withColumnRenamed("__del_id", idCol), Seq(idCol), "left_anti")
     }
     // global df reconstructed from the pruned postings: complete per
-    // probed term because term→bucket is a pure function. Computed
+    // probed term because term→bucket is a pure function. Counted
     // BEFORE query ids are attached — joining (queryId, term) pairs
     // first would duplicate each posting once per query sharing the
-    // term and inflate df
-    val dfreq = matched.groupBy("term")
-      .agg(count(lit(1)).as("df"))
-    val probed = matched.join(broadcast(qterms), "term")
+    // term and inflate df — as a whole-partition window count, so the
+    // pruned postings are read once and the scoring plan stays ONE
+    // chain of stages (the TextIndex delete path's shape)
     val idf = log(lit(1.0) +
       (lit(nDocs.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val fTf = (col("tf") * lit(2.2)) /
       (col("tf") + lit(1.2) * (lit(0.25) +
         (lit(0.75) * col("dl")) / lit(sumDl.toDouble / nDocs)))
-    val scored = probed.join(broadcast(dfreq), "term")
+    live.join(broadcast(vocab.terms), "term")
+      .withColumn("df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("term")))
+      .join(broadcast(vocab.pairs), "term")
       .withColumn("__contrib",
         round(idf * fTf * lit(1000000.0)).cast("long"))
       .groupBy(col(queryIdCol), col(idCol))
       .agg(sum("__contrib").as("__score_int"))
-    Extensions.bm25RankTail(scored, queryIdCol, idCol, k)
   }
 }
 
@@ -357,6 +355,45 @@ object TextIndex {
   private[engine] def hadoopFs(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** A query batch's vocabulary, resolved once on the driver: the
+    * distinct (query id, term) `pairs` and distinct `terms` as local
+    * relations, and the sorted bucket ids those terms hash to. */
+  private[engine] final case class QueryVocabulary(pairs: DataFrame,
+      terms: DataFrame, buckets: Seq[Int])
+
+  /** Resolve the vocabulary of `queries` with ONE collect — the query
+    * ids and their [[Extensions.tokens]] arrays; a frame already bound
+    * locally folds, no job — then explode, drop empty tokens and
+    * dedupe on the driver, and hash the terms over a local relation
+    * (folded again: the build's own bucket expression, no job). Shared by both layouts' query paths and both delete modes.
+    * Pairs and terms enter the search plan as local relations; only
+    * the bucket ids become literals ([[Extensions.partitionIn]]),
+    * because only a literal partition filter prunes files. */
+  private[engine] def queryVocabulary(queries: DataFrame,
+      queryTextCol: String, queryIdCol: String,
+      nBuckets: Int): QueryVocabulary = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val tokenized = queries
+      .select(col(queryIdCol), Extensions.tokens(col(queryTextCol)))
+    val pairs = tokenized.collect().toSeq.flatMap { r =>
+      if (r.isNullAt(1)) Nil
+      else r.getSeq[String](1).filter(_ != "").map(t => Row(r.get(0), t))
+    }.distinct
+    val termField = StructField("term", StringType, nullable = false)
+    val terms = queries.sparkSession.createDataFrame(
+      java.util.Arrays.asList(pairs.map(_.getString(1)).distinct
+        .map(Row(_)): _*), StructType(Seq(termField)))
+    // the build's bucket rule, evaluated over the bound terms
+    val buckets = terms
+      .select(pmod(xxhash64(col("term")), lit(nBuckets)).cast("int"))
+      .collect().map(_.getInt(0)).distinct.sorted.toSeq
+    QueryVocabulary(
+      queries.sparkSession.createDataFrame(java.util.Arrays.asList(pairs: _*),
+        StructType(Seq(tokenized.schema.fields(0), termField))),
+      terms, buckets)
   }
 
   /** Directory (relative to the index path) holding the LIVE segment

@@ -159,7 +159,10 @@ object ConnectedComponents {
   private def localComponents(sym: DataFrame,
       spark: org.apache.spark.sql.SparkSession): DataFrame = {
     val idType = sym.schema("src").dataType
-    val rows = sym.select(col("src").cast("long"), col("dst").cast("long"))
+    // null endpoints name no node: the distributed loop's equi-joins
+    // drop them, and Row.getLong would read them as node 0
+    val rows = sym.filter(col("src").isNotNull && col("dst").isNotNull)
+      .select(col("src").cast("long"), col("dst").cast("long"))
       .collect()
     val idx = scala.collection.mutable.LongMap.empty[Int]
     val ids = new scala.collection.mutable.ArrayBuffer[Long]()

@@ -109,6 +109,25 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     }
   }
 
+  test("null edge endpoints name no node: the local union-find and the " +
+      "distributed loop agree, and no component leaks into node 0") {
+    val nodes = Seq(0L, 1L, 2L, 3L, 4L, 5L).toDF("id")
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(3L), None), (None, Some(4L)),
+      (None, None), (Some(4L), Some(5L))).toDF("a", "b")
+    val local = ConnectedComponents
+      .components(nodes, edges, "id", "a", "b")
+      .as[(Long, Long)].collect().sorted.toSeq
+    spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
+    val dist =
+      try ConnectedComponents.components(nodes, edges, "id", "a", "b")
+        .as[(Long, Long)].collect().sorted.toSeq
+      finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
+    assert(local == dist)
+    assert(local == Seq((0L, 0L), (1L, 1L), (2L, 1L), (3L, 3L), (4L, 4L),
+      (5L, 4L)))
+  }
+
   test("narrower integral ids (int) take the local path, components " +
       "keep the original column type") {
     val nodes = Seq(1, 2, 3, 4).toDF("id")

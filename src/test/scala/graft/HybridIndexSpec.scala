@@ -314,4 +314,151 @@ class HybridIndexSpec extends AnyFunSuite {
         l.contains("__cell"))
     assert(cells.isDefined, s"no cell-pruned cells scan in:\n$plan")
   }
+
+  // ── driver-resolved request relations ──────────────────────────────
+
+  test("search plans are request-independent: two queryByIds calls with " +
+      "different ids compile the same whole-stage code, carry no " +
+      "query-id literal, and run a pinned number of jobs") {
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.expressions.{InSet, Literal}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val docs = Tables.documents(spark, sf)
+    val jobs = new AtomicInteger()
+    val markers = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("hyb-marker")) match {
+            case Some(m) => markers.put(m)
+            case None    => jobs.incrementAndGet()
+          }
+    }
+    // a marker job's start is delivered after every earlier job start
+    def drain(tag: String): Unit = {
+      val sc = spark.sparkContext
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      var seen = markers.poll(60, TimeUnit.SECONDS)
+      while (seen != null && seen != tag)
+        seen = markers.poll(60, TimeUnit.SECONDS)
+      assert(seen == tag, "listener bus did not deliver the marker")
+    }
+    def search(id: Long): (DataFrame, Int) = {
+      drain(s"hyb-marker-$id-a")
+      jobs.set(0)
+      val df = HybridIndex.queryByIds(savedText, savedIvf, docs, "text",
+        Seq(id), kBranch = 10, k = 10, nprobe = 2)
+      df.collect()
+      drain(s"hyb-marker-$id-b")
+      (df, jobs.get())
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec        => q +: nodes(q.plan)
+      case o => o +: (o.children ++ o.subqueries).flatMap(nodes)
+    }
+    def literals(df: DataFrame): Seq[Any] =
+      nodes(df.queryExecution.executedPlan).flatMap(_.expressions)
+        .flatMap(_.collect {
+          case l: Literal => Seq(l.value)
+          case s: InSet   => s.hset.toSeq
+        }.flatten)
+    // modulo the stage number: adaptive execution numbers stages in
+    // creation order, which the two branch chains can race
+    def stageCode(df: DataFrame): Set[String] =
+      codegenStringSeq(df.queryExecution.executedPlan).map(_._2
+        .replaceAll("(CodegenStage|codegenStageId=)\\d+", "$1")).toSet
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (a, jobsA) = search(317L)
+      val (b, jobsB) = search(442L)
+      assert(rows(a).nonEmpty && rows(b).nonEmpty)
+      assert(stageCode(a).nonEmpty && stageCode(a) == stageCode(b),
+        "the two searches compiled different whole-stage code")
+      for ((df, id) <- Seq((a, 317L), (b, 442L)))
+        assert(!literals(df).exists(_ == id),
+          s"query id $id is a literal of the executed plan")
+      // every job of one search, from request resolution to the fused
+      // collect (22 before the request relations were resolved once)
+      assert(jobsA == 8 && jobsB == 8, s"jobs per search: $jobsA, $jobsB")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a query id absent from the corpus resolves to no request rows: " +
+      "alone it answers nothing, beside a present id it leaves that " +
+      "id's answer unchanged") {
+    val docs = Tables.documents(spark, sf)
+    def run(qs: Seq[Long]) = rows(HybridIndex.queryByIds(savedText,
+      savedIvf, docs, "text", qs, kBranch = 10, k = 10, nprobe = NCells))
+    assert(run(Seq(987654L)).isEmpty)
+    assert(run(Seq(3L, 987654L)) == run(Seq(3L)))
+    assert(run(Seq(3L)).nonEmpty)
+  }
+
+  test("a query doc whose text yields no tokens fuses its dense hits " +
+      "alone: every row dense-only, in the dense branch's order") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val q = 3L
+    val blanked = Tables.documents(spark, sf).withColumn("text",
+      when(col("doc_id") === q, lit("  ")).otherwise(col("text")))
+    val out = HybridIndex.queryByIds(savedText, savedIvf, blanked, "text",
+      Seq(q), kBranch = 10, k = 10, nprobe = NCells)
+      .orderBy("rank").collect()
+    assert(out.nonEmpty)
+    assert(out.forall(_.isNullAt(out.head.fieldIndex("lex_rank"))))
+    assert(out.map(_.getAs[Int]("vec_rank")).toSeq == (1 to out.length))
+    val dense = savedIvf.queryByIds(Seq(q), k = 10, nprobe = NCells)
+      .orderBy("rank").collect().map(_.getAs[Long]("neighbor_id")).toSeq
+    assert(out.map(_.getAs[Long]("doc_id")).toSeq == dense)
+  }
+
+  test("HybridIndex.query over an EMPTY external query frame answers " +
+      "nothing, with the fused schema") {
+    import org.apache.spark.sql.functions.col
+    val docs = Tables.documents(spark, sf)
+    val emb = Tables.embeddings(spark, sf)
+    val none = docs.filter(col("doc_id") < 0)
+      .join(emb.select(col("vec_id").as("doc_id"), col("embedding")),
+        "doc_id")
+      .select(col("doc_id").as("qid"), col("text").as("qtext"),
+        col("embedding").as("qvec"))
+    val out = HybridIndex.query(savedText, savedIvf, none, "qid", "qtext",
+      "qvec", kBranch = 10, k = 10, nprobe = NCells)
+    assert(out.collect().isEmpty)
+    assert(out.columns.toSeq == Seq("query_id", "doc_id", "lex_rank",
+      "vec_rank", "rrf_score", "rank"))
+  }
+
+  test("a plain TextIndex with committed deletes corrects df over the " +
+      "driver-resolved vocabulary: a query batch sharing terms scores " +
+      "exactly like a fresh build over the survivors") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val docs = Tables.documents(spark, sf)
+    val tDir = Files.createTempDirectory("graft-hyb-dfcorr").toString
+    TextIndex.build(docs, "text", "doc_id", nBuckets = 16).save(tDir)
+    val dels = Seq(1L, 2L, 40L)
+    TextIndex.delete(spark, tDir, dels.toDF("doc_id"), "doc_id", "td-1")
+    val twinDir = Files.createTempDirectory("graft-hyb-dfcorr-t").toString
+    TextIndex.build(docs.filter(!col("doc_id").isin(dels: _*)), "text",
+      "doc_id", nBuckets = 16).save(twinDir)
+    // queries share most of their vocabulary, so each shared term's
+    // correction must count once, not once per query
+    val qs = docs.filter(col("doc_id").isin(0L, 1L, 5L))
+      .select(col("doc_id").as("qid"), col("text").as("qtext"))
+    def answer(dir: String) = TextIndex.load(spark, dir)
+      .query(qs, "qtext", "qid", k = 10)
+      .orderBy("qid", "rank").collect().map(_.toString).toSeq
+    val got = answer(tDir)
+    assert(got.nonEmpty)
+    assert(got == answer(twinDir))
+  }
 }
