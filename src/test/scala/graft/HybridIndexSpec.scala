@@ -387,7 +387,7 @@ class HybridIndexSpec extends AnyFunSuite {
         assert(!literals(df).exists(_ == id),
           s"query id $id is a literal of the executed plan")
       // every job of one search, from request resolution to the fused
-      // collect (22 before the request relations were resolved once)
+      // collect
       assert(jobsA == 8 && jobsB == 8, s"jobs per search: $jobsA, $jobsB")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
