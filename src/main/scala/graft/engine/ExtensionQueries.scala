@@ -2448,7 +2448,9 @@ object ExtensionQueries {
     QuerySpec("pq_codes",
       (s, d) => {
         PqOracles.stashCb16(() => Extensions.pqCodebookOf(
-          embeddings(s, d), "embedding", "vec_id", 4, 16, 42L))
+          embeddings(s, d), "embedding", "vec_id",
+          embeddings(s, d).select(size(col("embedding"))).head().getInt(0),
+          4, 16, 42L))
         Extensions.pqQuantize(embeddings(s, d), "embedding",
             "vec_id", m = 4, k = 16)
           .select(col("vec_id"), concat_ws(",", col("codes")).as("codes"),
@@ -2464,7 +2466,9 @@ object ExtensionQueries {
     QuerySpec("pq_topk",
       (s, d) => {
         PqOracles.stashCb16(() => Extensions.pqCodebookOf(
-          embeddings(s, d), "embedding", "vec_id", 4, 16, 42L))
+          embeddings(s, d), "embedding", "vec_id",
+          embeddings(s, d).select(size(col("embedding"))).head().getInt(0),
+          4, 16, 42L))
         Extensions.pqTopK(embeddings(s, d), "embedding",
             "vec_id", queryIds = Seq(0L, 1L, 2L, 3L, 4L), k = 10)
           .orderBy("query_id", "rank")

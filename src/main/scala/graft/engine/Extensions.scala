@@ -1307,7 +1307,7 @@ object Extensions {
     val dim = dimRow.head.getInt(0)
     require(dim % m == 0, s"embedding dim $dim must divide into m=$m " +
       "equal subvectors")
-    val codebook = pqCodebookOf(emb, embCol, idCol, m, k, seed)
+    val codebook = pqCodebookOf(emb, embCol, idCol, dim, m, k, seed)
     // one-pass encode via the native kernels (graft.functions.PqOps —
     // bit-identical to the HOF argmin form they replaced, r11): codes
     // from the per-subspace argmin, recon from the ADC of the row's
@@ -1330,11 +1330,19 @@ object Extensions {
     * the query's distance to the row's m codewords, i.e. the exact L2
     * to the row's RECONSTRUCTION (spec-pinned identity; zero decode
     * materialized). The payoff of [[pqQuantize]]: at 100 TB the scan
-    * reads m small ints per row instead of dim floats, and the
-    * codeword lookups are literal-array `element_at`s inside codegen —
-    * no join against a codebook table, no UDF, no model object.
-    * Returns (query_id, neighbor_id, adc_dist, rank); ties break to
-    * the lower neighbor id. Self-matches are excluded.
+    * reads m small ints per row instead of dim floats.
+    *
+    * Scoring is one [[graft.functions.QueryBatch]] call per corpus
+    * row: the row is encoded ONCE ([[graft.functions.PqOps.encode]]),
+    * and each query scores it with m lookups into its ADC table, built
+    * once on the driver from one ≤|Q|-row collect — the sums
+    * [[graft.functions.PqOps.adc]] forms, in the same order, so the
+    * distances are bit-identical. The per-pair plan it replaces
+    * (`crossJoin(broadcast(queries))`) re-ran the encode once per
+    * (row, query) pair: 319,995 encodes for 64,000 rows × 5 queries,
+    * against 64,000 here. Returns (query_id, neighbor_id, adc_dist,
+    * rank); ties break to the lower neighbor id. Self-matches are
+    * excluded.
     */
   def pqTopK(emb: DataFrame, embCol: String, idCol: String,
       queryIds: Seq[Long], k: Int = 10, m: Int = 4, kCode: Int = 16,
@@ -1354,18 +1362,23 @@ object Extensions {
     require(dim % m == 0, s"embedding dim $dim must divide into m=$m " +
       "equal subvectors")
     // ONE codebook fit serves both the corpus encode and the query
-    // scoring lookups (pqQuantize would refit identically — seeded);
-    // encode and ADC run as the native PqOps kernels (r11)
-    val codebook = pqCodebookOf(emb, embCol, idCol, m, kCode, seed)
-    val coded = emb.select(col(idCol).as("neighbor_id"),
-      graft.functions.PqOps.pqEncode(col(embCol), codebook).as("codes"))
-    val queries = emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(embCol).as("__q"))
-    val adc = graft.functions.PqOps.pqAdc(col("__q"), col("codes"), codebook)
-    val scored = coded.crossJoin(broadcast(queries))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(adc, 6).as("adc_dist"))
+    // lookup tables (pqQuantize would refit identically — seeded)
+    val codebook = pqCodebookOf(emb, embCol, idCol, dim, m, kCode, seed)
+    // one ADC table per query; a query with a null element or the wrong
+    // length gets none (its per-pair ADC was null)
+    val (flat, _, kk, sub) = graft.functions.PqOps.flatten(codebook)
+    val qs = queryRows(emb, embCol, idCol, queryIds)
+    val tables = qs.map { r =>
+      val (x, hasNull) =
+        graft.functions.QueryBatch.decodeCollected(r.getSeq[Any](1))
+      if (x == null || hasNull || x.length != m * sub) null
+      else graft.functions.PqOps.adcTable(x, flat, m, kk, sub)
+    }
+    val scored = scoreEach(emb,
+      graft.functions.PqOps.pqEncode(col(embCol), codebook), idCol,
+      new graft.functions.QueryBatch.PqAdc(qs.map(_.getLong(0)), tables,
+        m, kk),
+      round(col("__p.adc"), 6).as("adc_dist"))
     // bounded-heap ranking, NOT a rank window: the whole point of PQ is
     // scanning m small ints per row at 100 TB — a per-query window sort
     // of every ADC score would throw that away (see topKBy)
@@ -1459,7 +1472,8 @@ object Extensions {
           nearestCellExpr(col(embCol), centroids.map(_._2.toSeq)))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val codebook = pqCodebookOf(emb, embCol, idCol, m, kCode, seed)
+        val codebook = pqCodebookOf(emb, embCol, idCol, dim, m, kCode,
+          seed)
         // expose the fit to the deferred oracle generator (PqOracles):
         // the coarse fit is MLlib-distributed (not refit-reproducible
         // across partitionings), so the twin replays THIS run's fit
@@ -1702,14 +1716,16 @@ object Extensions {
 
   /** The PQ codebook for these params — the single source of truth
     * shared by [[pqQuantize]] (encode) and [[pqTopK]] (ADC scoring):
-    * seeded, sample-fitted, so both paths see identical centers.
+    * seeded, sample-fitted, so both paths see identical centers. `dim`
+    * comes from the caller, which has already read it (no extra job).
     *
     * Fitted DRIVER-SIDE (r11) on a capped deterministic sample: PQ
     * training is a bounded-sample problem at EVERY corpus size (FAISS
     * trains its codebooks in memory on ≤~100k vectors regardless of
     * index size — more sample stops improving a 256-cell subspace
     * quantizer long before that), so the fit collects the `sampleCap`
-    * rows with the smallest xxhash64(id) — one TakeOrdered pass,
+    * rows with the smallest xxhash64(id) — one TakeOrdered pass
+    * ([[pqSample]], primitive float arrays),
     * O(cap) driver memory (cap·dim floats ≈ 4 MB), partition-order
     * independent — and runs seeded kmeans++ and Lloyd locally, the m
     * subspaces in parallel threads. This replaces m distributed MLlib
@@ -1727,20 +1743,10 @@ object Extensions {
     * when one dim is constant/degenerate.
     */
   private[engine] def pqCodebookOf(emb: DataFrame, embCol: String, idCol: String,
-      m: Int, k: Int, seed: Long, sampleCap: Int = 16384,
+      dim: Int, m: Int, k: Int, seed: Long, sampleCap: Int = 16384,
       iters: Int = 8): Seq[Seq[Seq[Float]]] = {
-    val dim = emb.select(size(col(embCol))).head().getInt(0)
     val sub = dim / m
-    // float-cast before collect — the PqOps kernels accept
-    // array<double> columns, so the fit must too (the fitTreeQuantizer
-    // fix, ADVICE r15; no-op cast on float corpora)
-    val sample = emb
-      .select(transform(col(embCol), _.cast("float")).as(embCol),
-        xxhash64(col(idCol)).as("__h"), col(idCol))
-      .orderBy(col("__h"), col(idCol))
-      .limit(sampleCap)
-      .select(col(embCol))
-      .collect().map(_.getSeq[Float](0).toArray)
+    val sample = pqSample(emb, embCol, idCol, sampleCap)
     require(sample.nonEmpty, "cannot fit a PQ codebook on an empty corpus")
     def fitSubspace(j: Int): Seq[Seq[Float]] =
       localKMeans(sample.map(v => v.slice(j * sub, (j + 1) * sub)),
@@ -1761,6 +1767,46 @@ object Extensions {
     // which PqOps.flatten requires (it would throw on a ragged one).
     val kMax = fitted.map(_.size).max
     fitted.map(cb => cb ++ Seq.fill(kMax - cb.size)(cb.last))
+  }
+
+  /** [[pqCodebookOf]]'s fit sample: the `sampleCap` rows with the
+    * smallest (xxhash64(id), id), as float vectors. Collected as
+    * primitive arrays straight from the internal rows (no boxed Seq per
+    * row); an array<double> corpus narrows on the driver with the
+    * `.toFloat` a cast to float applies (the PqOps kernels accept
+    * array<double> columns, so the fit must too — the fitTreeQuantizer
+    * fix, ADVICE r15), and a null element reads as 0, as the boxed
+    * collect unboxed it. */
+  private[engine] def pqSample(emb: DataFrame, embCol: String,
+      idCol: String, sampleCap: Int): Array[Array[Float]] = {
+    val vFloat = emb.schema(embCol).dataType match {
+      case org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.FloatType, _) => true
+      case _ => false
+    }
+    collectInternal(emb
+      .select(col(embCol), xxhash64(col(idCol)).as("__h"), col(idCol))
+      .orderBy(col("__h"), col(idCol))
+      .limit(sampleCap)
+      .select(col(embCol)))
+      .map { r =>
+        val v = r.getArray(0)
+        require(v != null, "cannot fit a PQ codebook on a null vector")
+        Array.tabulate(v.numElements()) { i =>
+          if (v.isNullAt(i)) 0f
+          else if (vFloat) v.getFloat(i) else v.getDouble(i).toFloat
+        }
+      }
+  }
+
+  /** `df.collect()` as the internal rows the plan produced — for
+    * driver-side numeric work that would otherwise unbox every element
+    * of every collected `Row`. Runs as one SQL action, like collect. */
+  private[engine] def collectInternal(df: DataFrame)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+      Some("collect"))(qe.executedPlan.executeCollect())
   }
 
   /** Seeded local kmeans++ + Lloyd over driver-resident points — the
@@ -2026,7 +2072,10 @@ object Extensions {
     * negation is bit-exact in general except for promoting -0.0 to
     * 0.0). `idCol` must be integral; an integer `scoreCol` rides the
     * heap as double, exact below 2^53 (the micro-unit BM25 scores are
-    * ~1e10 at most).
+    * ~1e10 at most). `dedupIds` ranks each (group, id) once, by its
+    * best score (`min` of a smallest-first score; see
+    * [[graft.functions.TopKPairs]]) — the dedup runs inside the heap,
+    * with no grouping exchange before it.
     *
     * Scale shape (the reason this helper exists — see the doctrine at
     * [[graft.engine.Analytics.groupTopK]]): the equivalent
@@ -2039,41 +2088,72 @@ object Extensions {
     */
   private[engine] def topKBy(scored: DataFrame, groupCol: String,
       idCol: String, scoreCol: String, k: Int,
-      smallestFirst: Boolean): DataFrame = {
+      smallestFirst: Boolean, dedupIds: Boolean = false): DataFrame = {
     val score = col(scoreCol).cast("double")
     val ord = if (smallestFirst) negate(score) else score
     val restore = if (smallestFirst) negate(col("__p.ord")) else col("__p.ord")
     scored.groupBy(groupCol)
       .agg(graft.functions.TopKPairs.topKPairs(
-        ord, col(idCol).cast("long"), k).as("__tk"))
+        ord, col(idCol).cast("long"), k, dedupIds).as("__tk"))
       .select(col(groupCol), posexplode(col("__tk")).as(Seq("__rk0", "__p")))
       .select(col(groupCol), col("__p.id").as(idCol),
         restore.as(scoreCol), (col("__rk0") + 1).cast("int").as("rank"))
   }
 
-  /** Brute-force top-k cosine neighbors for a set of query ids:
-    * broadcast the queries, one pass over the corpus, per-query top-k
-    * via the bounded-heap [[graft.functions.TopKPairs]] aggregate (see
-    * [[topKBy]] for why not a rank window). The baseline ANN answer;
-    * exact.
+  /** Brute-force top-k cosine neighbors for a set of query ids: one
+    * pass over the corpus, each row scored against the whole query
+    * batch in ONE [[graft.functions.QueryBatch]] call (its norm folded
+    * once), per-query top-k via the bounded-heap
+    * [[graft.functions.TopKPairs]] aggregate (see [[topKBy]] for why
+    * not a rank window). The baseline ANN answer; exact.
+    *
+    * Runs one ≤|Q|-row collect when the plan is built: the query rows
+    * and their norms are resolved on the driver ([[queryRows]]) and
+    * bound into the scan as one reference object. The per-pair form
+    * it replaces, `crossJoin(broadcast(queries))`, ran the corpus-side
+    * norm once per (row, query) pair — whole-stage codegen defers a
+    * projection into the nested-loop join's loop (639,995 DotF32 calls
+    * for 64,000 rows × 5 queries, against one batched call per row
+    * here). The scalar formula is unchanged, so the scores are
+    * bit-identical.
     */
   def cosineTopK(emb: DataFrame, embCol: String, idCol: String,
       queryIds: Seq[Long], k: Int = 10): DataFrame = {
-    val q = emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(embCol).as("__q"),
-        sqrt(dot(col(embCol), col(embCol))).as("__nq"))
-    val scored = emb
-      .select(col(idCol), col(embCol),
-        sqrt(dot(col(embCol), col(embCol))).as("__ne"))
-      .crossJoin(broadcast(q))
-      .filter(col(idCol) =!= col("query_id"))
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        round(when(col("__ne") =!= 0 && col("__nq") =!= 0,
-          dot(col(embCol), col("__q")) / (col("__ne") * col("__nq")))
-          .otherwise(0.0), 6).as("cosine_sim"))
+    val qs = queryRows(emb, embCol, idCol, queryIds,
+      sqrt(dot(col(embCol), col(embCol))))
+    val vecs = qs.map(r => graft.functions.QueryBatch.decodeCollected(
+      r.getSeq[Any](1)))
+    val batch = new graft.functions.QueryBatch.Cosine(qs.map(_.getLong(0)),
+      vecs.map(_._1), vecs.map(_._2),
+      qs.map(r => r.getAs[java.lang.Double](2)))
+    val p = (f: String) => col(s"__p.$f")
+    val scored = scoreEach(emb, col(embCol), idCol, batch,
+      round(when(p("ne") =!= 0 && p("nq") =!= 0,
+        p("dot") / (p("ne") * p("nq"))).otherwise(0.0), 6).as("cosine_sim"))
     topKBy(scored, "query_id", "neighbor_id", "cosine_sim", k,
       smallestFirst = false)
   }
+
+  /** A search request's ≤|Q| query rows, collected ONCE on the driver:
+    * (id as long, vector, `extra`…) — the extras evaluated by Spark, so
+    * a query-side norm or bucket array is the exact value the per-pair
+    * plan computed. */
+  private def queryRows(emb: DataFrame, embCol: String, idCol: String,
+      queryIds: Seq[Long], extra: Column*): Array[org.apache.spark.sql.Row] =
+    emb.filter(idsIn(emb, idCol, queryIds))
+      .select(col(idCol).cast("long") +: col(embCol) +: extra: _*)
+      .collect()
+
+  /** Every corpus row scored against `batch` in one call, exploded to
+    * (query_id, neighbor_id, score): `score` reads only the exploded
+    * pair `__p`, so nothing corpus-side is evaluated per pair. */
+  private def scoreEach(emb: DataFrame, input: Column, idCol: String,
+      batch: graft.functions.QueryBatch, score: Column): DataFrame =
+    emb.select(col(idCol).as("neighbor_id"),
+        explode(graft.functions.QueryBatch.scoreBatch(input,
+          col(idCol).cast("long"), batch)).as("__p"))
+      .select(col("__p.query_id").cast(emb.schema(idCol).dataType)
+        .as("query_id"), col("neighbor_id"), score)
 
   /** Maximal-marginal-relevance re-rank: diversify each query's
     * cosine top-`kBranch` candidate list down to `k` results by the
@@ -2149,19 +2229,6 @@ object Extensions {
         col("__p.sel_rank").as("sel_rank"))
   }
 
-  /** LSH-bucketed ANN scale path: native sign-random-projection
-    * (SimHash-for-vectors) buckets. Seeded hyperplanes enter the plan as
-    * literals, so the whole bucket assignment is one codegen'd
-    * projection over [[graft.functions.DotF32]] — no model fit, no
-    * MLlib job chain. Each of `numTables` tables packs `bitsPerTable`
-    * hyperplane signs into a bucket id; candidates come from colliding
-    * in ANY table (OR-amplification), then an exact L2 rescore ranks
-    * them. At 100 TB you probe buckets instead of scanning the corpus,
-    * and raise `bitsPerTable` so buckets stay executor-sized (recall per
-    * table ≈ (1 − θ/π)^bits, compensated by adding tables). Returns
-    * (query_id, neighbor_id, l2_dist, rank); deterministic for a fixed
-    * seed.
-    */
   /** The seeded gaussian hyperplane matrix [[annBucketed]] buckets
     * with — the SINGLE generator shared by the operator and the
     * catalog's oracle-SQL builder, so the literals DuckDB re-derives
@@ -2175,43 +2242,56 @@ object Extensions {
       Array.fill(dim)(rnd.nextGaussian().toFloat))
   }
 
+  /** LSH-bucketed ANN scale path: native sign-random-projection
+    * (SimHash-for-vectors) buckets. Seeded hyperplanes ride into the
+    * kernel as one reference object ([[graft.functions.SignBuckets]]) —
+    * no model fit, no MLlib job chain. Each of `numTables` tables packs
+    * `bitsPerTable` hyperplane signs into a bucket id; candidates come
+    * from colliding in ANY table (OR-amplification), then an exact L2
+    * rescore ranks them. At 100 TB you probe buckets instead of
+    * scanning the corpus, and raise `bitsPerTable` so buckets stay
+    * executor-sized (recall per table ≈ (1 − θ/π)^bits, compensated by
+    * adding tables). Returns (query_id, neighbor_id, l2_dist, rank);
+    * deterministic for a fixed seed.
+    *
+    * The query rows, their buckets and |q|² are collected once on the
+    * driver (one ≤|Q|-row collect), and each corpus row computes its
+    * buckets once and tests them against every query inside one
+    * [[graft.functions.QueryBatch]] call: no join, and no
+    * (query_id, neighbor_id) dedup exchange — a pair is scored once
+    * however many tables collide, and the min-l2 dedup a duplicated id
+    * needs runs inside the ranking heap (`dedupIds`). One exchange
+    * remains, the heap's. The l2 formula is the Catalyst expression
+    * the joined plan evaluated, so distances are bit-identical.
+    */
   def annBucketed(emb: DataFrame, embCol: String, idCol: String,
       queryIds: Seq[Long], k: Int = 10, numTables: Int = 4,
       bitsPerTable: Int = 4, seed: Long = 42L): DataFrame = {
     require(numTables > 0 && bitsPerTable > 0 && bitsPerTable <= 62,
       "need numTables > 0 and 0 < bitsPerTable <= 62")
     val dim = emb.select(size(col(embCol))).head().getInt(0)
-    // gaussian hyperplanes, carried into codegen as one reference
-    // object: every bucket id of a row computes inside a single
-    // SignBuckets call (see its scaladoc for why not composed DotF32s)
     val planes = annPlanes(dim, numTables, bitsPerTable, seed)
-    def buckets(v: Column): Column =
-      graft.functions.SignBuckets.signBuckets(v, planes)
-    // queries are driver-known ids: tiny after the isin pushdown, so the
-    // exploded (table, bucket) probe set broadcasts
-    val probes = emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(embCol).as("__q"),
-        posexplode(buckets(col(embCol))).as(Seq("__t", "__b")))
-    val corpus = emb.select(col(idCol).as("neighbor_id"),
-      col(embCol).as("__e"),
-      posexplode(buckets(col(embCol))).as(Seq("__t", "__b")))
-    corpus.join(broadcast(probes), Seq("__t", "__b"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        // exact rescore: |a−b| = sqrt(|a|² + |b|² − 2a·b), all DotF32
-        sqrt(greatest(dot(col("__q"), col("__q")) + dot(col("__e"), col("__e"))
-          - lit(2.0) * dot(col("__q"), col("__e")), lit(0.0))).as("l2"))
-      // a pair colliding in several tables appears once; deduping AFTER
-      // the rescore keeps embedding arrays out of the exchange (the l2
-      // copies are identical, min picks one)
-      .groupBy("query_id", "neighbor_id")
-      .agg(min(col("l2")).as("l2_dist"))
+    val qs = queryRows(emb, embCol, idCol, queryIds,
+      dot(col(embCol), col(embCol)),
+      graft.functions.SignBuckets.signBuckets(col(embCol), planes))
+    val vecs = qs.map(r => graft.functions.QueryBatch.decodeCollected(
+      r.getSeq[Any](1)))
+    val batch = new graft.functions.QueryBatch.SignBucket(
+      qs.map(_.getLong(0)), vecs.map(_._1), vecs.map(_._2),
+      qs.map(r => r.getAs[java.lang.Double](2)),
+      qs.map(r => Option(r.getSeq[Long](3)).map(_.toArray).orNull),
+      planes.flatten.flatten, numTables, bitsPerTable, dim)
+    val p = (f: String) => col(s"__p.$f")
+    // exact rescore: |a−b| = sqrt(|a|² + |b|² − 2a·b)
+    scoreEach(emb, col(embCol), idCol, batch,
+        sqrt(greatest(p("qq") + p("ee") - lit(2.0) * p("qe"), lit(0.0)))
+          .as("l2_dist"))
       // bounded-heap rank, not a window: LSH collisions bound the
       // EXPECTED candidate set, but a degenerate corpus (many identical
       // vectors) can flood a bucket — the heap keeps the rank O(k) per
       // query regardless (see topKBy)
       .transform(topKBy(_, "query_id", "neighbor_id", "l2_dist", k,
-        smallestFirst = true))
+        smallestFirst = true, dedupIds = true))
   }
 
   /** IVF-style ANN: KMeans coarse quantizer (seed-fixed) partitions the

@@ -584,7 +584,7 @@ object IvfIndex {
     require(dim % m == 0, s"embedding dim $dim must divide into m=$m " +
       "equal subvectors")
     val codebook = Extensions.pqCodebookOf(corpus, embCol, idCol,
-      m, kCode, seed)
+      dim, m, kCode, seed)
     val cbRows = for {
       (cb, j) <- codebook.zipWithIndex
       (cent, c) <- cb.zipWithIndex

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** Native product-quantization kernels: per-subspace nearest-codeword
@@ -30,6 +30,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * of IVFPQ ingestion; this form is a branch-free primitive loop
   * (k·dim FMAs per row) inside whole-stage codegen, allocating one
   * int array per row.
+  *
+  * The encode is a per-row kernel, so it never sits on the streamed
+  * side of a nested-loop or multi-match join: codegen would defer it
+  * into the join's loop and re-run it per match (319,995 encodes for
+  * 64,000 rows × 5 queries under `crossJoin(broadcast(queries))`).
+  * A query batch is scored inside one per-row kernel instead
+  * ([[QueryBatch.PqAdc]]: one encode per row, then m lookups per query
+  * into [[adcTable]]s built once on the driver — 64,000 encodes).
   *
   * North-star extension (similarity-search family) — the reference has
   * zero custom functions (reference: src/feature_engineering.py:7).
@@ -93,11 +101,16 @@ object PqOps {
 
   /** Shared encode kernel (interpreted eval AND generated code — see
     * DotF32's companion note on `MODULE$`). Returns null on length
-    * mismatch or null element. */
+    * mismatch or null element. The row is widened to double ONCE
+    * ([[QueryBatch.decode]]) and the k·m codeword scans run over the
+    * primitive copy — the same doubles, so the same codes as reading
+    * each element k times. */
   def encode(v: ArrayData, vFloat: Boolean, cb: Array[Float],
       m: Int, k: Int, sub: Int): ArrayData = {
     if (v.numElements() != m * sub) return null
-    val codes = new Array[Any](m)
+    val x = new Array[Double](m * sub)
+    if (QueryBatch.decode(v, vFloat, x) >= 0) return null
+    val codes = new Array[Int](m)
     var j = 0
     while (j < m) {
       var best = 0
@@ -107,10 +120,7 @@ object PqOps {
         var d = 0.0
         var i = 0
         while (i < sub) {
-          if (v.isNullAt(j * sub + i)) return null
-          val x = if (vFloat) v.getFloat(j * sub + i).toDouble
-                  else v.getDouble(j * sub + i)
-          val t = x - cb(j * k * sub + c * sub + i)
+          val t = x(j * sub + i) - cb(j * k * sub + c * sub + i)
           d += t * t
           i += 1
         }
@@ -120,7 +130,37 @@ object PqOps {
       codes(j) = best
       j += 1
     }
-    new GenericArrayData(codes)
+    ArrayData.toArrayData(codes)
+  }
+
+  /** Per-query ADC lookup table (Jégou et al., TPAMI 2011):
+    * `t(j·k + c)` = squared L2 from subvector j of the decoded query
+    * `x` (length m·sub, no nulls) to codeword c — the per-subspace sum
+    * [[adc]] accumulates, in the same element order, so Σ_j
+    * t(j·k + code_j) added in ascending j IS `adc` bit for bit. Built
+    * once per query on the driver; scoring a row is then m lookups per
+    * query instead of m·sub multiply-adds ([[QueryBatch.PqAdc]]). */
+  def adcTable(x: Array[Double], cb: Array[Float], m: Int, k: Int,
+      sub: Int): Array[Double] = {
+    require(x.length == m * sub, "query length must be m * sub")
+    val t = new Array[Double](m * k)
+    var j = 0
+    while (j < m) {
+      var c = 0
+      while (c < k) {
+        var d = 0.0
+        var i = 0
+        while (i < sub) {
+          val e = x(j * sub + i) - cb(j * k * sub + c * sub + i)
+          d += e * e
+          i += 1
+        }
+        t(j * k + c) = d
+        c += 1
+      }
+      j += 1
+    }
+    t
   }
 
   /** Shared ADC kernel. Returns null Double on bad codes/lengths. */

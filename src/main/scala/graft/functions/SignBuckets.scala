@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** All sign-random-projection LSH bucket ids of an embedding in one
@@ -83,11 +83,17 @@ object SignBuckets {
   def eval(v: ArrayData, planes: Array[Float], numTables: Int,
       bitsPerTable: Int, dim: Int, vFloat: Boolean): ArrayData = {
     if (v.numElements() < dim) return null
-    var i = 0
-    while (i < dim) {
-      if (v.isNullAt(i)) return null
-      i += 1
-    }
+    val x = new Array[Double](dim)
+    if (QueryBatch.decode(v, vFloat, x) >= 0) return null
+    ArrayData.toArrayData(bucketsOf(x, planes, numTables, bitsPerTable, dim))
+  }
+
+  /** The bucket ids of a vector already widened to double
+    * ([[QueryBatch.decode]], first `dim` elements non-null): each
+    * element is read once per row instead of once per hyperplane, and
+    * every dot accumulates the same products in the same order. */
+  def bucketsOf(x: Array[Double], planes: Array[Float], numTables: Int,
+      bitsPerTable: Int, dim: Int): Array[Long] = {
     val out = new Array[Long](numTables)
     var off = 0
     var t = 0
@@ -98,8 +104,7 @@ object SignBuckets {
         var s = 0.0
         var j = 0
         while (j < dim) {
-          val x = if (vFloat) v.getFloat(j).toDouble else v.getDouble(j)
-          s += x * planes(off + j)
+          s += x(j) * planes(off + j)
           j += 1
         }
         if (s >= 0) bucket |= (1L << b)
@@ -109,7 +114,7 @@ object SignBuckets {
       out(t) = bucket
       t += 1
     }
-    new GenericArrayData(out)
+    out
   }
 
   /** Column-API entry point; `planes(t)(b)` is hyperplane b of table t. */

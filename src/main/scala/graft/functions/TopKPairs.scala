@@ -29,13 +29,20 @@ import org.apache.spark.sql.types._
   *
   * `id` must uniquely identify rows within a group (the usual primary
   * key); duplicate (ord, id) pairs would be collapsed by the buffer.
+  * With `dedupIds`, an id may arrive several times and only its best
+  * copy competes: the largest ord, where NaN loses to any number — the
+  * `min(score)` per (group, id) of a smallest-first ranking, computed
+  * inside the heap instead of by a grouping exchange before it. An
+  * id's best copy is never displaced by a worse one, so partial heaps
+  * merge to the top-k of the deduplicated stream.
   */
 case class TopKPairs(
     ord: Expression,
     id: Expression,
     k: Int,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
+    inputAggBufferOffset: Int = 0,
+    dedupIds: Boolean = false)
   extends TypedImperativeAggregate[java.util.TreeSet[(Double, Long)]]
   with ImplicitCastInputTypes {
 
@@ -60,6 +67,23 @@ case class TopKPairs(
     new java.util.TreeSet[(Double, Long)](cmp)
 
   private def add(buf: java.util.TreeSet[(Double, Long)],
+      v: (Double, Long)): Unit =
+    if (!dedupIds) addBounded(buf, v)
+    else {
+      // O(k) scan: the heap holds at most k entries
+      var same: (Double, Long) = null
+      val it = buf.iterator()
+      while (same == null && it.hasNext) {
+        val e = it.next()
+        if (e._2 == v._2) same = e
+      }
+      if (same == null) addBounded(buf, v)
+      else if (!v._1.isNaN && (same._1.isNaN || v._1 > same._1)) {
+        buf.remove(same); buf.add(v)
+      }
+    }
+
+  private def addBounded(buf: java.util.TreeSet[(Double, Long)],
       v: (Double, Long)): Unit = {
     if (buf.size < k) buf.add(v)
     else if (cmp.compare(v, buf.last()) < 0) {
@@ -163,10 +187,11 @@ object TopKPairs {
   /** Column-API entry: top-k (ord, id) pairs per group, rank order.
     * `ord` is cast to double and `id` to long by the caller as needed.
     */
-  def topKPairs(ord: Column, id: Column, k: Int): Column = {
+  def topKPairs(ord: Column, id: Column, k: Int,
+      dedupIds: Boolean = false): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(
-      TopKPairs(ColumnBridge.expression(ord), ColumnBridge.expression(id), k)
-        .toAggregateExpression())
+      TopKPairs(ColumnBridge.expression(ord), ColumnBridge.expression(id), k,
+        dedupIds = dedupIds).toAggregateExpression())
   }
 }

@@ -52,8 +52,12 @@ object ConnectedComponents {
     // JVM's coincide; the local≡distributed law is pinned in
     // ConnectedComponentsSpec). At any real scale the count gate sends
     // graphs above the threshold down the distributed loop unchanged —
-    // the threshold is a DRIVER-MEMORY bound (~32 MB of primitive state
-    // at the default), not a local-mode tuning constant. Non-integral
+    // the threshold is a DRIVER-MEMORY bound, not a local-mode tuning
+    // constant: at the 2M-edge default the local path holds ≈190 MB of
+    // transient driver heap (measured: 2M symmetric edges over 2M
+    // nodes, every structure live, retained after a full GC; the Row +
+    // boxed-tuple collect it replaced held ≈510 MB), and the whole call
+    // runs in a 2 GB driver heap. Non-integral
     // id types always take the distributed loop (whose own r18
     // decimal-sum certificate already requires numerically-castable
     // ids — every catalog caller uses long ids).
@@ -152,32 +156,48 @@ object ConnectedComponents {
 
   /** Union-find over a collected symmetric edge list: (id, comp) for
     * every edge-touched node, comp = min id of its component — the
-    * distributed loop's exact fixpoint. Union by rank + path
-    * compression, one primitive pass; min-id is folded into the union
-    * so no second traversal is needed. Returns a frame in the edge
-    * columns' original integral type. */
+    * distributed loop's exact fixpoint. Union by rank + path halving,
+    * one primitive pass; min-id is folded into the union so no second
+    * traversal is needed. Returns a frame in the edge columns' original
+    * integral type.
+    *
+    * Everything on the driver is primitive: each partition packs its
+    * endpoints into one long array (no Row, no boxed tuple per edge),
+    * node ids are the sorted distinct endpoints (a node's dense index
+    * is its binary-search position, so the smallest index of a set IS
+    * its min id), and edges are two int arrays of dense indices. */
   private def localComponents(sym: DataFrame,
       spark: org.apache.spark.sql.SparkSession): DataFrame = {
     val idType = sym.schema("src").dataType
     // null endpoints name no node: the distributed loop's equi-joins
-    // drop them, and Row.getLong would read them as node 0
-    val rows = sym.filter(col("src").isNotNull && col("dst").isNotNull)
+    // drop them
+    val parts: Array[Array[Long]] = sym
+      .filter(col("src").isNotNull && col("dst").isNotNull)
       .select(col("src").cast("long"), col("dst").cast("long"))
-      .collect()
-    val idx = scala.collection.mutable.LongMap.empty[Int]
-    val ids = new scala.collection.mutable.ArrayBuffer[Long]()
-    def nodeOf(v: Long): Int =
-      idx.getOrElseUpdate(v, { val i = ids.length; ids += v; i })
-    // pre-index every endpoint, then run union-find on dense ints
-    val es = new Array[(Int, Int)](rows.length)
+      .queryExecution.toRdd.mapPartitions { it =>
+        val b = new scala.collection.mutable.ArrayBuilder.ofLong
+        it.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+        Iterator.single(b.result())
+      }.collect()
+    val ends = new Array[Long](parts.iterator.map(_.length).sum)
+    var off = 0
+    parts.foreach { p =>
+      System.arraycopy(p, 0, ends, off, p.length); off += p.length }
+    val sorted = ends.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0
     var i = 0
-    while (i < rows.length) {
-      es(i) = (nodeOf(rows(i).getLong(0)), nodeOf(rows(i).getLong(1)))
+    while (i < sorted.length) {
+      if (n == 0 || sorted(i) != sorted(n - 1)) {
+        sorted(n) = sorted(i); n += 1
+      }
       i += 1
     }
-    val parent = Array.tabulate(ids.length)(identity)
-    val rank = new Array[Byte](ids.length)
-    val minId = ids.toArray // per-root min id, maintained through unions
+    val ids = java.util.Arrays.copyOf(sorted, n)
+    def nodeOf(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
+    val parent = Array.tabulate(n)(identity)
+    val rank = new Array[Byte](n)
+    val minIdx = Array.tabulate(n)(identity) // per-root min index
     def find(x0: Int): Int = {
       var x = x0
       while (parent(x) != x) {
@@ -187,22 +207,21 @@ object ConnectedComponents {
       x
     }
     i = 0
-    while (i < es.length) {
-      val (a, b) = es(i)
-      val ra = find(a); val rb = find(b)
+    while (i < ends.length) {
+      val ra = find(nodeOf(ends(i))); val rb = find(nodeOf(ends(i + 1)))
       if (ra != rb) {
         val (hi, lo) =
           if (rank(ra) < rank(rb)) (rb, ra) else (ra, rb)
         parent(lo) = hi
         if (rank(hi) == rank(lo)) rank(hi) = (rank(hi) + 1).toByte
-        if (minId(lo) < minId(hi)) minId(hi) = minId(lo)
+        if (minIdx(lo) < minIdx(hi)) minIdx(hi) = minIdx(lo)
       }
-      i += 1
+      i += 2
     }
-    val out = new Array[(Long, Long)](ids.length)
+    val out = new Array[(Long, Long)](n)
     i = 0
-    while (i < ids.length) {
-      out(i) = (ids(i), minId(find(i)))
+    while (i < n) {
+      out(i) = (ids(i), ids(minIdx(find(i))))
       i += 1
     }
     import spark.implicits._

@@ -392,6 +392,18 @@ class PlanSpec extends AnyFunSuite {
       val objAggs = plan.linesIterator.count(_.contains("ObjectHashAggregate"))
       assert(objAggs >= 2,
         s"$name: expected partial+final ObjectHashAggregate:\n$plan")
+      // the query batch is scored inside one per-row kernel
+      // (graft.functions.QueryBatch), never by a nested-loop join that
+      // re-runs corpus-side kernels once per (row, query) pair
+      assert(!plan.contains("BroadcastNestedLoopJoin"),
+        s"$name plan was:\n$plan")
+      if (name == "annBucketed") {
+        // bucket collisions are tested inside the kernel: no probe join,
+        // no (query, neighbor) dedup exchange — only the heap's exchange
+        assert(!plan.contains("Join"), s"$name plan was:\n$plan")
+        val exchanges = plan.linesIterator.count(_.contains("Exchange"))
+        assert(exchanges == 1, s"$name: expected 1 exchange:\n$plan")
+      }
     }
     // annIvf and bm25_topk keep exactly one provably-bounded window each
     // (annIvf's centroid rank over the broadcast nCells rows; none in
