@@ -46,8 +46,8 @@ object Bench {
       // entry ~4× and tripped the requery trigger every run. The
       // persisted layout exists to be built once and queried many
       // times, so both entries timing the steady-state query path IS
-      // the contract; the build itself stays timed in ScaleProbe's
-      // fixture prep and exercised cold by Verify/specs.
+      // the contract; the build itself is exercised cold by
+      // Verify/specs (its scale timings are recorded in BASELINE.md).
       graft.engine.ExtensionQueries.warmHybridIndexes(spark, sfDir)
     }
     // failed queries record duration -1 (sentinel) and land in "errors" —

@@ -563,7 +563,8 @@ object Analytics {
       // bytes per row) — sort-merge would sort that array-weighted
       // stream and its spill cost turns super-linear once the volume
       // passes executor memory (measured: 2× data → 2.6× time at the
-      // ScaleProbe f10 point; shuffle_hash returns it to sub-linear).
+      // ×10 replication point recorded in BASELINE.md; shuffle_hash
+      // returns it to sub-linear).
       // The build side is the adjacency table itself — one row per
       // node, degree-bounded arrays (hub cap is the relief valve), the
       // side that stays executor-sized at scale.

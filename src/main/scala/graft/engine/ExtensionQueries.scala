@@ -797,7 +797,7 @@ object ExtensionQueries {
 
     // ── all-rows k-NN self-join, PRODUCTION configuration: pruned
     // probes scan nprobe/nCells of the corpus per row — the config the
-    // scale story runs on (ScaleProbe exponent 0.34 under grow-nCells;
+    // scale story runs on (exponent 0.34 under grow-nCells, BASELINE.md;
     // seeded KMeans blocking → rows-only here, recall law pinned in
     // ExtensionsSpec against the exhaustive form) ───────────────────────
     // (ORACLE-exact since r13: literal-centroid assignment + the

@@ -1,10 +1,10 @@
 package graft.engine
 
 import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, CountVectorizer, MinHashLSH, RegexTokenizer}
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 import graft.functions.SimHash64.simhash64
 
 /** North-star training-data pipeline operators (SURVEY.md §7 step 4,
@@ -470,7 +470,7 @@ object Extensions {
     * session (it feeds the fit and both join sides — uncaching before
     * the result is consumed would force 3× recompute). Long-lived
     * services calling this repeatedly should `spark.catalog.clearCache()`
-    * between batches; same applies to [[annBucketed]]/[[annIvf]].
+    * between batches.
     */
   def minhashNearDupsMLlib(docs: DataFrame, textCol: String, idCol: String,
       maxJaccardDist: Double = 0.8, numHashTables: Int = 3): DataFrame = {
@@ -941,7 +941,7 @@ object Extensions {
     * [[cosineNearDups]]'s expression verbatim (same operand order,
     * same rounding) → bit-identical scores.
     *
-    * Scale shape: the KMeans fit is sample-bounded (as [[annIvf]]);
+    * Scale shape: the KMeans fit is sample-bounded ([[quantizerSample]]);
     * centroids/radii are nCells-bounded driver metadata; the member
     * join shuffles on cell ids with the surviving-pair list broadcast.
     * An angularly tight corpus against a low threshold degrades toward
@@ -996,11 +996,10 @@ object Extensions {
     // float centroids, and the slack absorbs the cast ulps.
     val unitF = transform(col(embCol),
       x => (x.cast("double") / col("__n")).cast("float"))
+    val units = vecs.select(col(idCol), unitF.as("__u"))
     val (centArrays: Seq[Array[Float]], assigned: DataFrame) =
       if (nCells >= treeCellThreshold) {
-        val tq = fitTreeQuantizer(
-          vecs.select(col(idCol), unitF.as("__u")), "__u", idCol,
-          nCells, seed)
+        val tq = fitTreeQuantizer(units, "__u", idCol, nCells, seed)
         val asg = vecs
           .select(col(idCol), col(embCol), col("__n"),
             graft.functions.TreeCells.nearestLeaf(unitF, tq.supFlat,
@@ -1022,13 +1021,7 @@ object Extensions {
         // codegen rule on the same unit-float vectors — any
         // assignment is correct, and radii are computed from the
         // cells actually assigned.
-        val sample = vecs
-          .select(unitF.as("__u"), xxhash64(col(idCol)).as("__h"),
-            col(idCol))
-          .orderBy(col("__h"), col(idCol))
-          .limit(16384)
-          .select(col("__u"))
-          .collect().map(_.getSeq[Float](0).toArray)
+        val sample = quantizerSample(units, "__u", idCol, 16384)
         val kmK = math.min(nCells, sample.length)
         val cents = localKMeans(sample, kmK, seed, iters = 8)
         val asg = vecs
@@ -1296,28 +1289,23 @@ object Extensions {
       m: Int = 4, k: Int = 16, seed: Long = 42L): DataFrame = {
     require(m >= 1 && k >= 2 && k <= (1 << 20),
       "need m >= 1 subspaces and 2 <= k <= 2^20 codewords")
-    val dimRow = emb.select(size(col(embCol))).head(1)
-    if (dimRow.isEmpty) {
-      val idT = emb.schema(idCol).dataType
-      return emb.sparkSession.emptyDataFrame
-        .select(lit(null).cast(idT).as(idCol),
-          lit(null).cast("array<int>").as("codes"),
-          lit(0.0).as("recon_mse"))
+    withDim(emb, embCol, idCol, idT => Seq(lit(null).cast(idT).as(idCol),
+        lit(null).cast("array<int>").as("codes"),
+        lit(0.0).as("recon_mse"))) { dim =>
+      require(dim % m == 0, s"embedding dim $dim must divide into m=$m " +
+        "equal subvectors")
+      val codebook = pqCodebookOf(emb, embCol, idCol, dim, m, k, seed)
+      // one-pass encode via the native kernels (graft.functions.PqOps —
+      // bit-identical to the HOF argmin form they replaced, r11): codes
+      // from the per-subspace argmin, recon from the ADC of the row's
+      // own codes (the distance to the argmin codeword IS the min). The
+      // SAME encode Column instance feeds both outputs, so codegen's
+      // subexpression elimination evaluates it once per row.
+      val codes = graft.functions.PqOps.pqEncode(col(embCol), codebook)
+      emb.select(col(idCol), codes.as("codes"),
+        round(graft.functions.PqOps.pqAdc(col(embCol), codes, codebook)
+          / dim, 6).as("recon_mse"))
     }
-    val dim = dimRow.head.getInt(0)
-    require(dim % m == 0, s"embedding dim $dim must divide into m=$m " +
-      "equal subvectors")
-    val codebook = pqCodebookOf(emb, embCol, idCol, dim, m, k, seed)
-    // one-pass encode via the native kernels (graft.functions.PqOps —
-    // bit-identical to the HOF argmin form they replaced, r11): codes
-    // from the per-subspace argmin, recon from the ADC of the row's
-    // own codes (the distance to the argmin codeword IS the min). The
-    // SAME encode Column instance feeds both outputs, so codegen's
-    // subexpression elimination evaluates it once per row.
-    val codes = graft.functions.PqOps.pqEncode(col(embCol), codebook)
-    emb.select(col(idCol), codes.as("codes"),
-      round(graft.functions.PqOps.pqAdc(col(embCol), codes, codebook)
-        / dim, 6).as("recon_mse"))
   }
 
   /** Squared L2 between two float arrays, sequential-fold double. */
@@ -1350,53 +1338,49 @@ object Extensions {
     require(k >= 1, "k must be at least 1")
     require(m >= 1 && kCode >= 2 && kCode <= (1 << 20),
       "need m >= 1 subspaces and 2 <= kCode <= 2^20 codewords")
-    val dimRow = emb.select(size(col(embCol))).head(1)
-    if (dimRow.isEmpty) {
-      val idT = emb.schema(idCol).dataType
-      return emb.sparkSession.emptyDataFrame
-        .select(lit(null).cast(idT).as("query_id"),
-          lit(null).cast(idT).as("neighbor_id"),
-          lit(0.0).as("adc_dist"), lit(0).as("rank"))
+    withDim(emb, embCol, idCol, rankedColumns("adc_dist")) { dim =>
+      require(dim % m == 0, s"embedding dim $dim must divide into m=$m " +
+        "equal subvectors")
+      // ONE codebook fit serves both the corpus encode and the query
+      // lookup tables (pqQuantize would refit identically — seeded)
+      val codebook = pqCodebookOf(emb, embCol, idCol, dim, m, kCode, seed)
+      // one ADC table per query; a query with a null element or the wrong
+      // length gets none (its per-pair ADC was null)
+      val (flat, _, kk, sub) = graft.functions.PqOps.flatten(codebook)
+      val qs = queryRows(emb, embCol, idCol, queryIds)
+      val tables = qs.map { r =>
+        val (x, hasNull) =
+          graft.functions.QueryBatch.decodeCollected(r.getSeq[Any](1))
+        if (x == null || hasNull || x.length != m * sub) null
+        else graft.functions.PqOps.adcTable(x, flat, m, kk, sub)
+      }
+      val scored = scoreEach(emb,
+        graft.functions.PqOps.pqEncode(col(embCol), codebook), idCol,
+        new graft.functions.QueryBatch.PqAdc(qs.map(_.getLong(0)), tables,
+          m, kk),
+        round(col("__p.adc"), 6).as("adc_dist"))
+      // bounded-heap ranking, NOT a rank window: the whole point of PQ is
+      // scanning m small ints per row at 100 TB — a per-query window sort
+      // of every ADC score would throw that away (see topKBy)
+      topKBy(scored, "query_id", "neighbor_id", "adc_dist", k,
+        smallestFirst = true)
     }
-    val dim = dimRow.head.getInt(0)
-    require(dim % m == 0, s"embedding dim $dim must divide into m=$m " +
-      "equal subvectors")
-    // ONE codebook fit serves both the corpus encode and the query
-    // lookup tables (pqQuantize would refit identically — seeded)
-    val codebook = pqCodebookOf(emb, embCol, idCol, dim, m, kCode, seed)
-    // one ADC table per query; a query with a null element or the wrong
-    // length gets none (its per-pair ADC was null)
-    val (flat, _, kk, sub) = graft.functions.PqOps.flatten(codebook)
-    val qs = queryRows(emb, embCol, idCol, queryIds)
-    val tables = qs.map { r =>
-      val (x, hasNull) =
-        graft.functions.QueryBatch.decodeCollected(r.getSeq[Any](1))
-      if (x == null || hasNull || x.length != m * sub) null
-      else graft.functions.PqOps.adcTable(x, flat, m, kk, sub)
-    }
-    val scored = scoreEach(emb,
-      graft.functions.PqOps.pqEncode(col(embCol), codebook), idCol,
-      new graft.functions.QueryBatch.PqAdc(qs.map(_.getLong(0)), tables,
-        m, kk),
-      round(col("__p.adc"), 6).as("adc_dist"))
-    // bounded-heap ranking, NOT a rank window: the whole point of PQ is
-    // scanning m small ints per row at 100 TB — a per-query window sort
-    // of every ADC score would throw that away (see topKBy)
-    topKBy(scored, "query_id", "neighbor_id", "adc_dist", k,
-      smallestFirst = true)
   }
 
   /** IVF+PQ composed search (the production 100 TB ANN shape, e.g.
-    * FAISS IVFPQ): coarse-quantizer cell pruning ([[annIvf]]'s half)
-    * × PQ asymmetric-distance scoring ([[pqTopK]]'s half) × an exact
-    * re-rank of the shortlist. Each query (1) probes its `nprobe`
-    * nearest KMeans cells by exact squared L2 to the centroid, (2)
-    * ADC-scores ONLY the PQ codes inside those cells — the scan reads
-    * m small ints per candidate row, never the full vector — keeping
-    * the best `k·refineFactor` per query in a bounded heap, and (3)
-    * re-ranks that shortlist by exact squared L2 on the full vectors
-    * (a |queries|·k·refineFactor-row join — tiny by construction).
-    * Returns (query_id, neighbor_id, l2_dist, rank ≤ k).
+    * FAISS IVFPQ) as a transient [[IvfPqIndex]]: the coarse fit
+    * ([[IvfIndex.fitFor]]) assigns every row its cell, the PQ codebook
+    * ([[pqCodebookOf]]) encodes it, and the index query
+    * ([[IvfPqIndex.search]]) runs over those in-memory frames. Each
+    * query (1) probes its `nprobe` nearest cells by exact squared L2
+    * to the centroid, (2) ADC-scores ONLY the PQ codes inside those
+    * cells — the scan reads m small ints per candidate row, never the
+    * full vector — keeping the best `k·refineFactor` per query in a
+    * bounded heap, and (3) re-ranks that shortlist by exact squared L2
+    * on the full vectors (a |queries|·k·refineFactor-row join — tiny
+    * by construction). Returns (query_id, neighbor_id, l2_dist,
+    * rank ≤ k); each copy of a duplicated query id probes its own
+    * cells, as on the persisted index.
     *
     * Why compose: cells bound WHICH rows are scanned (I/O ∝
     * nprobe/nCells of the corpus), PQ bounds the BYTES per scanned row
@@ -1406,22 +1390,16 @@ object Extensions {
     * executor-sized), store codes cell-partitioned ([[IvfIndex]]'s
     * layout) so probes prune files, and refineFactor stays a small
     * constant. Both fits are sampled and seeded; every rank is a
-    * bounded heap ([[topKBy]]) or a driver-known-constant window —
-    * recall@k floors vs the exact scan are spec-pinned
-    * (seed-dependent ⇒ no_oracle by the catalog contract).
+    * bounded heap ([[topKBy]]); recall@k floors vs the exact scan are
+    * spec-pinned.
     *
-    * Default operating point (r11, from the [[graft.RecallSweep]]
-    * nprobe × kCode × m × refineFactor grid recorded in BASELINE.md):
-    * nprobe 8, kCode 256, refineFactor 8 — measured recall@10 = 0.92
-    * vs the exact scan at sf0.01 (spec floor 0.70), and FASTER than
-    * the superseded 0.40-recall r10 default (2.77 s vs 4.56 s at
-    * sf0.1) after the two r11 scale-path fixes: the codebook fits
-    * driver-side on a capped sample ([[pqCodebookOf]]) and encode/ADC
-    * run as native codegen'd kernels ([[graft.functions.PqOps]]).
-    * The sweep's shape: PQ quantization error (kCode) dominates
-    * recall, shortlist size second, probe count third — so the knee
-    * spends its budget on the codebook, keeping m = 4 ints/row scan
-    * width.
+    * Default operating point (r11, from the nprobe × kCode × m ×
+    * refineFactor recall sweep recorded in BASELINE.md): nprobe 8,
+    * kCode 256, refineFactor 8 — measured recall@10 = 0.92 vs the
+    * exact scan at sf0.01 (spec floor 0.70). The sweep's shape: PQ
+    * quantization error (kCode) dominates recall, shortlist size
+    * second, probe count third — so the knee spends its budget on the
+    * codebook, keeping m = 4 ints/row scan width.
     */
   def ivfPqTopK(emb: DataFrame, embCol: String, idCol: String,
       queryIds: Seq[Long], k: Int = 10, nCells: Int = 16,
@@ -1431,97 +1409,37 @@ object Extensions {
     require(nprobe >= 1 && nprobe <= nCells, "need 1 <= nprobe <= nCells")
     require(m >= 1 && kCode >= 2 && kCode <= (1 << 20),
       "need m >= 1 subspaces and 2 <= kCode <= 2^20 codewords")
-    val dimRow = emb.select(size(col(embCol))).head(1)
-    if (dimRow.isEmpty) {
-      val idT = emb.schema(idCol).dataType
-      return emb.sparkSession.emptyDataFrame
-        .select(lit(null).cast(idT).as("query_id"),
-          lit(null).cast(idT).as("neighbor_id"),
-          lit(0.0).as("l2_dist"), lit(0).as("rank"))
-    }
-    val dim = dimRow.head.getInt(0)
-    require(dim % m == 0, s"embedding dim $dim must divide into m=$m " +
-      "equal subvectors")
-    val vecs = emb.select(col(idCol), col(embCol),
-      array_to_vector(col(embCol)).as("__vec"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // sampled, seeded coarse fit — annIvf's rationale verbatim: a
-      // coarse quantizer needs neither tight convergence nor the full
-      // corpus; at 100 TB the fit is bounded, the assign is one pass
-      val sample = vecs.filter(pmod(xxhash64(col(idCol)), lit(4)) === 0)
-      val fitSample =
-        if (sample.count() >= nCells.toLong * 4) sample else vecs
-      val km = new org.apache.spark.ml.clustering.KMeans()
-        .setFeaturesCol("__vec").setPredictionCol("__cell")
-        .setK(nCells).setSeed(seed).setMaxIter(5).fit(fitSample)
-      val centroids = km.clusterCenters.zipWithIndex.map { case (c, i) =>
-        (i, c.toArray.map(_.toFloat))
-      }.toSeq
-      // cell assignment by the shared literal FLOAT-centroid
-      // projection ([[nearestCellExpr]]) — NOT km.transform. Three
-      // reasons: (a) it is the SAME rule the persisted layout assigns
-      // appends with, so the ad-hoc operator and the saved index
-      // agree; (b) it is one codegen'd pass with no second MLlib job;
-      // (c) every arithmetic step is a known literal × IEEE double op,
-      // which is what lets the DuckDB twin ([[PqOracles]]) replay the
-      // assignment bit-for-bit — MLlib's internal norm-shortcut
-      // distance is not replayable.
-      val assigned = vecs.drop("__vec")
-        .withColumn("__cell",
-          nearestCellExpr(col(embCol), centroids.map(_._2.toSeq)))
+    withDim(emb, embCol, idCol, rankedColumns("l2_dist")) { dim =>
+      require(dim % m == 0, s"embedding dim $dim must divide into m=$m " +
+        "equal subvectors")
+      val (cents, assign, tree) =
+        IvfIndex.fitFor(emb, embCol, idCol, nCells, seed)
+      val assigned = emb.select(col(idCol), col(embCol),
+          assign(col(embCol)).as("__cell"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val codebook = pqCodebookOf(emb, embCol, idCol, dim, m, kCode,
           seed)
-        // expose the fit to the deferred oracle generator (PqOracles):
-        // the coarse fit is MLlib-distributed (not refit-reproducible
-        // across partitionings), so the twin replays THIS run's fit
-        lastIvfPqFit.set((centroids.map(_._2), codebook))
-        // PQ codes per row via the native PqOps encode kernel (r11),
-        // carrying the row's cell — the persisted form a production
-        // layout would write cell-partitioned
-        val coded = assigned.select(col(idCol).as("neighbor_id"),
-          col("__cell"),
+        // expose the fit to the deferred oracle generator (PqOracles),
+        // which replays THIS run's fit — the MLlib coarse fit is not
+        // refit-reproducible across partitionings — and only the flat
+        // rule: a tree fit clears the stash
+        lastIvfPqFit.set(
+          if (tree.isEmpty) (cents.map(_._2), codebook) else null)
+        val coded = assigned.select(col(idCol),
           graft.functions.PqOps.pqEncode(col(embCol), codebook)
-            .as("codes"))
-        val centDf = emb.sparkSession.createDataFrame(centroids)
-          .toDF("__cell", "__centroid")
-        val queries = assigned.filter(col(idCol).isin(queryIds: _*))
+            .as("codes"), col("__cell"))
+        val queries = assigned.filter(idsIn(assigned, idCol, queryIds))
           .select(col(idCol).as("query_id"), col(embCol).as("__q"))
-        // nCells is a driver-known constant, so this rank window's
-        // partition is exactly nCells rows per query — bounded
-        val probed = queries.crossJoin(broadcast(centDf))
-          .withColumn("__cdist", pqSqDist(col("__q"), col("__centroid")))
-          .withColumn("__crank", row_number().over(
-            Window.partitionBy("query_id")
-              .orderBy(asc("__cdist"), asc("__cell"))))
-          .filter(col("__crank") <= nprobe)
-          .select(col("query_id"), col("__q"), col("__cell"))
-        val adc = graft.functions.PqOps.pqAdc(col("__q"), col("codes"),
-          codebook)
-        val shortlist = coded
-          .join(probed, Seq("__cell"))
-          .filter(col("neighbor_id") =!= col("query_id"))
-          .select(col("query_id"), col("neighbor_id"),
-            round(adc, 6).as("adc_dist"))
-          .transform(topKBy(_, "query_id", "neighbor_id", "adc_dist",
-            k * refineFactor, smallestFirst = true))
-        // exact re-rank: full vectors rejoin ONLY the shortlist ids
-        val refined = shortlist
-          .select(col("query_id"), col("neighbor_id"))
-          .join(emb.select(col(idCol).as("neighbor_id"),
-            col(embCol).as("__e")), Seq("neighbor_id"))
-          .join(queries, Seq("query_id"))
-          .select(col("query_id"), col("neighbor_id"),
-            round(pqSqDist(col("__e"), col("__q")), 6).as("l2_dist"))
-          .transform(topKBy(_, "query_id", "neighbor_id", "l2_dist", k,
-            smallestFirst = true))
+        // k rows per query: persist + count materializes the result so
+        // the corpus-sized assignment cache can be released here
+        val result = IvfPqIndex.search(assigned, coded, idCol, embCol,
+            cents, codebook, tree, queries, k, nprobe, refineFactor)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        refined.count()
-        refined
+        result.count()
+        result
       } finally assigned.unpersist()
-    } finally vecs.unpersist()
+    }
   }
 
   /** All-rows k-NN self-join: EVERY row gets its top-k cosine
@@ -1553,9 +1471,7 @@ object Extensions {
       nCells: Int = 16, nprobe: Int = 2, seed: Long = 42L): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(nprobe >= 1 && nprobe <= nCells, "need 1 <= nprobe <= nCells")
-    if (nCells >= knnTreeCellThreshold)
-      return knnJoinTree(emb, embCol, idCol, k, nCells, nprobe, seed)
-    if (nprobe == nCells) {
+    if (nprobe == nCells && nCells < treeCellThreshold) {
       // Exhaustive probes make the blocking semantically INERT: every
       // pair is scored exactly once whatever the assignment (each
       // candidate lives in one cell, each row probes all cells), so
@@ -1572,106 +1488,75 @@ object Extensions {
       // here is scan + one hash projection — re-evaluating it costs a
       // second parquet scan of the (OS-cached) source, strictly less
       // than a MEMORY_AND_DISK write+read round-trip of the same rows
-      // plus the persist's materialization action. annIvf keeps its
-      // persist because its assignment is the literal-centroid
-      // projection over a FITTED quantizer — recomputing that side
-      // would re-pay the nearest-cell arithmetic per row.
+      // plus the persist's materialization action.
       val assigned = widen(emb.select(col(idCol), col(embCol)))
         .withColumn("__cell",
           pmod(xxhash64(col(idCol)), lit(nCells.toLong)).cast("int"))
       return knnScoredTail(assigned, embCol, idCol,
         typedLit((0 until nCells).toList), k)
     }
-    val vecs = emb.select(col(idCol), col(embCol),
-      array_to_vector(col(embCol)).as("__vec"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sample = vecs.filter(pmod(xxhash64(col(idCol)), lit(4)) === 0)
-      val fitSample =
-        if (sample.count() >= nCells.toLong * 4) sample else vecs
-      val km = new org.apache.spark.ml.clustering.KMeans()
-        .setFeaturesCol("__vec").setPredictionCol("__cell")
-        .setK(nCells).setSeed(seed).setMaxIter(5).fit(fitSample)
-      val centroids = km.clusterCenters.zipWithIndex.map { case (c, i) =>
-        (i, c.toArray.map(_.toFloat))
-      }.toSeq
-      lastKnnJoinFit.set(centroids.map(_._2))
-      lastKnnTreeFit.set(null) // flat run: no stale tree capture
-      // assignment by the shared literal float-centroid projection
-      // ([[nearestCellExpr]] — the r13 IVF-family rule)
-      val assigned = vecs.drop("__vec")
-        .withColumn("__cell",
-          nearestCellExpr(col(embCol), centroids.map(_._2.toSeq)))
+    withDim(emb, embCol, idCol, rankedColumns("cosine_sim")) { _ =>
+      val (centroids, assign, tree) =
+        IvfIndex.fitFor(emb, embCol, idCol, nCells, seed)
+      // each capture-replay stash holds its own rule's fit and the
+      // other is CLEARED: PqOracles.knnPrunedSql replays the FLAT
+      // assignment/probe rule, and tree leaves fed through it would
+      // generate a silently wrong twin; the tree fit feeds
+      // [[PqOracles.knnTreeSql]]
+      lastKnnJoinFit.set(if (tree.isEmpty) centroids.map(_._2) else null)
+      lastKnnTreeFit.set(tree.orNull)
+      val assigned = emb.select(col(idCol), col(embCol),
+          assign(col(embCol)).as("__cell"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        // centroids as a literal array<struct<cell, centroid>>: probe
-        // cells derive row-locally — sort the in-row (dist, cell) array
-        // (deterministic: distance ties break on the cell id) and keep
-        // the first nprobe
-        val centLit = typedLit(centroids.map { case (i, c) =>
-          (i, c.toSeq)
-        })
-        val distStructs = transform(centLit, s =>
-          struct(pqSqDist(col(embCol), s.getField("_2")).as("d"),
-            s.getField("_1").as("c")))
-        val probes = transform(slice(sort_array(distStructs), 1, nprobe),
-          s => s.getField("c"))
+        val probes = tree match {
+          // degenerate corpora can fit fewer leaves than nCells; nprobe
+          // at or past the leaf count means exhaustive — probe
+          // everything without ranking (order is immaterial to the
+          // explode+join)
+          case Some(tq) if nprobe >= tq.nLeaves =>
+            typedLit((0 until tq.nLeaves).toList)
+          case Some(tq) =>
+            graft.functions.TreeCells.probes(col(embCol), tq.supFlat,
+              tq.leafFlat, tq.groupStart, tq.dim, nprobe,
+              tq.superProbeFor(nprobe))
+          case None =>
+            // centroids as a literal array<struct<cell, centroid>>:
+            // probe cells derive row-locally — sort the in-row
+            // (dist, cell) array (deterministic: distance ties break on
+            // the cell id) and keep the first nprobe
+            val centLit = typedLit(centroids.map { case (i, c) =>
+              (i, c.toSeq)
+            })
+            val distStructs = transform(centLit, s =>
+              struct(pqSqDist(col(embCol), s.getField("_2")).as("d"),
+                s.getField("_1").as("c")))
+            transform(slice(sort_array(distStructs), 1, nprobe),
+              s => s.getField("c"))
+        }
         knnScoredTail(assigned, embCol, idCol, probes, k)
       } finally assigned.unpersist()
-    } finally vecs.unpersist()
+    }
   }
 
-  /** Cell count at which the IVF family ([[knnJoin]] and
-    * [[IvfIndex.build]]) switches its coarse quantizer from the flat
-    * MLlib-fit + literal-scan form to the two-level [[TreeQuantizer]]
+  /** Cell count at which the IVF family's coarse quantizer
+    * ([[IvfIndex.fitFor]]: [[IvfIndex.build]], [[annIvf]],
+    * [[ivfPqTopK]], [[knnJoin]]) switches from the flat MLlib-fit +
+    * literal-scan form to the two-level [[TreeQuantizer]]
     * ([[graft.functions.TreeCells]]): under the doctrine (nCells ∝
     * corpus) the flat fit/assign/probe terms are ∝ n·nCells — the f²
     * tail BASELINE.md §×100 measured — while the candidate pair scan
     * they feed is ∝ n. Below the threshold those terms are noise and
     * the flat rule keeps its bit-pinned oracles; at and above it the
     * tree halves the exponent (n·2√nCells). The catalog operating
-    * points (nCells ≤ 16) never cross it; the ScaleProbe doctrine
-    * configs (16·f, f ≥ 10) always do. */
+    * points (nCells ≤ 16) never cross it; the doctrine configs
+    * BASELINE.md records (16·f, f ≥ 10) always do. On the tree path a
+    * pruned probe is a recall heuristic (spec-pinned), and exhaustive
+    * probes (nprobe ≥ leaf count) stay exact — each candidate lives in
+    * exactly one leaf regardless of the quantizer. */
   private[engine] val treeCellThreshold = 64
-  private def knnTreeCellThreshold = treeCellThreshold
 
-  /** [[knnJoin]]'s scale path (nCells ≥ [[knnTreeCellThreshold]]):
-    * bounded-sample two-level fit ([[fitTreeQuantizer]]), one
-    * codegen'd tree-assignment projection, one codegen'd tree-probe
-    * projection — every per-row term O(√nCells·dim) instead of
-    * O(nCells·dim). Same pair-scan tail, same semantics contract:
-    * exact per-row top-k when probes are exhaustive (nprobe ≥ leaf
-    * count — each candidate lives in exactly one leaf regardless of
-    * the quantizer), recall-heuristic when pruned (spec-pinned). */
-  private def knnJoinTree(emb: DataFrame, embCol: String, idCol: String,
-      k: Int, nCells: Int, nprobe: Int, seed: Long): DataFrame = {
-    val tq = fitTreeQuantizer(emb.select(col(idCol), col(embCol)),
-      embCol, idCol, nCells, seed)
-    // the FLAT capture-replay stash is CLEARED, not filled, on the
-    // tree path: PqOracles.knnPrunedSql replays the FLAT assignment/
-    // probe rule, and tree leaves fed through it would generate a
-    // silently wrong twin (review finding). The tree fit lands in its
-    // OWN stash for the tree twin ([[PqOracles.knnTreeSql]], r16).
-    lastKnnJoinFit.set(null)
-    lastKnnTreeFit.set(tq)
-    val assigned = emb.select(col(idCol), col(embCol))
-      .withColumn("__cell", graft.functions.TreeCells.nearestLeaf(
-        col(embCol), tq.supFlat, tq.leafFlat, tq.groupStart, tq.dim))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // degenerate corpora can fit fewer leaves than nCells; nprobe at
-      // or past the leaf count means exhaustive — probe everything
-      // without ranking (order is immaterial to the explode+join)
-      val probes =
-        if (nprobe >= tq.nLeaves) typedLit((0 until tq.nLeaves).toList)
-        else graft.functions.TreeCells.probes(col(embCol), tq.supFlat,
-          tq.leafFlat, tq.groupStart, tq.dim, nprobe,
-          tq.superProbeFor(nprobe))
-      knnScoredTail(assigned, embCol, idCol, probes, k)
-    } finally assigned.unpersist()
-  }
-
-  /** The shared pair-scan tail of [[knnJoin]]'s two quantizer paths:
+  /** The shared pair-scan tail of [[knnJoin]]'s probe paths:
     * hoisted norms, probe explode, cell-keyed equi-join, bounded-heap
     * per-row top-k. `assigned` carries (idCol, embCol, __cell);
     * `probes` is a row-local array<int> of probe cells.
@@ -1725,7 +1610,7 @@ object Extensions {
     * index size — more sample stops improving a 256-cell subspace
     * quantizer long before that), so the fit collects the `sampleCap`
     * rows with the smallest xxhash64(id) — one TakeOrdered pass
-    * ([[pqSample]], primitive float arrays),
+    * ([[quantizerSample]], primitive float arrays),
     * O(cap) driver memory (cap·dim floats ≈ 4 MB), partition-order
     * independent — and runs seeded kmeans++ and Lloyd locally, the m
     * subspaces in parallel threads. This replaces m distributed MLlib
@@ -1746,7 +1631,7 @@ object Extensions {
       dim: Int, m: Int, k: Int, seed: Long, sampleCap: Int = 16384,
       iters: Int = 8): Seq[Seq[Seq[Float]]] = {
     val sub = dim / m
-    val sample = pqSample(emb, embCol, idCol, sampleCap)
+    val sample = quantizerSample(emb, embCol, idCol, sampleCap)
     require(sample.nonEmpty, "cannot fit a PQ codebook on an empty corpus")
     def fitSubspace(j: Int): Seq[Seq[Float]] =
       localKMeans(sample.map(v => v.slice(j * sub, (j + 1) * sub)),
@@ -1769,15 +1654,17 @@ object Extensions {
     fitted.map(cb => cb ++ Seq.fill(kMax - cb.size)(cb.last))
   }
 
-  /** [[pqCodebookOf]]'s fit sample: the `sampleCap` rows with the
-    * smallest (xxhash64(id), id), as float vectors. Collected as
-    * primitive arrays straight from the internal rows (no boxed Seq per
-    * row); an array<double> corpus narrows on the driver with the
-    * `.toFloat` a cast to float applies (the PqOps kernels accept
-    * array<double> columns, so the fit must too — the fitTreeQuantizer
-    * fix, ADVICE r15), and a null element reads as 0, as the boxed
-    * collect unboxed it. */
-  private[engine] def pqSample(emb: DataFrame, embCol: String,
+  /** The bounded fit sample of every driver-side quantizer fit
+    * ([[pqCodebookOf]], [[fitTreeQuantizer]], [[IvfIndex.buildLocalFit]],
+    * [[cosineNearDupsBlocked]], a one-row [[IvfIndex.fitFor]]): the
+    * `sampleCap` rows with the smallest (xxhash64(id), id), as float
+    * vectors — one TakeOrdered pass, partition-order independent.
+    * Collected as primitive arrays straight from the internal rows (no
+    * boxed Seq per row); an array<double> column narrows on the driver
+    * with the `.toFloat` a cast to float applies (the kernels accept
+    * array<double> columns, so the fits must too), and a null element
+    * reads as 0, as a boxed collect unboxes it. */
+  private[engine] def quantizerSample(emb: DataFrame, embCol: String,
       idCol: String, sampleCap: Int): Array[Array[Float]] = {
     val vFloat = emb.schema(embCol).dataType match {
       case org.apache.spark.sql.types.ArrayType(
@@ -1791,7 +1678,7 @@ object Extensions {
       .select(col(embCol)))
       .map { r =>
         val v = r.getArray(0)
-        require(v != null, "cannot fit a PQ codebook on a null vector")
+        require(v != null, "cannot fit a quantizer on a null vector")
         Array.tabulate(v.numElements()) { i =>
           if (v.isNullAt(i)) 0f
           else if (vFloat) v.getFloat(i) else v.getDouble(i).toFloat
@@ -1921,34 +1808,22 @@ object Extensions {
     * (VERDICT r14 #4; BASELINE.md §×100 knn_join adjudication). Coarse-
     * quantizer training is a bounded-sample problem like PQ training
     * ([[pqCodebookOf]]'s doctrine — FAISS trains coarse quantizers on
-    * capped samples regardless of index size): the smallest-xxhash64
-    * sample rows collect once (cap·dim floats, partition-order
-    * independent), the ~√nCells super-centroids fit locally, sample
-    * points partition by nearest super, and each group fits its leaf
-    * quota locally (groups in parallel threads, the pqCodebookOf
-    * pattern). Leaf quotas are proportional to group occupancy
-    * (largest remainder, ≥1 per group so assignment is total, Σ =
-    * nCells) — balanced leaf occupancy is the point of clustering the
-    * hierarchy instead of slicing centroid ids arbitrarily. A group
+    * capped samples regardless of index size): the sample collects
+    * once ([[quantizerSample]], cap·dim floats), the ~√nCells
+    * super-centroids fit locally, sample points partition by nearest
+    * super, and each group fits its leaf quota locally (groups in
+    * parallel threads, the pqCodebookOf pattern). Leaf quotas are
+    * proportional to group occupancy (largest remainder, ≥1 per group
+    * so assignment is total, Σ = nCells) — balanced leaf occupancy is
+    * the point of clustering the hierarchy instead of slicing centroid
+    * ids arbitrarily. A group
     * with degenerate points fits fewer (exact) leaves; an empty group
     * keeps its super-centroid as its lone leaf. */
   private[graft] def fitTreeQuantizer(emb: DataFrame, embCol: String,
       idCol: String, nCells: Int, seed: Long, sampleCap: Int = 65536,
       iters: Int = 8): TreeQuantizer = {
     require(nCells >= 1, "nCells must be >= 1")
-    // float-cast BEFORE collect (ADVICE r15): the TreeCells expressions
-    // and the flat build path both accept array<double> embeddings, so
-    // the fit must too — an uncast getSeq[Float] throws
-    // ClassCastException on double vectors. transform(_.cast("float"))
-    // is a no-op on an already-float column (values bit-unchanged, so
-    // existing float-corpus fits and their captures are unaffected).
-    val sample = emb
-      .select(transform(col(embCol), _.cast("float")).as(embCol),
-        xxhash64(col(idCol)).as("__h"), col(idCol))
-      .orderBy(col("__h"), col(idCol))
-      .limit(sampleCap)
-      .select(col(embCol))
-      .collect().map(_.getSeq[Float](0).toArray)
+    val sample = quantizerSample(emb, embCol, idCol, sampleCap)
     require(sample.nonEmpty,
       "cannot fit a coarse quantizer on an empty corpus")
     val dim = sample.head.length
@@ -2025,7 +1900,7 @@ object Extensions {
 
   /** The most recent [[annIvf]] fit (float-cast coarse centroids),
     * captured for the deferred DuckDB-twin generator — the
-    * [[lastIvfPqFit]] pattern. */
+    * [[lastIvfPqFit]] pattern; null after an exhaustive or tree run. */
   private[engine] val lastAnnIvfFit = new java.util.concurrent.atomic
     .AtomicReference[Seq[Array[Float]]](null)
 
@@ -2143,6 +2018,27 @@ object Extensions {
     emb.filter(idsIn(emb, idCol, queryIds))
       .select(col(idCol).cast("long") +: col(embCol) +: extra: _*)
       .collect()
+
+  /** The first step of an ad-hoc search over an embedding corpus: the
+    * embedding length, read from the first row (one `head(1)` job),
+    * handed to `search` — or, for an empty corpus, the typed empty
+    * result whose columns `empty` builds from the id type, without
+    * running `search` (no fit has anything to fit). */
+  private def withDim(emb: DataFrame, embCol: String, idCol: String,
+      empty: DataType => Seq[Column])(search: Int => DataFrame): DataFrame =
+    emb.select(size(col(embCol))).head(1).headOption match {
+      case Some(r) => search(r.getInt(0))
+      case None => emb.sparkSession.emptyDataFrame
+        .select(empty(emb.schema(idCol).dataType): _*)
+    }
+
+  /** A ranked search's columns for [[withDim]]'s empty result, typed as
+    * [[topKBy]] types them: (query_id, neighbor_id long, `score`,
+    * rank). */
+  private def rankedColumns(score: String)(idT: DataType): Seq[Column] =
+    Seq(lit(null).cast(idT).as("query_id"),
+      lit(null).cast("long").as("neighbor_id"), lit(0.0).as(score),
+      lit(0).as("rank"))
 
   /** Every corpus row scored against `batch` in one call, exploded to
     * (query_id, neighbor_id, score): `score` reads only the exploded
@@ -2269,149 +2165,63 @@ object Extensions {
       bitsPerTable: Int = 4, seed: Long = 42L): DataFrame = {
     require(numTables > 0 && bitsPerTable > 0 && bitsPerTable <= 62,
       "need numTables > 0 and 0 < bitsPerTable <= 62")
-    val dim = emb.select(size(col(embCol))).head().getInt(0)
-    val planes = annPlanes(dim, numTables, bitsPerTable, seed)
-    val qs = queryRows(emb, embCol, idCol, queryIds,
-      dot(col(embCol), col(embCol)),
-      graft.functions.SignBuckets.signBuckets(col(embCol), planes))
-    val vecs = qs.map(r => graft.functions.QueryBatch.decodeCollected(
-      r.getSeq[Any](1)))
-    val batch = new graft.functions.QueryBatch.SignBucket(
-      qs.map(_.getLong(0)), vecs.map(_._1), vecs.map(_._2),
-      qs.map(r => r.getAs[java.lang.Double](2)),
-      qs.map(r => Option(r.getSeq[Long](3)).map(_.toArray).orNull),
-      planes.flatten.flatten, numTables, bitsPerTable, dim)
-    val p = (f: String) => col(s"__p.$f")
-    // exact rescore: |a−b| = sqrt(|a|² + |b|² − 2a·b)
-    scoreEach(emb, col(embCol), idCol, batch,
-        sqrt(greatest(p("qq") + p("ee") - lit(2.0) * p("qe"), lit(0.0)))
-          .as("l2_dist"))
-      // bounded-heap rank, not a window: LSH collisions bound the
-      // EXPECTED candidate set, but a degenerate corpus (many identical
-      // vectors) can flood a bucket — the heap keeps the rank O(k) per
-      // query regardless (see topKBy)
-      .transform(topKBy(_, "query_id", "neighbor_id", "l2_dist", k,
-        smallestFirst = true, dedupIds = true))
+    withDim(emb, embCol, idCol, rankedColumns("l2_dist")) { dim =>
+      val planes = annPlanes(dim, numTables, bitsPerTable, seed)
+      val qs = queryRows(emb, embCol, idCol, queryIds,
+        dot(col(embCol), col(embCol)),
+        graft.functions.SignBuckets.signBuckets(col(embCol), planes))
+      val vecs = qs.map(r => graft.functions.QueryBatch.decodeCollected(
+        r.getSeq[Any](1)))
+      val batch = new graft.functions.QueryBatch.SignBucket(
+        qs.map(_.getLong(0)), vecs.map(_._1), vecs.map(_._2),
+        qs.map(r => r.getAs[java.lang.Double](2)),
+        qs.map(r => Option(r.getSeq[Long](3)).map(_.toArray).orNull),
+        planes.flatten.flatten, numTables, bitsPerTable, dim)
+      val p = (f: String) => col(s"__p.$f")
+      // exact rescore: |a−b| = sqrt(|a|² + |b|² − 2a·b)
+      scoreEach(emb, col(embCol), idCol, batch,
+          sqrt(greatest(p("qq") + p("ee") - lit(2.0) * p("qe"), lit(0.0)))
+            .as("l2_dist"))
+        // bounded-heap rank, not a window: LSH collisions bound the
+        // EXPECTED candidate set, but a degenerate corpus (many
+        // identical vectors) can flood a bucket — the heap keeps the
+        // rank O(k) per query regardless (see topKBy)
+        .transform(topKBy(_, "query_id", "neighbor_id", "l2_dist", k,
+          smallestFirst = true, dedupIds = true))
+    }
   }
 
-  /** IVF-style ANN: KMeans coarse quantizer (seed-fixed) partitions the
-    * corpus into nprobe-able cells; queries scan only the `nprobe`
-    * nearest cells. The other scale path beside [[annBucketed]]'s
-    * random-hyperplane LSH — at 100 TB the cell assignment is the
-    * partition key, so a probe touches a bounded fraction of the corpus.
+  /** IVF-style ANN as a transient [[IvfIndex]]: the index is built over
+    * the corpus (coarse fit [[IvfIndex.fitFor]], one assignment pass),
+    * answers this one query batch ([[IvfIndex.queryByIds]]: each query
+    * scans only its `nprobe` nearest cells), and is dropped. The other
+    * scale path beside [[annBucketed]]'s random-hyperplane LSH — at
+    * 100 TB the cell assignment is the partition key, so a probe
+    * touches a bounded fraction of the corpus. Returns (query_id,
+    * neighbor_id, cosine_sim, rank); each copy of a duplicated query id
+    * probes its own cells.
+    *
+    * Exhaustive probes (`nprobe >= nCells`; the multimodal similarity
+    * entries run 8/8) make the quantizer semantically inert — every
+    * query scans every cell, so the answer is the exact top-k under
+    * ANY assignment — and are answered by [[cosineTopK]] without a fit.
     */
   def annIvf(emb: DataFrame, embCol: String, idCol: String,
       queryIds: Seq[Long], k: Int = 10, nCells: Int = 16,
       nprobe: Int = 4): DataFrame = {
     if (nprobe >= nCells) {
-      // Exhaustive probes (the multimodal similarity entries run 8/8)
-      // make the quantizer semantically INERT: every query scans every
-      // cell, so the result is the exact brute-force top-k under ANY
-      // assignment — the KMeans fit, its sample count, and the probe
-      // ranking window bought nothing (opt r18; the knnJoin exhaustive
-      // rule). Hash cells keep the identical cell-keyed join shape and
-      // the identical rows; on a one-row-group source the widen also
-      // parallelizes the upstream decode chain the count materializes.
       lastAnnIvfFit.set(null)
-      val assigned = widen(emb.select(col(idCol), col(embCol)))
-        .withColumn("__cell",
-          pmod(xxhash64(col(idCol)), lit(nCells.toLong)).cast("int"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val queries = assigned.filter(col(idCol).isin(queryIds: _*))
-          .select(col(idCol).as("query_id"), col(embCol).as("__q"),
-            sqrt(dot(col(embCol), col(embCol))).as("__nq"))
-        val probed = queries.select(col("query_id"), col("__q"),
-          col("__nq"), explode(typedLit((0 until nCells).toList))
-            .as("__cell"))
-        return annIvfScoredTail(assigned, embCol, idCol, probed, k)
-      } finally assigned.unpersist()
+      return cosineTopK(emb, embCol, idCol, queryIds, k)
     }
-    // cached: the KMeans fit iterates over it, then transform reads it again
-    val vecs = emb.select(col(idCol), col(embCol),
-      array_to_vector(col(embCol)).as("__vec"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // a coarse quantizer doesn't need tight convergence OR the full
-    // corpus: standard IVF practice fits it on a sample (deterministic
-    // hash sample here — reproducible across runs/partitionings) and
-    // assigns the full corpus afterwards. At 100 TB this is the
-    // difference between a bounded fit and 5 full-corpus Lloyd passes.
-    val sample = vecs.filter(pmod(xxhash64(col(idCol)), lit(4)) === 0)
-    // floor: on a small corpus the 1-in-4 sample can hold fewer points
-    // than centroids (or none) — fall back to the full (cached) corpus.
-    // The count is one cheap pass over the cached vecs.
-    val fitSample =
-      if (sample.count() >= nCells.toLong * 4) sample else vecs
-    val km = new org.apache.spark.ml.clustering.KMeans()
-      .setFeaturesCol("__vec").setPredictionCol("__cell")
-      .setK(nCells).setSeed(42L).setMaxIter(5).fit(fitSample)
-    val centroids = km.clusterCenters.zipWithIndex.map { case (c, i) =>
-      (i, c.toArray.map(_.toFloat))
-    }.toSeq
-    lastAnnIvfFit.set(centroids.map(_._2))
-    // assignment by the shared literal float-centroid projection
-    // ([[nearestCellExpr]] — the r13 IVF-family rule: one codegen
-    // pass, replayable, consistent with the persisted-index appends);
-    // assigned feeds both the query-probe filter and the candidate scan
-    val assigned = vecs.drop("__vec")
-      .withColumn("__cell",
-        nearestCellExpr(col(embCol), centroids.map(_._2.toSeq)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val centDf = emb.sparkSession.createDataFrame(centroids)
-      .toDF("__cell", "__centroid")
-    val queries = assigned.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(embCol).as("__q"),
-        sqrt(dot(col(embCol), col(embCol))).as("__nq"))
-    // this rank window is provably bounded: its partition is one query's
-    // cross join with the BROADCAST centroid table — exactly nCells rows
-    // (a driver-known constant), never a function of corpus size
-    val probed = queries.crossJoin(broadcast(centDf))
-      .withColumn("__cdist", -cosine(col("__q"), col("__centroid")))
-      .withColumn("__crank", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("__cdist"), asc("__cell"))))
-      .filter(col("__crank") <= nprobe)
-      .select(col("query_id"), col("__q"), col("__nq"), col("__cell"))
-    annIvfScoredTail(assigned, embCol, idCol, probed, k)
-    } finally {
-      vecs.unpersist()
-      assigned.unpersist()
+    withDim(emb, embCol, idCol, rankedColumns("cosine_sim")) { _ =>
+      val idx = IvfIndex.build(emb.select(col(idCol), col(embCol)),
+        embCol, idCol, nCells)
+      // the flat fit feeds the deferred DuckDB twin (PqOracles), which
+      // replays the flat rule only: a tree fit clears the stash
+      lastAnnIvfFit.set(
+        if (idx.treeQuantizer.isEmpty) idx.centroidArrays else null)
+      idx.queryByIds(queryIds, k, nprobe)
     }
-  }
-
-  /** The shared candidate-scan tail of [[annIvf]]'s two probe paths:
-    * cell-keyed equi-join of the probed queries against the assigned
-    * corpus, guarded-cosine rescore with hoisted norms, bounded-heap
-    * top-k. `probed` carries (query_id, __q, __nq, __cell). */
-  private def annIvfScoredTail(assigned: DataFrame, embCol: String,
-      idCol: String, probed: DataFrame, k: Int): DataFrame = {
-    // candidate norms hoisted to one per-row column (the knnJoin
-    // optimization): cosine() would refold |e| and |q| per candidate —
-    // d / (ne * nq) with precomputed norms is the identical op
-    // sequence, so scores are bit-unchanged
-    val candidates = assigned
-      .select(col(idCol).as("neighbor_id"), col(embCol).as("__e"),
-        sqrt(dot(col(embCol), col(embCol))).as("__ne"), col("__cell"))
-      .join(probed, Seq("__cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-    val result = candidates
-      .select(col("query_id"), col("neighbor_id"),
-        round(when(col("__ne") =!= 0 && col("__nq") =!= 0,
-          dot(col("__e"), col("__q")) / (col("__ne") * col("__nq")))
-          .otherwise(0.0), 6).as("cosine_sim"))
-      // the candidate set is nprobe/nCells of the corpus in expectation
-      // but unbounded for a skewed clustering — bounded-heap rank, not
-      // a per-query window sort (see topKBy)
-      .transform(topKBy(_, "query_id", "neighbor_id", "cosine_sim", k,
-        smallestFirst = false))
-      // k rows per query — persist + count materializes the result so
-      // the caller's finally can release the corpus-sized fit/assign
-      // caches (the ad-hoc operator owns them for ONE query batch; the
-      // build-once path is IvfIndex). The small result stays persisted;
-      // callers may .unpersist() it when done.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    result
   }
 
   /** Deterministic hash split: assign each row to train/holdout by a

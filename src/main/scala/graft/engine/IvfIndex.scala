@@ -6,15 +6,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Build-once / query-many IVF (inverted-file) similarity index over an
-  * embedding column — the persisted form of [[Extensions.annIvf]].
-  *
-  * [[Extensions.annIvf]] answers one ad-hoc query batch and throws the
-  * fitted quantizer away; a production vector store builds the index
-  * ONCE and serves many query batches from it:
+  * embedding column. A vector store builds the index ONCE and serves
+  * many query batches from it; the ad-hoc [[Extensions.annIvf]] is a
+  * transient index that answers one batch and is dropped:
   *
   *   - '''build''': sampled KMeans fit (bounded cost at any corpus
-  *     size, same procedure as annIvf) + one corpus pass to assign
-  *     cells;
+  *     size, [[IvfIndex.fitFor]]) + one corpus pass to assign cells;
   *   - '''save''': the corpus written parquet-partitioned BY CELL,
   *     beside the quantizer centroids;
   *   - '''query''': resolve the probe once on the driver
@@ -56,8 +53,8 @@ final class IvfIndex private (
     tree
 
   /** Exact cosine top-k within the probed cells for each query id
-    * (query vectors are looked up in the corpus). Output schema
-    * matches [[Extensions.annIvf]]:
+    * (query vectors are looked up in the corpus; each copy of a
+    * duplicated id probes its own cells):
     * (query_id, neighbor_id, cosine_sim, rank).
     */
   def queryByIds(queryIds: Seq[Long], k: Int, nprobe: Int): DataFrame =
@@ -80,10 +77,10 @@ final class IvfIndex private (
     // driver, so no generated code ever sees a cell id
     val probe = IvfIndex.resolveProbes(queries, centroids, tree, nprobe,
       (q, c) => -Extensions.cosine(q, c))
-    // norms hoisted to one per-row column (the knnJoin/annIvf
-    // optimization): cosine() would refold |e| and |q| per candidate;
-    // d / (ne * nq) with precomputed norms is the identical op
-    // sequence, so scores are bit-unchanged (annIvf parity spec)
+    // norms hoisted to one per-row column (the knnJoin optimization):
+    // cosine() would refold |e| and |q| per candidate; d / (ne * nq)
+    // with precomputed norms is the identical op sequence, so scores
+    // are bit-unchanged
     corpus.filter(Extensions.partitionIn("__cell", probe.cells))
       .select(col(idCol).as("neighbor_id"), col(embCol).as("__e"),
         sqrt(Extensions.dot(col(embCol), col(embCol))).as("__ne"),
@@ -252,8 +249,8 @@ object IvfIndex {
   /** Fit the coarse quantizer and assign every corpus row to its cell.
     * Below [[Extensions.treeCellThreshold]] cells: a 1-in-4 hash-sample
     * MLlib fit (falling back to the full corpus when the sample is
-    * smaller than 4× the centroid count — see [[Extensions.annIvf]])
-    * and the flat literal-centroid assignment. At and above it — the
+    * smaller than 4× the centroid count — see [[fitFor]]) and the flat
+    * literal-centroid assignment. At and above it — the
     * doctrine regime where nCells grows with the corpus — the
     * two-level [[Extensions.TreeQuantizer]] (VERDICT r14 #4): a
     * bounded-sample local fit (flat cost at any corpus size, replacing
@@ -305,13 +302,7 @@ object IvfIndex {
       .intersect(Set("__vec", "__cell", "__q", "__e", "__h"))
     require(clash.isEmpty,
       s"input uses reserved internal column names: ${clash.mkString(", ")}")
-    val sample = emb
-      .select(transform(col(embCol), _.cast("float")).as(embCol),
-        xxhash64(col(idCol)).as("__h"), col(idCol))
-      .orderBy(col("__h"), col(idCol))
-      .limit(sampleCap)
-      .select(col(embCol))
-      .collect().map(_.getSeq[Float](0).toArray)
+    val sample = Extensions.quantizerSample(emb, embCol, idCol, sampleCap)
     require(sample.nonEmpty, "cannot fit a quantizer on an empty corpus")
     val k = math.min(nCells, sample.length)
     val cents = Extensions.localKMeans(sample, k, seed, iters = 8)
@@ -329,16 +320,20 @@ object IvfIndex {
   private[engine] def centroidPairsOf(idx: IvfIndex)
       : Seq[(Int, Array[Float])] = idx.centroidPairs
 
-  /** The coarse-quantizer fit shared by [[build]] and the REFIT
-    * compaction ([[compactEpochs]] with `refit = true`): below
-    * [[Extensions.treeCellThreshold]] a hash-sampled MLlib KMeans and
-    * the flat literal-centroid rule; at and above it the bounded-
-    * sample two-level [[Extensions.TreeQuantizer]] and the codegen'd
-    * tree rule. Returns (centroids in cell order, the assignment
-    * Column rule, the tree when fitted). The flat path's lineage-
-    * shortening persist is released once the fit completes — the
-    * returned rule is a pure literal projection that never reads it. */
-  private def fitFor(emb: DataFrame, embCol: String, idCol: String,
+  /** The coarse-quantizer fit of the IVF family: [[build]], the REFIT
+    * compaction ([[compactEpochs]] with `refit = true`), and the ad-hoc
+    * [[Extensions.annIvf]], [[Extensions.ivfPqTopK]] and
+    * [[Extensions.knnJoin]]. Below [[Extensions.treeCellThreshold]] a
+    * hash-sampled MLlib KMeans and the flat literal-centroid rule; at
+    * and above it the bounded-sample two-level
+    * [[Extensions.TreeQuantizer]] and the codegen'd tree rule. Returns
+    * (centroids in cell order, the assignment Column rule, the tree
+    * when fitted). The flat path's lineage-shortening persist is
+    * released once the fit completes — the returned rule is a pure
+    * literal projection that never reads it. A one-row corpus is its
+    * own single centroid (MLlib rejects k = 1); an empty one fails a
+    * `require`. */
+  private[engine] def fitFor(emb: DataFrame, embCol: String, idCol: String,
       nCells: Int, seed: Long = 42L): (Seq[(Int, Array[Float])],
       org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       Option[Extensions.TreeQuantizer]) = {
@@ -361,6 +356,7 @@ object IvfIndex {
       val cnts = vecs.agg(count(lit(1)),
         count(when(pmod(xxhash64(col(idCol)), lit(4)) === 0, 1))).head()
       val (fullN, sampleN) = (cnts.getLong(0), cnts.getLong(1))
+      require(fullN > 0, "cannot fit a coarse quantizer on an empty corpus")
       val (fitSample, fitN) =
         if (sampleN >= nCells.toLong * 4) (sample, sampleN)
         else (vecs, fullN)
@@ -370,13 +366,16 @@ object IvfIndex {
       // a smaller (still contiguous 0..k-1) quantizer, not crash. At
       // every realistic corpus fitN >= nCells and the fit is
       // bit-unchanged.
-      val kEff = math.max(1L, math.min(nCells.toLong, fitN)).toInt
-      val km = new KMeans()
-        .setFeaturesCol("__vec").setPredictionCol("__cell")
-        .setK(kEff).setSeed(seed).setMaxIter(5).fit(fitSample)
-      val cents = km.clusterCenters.zipWithIndex.map { case (c, i) =>
-        (i, c.toArray.map(_.toFloat))
-      }.toSeq
+      val cents =
+        if (fitN == 1)
+          Seq(0 -> Extensions.quantizerSample(vecs, embCol, idCol, 1).head)
+        else new KMeans()
+          .setFeaturesCol("__vec").setPredictionCol("__cell")
+          .setK(math.min(nCells.toLong, fitN).toInt).setSeed(seed)
+          .setMaxIter(5).fit(fitSample)
+          .clusterCenters.zipWithIndex.map { case (c, i) =>
+            (i, c.toArray.map(_.toFloat))
+          }.toSeq
       (cents, e => Extensions.nearestCellExpr(e, cents.map(_._2.toSeq)),
         None)
     } finally vecs.unpersist()
@@ -557,8 +556,8 @@ object IvfIndex {
     * The full-vector cells stay as the exact re-rank source (and for
     * callers who skip re-rank, the codes sidecar alone serves).
     * Defaults track [[Extensions.ivfPqTopK]]'s r11 operating point
-    * (kCode 256, query refineFactor 8 — the RecallSweep knee in
-    * BASELINE.md); the codebook sidecar stays tiny (m·kCode rows).
+    * (kCode 256, query refineFactor 8 — the recall-sweep knee recorded
+    * in BASELINE.md); the codebook sidecar stays tiny (m·kCode rows).
     */
   def addPqCodes(spark: SparkSession, path: String, idCol: String,
       embCol: String, m: Int = 4, kCode: Int = 256,
@@ -1319,8 +1318,9 @@ object IvfIndex {
 
 /** Persisted IVF+PQ query path (see [[IvfIndex.addPqCodes]]): probe →
   * file-pruned ADC scan over the codes sidecar → exact re-rank of the
-  * shortlist from the full-vector cells. Output matches
-  * [[Extensions.ivfPqTopK]]: (query_id, neighbor_id, l2_dist, rank).
+  * shortlist from the full-vector cells ([[IvfPqIndex.search]], which
+  * the transient [[Extensions.ivfPqTopK]] runs too):
+  * (query_id, neighbor_id, l2_dist, rank).
   */
 final class IvfPqIndex private[engine] (
     centroids: Seq[(Int, Array[Float])],
@@ -1331,9 +1331,7 @@ final class IvfPqIndex private[engine] (
     embCol: String,
     tree: Option[Extensions.TreeQuantizer] = None) {
 
-  private val m = codebook.size
   private def cellsDf = IvfIndex.cellsWithEpochs(spark, path)
-  private def codesDf = IvfIndex.codesWithEpochs(spark, path)
 
   def queryByIds(queryIds: Seq[Long], k: Int, nprobe: Int,
       refineFactor: Int = 8): DataFrame = {
@@ -1345,18 +1343,35 @@ final class IvfPqIndex private[engine] (
 
   /** `queries` must carry (query_id, __q: array<float>). */
   def query(queries: DataFrame, k: Int, nprobe: Int,
+      refineFactor: Int): DataFrame =
+    IvfPqIndex.search(cellsDf, IvfIndex.codesWithEpochs(spark, path),
+      idCol, embCol, centroids, codebook, tree, queries, k, nprobe,
+      refineFactor)
+}
+
+object IvfPqIndex {
+
+  /** The IVF+PQ query over a cell-assigned corpus: `cells` carries
+    * (idCol, embCol, __cell), `codes` (idCol, codes, __cell) encoded
+    * under `codebook`, `queries` (query_id, __q). Each query probes its
+    * `nprobe` cells ([[IvfIndex.resolveProbes]], ranked by squared L2
+    * on a flat quantizer), ADC-scores only the codes inside them, keeps
+    * the best `k·refineFactor` in a bounded heap, and re-ranks that
+    * shortlist by exact squared L2 on the full vectors. The probed cell
+    * ids filter both scans as literals, so a saved layout prunes files
+    * on each. */
+  private[engine] def search(cells: DataFrame, codes: DataFrame,
+      idCol: String, embCol: String, centroids: Seq[(Int, Array[Float])],
+      codebook: Seq[Seq[Seq[Float]]], tree: Option[Extensions.TreeQuantizer],
+      queries: DataFrame, k: Int, nprobe: Int,
       refineFactor: Int): DataFrame = {
     require(k > 0 && nprobe > 0 && refineFactor > 0,
       "k, nprobe and refineFactor must be positive")
-    // the shared driver-resolved probe (IvfIndex.resolveProbes), ranked
-    // by squared L2 on flat indexes; probed cell ids as LITERALS →
-    // file-level pruning on BOTH the codes scan and the re-rank's
-    // cells scan
     val probe = IvfIndex.resolveProbes(queries, centroids, tree, nprobe,
       Extensions.pqSqDist)
     val adc = graft.functions.PqOps.pqAdc(col("__q"), col("codes"),
       codebook)
-    val shortlist = codesDf
+    val shortlist = codes
       .filter(Extensions.partitionIn("__cell", probe.cells))
       .select(col(idCol).as("neighbor_id"), col("codes"), col("__cell"))
       .join(broadcast(probe.probed), Seq("__cell"))
@@ -1365,7 +1380,7 @@ final class IvfPqIndex private[engine] (
         round(adc, 6).as("adc_dist"))
       .transform(Extensions.topKBy(_, "query_id", "neighbor_id",
         "adc_dist", k * refineFactor, smallestFirst = true))
-    val full = cellsDf.filter(Extensions.partitionIn("__cell", probe.cells))
+    val full = cells.filter(Extensions.partitionIn("__cell", probe.cells))
       .select(col(idCol).as("neighbor_id"), col(embCol).as("__e"))
     shortlist.select(col("query_id"), col("neighbor_id"))
       .join(full, Seq("neighbor_id"))

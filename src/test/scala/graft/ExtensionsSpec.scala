@@ -1011,7 +1011,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val recall = qids.map(q => got.getOrElse(q, Set.empty[Long])
       .intersect(exact(q)).size / 10.0).sum / qids.size
     info(f"ivfPqTopK mean recall@10 = $recall%.3f")
-    // r11 operating point (RecallSweep curve in BASELINE.md): measured
+    // r11 operating point (the recall-sweep curve in BASELINE.md): measured
     // 0.92 at nprobe=8/kCode=256/refine=8; the floor sits well under
     // the seeded measured value with regeneration slack. The cosine
     // oracle is NOT a handicap here: the sweep measured L2-vs-cosine

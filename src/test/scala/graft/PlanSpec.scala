@@ -405,15 +405,15 @@ class PlanSpec extends AnyFunSuite {
         assert(exchanges == 1, s"$name: expected 1 exchange:\n$plan")
       }
     }
-    // annIvf and bm25_topk keep exactly one provably-bounded window each
-    // (annIvf's centroid rank over the broadcast nCells rows; none in
-    // bm25) — the corpus-sized candidate rank must be heap-based in both
+    // annIvf queries a transient IvfIndex, whose probe is resolved on
+    // the driver: no centroid cross join and no rank window. Neither
+    // annIvf nor bm25_topk has a window — the corpus-sized candidate
+    // rank is heap-based in both
     val ivfPlan = executedPlan(graft.engine.Extensions.annIvf(
       emb, "embedding", "vec_id", Seq(0L, 1L, 2L), k = 5))
-    val ivfWindows = ivfPlan.linesIterator
-      .filter(_.contains("windowspecdefinition")).toSeq
-    assert(ivfWindows.forall(_.contains("__cdist")),
-      s"non-centroid window in annIvf:\n$ivfPlan")
+    assert(!ivfPlan.contains("Window") &&
+      !ivfPlan.contains("BroadcastNestedLoopJoin"),
+      s"annIvf plan was:\n$ivfPlan")
     val bmPlan = executedPlan(SparkEntry.queries("bm25_topk")(spark, sf))
     assert(!bmPlan.contains("Window"), s"bm25_topk plan was:\n$bmPlan")
   }
@@ -541,8 +541,9 @@ class PlanSpec extends AnyFunSuite {
       s"needs a third, neighbor-to-neighbor join), got $joins:\n$plan")
     // round-8 scaling fix: the adjacency attach must be a HASH join —
     // sort-merge sorts the exploded O(E) stream with an adjacency
-    // array on every row, which the ScaleProbe measured going
-    // super-linear past executor memory (BASELINE.md §scaling)
+    // array on every row, which the replication sweep recorded in
+    // BASELINE.md §scaling measured going super-linear past executor
+    // memory
     assert(!plan.contains("SortMergeJoin"),
       s"adjacency attach regressed to sort-merge:\n$plan")
   }

@@ -146,7 +146,7 @@ class TreeCellsSpec extends AnyFunSuite {
         .map { case (id, v) => (id, cos(v, qv)) }
         .sortBy { case (id, c) => (-c, id) }.take(3).map(_._1).toSeq
     }.toMap
-    // nCells=64 crosses knnTreeCellThreshold; nprobe=64 ≥ any leaf
+    // nCells=64 crosses treeCellThreshold; nprobe=64 ≥ any leaf
     // count the 120-row fit can produce ⇒ exhaustive ⇒ exact
     val got = graft.engine.Extensions.knnJoin(emb, "embedding",
         "vec_id", k = 3, nCells = 64, nprobe = 64)

@@ -207,9 +207,15 @@ class BatchScoringSpec extends AnyFunSuite {
       .select(col("embedding"))
       .collect().map(_.getSeq[Float](0).toArray.toSeq).toSeq
     val noNullVec = edged.filter(col("embedding").isNotNull)
+    // and a computed float column: cosineNearDupsBlocked's unit
+    // vectors, derived from the raw embedding and its norm
+    val norm = sqrt(dot(col("embedding"), col("embedding")))
+    val units = noNullVec.filter(norm > 0).select(col("vec_id"),
+      transform(col("embedding"), x => (x.cast("double") / norm)
+        .cast("float")).as("embedding"))
     for (emb <- Seq(noNullVec, noNullVec.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("embedding")))) {
-      val got = Extensions.pqSample(emb, "embedding", "vec_id", 300)
+        col("embedding").cast("array<double>").as("embedding")), units)) {
+      val got = Extensions.quantizerSample(emb, "embedding", "vec_id", 300)
         .map(_.toSeq.map(java.lang.Float.floatToRawIntBits)).toSeq
       val want = boxed(emb).map(_.map(java.lang.Float.floatToRawIntBits))
       assert(got == want)
