@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{BottomK, DotF32, MinHashSig, MmrSelect, SimHash64, TopKPairs}
 
@@ -14,56 +14,51 @@ import graft.functions.{BottomK, DotF32, MinHashSig, MmrSelect, SimHash64, TopKP
   * }}}
   *
   * (or `.withExtensions(new GraftExtensions)`) and `simhash64`,
-  * `dot_f32`, and `bottom_k` are available in SQL and via
-  * `call_function` on every session of that context — no per-session
-  * `register()` calls. The companion `register(spark)` helpers on each
-  * function object remain for ad-hoc sessions; this class is the
-  * deploy-time wiring (ladder rung (c): SparkSessionExtensions as the
-  * packaging for custom expressions).
+  * `dot_f32`, `minhash_sig`, `bottom_k`, `top_k_pairs` and `mmr_select`
+  * are available in SQL and via `call_function` on every session of
+  * that context. [[GraftExtensions.register]] installs the same table
+  * on an already-built session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private type Exprs = Seq[org.apache.spark.sql.catalyst.expressions.Expression]
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
+}
 
-  private def arity(name: String, exprs: Exprs, n: Int): Unit =
+object GraftExtensions {
+
+  private type Builder = Seq[Expression] => Expression
+
+  private def arity(name: String, n: Int)(build: Seq[Expression] => Expression)
+      : Builder = exprs => {
     if (exprs.length != n)
       throw new IllegalArgumentException(
         s"$name expects $n argument(s), got ${exprs.length}")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Exprs) => {
-        arity("simhash64", exprs, 1)
-        SimHash64(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("dot_f32"),
-      new ExpressionInfo(classOf[DotF32].getName, "dot_f32"),
-      (exprs: Exprs) => {
-        arity("dot_f32", exprs, 2)
-        DotF32(exprs.head, exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      // arity + foldable-literal k/seed validation lives in fromExprs
-      (exprs: Exprs) => MinHashSig.fromExprs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("bottom_k"),
-      new ExpressionInfo(classOf[BottomK].getName, "bottom_k"),
-      // arity + foldable-integral-k validation lives in BottomK.fromExprs
-      (exprs: Exprs) => BottomK.fromExprs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("top_k_pairs"),
-      new ExpressionInfo(classOf[TopKPairs].getName, "top_k_pairs"),
-      // arity + foldable-integral-k validation lives in fromExprs
-      (exprs: Exprs) => TopKPairs.fromExprs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("mmr_select"),
-      new ExpressionInfo(classOf[MmrSelect].getName, "mmr_select"),
-      // arity + foldable-integral-k validation lives in fromExprs
-      (exprs: Exprs) => MmrSelect.fromExprs(exprs)))
+    build(exprs)
   }
+
+  private def fn(name: String, cls: Class[_], build: Builder)
+      : (FunctionIdentifier, ExpressionInfo, Builder) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** The one (name, info, builder) table of the SQL functions. Arity
+    * and literal-argument checks run in the builder, so both routes
+    * raise the same `IllegalArgumentException` on a bad call. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
+    fn("simhash64", classOf[SimHash64],
+      arity("simhash64", 1)(e => SimHash64(e.head))),
+    fn("dot_f32", classOf[DotF32],
+      arity("dot_f32", 2)(e => DotF32(e.head, e(1)))),
+    // arity + foldable-literal validation lives in each fromExprs
+    fn("minhash_sig", classOf[MinHashSig], MinHashSig.fromExprs),
+    fn("bottom_k", classOf[BottomK], BottomK.fromExprs),
+    fn("top_k_pairs", classOf[TopKPairs], TopKPairs.fromExprs),
+    fn("mmr_select", classOf[MmrSelect], MmrSelect.fromExprs))
+
+  /** Register every function on an existing session (an ad-hoc session
+    * built without the extension). Idempotent. */
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    }
 }

@@ -260,10 +260,10 @@ object Analytics {
     * linearly with iterations; the persisted edge/node frames pin the
     * expensive base so each iteration re-reads memory, not parquet.
     *
-    * Caching contract (same as [[Extensions.minhashNearDupsMLlib]] /
-    * [[Extensions.annBucketed]]): the node/edge persists live until the
-    * session drops them — call `spark.catalog.clearCache()` when done
-    * with the returned ranks to release them.
+    * Caching contract (same as [[Extensions.annBucketed]]): the
+    * node/edge persists live until the session drops them — call
+    * `spark.catalog.clearCache()` when done with the returned ranks to
+    * release them.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3, damping: Double = 0.85,

@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.functions._
+import graft.functions.TokenHash
 
 /** Catalog entries for the Extensions operators (dedup / similarity /
   * text analysis), following the same determinism conventions as
@@ -996,16 +997,13 @@ object ExtensionQueries {
              |WHERE i.range <= len(toks)
              |ORDER BY doc_id, pos""".stripMargin)),
 
-    // ── SimHash signatures, ORACLE-exact since r12: the catalog form
-    // votes with the md5-60-bit token hash both engines compute
-    // identically (the doc_fingerprints playbook), so every signature
-    // bit matches DuckDB's re-derivation — all-integer votes, no float
-    // boundary. The native Murmur3 SimHash64 expression stays the
-    // production default, spec-covered (SimHashSigSpec + the
-    // simhash_neardups family). ─────────────────────────────────────────
+    // ── SimHash signatures: the SimHash64 kernel over the md5-60-bit
+    // token hash both engines compute identically (the doc_fingerprints
+    // playbook), so every signature bit matches DuckDB's re-derivation
+    // — all-integer votes, no float boundary. ────────────────────────
     QuerySpec("simhash_signatures",
-      (s, d) => Extensions.simhashSignaturesMd5(documents(s, d), "text",
-          "doc_id")
+      (s, d) => Extensions.simhashSignatures(documents(s, d), "text",
+          "doc_id", TokenHash.Md5_60)
         .orderBy("doc_id"),
       Some("""WITH t AS (
              |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
@@ -1030,12 +1028,10 @@ object ExtensionQueries {
     // LOSSLESS at maxHamming = numBands−1 — every qualifying pair shares
     // at least one unchanged band — so the whole operator (signatures,
     // band keys, candidate join, hamming filter) is deterministic and
-    // DuckDB replays it bit-for-bit. The native 64-bit Murmur3 form
-    // (Extensions.simhashNearDups) stays the production default,
-    // spec-covered by the banding-exactness law. ────────────────────────
+    // DuckDB replays it bit-for-bit. ───────────────────────────────────
     QuerySpec("simhash_neardup",
-      (s, d) => Extensions.simhashNearDupsMd5(documents(s, d), "text",
-          "doc_id", maxHamming = 3, numBands = 4)
+      (s, d) => Extensions.simhashNearDups(documents(s, d), "text",
+          "doc_id", maxHamming = 3, numBands = 4, hash = TokenHash.Md5_60)
         .orderBy("id_a", "id_b"),
       Some("""WITH t AS (
              |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
@@ -1068,13 +1064,12 @@ object ExtensionQueries {
              |FROM cand WHERE hamming <= 3
              |ORDER BY id_a, id_b""".stripMargin)),
 
-    // ── MinHash near-dup pairs, ORACLE-exact since r12: the catalog
-    // form signs with md5MinhashSig (band j = min over distinct tokens
-    // of md5Hash60(j + ":" + token) — both engines compute it
-    // identically), so DuckDB re-derives the signatures, the
-    // any-band-collision candidates, AND the exact Jaccard rescore
-    // (string-joined, the contamination_score precedent). The native
-    // seeded MinHashSig stays the production default, spec-covered.
+    // ── MinHash near-dup pairs: the MinHashSig kernel over the md5
+    // family (band j = min over distinct tokens of md5_60(j + ":" +
+    // token) — both engines compute it identically), so DuckDB
+    // re-derives the signatures, the any-band-collision candidates,
+    // AND the exact Jaccard rescore (string-joined, the
+    // contamination_score precedent).
     // Sample-bounded like ngram_jaccard: this synthetic corpus draws from
     // a tiny vocabulary, so nearly ALL pairs collide at Jaccard 0.5 and
     // the join degenerates to all-pairs distance scoring — a corpus
@@ -1082,8 +1077,7 @@ object ExtensionQueries {
     QuerySpec("minhash_neardup",
       (s, d) => Extensions.minhashNearDups(
           documents(s, d).filter(col("doc_id") < 300), "text", "doc_id",
-          maxJaccardDist = 0.3, numHashTables = 3,
-          sigOf = Some(Extensions.md5MinhashSig(3)))
+          maxJaccardDist = 0.3, numHashTables = 3, hash = TokenHash.Md5_60)
         .select(col("id_a"), col("id_b"), round(col("jaccard_dist"), 6)
           .as("jaccard_dist"))
         .orderBy("id_a", "id_b"),
@@ -1720,15 +1714,13 @@ object ExtensionQueries {
              |GROUP BY token
              |ORDER BY n DESC, token LIMIT 50""".stripMargin)),
 
-    // ── count-min-sketch token frequencies, ORACLE-exact since r12:
-    // the catalog form builds the sketch from md5-60-bit row hashes
-    // both engines compute identically (the simhash playbook) — the
-    // counter table is one bounded groupBy, estimates are min-of-depth
-    // exact integer counts, so DuckDB replays the whole sketch. The
-    // Spark-native count_min_sketch aggregate (engine-internal hash)
-    // stays available as Extensions.freqSketchEstimates, spec-covered ───
+    // ── count-min-sketch token frequencies: the sketch is built from
+    // md5-60-bit row hashes both engines compute identically (the
+    // simhash playbook) — the counter table is one bounded groupBy,
+    // estimates are min-of-depth exact integer counts, so DuckDB
+    // replays the whole sketch. ────────────────────────────────────────
     QuerySpec("token_freq_cms",
-      (s, d) => Extensions.cmsEstimatesMd5(documents(s, d), "text",
+      (s, d) => Extensions.cmsEstimates(documents(s, d), "text",
           Seq("the", "of", "and", "data", "model"),
           depth = CmsDepth, width = CmsWidth)
         .orderBy("token"),

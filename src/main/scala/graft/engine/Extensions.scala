@@ -1,11 +1,10 @@
 package graft.engine
 
-import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, CountVectorizer, MinHashLSH, RegexTokenizer}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
-import graft.functions.SimHash64.simhash64
+import graft.functions.{MinHashSig, SimHash64, TokenHash}
 
 /** North-star training-data pipeline operators (SURVEY.md §7 step 4,
   * BASELINE.json): deduplication (exact / MinHash-LSH / SimHash / n-gram
@@ -217,80 +216,42 @@ object Extensions {
 
   /** SimHash signatures per document (custom Catalyst expression,
     * graft.functions.SimHash64): one narrow projection, no shuffle.
-    * Near-dups = small hamming distance between signatures.
+    * Near-dups = small hamming distance between signatures. `hash`
+    * picks the token hash ([[TokenHash]]): 64-bit Murmur by default,
+    * or the 60-bit md5 slice DuckDB re-derives exactly (the catalog's
+    * `simhash_signatures`).
     */
-  def simhashSignatures(docs: DataFrame, textCol: String,
-      idCol: String): DataFrame =
+  def simhashSignatures(docs: DataFrame, textCol: String, idCol: String,
+      hash: TokenHash = TokenHash.Murmur): DataFrame =
     docs.select(col(idCol),
-      simhash64(docs.sparkSession, tokens(col(textCol))).as("simhash"))
+      SimHash64.simhash64(tokens(col(textCol)), hash).as("simhash"))
 
-  /** 60-bit SimHash over the [[md5Hash60]] token hash — the
-    * oracle-expressible twin of [[simhashSignatures]] (the
-    * doc_fingerprints playbook: both engines compute the md5 slice
-    * identically, so the whole signature is cross-engine exact). Same
-    * algorithm, different token hash: per bit b, the per-token votes
-    * (+1 if bit set else −1) sum over the doc; the signature sets bit
-    * b iff the sum is positive. All arithmetic is integer, so no
-    * float boundary can flip a bit.
-    *
-    * Scale shape: identical to the native form — ONE narrow
-    * projection, no shuffle, no explode; the per-doc fold runs as
-    * nested codegen'd HOFs (a 60-long vote array per doc, reused
-    * across tokens by the aggregate fold). The native
-    * [[graft.functions.SimHash64]] stays the production default
-    * (single murmur pass, no per-token md5); this form buys DuckDB
-    * reproducibility for the correctness gate.
-    */
-  def simhashSignaturesMd5(docs: DataFrame, textCol: String,
-      idCol: String): DataFrame =
-    // one codegen'd expression per row (graft.functions.SimHashMd5) —
-    // replaces the interpreted per-token 60-wide zip_with HOF fold it
-    // is bit-identical to (r18 optimization; equality law pinned in
-    // SimHashSpec, oracle twins unchanged)
-    docs.select(col(idCol),
-      graft.functions.SimHashMd5.simhashMd5(tokens(col(textCol)))
-        .as("simhash"))
-
-  /** SimHash near-dup candidate pairs: band the 64-bit signature into
-    * `numBands` equal bands (standard LSH trick), self-join per band,
-    * then filter on exact hamming distance. Shuffles on the small band
-    * keys, never the full cross product.
+  /** SimHash near-dup candidate pairs: band the `hash.bits`-bit
+    * signature into `numBands` equal bands (standard LSH trick),
+    * self-join per band, then filter on exact hamming distance.
+    * Shuffles on the small band keys, never the full cross product;
+    * the only full-corpus exchange carries (band, key, id, sig) rows,
+    * never tokens.
     *
     * RECALL BOUND (pigeonhole): a pair at hamming distance h is
     * GUARANTEED a band collision only when h ≤ numBands−1 — beyond that
     * the differing bits can spread across every band and the pair is
-    * silently dropped; recall is probabilistic and falls with h. More
-    * bands ⇒ wider guarantee but narrower band keys (64/numBands bits)
-    * ⇒ coarser buckets ⇒ more candidate pairs to rescore: at corpus
-    * scale keep band keys ≥8 bits (numBands ≤ 8).
+    * silently dropped; recall is probabilistic and falls with h. At
+    * `maxHamming = numBands − 1` banding is therefore LOSSLESS and the
+    * operator fully deterministic (the catalog's `simhash_neardup`,
+    * which DuckDB replays end to end). More bands ⇒ wider guarantee but
+    * narrower band keys (bits/numBands) ⇒ coarser buckets ⇒ more
+    * candidate pairs to rescore: at corpus scale keep band keys ≥8 bits.
     */
   def simhashNearDups(docs: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 8, numBands: Int = 4): DataFrame = {
-    // ≥2: one band would be the degenerate all-pairs join (and its 64-bit
-    // mask computation, 1L << 64, wraps to 0 on the JVM)
-    require(numBands >= 2 && numBands <= 16 && 64 % numBands == 0,
-      "numBands must divide 64, in [2, 16]")
-    bandedHammingPairs(simhashSignatures(docs, textCol, idCol), idCol,
-      sigBits = 64, numBands = numBands, maxHamming = maxHamming)
-  }
-
-  /** SimHash near-dup pairs over the 60-bit [[simhashSignaturesMd5]]
-    * signature — the oracle-expressible twin of [[simhashNearDups]].
-    * With `maxHamming = numBands − 1` (the default 3 at 4 bands) the
-    * pigeonhole bound makes banding LOSSLESS, not approximate: any pair
-    * within the hamming budget has at least one band with zero
-    * differing bits, so the band join finds every qualifying pair and
-    * the operator is fully deterministic — DuckDB replays signatures,
-    * band keys, the candidate join, and the popcount filter end to end.
-    * Same scale shape as the native form: the only full-corpus exchange
-    * carries (band, 15-bit key, id, sig) rows, never tokens.
-    */
-  def simhashNearDupsMd5(docs: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3, numBands: Int = 4): DataFrame = {
-    require(numBands >= 2 && numBands <= 12 && 60 % numBands == 0,
-      "numBands must divide 60, in [2, 12]")
-    bandedHammingPairs(simhashSignaturesMd5(docs, textCol, idCol), idCol,
-      sigBits = 60, numBands = numBands, maxHamming = maxHamming)
+      maxHamming: Int = 8, numBands: Int = 4,
+      hash: TokenHash = TokenHash.Murmur): DataFrame = {
+    // ≥2: one band would be the degenerate all-pairs join (and its
+    // full-width mask computation, 1L << 64, wraps to 0 on the JVM)
+    require(numBands >= 2 && numBands <= 16 && hash.bits % numBands == 0,
+      s"numBands must divide ${hash.bits}, in [2, 16]")
+    bandedHammingPairs(simhashSignatures(docs, textCol, idCol, hash), idCol,
+      sigBits = hash.bits, numBands = numBands, maxHamming = maxHamming)
   }
 
   /** Shared LSH banding for hamming near-dup search: split the
@@ -327,41 +288,27 @@ object Extensions {
     * vocabulary), a (hash-index, value) band self-join yields candidates
     * (OR-amplification over k single-value bands — the same candidate
     * rule as MLlib's `numHashTables`), and the exact token-set Jaccard
-    * distance is computed ONLY for candidate pairs.
+    * distance is computed ONLY for candidate pairs. `hash` picks the
+    * token hash ([[TokenHash]]): the seeded Murmur family by default, or
+    * `md5_60(i + ":" + token)` (`seed` ignored), which DuckDB
+    * re-derives so candidates AND rescore replay bit for bit (the
+    * catalog's `minhash_neardup`).
     *
     * Scale shape: signatures ride a single scan; the only full-corpus
     * exchange carries (idx, long, id) triples — never tokens, never a
-    * vocabulary. The MLlib CountVectorizer→MinHashLSH form this replaces
-    * `fit`s a corpus-wide vocabulary onto the driver (O(|vocab|) driver
-    * heap — a 100 TB non-starter) and re-tokenizes the corpus three
-    * times; measured 4.4 s vs ~0.5 s at sf0.1 for identical semantics.
-    * [[minhashNearDupsMLlib]] keeps the old form for comparison.
+    * vocabulary. MLlib's CountVectorizer→MinHashLSH `fit`s a
+    * corpus-wide vocabulary onto the driver (O(|vocab|) driver heap — a
+    * 100 TB non-starter) and re-tokenizes the corpus three times;
+    * measured 4.4 s vs ~0.5 s at sf0.1 for identical semantics.
     *
     * Exactness: `jaccard_dist` is exact (token-set intersection over
     * union on candidates). Recall: a true near-dup pair is missed only
     * if all k independent minhash values differ — P[miss] = (1−j)^k,
     * the standard OR-amplification bound.
     */
-  /** The DuckDB-reproducible signature builder for [[minhashNearDups]]
-    * (the md5 playbook): band j's minhash = min over the doc's
-    * distinct tokens of `md5Hash60(j + ":" + token)` — one nested HOF,
-    * no shuffle, and the oracle recomputes every value identically, so
-    * candidate generation AND the exact rescore both replay
-    * bit-for-bit. The native seeded [[graft.functions.MinHashSig]]
-    * stays the production default (one murmur pass per token vs k md5
-    * digests). */
-  def md5MinhashSig(k: Int)(toks: Column): Column =
-    transform(sequence(lit(0), lit(k - 1)), j =>
-      array_min(transform(toks, t =>
-        md5Hash60(concat(j.cast("string"), lit(":"), t)))))
-
   def minhashNearDups(docs: DataFrame, textCol: String, idCol: String,
       maxJaccardDist: Double = 0.8, numHashTables: Int = 3,
-      seed: Long = 42L,
-      // signature builder over the distinct-token array; defaults to
-      // the native seeded MinHashSig expression, the catalog passes
-      // [[md5MinhashSig]] for oracle-exactness
-      sigOf: Option[Column => Column] = None): DataFrame = {
+      seed: Long = 42L, hash: TokenHash = TokenHash.Murmur): DataFrame = {
     // "" is not a token (split("", " ") yields [""]): without stripping
     // it, every empty/whitespace-only doc shares that token, collides on
     // every band, AND survives the exact rescore — O(m²) output on a
@@ -372,9 +319,9 @@ object Extensions {
     val toks = docs.select(col(idCol),
       array_remove(array_distinct(tokens(col(textCol))), "").as("__toks"))
       .filter(size(col("__toks")) > 0)
-    val mkSig: Column => Column = sigOf.getOrElse(ts =>
-      graft.functions.MinHashSig.minhashSig(ts, numHashTables, seed))
-    val sig = toks.select(col(idCol), mkSig(col("__toks")).as("__sig"))
+    val sig = toks.select(col(idCol),
+      MinHashSig.minhashSig(col("__toks"), numHashTables, seed, hash)
+        .as("__sig"))
     val banded = sig.select(col(idCol),
       posexplode(col("__sig")).as(Seq("__band", "__h")))
     val cand = banded.select(col("__band"), col("__h"), col(idCol).as("id_a"))
@@ -412,8 +359,7 @@ object Extensions {
       array_remove(array_distinct(tokens(col(textCol))), "").as("__toks"))
       .filter(size(col("__toks")) > 0)
     toks.select(col(idCol),
-      graft.functions.MinHashSig.minhashSig(col("__toks"), numHashTables, seed)
-        .as("sig"),
+      MinHashSig.minhashSig(col("__toks"), numHashTables, seed).as("sig"),
       transform(col("__toks"), t => xxhash64(t)).as("tok_hashes"))
   }
 
@@ -458,39 +404,6 @@ object Extensions {
         (lit(1.0) - col("__ni") / (col("__na") + col("__nb") - col("__ni")))
           .as("jaccard_dist"))
       .filter(col("jaccard_dist") <= maxJaccardDist)
-  }
-
-  /** MinHash-LSH near-dup pairs via MLlib: tokens → binary
-    * CountVectorizer → MinHashLSH → approxSimilarityJoin. Kept as the
-    * MLlib-machinery twin of [[minhashNearDups]] (same candidate rule);
-    * prefer the native form — CountVectorizer.fit materializes the
-    * corpus vocabulary on the driver, which does not survive 100 TB.
-    *
-    * NOTE: persists the internal TF frame for the duration of the
-    * session (it feeds the fit and both join sides — uncaching before
-    * the result is consumed would force 3× recompute). Long-lived
-    * services calling this repeatedly should `spark.catalog.clearCache()`
-    * between batches.
-    */
-  def minhashNearDupsMLlib(docs: DataFrame, textCol: String, idCol: String,
-      maxJaccardDist: Double = 0.8, numHashTables: Int = 3): DataFrame = {
-    val toks = new RegexTokenizer().setInputCol(textCol).setOutputCol("__toks")
-      .setPattern("\\s+")
-    val tokenized = toks.transform(docs.select(col(idCol), col(textCol)))
-    val cv = new CountVectorizer().setInputCol("__toks").setOutputCol("__tf")
-      .setBinary(true).setMinDF(1.0)
-    val cvm = cv.fit(tokenized)
-    // the TF frame feeds three consumers (LSH fit + both sides of the
-    // self-join) — without the cache, tokenize+vectorize runs 3×
-    val tf = cvm.transform(tokenized)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lsh = new MinHashLSH().setInputCol("__tf").setOutputCol("__hashes")
-      .setNumHashTables(numHashTables).setSeed(42L)
-    val model = lsh.fit(tf)
-    model.approxSimilarityJoin(tf, tf, maxJaccardDist, "jaccard_dist")
-      .select(col(s"datasetA.$idCol").as("id_a"),
-        col(s"datasetB.$idCol").as("id_b"), col("jaccard_dist"))
-      .filter(col("id_a") < col("id_b"))
   }
 
   /** Exact word-n-gram Jaccard similarity for candidate pairs sharing at
@@ -2224,42 +2137,6 @@ object Extensions {
     }
   }
 
-  /** Deterministic hash split: assign each row to train/holdout by a
-    * stable content hash of its key — reproducible across runs, cluster
-    * sizes, AND partitionings (randomSplit's seed only fixes the result
-    * for one physical partitioning, a classic training-pipeline trap).
-    * Bucket = first two hex chars of md5(key) (256 buckets);
-    * `keepBuckets` of 256 go to the kept split (205/256 ≈ 80%).
-    */
-  /** Approximate token frequencies via a count-min sketch — the
-    * mergeable-sketch companion to the exact heavy hitters
-    * (`top_tokens`): per-partition sketches merge associatively, so ONE
-    * ~KB binary crosses the wire per partition regardless of corpus
-    * size, where the exact count shuffles every distinct token. The
-    * standard CMS guarantee bounds the overcount: estimate ∈
-    * [true, true + ε·N] with probability ≥ 1−δ (N = total tokens).
-    * The merged sketch is decoded on the driver — a few KB, the only
-    * driver-side data (like IvfIndex's probed cell-id set). Seeded:
-    * bit-reproducible estimates.
-    */
-  /** Count-min sketch with the DuckDB-reproducible md5-60-bit row
-    * hashes — the oracle-expressible twin of [[freqSketchEstimates]]
-    * (the simhash/doc_fingerprints playbook): row j hashes token t at
-    * `md5Hash60(j + ":" + t) mod width`, the counter table is ONE
-    * map-side-combinable groupBy on ≤ depth·width keys (the sketch
-    * itself, as rows), and each query token reads back the MIN of its
-    * depth counters. Same CMS overcount guarantee (estimate ∈
-    * [true, true + N/width] per row, min over depth rows); everything
-    * is exact integer counting on deterministic hashes, so DuckDB
-    * replays it bit-for-bit. Query-token positions are computed
-    * driver-side with the identical md5 slice (a few rows — the
-    * [[freqSketchEstimates]] driver-decode precedent) and joined
-    * against the counter table; a position never seen counts 0.
-    *
-    * Scale shape: the corpus-sized work is one explode + one
-    * hash-keyed groupBy bounded by depth·width keys at ANY corpus
-    * size; the query side is |queryTokens|·depth rows broadcast.
-    */
   /** HyperLogLog constants, fixed at p = 8 (m = 256 buckets): the
     * micro-unit bias constant ALPHA ≈ 0.7213/(1 + 1.079/m) and the
     * exact-integer numerator ALPHA·m²·2⁵³·10⁻⁶ the estimator
@@ -2323,7 +2200,24 @@ object Extensions {
     hllEstimateFromRegisters(hllRegisters(rows, groupCol, valueCol),
       groupCol)
 
-  def cmsEstimatesMd5(docs: DataFrame, textCol: String,
+  /** Approximate token frequencies via a count-min sketch — the
+    * bounded companion to the exact heavy hitters (`top_tokens`): row j
+    * hashes token t at `md5_60(j + ":" + t) mod width`, the counter
+    * table is ONE map-side-combinable groupBy on ≤ depth·width keys
+    * (the sketch itself, as rows), and each query token reads back the
+    * MIN of its depth counters. The CMS guarantee bounds the overcount:
+    * estimate ∈ [true, true + N/width] per row, min over depth rows
+    * (N = total tokens). Everything is exact integer counting on
+    * deterministic hashes, so DuckDB replays it bit for bit. Query-token
+    * positions are computed driver-side with the same md5 slice
+    * ([[TokenHash.Md5_60]]) and joined against the counter table; a
+    * position never seen counts 0.
+    *
+    * Scale shape: the corpus-sized work is one explode + one
+    * hash-keyed groupBy bounded by depth·width keys at ANY corpus
+    * size; the query side is |queryTokens|·depth rows broadcast.
+    */
+  def cmsEstimates(docs: DataFrame, textCol: String,
       queryTokens: Seq[String], depth: Int = 4,
       width: Int = 1 << 14): DataFrame = {
     require(queryTokens.nonEmpty, "queryTokens must be non-empty")
@@ -2338,34 +2232,16 @@ object Extensions {
       .select(explode(array(posCols: _*)).as("__jp"))
       .select(col("__jp.__j").as("__j"), col("__jp.__pos").as("__pos"))
       .groupBy("__j", "__pos").agg(count(lit(1)).as("__n"))
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def md5Hex(s: String): String =
-      md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val qRows = for {
       t <- queryTokens
       j <- 0 until depth
-    } yield (t, j, java.lang.Long.parseLong(
-      md5Hex(s"$j:$t").substring(0, 15), 16) % width)
+    } yield (t, j, TokenHash.Md5_60.of(
+      s"$j:$t".getBytes(java.nio.charset.StandardCharsets.UTF_8)) % width)
     val qDf = docs.sparkSession.createDataFrame(qRows)
       .toDF("token", "__j", "__pos")
     qDf.join(counters, Seq("__j", "__pos"), "left")
       .groupBy("token")
       .agg(min(coalesce(col("__n"), lit(0L))).as("est_count"))
-  }
-
-  def freqSketchEstimates(docs: DataFrame, textCol: String,
-      queryTokens: Seq[String], eps: Double = 0.001,
-      confidence: Double = 0.99, seed: Int = 42): DataFrame = {
-    require(queryTokens.nonEmpty, "queryTokens must be non-empty")
-    val skBytes = docs
-      .select(explode(tokens(col(textCol))).as("__tok"))
-      .agg(expr(s"count_min_sketch(__tok, CAST($eps AS DOUBLE), " +
-        s"CAST($confidence AS DOUBLE), $seed)").as("__sk"))
-      .head().getAs[Array[Byte]](0)
-    val sk = org.apache.spark.util.sketch.CountMinSketch.readFrom(
-      new java.io.ByteArrayInputStream(skBytes))
-    val rows = queryTokens.map(t => (t, sk.estimateCount(t)))
-    docs.sparkSession.createDataFrame(rows).toDF("token", "est_count")
   }
 
   /** Exact dedup keeping the BEST row of each dupe group instead of the
@@ -2426,6 +2302,13 @@ object Extensions {
       .drop("__md5", "__b", "__off")
   }
 
+  /** Deterministic hash split: assign each row to train/holdout by a
+    * stable content hash of its key — reproducible across runs, cluster
+    * sizes, AND partitionings (randomSplit's seed only fixes the result
+    * for one physical partitioning, a classic training-pipeline trap).
+    * Bucket = first two hex chars of md5(key) (256 buckets);
+    * `keepBuckets` of 256 go to the kept split (205/256 ≈ 80%).
+    */
   def hashSplit(df: DataFrame, keyCol: String,
       keepBuckets: Int = 205): DataFrame = {
     require(keepBuckets >= 0 && keepBuckets <= 256)

@@ -1,7 +1,7 @@
 package graft.engine
 
 import java.io.File
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
 
 /** The generation/version directory protocol shared by the versioned
   * writers — [[graft.streaming.Streaming.mergeSink]] /
@@ -32,17 +32,33 @@ import java.nio.file.{Files, Path}
   */
 object Generations {
 
-  /** The directory name the `_CURRENT` pointer names, if published. */
+  /** The directory name the `_CURRENT` pointer names, if published.
+    * An empty pointer is a torn commit (no [[publish]] writes one) and
+    * fails loudly: resolving it as "nothing published" would silently
+    * read the root instead of the live generation. */
   def currentName(path: String): Option[String] = {
     val marker = new File(path, "_CURRENT")
-    if (marker.exists())
-      Some(new String(Files.readAllBytes(marker.toPath), "UTF-8").trim)
-    else None
+    if (marker.exists()) {
+      val name = new String(Files.readAllBytes(marker.toPath), "UTF-8").trim
+      if (name.isEmpty)
+        throw new IllegalStateException(
+          s"empty _CURRENT pointer under $path: a publish was torn; " +
+            "rewrite it to name the live generation")
+      Some(name)
+    } else None
   }
 
-  /** Atomically-enough publish: write the pointer after the stage. */
-  def publish(path: String, name: String): Unit =
-    Files.write(new File(path, "_CURRENT").toPath, name.getBytes("UTF-8"))
+  /** Flip the `_CURRENT` pointer to `name` — the commit point. The
+    * pointer is staged in a sibling file and renamed over the old one,
+    * so a crash leaves either the old pointer or the new, never a
+    * truncated one. */
+  def publish(path: String, name: String): Unit = {
+    require(name.trim.nonEmpty, "publish needs a generation name")
+    val staged = new File(path, "_CURRENT.tmp").toPath
+    Files.write(staged, name.getBytes("UTF-8"))
+    Files.move(staged, new File(path, "_CURRENT").toPath,
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
 
   /** Sweep superseded generation/version directories under `path`,
     * keeping the `keep` newest plus — always, regardless of age — the

@@ -146,16 +146,12 @@ object Scale {
     require(version.nonEmpty && !version.contains("/"),
       "version must be a plain directory name")
     val spark = df.sparkSession
-    val dir = new java.io.File(path)
-    dir.mkdirs()
+    new java.io.File(path).mkdirs()
     val staged = s"$path/$version"
     df.write.mode("errorifexists").parquet(staged)
     val report = Quality.check(spark.read.parquet(staged), rules).collect()
     val ok = report.forall(_.getBoolean(4))
-    if (ok)
-      java.nio.file.Files.write(
-        new java.io.File(dir, "_CURRENT").toPath,
-        version.getBytes("UTF-8"))
+    if (ok) Generations.publish(path, version)
     ok
   }
 
@@ -181,10 +177,7 @@ object Scale {
     require(cap >= 1L)
     val report = Quality.check(spark.read.parquet(staged), rules).collect()
     val ok = report.forall(_.getBoolean(4))
-    if (ok)
-      java.nio.file.Files.write(
-        new java.io.File(path, "_CURRENT").toPath,
-        newVersion.getBytes("UTF-8"))
+    if (ok) Generations.publish(path, newVersion)
     ok
   }
 
@@ -205,10 +198,8 @@ object Scale {
     * target.
     */
   def readPublished(spark: SparkSession, path: String): DataFrame = {
-    val marker = new java.io.File(path, "_CURRENT")
-    require(marker.exists(), s"nothing published under $path")
-    val v = new String(java.nio.file.Files.readAllBytes(marker.toPath),
-      "UTF-8").trim
+    val v = Generations.currentName(path).getOrElse(
+      throw new IllegalArgumentException(s"nothing published under $path"))
     spark.read.parquet(s"$path/$v")
   }
 

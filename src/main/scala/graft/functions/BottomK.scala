@@ -88,9 +88,8 @@ case class BottomK(
 
 object BottomK {
 
-  /** Validated SQL builder shared by [[register]] and
-    * [[graft.GraftExtensions]]: k must be a foldable integral literal —
-    * a raw eval/cast would surface ClassCastException (BIGINT literal)
+  /** Validated SQL builder of `bottom_k` ([[graft.GraftExtensions]]):
+    * k must be a foldable integral literal — a raw eval/cast would surface ClassCastException (BIGINT literal)
     * or an eval-on-unresolved crash (column reference) to SQL users.
     */
   def fromExprs(exprs: Seq[Expression]): Expression = {
@@ -110,11 +109,6 @@ object BottomK {
     }
     BottomK(exprs.head, k).toAggregateExpression()
   }
-
-  /** Register `bottom_k(col, k)` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bottom_k", fromExprs, "scala_udf")
 
   /** Column-API entry point; wraps the aggregate directly (no
     * session-registry side effect). `spark` kept for signature

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared greedy BPE merge machinery (opt r19, guide §4 — the
-  * SimHashMd5 precedent): the `aggregate(syms, empty, fold)` HOF form
+  * SimHash64 precedent): the `aggregate(syms, empty, fold)` HOF form
   * Extensions.bpeApplyRule builds is interpreted per ELEMENT and pays
   * two immutable array copies per appended symbol — O(len²) per word
   * per rule, outside whole-stage codegen. These expressions run the

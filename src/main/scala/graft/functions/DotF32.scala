@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -95,13 +95,6 @@ object DotF32 {
     }
     s
   }
-
-  /** Register `dot_f32` in the session's function registry — the SQL
-    * route (see also [[graft.GraftExtensions]]). Idempotent.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f32", exprs => DotF32(exprs.head, exprs(1)), "scala_udf")
 
   /** Column-API entry point. Wraps the expression directly (no
     * session-registry side effect — a Column built here resolves on

@@ -1,42 +1,44 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.hash.Murmur3_x86_32
-import org.apache.spark.unsafe.types.UTF8String
 
 /** k-permutation MinHash signature of a token array, as a native
-  * Catalyst expression: `minhash_sig(tokens)` → `array<long>` of `k`
-  * signature values.
+  * Catalyst expression: `minhash_sig(tokens, k, seed)` → `array<long>`
+  * of `k` signature values.
   *
-  * Per row: each token gets one 64-bit base hash (two Murmur3 passes,
-  * seeds 0x9747b28c / 0x5bd1e995 — same primitive as [[SimHash64]]);
-  * hash i of the signature is `min over tokens of mix64(base ^ c_i)`
-  * where `c_i = splitmix64(seed + i)` — the standard "one hash, k
-  * cheap permutations" construction (Broder'97 resemblance sketches).
-  * Duplicate tokens collapse for free (same base hash → same mins), so
-  * the signature is a pure set sketch: P[sig_a(i) == sig_b(i)] ≈
-  * Jaccard(A, B).
+  * Per row: value i of the signature is the min over tokens of member
+  * i of the [[TokenHash]] family. With [[TokenHash.Murmur]] that is
+  * `mix64(base ^ c_i)`, `base` one 64-bit Murmur word per token and
+  * `c_i = splitmix64(seed + i)` — the standard "one hash, k cheap
+  * permutations" construction (Broder'97 resemblance sketches). With
+  * [[TokenHash.Md5_60]] it is `md5_60(i + ":" + token)` and `seed` is
+  * ignored: DuckDB re-derives every value (the `minhash_neardup`
+  * entry). Duplicate tokens collapse for free (same hash → same mins),
+  * so the signature is a pure set sketch: P[sig_a(i) == sig_b(i)] ≈
+  * Jaccard(A, B). Null tokens are skipped; an array with no non-null
+  * token signs as k × `Long.MaxValue`.
   *
   * An Expression rather than explode+groupBy because the relational
   * form shuffles every (doc, token) pair to compute k `min` aggregates
   * — a full-corpus token shuffle. This form is a single projection
   * inside whole-stage codegen: at 100 TB the signature costs one scan,
   * and only the k-long signatures (not the tokens) ever reach an
-  * exchange. Replaces the MLlib CountVectorizer→MinHashLSH path, whose
-  * `fit` materializes the corpus vocabulary on the driver — a
-  * scale-killer the sketch never needed.
+  * exchange. No CountVectorizer→MinHashLSH fit: MLlib's `fit`
+  * materializes the corpus vocabulary on the driver — a scale-killer
+  * the sketch never needed.
   *
   * North-star extension (dedup family) — reference has zero custom
   * functions (reference: src/feature_engineering.py:7).
   */
-case class MinHashSig(child: Expression, k: Int, seed: Long)
-    extends UnaryExpression {
+case class MinHashSig(child: Expression, k: Int, seed: Long,
+    hash: TokenHash = TokenHash.Murmur) extends UnaryExpression {
 
-  require(k > 0 && k <= 1024, s"minhash_sig: k must be in 1..1024, got $k")
+  require(k > 0 && k <= MinHashSig.MaxK,
+    s"minhash_sig: k must be in 1..${MinHashSig.MaxK}, got $k")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -51,14 +53,15 @@ case class MinHashSig(child: Expression, k: Int, seed: Long)
     }
 
   override def nullSafeEval(v: Any): Any =
-    MinHashSig.eval(v.asInstanceOf[ArrayData], k, seed)
+    MinHashSig.eval(v.asInstanceOf[ArrayData], k, seed, hash)
 
   // companion referenced as MinHashSig$.MODULE$ — see SimHash64's note:
   // the bare class reference fails janino and silently degrades to
   // interpreted per-row eval
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashSig$$.MODULE$$.eval($c, $k, ${seed}L);")
+      s"${ev.value} = graft.functions.MinHashSig$$.MODULE$$" +
+        s".eval($c, $k, ${seed}L, ${hash.ref});")
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
     copy(child = newChild)
@@ -66,32 +69,30 @@ case class MinHashSig(child: Expression, k: Int, seed: Long)
 
 object MinHashSig {
 
-  /** splitmix64 finalizer — full-avalanche 64-bit mix. */
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
+  /** The largest signature length `minhash_sig` accepts. */
+  val MaxK = 1024
+
+  /** The Murmur kernel (the SQL `minhash_sig`). */
+  def eval(arr: ArrayData, k: Int, seed: Long): GenericArrayData =
+    eval(arr, k, seed, TokenHash.Murmur)
 
   /** Shared by interpreted eval and generated code. */
-  def eval(arr: ArrayData, k: Int, seed: Long): GenericArrayData = {
+  def eval(arr: ArrayData, k: Int, seed: Long,
+      hash: TokenHash): GenericArrayData = {
     val cs = new Array[Long](k)
     var i = 0
-    while (i < k) { cs(i) = mix64(seed + i); i += 1 }
+    while (i < k) { cs(i) = TokenHash.mix64(seed + i); i += 1 }
     val mins = new Array[Long](k)
     java.util.Arrays.fill(mins, Long.MaxValue)
+    val vals = new Array[Long](k)
     val n = arr.numElements()
     var t = 0
     while (t < n) {
       if (!arr.isNullAt(t)) {
-        val s = arr.getUTF8String(t)
-        val base = (hash(s, 0x9747b28c).toLong << 32) |
-          (hash(s, 0x5bd1e995).toLong & 0xffffffffL)
+        hash.family(arr.getUTF8String(t), cs, vals)
         i = 0
         while (i < k) {
-          val v = mix64(base ^ cs(i))
-          if (v < mins(i)) mins(i) = v
+          if (vals(i) < mins(i)) mins(i) = vals(i)
           i += 1
         }
       }
@@ -99,17 +100,6 @@ object MinHashSig {
     }
     new GenericArrayData(mins)
   }
-
-  private def hash(s: UTF8String, seed: Int): Int =
-    Murmur3_x86_32.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset,
-      s.numBytes(), seed)
-
-  /** Register `minhash_sig(tokens, k, seed)` in the session registry.
-    * Idempotent; see also [[graft.GraftExtensions]].
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", exprs => fromExprs(exprs), "scala_udf")
 
   /** SQL-route constructor: validates `k` / `seed` are foldable
     * integral literals (the signature layout is plan-time fixed).
@@ -133,8 +123,10 @@ object MinHashSig {
   }
 
   /** Column-API entry point. */
-  def minhashSig(tokens: Column, k: Int, seed: Long = 42L): Column = {
+  def minhashSig(tokens: Column, k: Int, seed: Long = 42L,
+      hash: TokenHash = TokenHash.Murmur): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(MinHashSig(ColumnBridge.expression(tokens), k, seed))
+    ColumnBridge.column(
+      MinHashSig(ColumnBridge.expression(tokens), k, seed, hash))
   }
 }

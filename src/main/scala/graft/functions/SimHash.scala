@@ -1,19 +1,21 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.hash.Murmur3_x86_32
-import org.apache.spark.unsafe.types.UTF8String
 
-/** 64-bit SimHash of a token array, as a native Catalyst expression.
+/** SimHash of a token array over `hash.bits` bits, as a native Catalyst
+  * expression.
   *
-  * Per-row: each token is hashed twice with Murmur3 (two seeds → 64
-  * bits); each bit position accumulates +1/-1 across tokens; the output
-  * bit is the sign. Near-duplicate documents then differ in few bits
-  * (compare with `bit_count(a ^ b)` / hamming distance).
+  * Per row: each token's [[TokenHash]] word votes +1/−1 on every bit
+  * position; the output sets bit b iff the vote sum is positive.
+  * Near-duplicate documents then differ in few bits (compare with
+  * `bit_count(a ^ b)` / hamming distance). All arithmetic is integer,
+  * so no float boundary can flip a bit. With [[TokenHash.Murmur]] the
+  * signature is 64 bits; with [[TokenHash.Md5_60]] it is 60 bits that
+  * DuckDB re-derives exactly (the catalog's `simhash_*` entries).
   *
   * Implemented as an Expression rather than explode+groupBy because the
   * relational form multiplies the corpus 64× (tokens × bit positions)
@@ -24,7 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * North-star extension (dedup family) — not present in the reference
   * (which has zero custom functions, reference: src/feature_engineering.py:7).
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression, hash: TokenHash = TokenHash.Murmur)
+    extends UnaryExpression {
 
   override def dataType: DataType = LongType
 
@@ -38,10 +41,8 @@ case class SimHash64(child: Expression) extends UnaryExpression {
           s"simhash64 requires array<string>, got ${other.simpleString(10)}")
     }
 
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    SimHash64.eval(arr)
-  }
+  override def nullSafeEval(v: Any): Any =
+    SimHash64.eval(v.asInstanceOf[ArrayData], hash)
 
   // NB: the companion must be referenced as SimHash64$.MODULE$ — scalac
   // emits no static `eval` forwarder on the class because Expression
@@ -50,27 +51,30 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   // per record (a WARN in the logs, not an error)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SimHash64$$.MODULE$$.eval($c);")
+      s"${ev.value} = graft.functions.SimHash64$$.MODULE$$.eval($c, ${hash.ref});")
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
 }
 
 object SimHash64 {
-  /** Shared by interpreted eval and generated code. */
-  def eval(arr: ArrayData): Long = {
-    val counts = new Array[Int](64)
+
+  /** The Murmur kernel (the SQL `simhash64`). */
+  def eval(arr: ArrayData): Long = eval(arr, TokenHash.Murmur)
+
+  /** Shared by interpreted eval and generated code. Null tokens cast
+    * no vote; an empty (or all-null) array signs as 0. */
+  def eval(arr: ArrayData, hash: TokenHash): Long = {
+    val bits = hash.bits
+    val votes = new Array[Int](bits)
     val n = arr.numElements()
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val s = arr.getUTF8String(i)
-        val h1 = hash(s, 0x9747b28c)
-        val h2 = hash(s, 0x5bd1e995)
+        val w = hash.word(arr.getUTF8String(i))
         var b = 0
-        while (b < 32) {
-          if (((h1 >>> b) & 1) == 1) counts(b) += 1 else counts(b) -= 1
-          if (((h2 >>> b) & 1) == 1) counts(b + 32) += 1 else counts(b + 32) -= 1
+        while (b < bits) {
+          if (((w >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
           b += 1
         }
       }
@@ -78,127 +82,19 @@ object SimHash64 {
     }
     var out = 0L
     var b = 0
-    while (b < 64) {
-      if (counts(b) > 0) out |= (1L << b)
+    while (b < bits) {
+      if (votes(b) > 0) out |= (1L << b)
       b += 1
     }
     out
   }
 
-  private def hash(s: UTF8String, seed: Int): Int =
-    Murmur3_x86_32.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset,
-      s.numBytes(), seed)
-
-  /** Register `simhash64` in the session's function registry — the SQL
-    * route (see also [[graft.GraftExtensions]]). Idempotent.
+  /** Column-API entry point: `simhash64(split(lower(text), " "))`.
+    * Wraps the expression directly (no session-registry side effect).
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "scala_udf")
-
-  /** Column-API entry point: `simhash64(spark, split(lower(text), " "))`.
-    * Wraps the expression directly (no session-registry side effect);
-    * the `spark` parameter is kept for signature stability.
-    */
-  def simhash64(spark: SparkSession, tokens: Column): Column = {
+  def simhash64(tokens: Column,
+      hash: TokenHash = TokenHash.Murmur): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(SimHash64(ColumnBridge.expression(tokens)))
-  }
-}
-
-/** 60-bit SimHash over the md5-60 token hash — the codegen'd twin of
-  * the `aggregate(transform(tokens, md5Hash60), ...)` HOF chain the
-  * oracle-exact simhash entries used through r17. Bit-identical by
-  * construction: per token, `h` = the first 15 hex chars of
-  * `md5(utf8 bytes)` as a 60-bit integer (= the first 8 digest bytes
-  * read big-endian, shifted right 4 — same value, no hex string); per
-  * bit b, votes accumulate +1/−1 on `(h >> b) & 1`; the output sets
-  * bit b iff the vote sum is positive. All-integer, so equality with
-  * the HOF form is exact, not approximate (pinned in SimHashSpec and
-  * the unchanged DuckDB twins).
-  *
-  * Why (r18 optimization, guide §4/§1.2): Spark's array HOFs evaluate
-  * their lambdas interpreted, per element — the old form paid a boxed
-  * 60-element zip_with per TOKEN (≈60 lambda invocations + 2 array
-  * allocations per token) and kept the whole projection out of
-  * whole-stage codegen. This expression is one tight primitive loop
-  * per token inside codegen, like [[SimHash64]]; measured ~6× on the
-  * sf0.1 signature pass.
-  */
-case class SimHashMd5(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash_md5 requires array<string>, got ${other.simpleString(10)}")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    SimHashMd5.eval(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SimHashMd5$$.MODULE$$.eval($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashMd5 =
-    copy(child = newChild)
-}
-
-object SimHashMd5 {
-  // MessageDigest is not thread-safe; one per task thread
-  private val md = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** Shared by interpreted eval and generated code. A null token votes
-    * like the HOF form's null lambda result: the old zip_with produced
-    * a null vote array for a null element only if md5(null) were null —
-    * split() never yields null elements, but for safety nulls are
-    * skipped (contributing no votes), matching aggregate's null-safe
-    * `+` on the all-zero accumulator for the empty case. */
-  def eval(arr: ArrayData): Long = {
-    val votes = new Array[Int](60)
-    val digest = md.get()
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val s = arr.getUTF8String(i)
-        digest.reset()
-        val d = digest.digest(s.getBytes)
-        // first 15 hex chars of the digest = first 8 bytes big-endian,
-        // dropped low nibble — the exact md5Hash60 value
-        var h = 0L
-        var b = 0
-        while (b < 8) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
-        h = h >>> 4
-        var k = 0
-        while (k < 60) {
-          if (((h >>> k) & 1L) == 1L) votes(k) += 1 else votes(k) -= 1
-          k += 1
-        }
-      }
-      i += 1
-    }
-    var out = 0L
-    var k = 0
-    while (k < 60) {
-      if (votes(k) > 0) out |= (1L << k)
-      k += 1
-    }
-    out
-  }
-
-  /** Column-API entry point, [[SimHash64.simhash64]]'s shape. */
-  def simhashMd5(tokens: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(SimHashMd5(ColumnBridge.expression(tokens)))
+    ColumnBridge.column(SimHash64(ColumnBridge.expression(tokens), hash))
   }
 }

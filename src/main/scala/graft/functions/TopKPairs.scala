@@ -167,11 +167,6 @@ object TopKPairs {
     TopKPairs(exprs.head, exprs(1), k).toAggregateExpression()
   }
 
-  /** Register `top_k_pairs(ord, id, k)` in the session's registry. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "top_k_pairs", fromExprs, "scala_udf")
-
   /** Rank order: larger ord first, then smaller id. A named serializable
     * object (not an anonymous class) because the aggregate expression —
     * comparator included — ships inside the task closure.

@@ -9,8 +9,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * of org.apache.spark.sql can still reach it, which lets the Column
   * API wrap expressions DIRECTLY instead of routing through the session
   * function registry (`createOrReplaceTempFunction` + `call_function`).
-  * The registry route is kept for SQL users ([[graft.GraftExtensions]],
-  * per-object `register()`), but Column-API calls no longer mutate
+  * The registry route is kept for SQL users ([[graft.GraftExtensions]]),
+  * but Column-API calls no longer mutate
   * whatever session happens to be active — a Column built while session
   * A is active now resolves fine when executed on session B.
   */

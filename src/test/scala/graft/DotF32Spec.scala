@@ -38,7 +38,7 @@ class DotF32Spec extends AnyFunSuite {
         (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     assert(out(1L).contains(11.0))
     assert(out(2L).isEmpty) // length mismatch → null, like zip_with padding
-    DotF32.register(spark) // Column API no longer registers as a side effect
+    GraftExtensions.register(spark) // the Column API never registers
     val withNullElem = spark.sql(
       "SELECT dot_f32(array(cast(1.0 as float), cast(null as float)), " +
         "array(cast(1.0 as float), cast(1.0 as float))) AS d")
@@ -57,7 +57,7 @@ class DotF32Spec extends AnyFunSuite {
   }
 
   test("usable from SQL and stays inside whole-stage codegen") {
-    DotF32.register(spark)
+    GraftExtensions.register(spark)
     val df = spark.sql(
       "SELECT dot_f32(array(cast(2.0 as float)), array(cast(3.0 as float))) AS d")
     assert(df.head().getDouble(0) == 6.0)

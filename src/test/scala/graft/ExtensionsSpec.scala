@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{Analytics, Extensions}
+import graft.functions.{SimHash64, TokenHash}
 
 /** Invariant tests for the non-oracle extension ops (SURVEY.md §5:
   * self-similarity, symmetry, determinism) plus exact-value checks for
@@ -40,8 +42,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("simhash64 and bottom_k are usable from SQL once registered") {
-    graft.functions.SimHash64.register(spark)
-    graft.functions.BottomK.register(spark)
+    GraftExtensions.register(spark)
     docs.createOrReplaceTempView("sql_docs")
     val viaSql = spark.sql(
       """SELECT doc_id, simhash64(split(lower(text), ' ')) AS sig
@@ -262,11 +263,11 @@ class ExtensionsSpec extends AnyFunSuite {
         if ia < ib && java.lang.Long.bitCount(sa ^ sb) <= h
       } yield (ia, ib)).toSet
     }
-    val bandedMd5 = Extensions.simhashNearDupsMd5(corpus, "text", "doc_id",
-        maxHamming = 3, numBands = 4)
+    val bandedMd5 = Extensions.simhashNearDups(corpus, "text", "doc_id",
+        maxHamming = 3, numBands = 4, hash = TokenHash.Md5_60)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(bandedMd5 == brute(
-      Extensions.simhashSignaturesMd5(corpus, "text", "doc_id"), 3))
+    assert(bandedMd5 == brute(Extensions.simhashSignatures(corpus, "text",
+      "doc_id", TokenHash.Md5_60), 3))
     val bandedNative = Extensions.simhashNearDups(corpus, "text", "doc_id",
         maxHamming = 3, numBands = 4)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -275,48 +276,74 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(bandedMd5.nonEmpty || bandedNative.nonEmpty)
   }
 
-  test("SimHashMd5 codegen expression equals the r17 HOF vote fold " +
-      "bit for bit (r18 optimization law)") {
-    // the interpreted form the expression replaced, verbatim: per
-    // token, md5Hash60 votes +1/−1 into a 60-wide accumulator; a bit
-    // sets iff its vote sum is positive
-    val corpus = graft.engine.Tables.documents(spark,
-      "/root/testdata/sf0.001")
+  test("SimHash64 over Md5_60 equals the r17 HOF vote fold bit for bit, " +
+      "interpreted and generated") {
+    // the interpreted form the kernel replaced, verbatim: per token,
+    // md5Hash60 votes +1/−1 into a 60-wide accumulator; a bit sets iff
+    // its vote sum is positive
     val masks = typedLit((0 until 60).map(1L << _))
-    val votes = aggregate(
-      transform(Extensions.tokens(col("text")),
-        t => Extensions.md5Hash60(t)),
-      array_repeat(lit(0L), 60),
-      (acc, h) => zip_with(acc, masks, (a, m) =>
-        a + when(h.bitwiseAND(m) =!= lit(0L), lit(1L)).otherwise(lit(-1L))))
-    val hof = corpus.select(col("doc_id"),
+    def hof(toks: Column): Column = {
+      val votes = aggregate(transform(toks, t => Extensions.md5Hash60(t)),
+        array_repeat(lit(0L), 60),
+        (acc, h) => zip_with(acc, masks, (a, m) =>
+          a + when(h.bitwiseAND(m) =!= lit(0L), lit(1L)).otherwise(lit(-1L))))
       aggregate(zip_with(votes, masks, (w, m) =>
           when(w > lit(0L), m).otherwise(lit(0L))),
-        lit(0L), (a, x) => a + x).as("simhash"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val native = Extensions.simhashSignaturesMd5(corpus, "text", "doc_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(native == hof)
-    // degenerate rows: empty token set (empty text tokenizes to [""],
-    // a real token — so exercise a truly empty array directly)
-    import spark.implicits._
-    val edge = Seq((1L, Seq.empty[String]), (2L, Seq("a")),
-      (3L, Seq("a", "a", "b"))).toDF("doc_id", "toks")
-    val exprOut = edge.select(col("doc_id"),
-      graft.functions.SimHashMd5.simhashMd5(col("toks")).as("s"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val hofOut = edge.select(col("doc_id"),
-      aggregate(zip_with(
-          aggregate(transform(col("toks"), t => Extensions.md5Hash60(t)),
-            array_repeat(lit(0L), 60),
-            (acc, h) => zip_with(acc, masks, (a, m) =>
-              a + when(h.bitwiseAND(m) =!= lit(0L), lit(1L))
-                .otherwise(lit(-1L)))),
-          masks, (w, m) => when(w > lit(0L), m).otherwise(lit(0L))),
-        lit(0L), (a, x) => a + x).as("s"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(exprOut == hofOut)
-    assert(exprOut(1L) == 0L)
+        lit(0L), (a, x) => a + x)
+    }
+    val corpus = graft.engine.Tables.documents(spark,
+      "/root/testdata/sf0.001")
+      .select(col("doc_id"), Extensions.tokens(col("text")).as("toks"))
+    val rows = corpus.select(col("doc_id"), col("toks"),
+        hof(col("toks")).as("hof"),
+        SimHash64.simhash64(col("toks"), TokenHash.Md5_60).as("kernel"))
+      .collect()
+    assert(rows.nonEmpty)
+    val expr = SimHash64(SketchRefs.tokensRef, TokenHash.Md5_60)
+    for (r <- rows) {
+      val want = r.getLong(2)
+      assert(r.getLong(3) == want, s"doc ${r.getLong(0)}: whole-stage")
+      assert(SketchRefs.bothRoutes(expr, r.getSeq[String](1)) == (want, want),
+        s"doc ${r.getLong(0)}: interpreted / generated")
+    }
+    // edge rows. A null element casts no vote in the kernel; the HOF
+    // fold counted it as an all-zero hash (−1 on every bit). Tokens from
+    // split() are never null, so the catalog cannot tell them apart; the
+    // kernel's rule is pinned against the HOF over the non-null tokens.
+    val edge = SketchRefs.edgeRows.zipWithIndex.map(_.swap).toDF("id", "toks")
+      .select(col("id"), col("toks"),
+        hof(filter(col("toks"), _.isNotNull)).as("hof"))
+      .collect()
+    for (r <- edge) {
+      val want = r.getLong(2)
+      assert(SketchRefs.bothRoutes(expr, r.getSeq[String](1)) == (want, want),
+        s"edge ${r.getSeq[String](1)}")
+    }
+    assert(SketchRefs.bothRoutes(expr, Seq.empty) == (0L, 0L))
+  }
+
+  test("SimHash64 over Murmur equals the two-seed reference loop on " +
+      "sf0.001 and edge rows, via SQL, interpreted and generated") {
+    GraftExtensions.register(spark)
+    graft.engine.Tables.documents(spark, "/root/testdata/sf0.001")
+      .createOrReplaceTempView("simhash_docs")
+    val rows = spark.sql(
+      """SELECT split(lower(text), ' ') AS toks,
+        |       simhash64(split(lower(text), ' ')) AS sig
+        |FROM simhash_docs""".stripMargin).collect()
+    assert(rows.nonEmpty)
+    val expr = SimHash64(SketchRefs.tokensRef)
+    for (r <- rows) {
+      val toks = r.getSeq[String](0)
+      val want = SketchRefs.simhashMurmur(toks)
+      assert(r.getLong(1) == want, s"$toks: SQL")
+      assert(SketchRefs.bothRoutes(expr, toks) == (want, want), s"$toks")
+    }
+    for (toks <- SketchRefs.edgeRows) {
+      val want = SketchRefs.simhashMurmur(toks)
+      assert(SketchRefs.bothRoutes(expr, toks) == (want, want), s"$toks")
+      assert(SimHash64.eval(SketchRefs.arrayData(toks)) == want)
+    }
   }
 
   test("fuzzy dedup: candidate-first plan matches corpus-wide rescoring") {
@@ -771,7 +798,7 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(r.getAs[Long]("last_chunk") == 3L) // tokens 0..99 → chunks 0..3
   }
 
-  test("freqSketchEstimates honors the CMS overcount bound vs exact counts") {
+  test("cmsEstimates honors the CMS overcount bound vs exact counts") {
     val docs = graft.engine.Tables.documents(TestSpark.spark,
       "/root/testdata/sf0.001")
     val toks = docs.select(explode(Extensions.tokens(col("text"))).as("t"))
@@ -780,34 +807,22 @@ class ExtensionsSpec extends AnyFunSuite {
     val exact = toks.filter(col("t").isin(probes: _*))
       .groupBy("t").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val est = Extensions.freqSketchEstimates(docs, "text", probes,
-      eps = 0.001)
+    // never undercount; overcount within the CMS bound e·N/width
+    val width = 1 << 14
+    val est = Extensions.cmsEstimates(docs, "text", probes, width = width)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     for (p <- probes) {
       val ex = exact.getOrElse(p, 0L)
       assert(est(p) >= ex, s"$p: CMS must never undercount")
-      assert(est(p) <= ex + (0.001 * n).ceil.toLong,
-        s"$p: ${est(p)} exceeds the eps*N overcount bound over $ex")
+      assert(est(p) <= ex + (math.E * n / width).ceil.toLong,
+        s"$p: ${est(p)} exceeds the e*N/width overcount bound over $ex")
     }
-    // seeded: bit-reproducible
-    val again = Extensions.freqSketchEstimates(docs, "text", probes)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(again == est)
-    // the md5-hash CMS (the oracle-expressible catalog form) obeys the
-    // same never-undercount law, its per-row overcount is bounded by
-    // collisions (<= N - true at worst), and it is partition-invariant
-    val est2 = Extensions.cmsEstimatesMd5(docs, "text", probes)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    for (p <- probes) {
-      val ex = exact.getOrElse(p, 0L)
-      assert(est2(p) >= ex, s"$p: md5 CMS must never undercount")
-      assert(est2(p) <= n, s"$p: estimate cannot exceed the token count")
-    }
-    val est2re = Extensions.cmsEstimatesMd5(docs.repartition(7), "text",
+    // partition-invariant
+    val estRe = Extensions.cmsEstimates(docs.repartition(7), "text",
       probes).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(est2re == est2)
+    assert(estRe == est)
     // an absent token estimates 0 unless every row collides
-    val ghost = Extensions.cmsEstimatesMd5(docs, "text",
+    val ghost = Extensions.cmsEstimates(docs, "text",
       Seq("zz_never_in_corpus_zz"), width = 1 << 16)
       .collect().head.getLong(1)
     assert(ghost >= 0L && ghost <= (0.01 * n).ceil.toLong)

@@ -4,15 +4,16 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SparkSessionExtensions wiring must make simhash64 / dot_f32 /
-  * minhash_sig / bottom_k / top_k_pairs / mmr_select available in SQL on a session
-  * built with the extension — no per-session register() calls.
+  * minhash_sig / bottom_k / top_k_pairs / mmr_select available in SQL on
+  * a session built with the extension, and `GraftExtensions.register`
+  * must install the same table (same checks) on an existing session.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("GraftExtensions injects the six custom functions") {
     val base = TestSpark.spark
-    // expected simhash from the explicitly-registered path
-    graft.functions.SimHash64.register(base)
+    // expected simhash from the ad-hoc registration route
+    GraftExtensions.register(base)
     val expectedSim = base.sql("SELECT simhash64(array('a', 'b'))")
       .head().getLong(0)
 
@@ -59,6 +60,21 @@ class GraftExtensionsSpec extends AnyFunSuite {
     } finally {
       SparkSession.setActiveSession(base)
       SparkSession.setDefaultSession(base)
+    }
+  }
+
+  test("the ad-hoc route checks arity like the extension route") {
+    val spark = TestSpark.spark
+    GraftExtensions.register(spark)
+    for ((call, msg) <- Seq(
+        "simhash64()" -> "simhash64 expects 1 argument(s), got 0",
+        "dot_f32(array(cast(1.0 as float)))" ->
+          "dot_f32 expects 2 argument(s), got 1",
+        "minhash_sig(array('a'))" -> "minhash_sig expects 3 arguments",
+        "bottom_k(1)" -> "bottom_k expects 2 arguments, got 1")) {
+      val e = intercept[IllegalArgumentException](
+        spark.sql(s"SELECT $call").collect())
+      assert(e.getMessage.contains(msg), s"$call: ${e.getMessage}")
     }
   }
 }

@@ -43,6 +43,17 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(resultSet(loaded.queryByIds(queryIds, k = 5, nprobe = 3)) == before)
   }
 
+  test("an empty _CURRENT pointer (a torn publish) fails load loudly " +
+      "instead of resolving the index root") {
+    val emb = Tables.embeddings(spark, sf)
+    val dir = Files.createTempDirectory("graft-ivf-torn").toString
+    IvfIndex.build(emb, "embedding", "vec_id", nCells = 4).save(dir)
+    Files.write(new java.io.File(dir, "_CURRENT").toPath, Array.emptyByteArray)
+    val e = intercept[IllegalStateException](
+      IvfIndex.load(spark, dir, "vec_id", "embedding"))
+    assert(e.getMessage.contains("empty _CURRENT pointer"))
+  }
+
   test("queries on the saved layout prune cell partitions in the scan") {
     val emb = Tables.embeddings(spark, sf)
     val dir = Files.createTempDirectory("graft-ivf-prune").toString

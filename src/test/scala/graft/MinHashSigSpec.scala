@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Extensions
-import graft.functions.MinHashSig
+import graft.functions.{MinHashSig, TokenHash}
 
 /** MinHashSig: signature laws (set semantics, determinism, the
   * match-fraction ≈ Jaccard estimator) and the native near-dup
@@ -52,7 +53,7 @@ class MinHashSigSpec extends AnyFunSuite {
   }
 
   test("usable from SQL and stays inside whole-stage codegen") {
-    MinHashSig.register(spark)
+    GraftExtensions.register(spark)
     val df = spark.sql(
       "SELECT minhash_sig(array('a','b'), 4, 42) AS s")
     assert(df.head().getSeq[Long](0).length == 4)
@@ -95,17 +96,81 @@ class MinHashSigSpec extends AnyFunSuite {
     assert(pairs == Set((21L, 22L)))
   }
 
-  test("native and MLlib forms agree on near-identical pairs") {
+  test("native near-dups pair the identical docs and nothing else") {
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon"),
       (2L, "alpha beta gamma delta epsilon"),
       (3L, "one two three four five")
     ).toDF("doc_id", "text")
-    def ids(df: org.apache.spark.sql.DataFrame) =
-      df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val native = ids(Extensions.minhashNearDups(docs, "text", "doc_id", 0.1))
-    val mllib = ids(Extensions.minhashNearDupsMLlib(docs, "text", "doc_id", 0.1))
-    assert(native == Set((1L, 2L)))
-    assert(mllib == Set((1L, 2L)))
+    for (hash <- Seq(TokenHash.Murmur, TokenHash.Md5_60)) {
+      val pairs = Extensions.minhashNearDups(docs, "text", "doc_id", 0.1,
+          hash = hash)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      assert(pairs == Set((1L, 2L)), s"$hash")
+    }
+  }
+
+  private def sf0001Tokens: Array[Seq[String]] =
+    graft.engine.Tables.documents(spark, "/root/testdata/sf0.001")
+      .select(split(lower(col("text")), " ")).collect().map(_.getSeq[String](0))
+
+  test("MinHashSig over Md5_60 equals the md5MinhashSig HOF bit for bit " +
+      "(k = 3, 64), interpreted and generated") {
+    // the interpreted form the kernel replaced, verbatim: band j =
+    // min over tokens of md5Hash60(j + ":" + token)
+    def hof(k: Int)(toks: Column): Column =
+      transform(sequence(lit(0), lit(k - 1)), j =>
+        array_min(transform(toks, t =>
+          Extensions.md5Hash60(concat(j.cast("string"), lit(":"), t)))))
+    val corpus = sf0001Tokens.toSeq
+    assert(corpus.nonEmpty)
+    for (k <- Seq(3, 64)) {
+      val rows = (corpus ++ SketchRefs.edgeRows).zipWithIndex.map(_.swap)
+        .toDF("id", "toks")
+        .select(col("toks"), hof(k)(col("toks")).as("hof"),
+          MinHashSig.minhashSig(col("toks"), k, hash = TokenHash.Md5_60)
+            .as("kernel"))
+        .collect()
+      val expr = MinHashSig(SketchRefs.tokensRef, k, 42L, TokenHash.Md5_60)
+      for (r <- rows) {
+        val toks = r.getSeq[String](0)
+        val kernel = r.getSeq[Long](2)
+        val (interp, gen) = SketchRefs.bothRoutes(expr, toks)
+        assert(interp.asInstanceOf[ArrayData].toLongArray().toSeq == kernel)
+        assert(gen.asInstanceOf[ArrayData].toLongArray().toSeq == kernel)
+        if (toks.exists(_ != null))
+          assert(kernel == r.getSeq[Long](1), s"k=$k $toks")
+        else {
+          // the one declared edge: with no non-null token array_min
+          // yields null, the kernel its identity Long.MaxValue.
+          // minhashNearDups drops such rows before signing, so no
+          // catalog result can differ.
+          assert(r.getSeq[Any](1) == Seq.fill(k)(null), s"k=$k $toks")
+          assert(kernel == Seq.fill(k)(Long.MaxValue), s"k=$k $toks")
+        }
+      }
+    }
+  }
+
+  test("MinHashSig over Murmur equals the seeded reference loop on " +
+      "sf0.001 and edge rows (k = 3, 64), via SQL, interpreted and " +
+      "generated") {
+    GraftExtensions.register(spark)
+    val corpus = sf0001Tokens.toSeq
+    for (k <- Seq(3, 64)) {
+      val expr = MinHashSig(SketchRefs.tokensRef, k, 42L)
+      val viaSql = corpus.zipWithIndex.map(_.swap).toDF("id", "toks")
+        .selectExpr("id", s"minhash_sig(toks, $k, 42) AS s").collect()
+        .map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
+      for ((toks, i) <- (corpus ++ SketchRefs.edgeRows).zipWithIndex) {
+        val want = SketchRefs.minhashMurmur(toks, k, 42L)
+        val (interp, gen) = SketchRefs.bothRoutes(expr, toks)
+        assert(interp.asInstanceOf[ArrayData].toLongArray().toSeq == want)
+        assert(gen.asInstanceOf[ArrayData].toLongArray().toSeq == want)
+        assert(MinHashSig.eval(SketchRefs.arrayData(toks), k, 42L)
+          .toLongArray().toSeq == want)
+        viaSql.get(i).foreach(sql => assert(sql == want, s"k=$k $toks"))
+      }
+    }
   }
 }

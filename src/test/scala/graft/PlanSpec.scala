@@ -279,8 +279,8 @@ class PlanSpec extends AnyFunSuite {
     val projLine = plan.linesIterator.find(_.contains("simhash64"))
     assert(projLine.exists(_.contains("*(")),
       s"simhash projection not codegen'd:\n$plan")
-    // and the oracle-twin catalog form is still a single narrow
-    // no-shuffle projection over the scan (the shape both share)
+    // and the catalog form (the same kernel over TokenHash.Md5_60) is
+    // a single narrow no-shuffle projection over the scan
     val cat = SparkEntry.queries("simhash_signatures")(spark, sf)
     cat.collect()
     val catPlan = (cat.queryExecution.executedPlan match {
@@ -290,7 +290,25 @@ class PlanSpec extends AnyFunSuite {
     val exchanges = catPlan.linesIterator
       .count(l => l.contains("Exchange hashpartitioning"))
     assert(exchanges == 0,
-      s"md5 simhash must stay shuffle-free:\n$catPlan")
+      s"catalog simhash must stay shuffle-free:\n$catPlan")
+  }
+
+  test("sketch catalog entries run the graft kernel, never a lambda: " +
+      "simhash_signatures, simhash_neardup, minhash_neardup") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction}
+    import graft.functions.{MinHashSig, SimHash64}
+    def has(df: DataFrame)(p: Expression => Boolean): Boolean =
+      df.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists(p)))
+    for ((name, isKernel) <- Seq[(String, Expression => Boolean)](
+        "simhash_signatures" -> (_.isInstanceOf[SimHash64]),
+        "simhash_neardup" -> (_.isInstanceOf[SimHash64]),
+        "minhash_neardup" -> (_.isInstanceOf[MinHashSig]))) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      assert(has(df)(isKernel), s"$name: no kernel expression in\n" +
+        df.queryExecution.optimizedPlan)
+      assert(!has(df)(_.isInstanceOf[LambdaFunction]),
+        s"$name: a lambda in\n" + df.queryExecution.optimizedPlan)
+    }
   }
 
   test("funnel windows stack on ONE user exchange (+ the tiny step rollup)") {

@@ -90,6 +90,23 @@ class ScaleSpec extends AnyFunSuite {
       .select("id").as[Long].collect().toSet == Set(5L))
   }
 
+  test("write-audit-publish commits through a whole-file pointer swap; " +
+      "a torn (empty) pointer fails readPublished loudly") {
+    import TestSpark.spark.implicits._
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-wap-torn").toString + "/table"
+    assert(Scale.writeAuditPublish(Seq((1L, 1.0)).toDF("id", "v"), base,
+      "v1", Seq(graft.engine.Quality.Complete("v", 1.0))))
+    val pointer = new java.io.File(base, "_CURRENT").toPath
+    assert(new String(java.nio.file.Files.readAllBytes(pointer), "UTF-8")
+      == "v1")
+    assert(new java.io.File(base).list().toSet == Set("_CURRENT", "v1"))
+    java.nio.file.Files.write(pointer, Array.emptyByteArray)
+    val e = intercept[IllegalStateException](
+      Scale.readPublished(spark, base).collect())
+    assert(e.getMessage.contains("empty _CURRENT pointer"))
+  }
+
   test("retainVersions sweeps superseded and quarantined versions, " +
       "never the published one; _CURRENT survives a partial sweep") {
     import TestSpark.spark.implicits._
