@@ -115,8 +115,7 @@ final class IvfIndex private (
     */
   def save(path: String): Unit = {
     val spark = corpus.sparkSession
-    val (fs, root) = IvfIndex.hadoopFs(spark, path)
-    if (fs.exists(root)) {
+    locally {
       // NOTE: quantizer_tree is deliberately NOT in this doomed list.
       // save() is non-atomic (a full overwrite in place); the one
       // failure mode that used to be SILENT was a crash mid-re-save
@@ -138,12 +137,10 @@ final class IvfIndex private (
       // can still pair silently with the wrong quantizer — crash-
       // critical layouts get atomicity from the epoch/generation
       // lifecycle, not from in-place re-saves.
-      val doomed = fs.listStatus(root).toSeq.map(_.getPath).filter { p =>
-        p.getName == "_CURRENT" || p.getName == "epochs" ||
-          p.getName == "codes" || p.getName == "codebook" ||
-          p.getName.startsWith("gen-")
-      }
-      doomed.foreach(p => fs.delete(p, true))
+      Generations.list(path).map(_.getPath.getName).filter { n =>
+        n == "_CURRENT" || n == "epochs" || n == "codes" ||
+          n == "codebook" || n.startsWith("gen-")
+      }.foreach(n => Generations.delete(s"$path/$n"))
     }
     spark.createDataFrame(centroids)
       .toDF("__cell", "__centroid")
@@ -158,23 +155,14 @@ final class IvfIndex private (
     tree.foreach { tq =>
       IvfIndex.writeTreeSidecar(spark, path, tq, centroids)
     }
-    // cluster by the partition column before partitionBy: without it
-    // every task writes a sliver into every cell dir (tasks × cells
-    // small files — both a write-time and a scan-time tax); clustered,
-    // each cell lands as a handful of full files. Standard
-    // partitioned-write hygiene; raise the partition count past
-    // nCells when cells outgrow executor-sized files.
-    corpus.repartition(centroids.size, col("__cell"))
-      .write.mode("overwrite").partitionBy("__cell")
-      .parquet(s"$path/cells")
+    Generations.writePartitioned(corpus, "__cell", "overwrite",
+      s"$path/cells")
     // a FLAT re-save over a tree-built index removes the stale sidecar
     // only now, after the new cells are fully written: a crash before
     // this point leaves the stale sidecar whose `_qv` digest no longer
     // matches the new quantizer — a LOUD load failure, not a silent
     // rule flip (ADVICE r15)
-    if (tree.isEmpty)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/quantizer_tree"),
-        true)
+    if (tree.isEmpty) Generations.delete(s"$path/quantizer_tree")
   }
 }
 
@@ -431,7 +419,7 @@ object IvfIndex {
       .toDF("gid", "centroid", "leaf_start", "leaf_end")
       .coalesce(1) // ~√nCells rows
       .write.mode("overwrite").parquet(s"$root/quantizer_tree")
-    writeMarker(spark, s"$root/quantizer_tree/_qv", quantizerDigest(cents))
+    Generations.writeText(s"$root/quantizer_tree/_qv", quantizerDigest(cents))
   }
 
   /** The cell-assignment rule of a SAVED index, resolved from disk:
@@ -474,10 +462,9 @@ object IvfIndex {
   private def loadTree(spark: SparkSession, path: String,
       cents: Seq[(Int, Array[Float])]): Option[Extensions.TreeQuantizer] = {
     val sidecar = s"${quantizerRoot(spark, path)}/quantizer_tree"
-    val (tfs, tp) = hadoopFs(spark, sidecar)
-    if (!tfs.exists(tp)) None
+    if (!Generations.exists(sidecar)) None
     else {
-      readMarker(spark, s"$sidecar/_qv").foreach { qv =>
+      Generations.readText(s"$sidecar/_qv").foreach { qv =>
         require(qv == quantizerDigest(cents),
           s"quantizer_tree sidecar at $sidecar was written under a " +
             "different quantizer (a torn re-save) — rebuild and re-save " +
@@ -529,8 +516,8 @@ object IvfIndex {
     // window).
     val assigned = emb.select(col(idCol), col(embCol),
       loadAssigner(spark, path, cents)(col(embCol)).as("__cell"))
-    assigned.write.mode("append").partitionBy("__cell")
-      .parquet(s"${baseRoot(path)}/cells")
+    Generations.writePartitioned(assigned, "__cell", "append",
+      s"${baseRoot(path)}/cells")
   }
 
   /** Open a saved index. Queries against it prune the cell partitions
@@ -592,13 +579,11 @@ object IvfIndex {
       epochs.map(e => new org.apache.hadoop.fs.Path(e).getName))
     spark.createDataFrame(cbRows).toDF("j", "code", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    writeMarker(spark, s"$path/codebook/_pqv", version)
-    corpus.select(col(idCol),
+    Generations.writeText(s"$path/codebook/_pqv", version)
+    Generations.writePartitioned(corpus.select(col(idCol),
         graft.functions.PqOps.pqEncode(col(embCol), codebook).as("codes"),
-        col("__cell"))
-      .repartition(col("__cell")) // cluster per cell dir (save() note)
-      .write.mode("overwrite").partitionBy("__cell")
-      .parquet(s"${baseRoot(path)}/codes")
+        col("__cell")),
+      "__cell", "overwrite", s"${baseRoot(path)}/codes")
     // the base codes dir carries its OWN version stamp, written only
     // AFTER the full re-encode lands (the parquet overwrite wiped any
     // previous stamp with the old codes). The codebook commits first,
@@ -609,15 +594,12 @@ object IvfIndex {
     // existed had no detection on the base dir (ADVICE r12). With it,
     // [[codesOf]] fails loudly on the mismatch and the heal is
     // re-running addPqCodes.
-    writeMarker(spark, s"${baseRoot(path)}/codes/_pqv", version)
+    Generations.writeText(s"${baseRoot(path)}/codes/_pqv", version)
     // the folded epochs' codes now live in the base — their own dirs
     // are superseded (version skew already excludes them; the sweep
     // reclaims the space). Cells dirs stay: the vectors themselves
     // are still epoch-resident until compactEpochs folds them.
-    epochs.foreach { e =>
-      val (efs, ecodes) = hadoopFs(spark, s"$e/codes")
-      if (efs.exists(ecodes)) efs.delete(ecodes, true)
-    }
+    epochs.foreach(e => Generations.delete(s"$e/codes"))
   }
 
   /** Content fingerprint of a PQ codebook + the epoch names its fit
@@ -645,24 +627,6 @@ object IvfIndex {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  private[engine] def writeMarker(spark: SparkSession, path: String,
-      content: String): Unit = {
-    val (fs, p) = hadoopFs(spark, path)
-    val out = fs.create(p, true)
-    out.write(content.getBytes("UTF-8"))
-    out.close()
-  }
-
-  private[engine] def readMarker(spark: SparkSession, path: String): Option[String] = {
-    val (fs, p) = hadoopFs(spark, path)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8"))
-      finally in.close()
-    }
-  }
-
   /** Append new vectors to a saved index's PQ sidecar under the
     * FROZEN quantizer and codebooks — the codes-side companion of
     * [[appendToSaved]] (call both to grow the layout: cells for the
@@ -682,19 +646,13 @@ object IvfIndex {
         r.getSeq[Float](2).toSeq))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3).toSeq)
-    emb.select(col(idCol),
+    Generations.writePartitioned(emb.select(col(idCol),
         graft.functions.PqOps.pqEncode(col(embCol), codebook).as("codes"),
-        loadAssigner(spark, path, cents)(col(embCol)).as("__cell"))
-      .write.mode("append").partitionBy("__cell")
-      .parquet(s"${baseRoot(path)}/codes")
+        loadAssigner(spark, path, cents)(col(embCol)).as("__cell")),
+      "__cell", "append", s"${baseRoot(path)}/codes")
   }
 
   // ── streaming epoch appends (exactly-once segment growth) ────────────
-
-  private def hadoopFs(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
 
   /** Root directory holding the live base `cells/` (and `codes/`)
     * dirs: the legacy layout keeps them directly under `path`; once
@@ -716,10 +674,8 @@ object IvfIndex {
       path: String): String = {
     val g = baseRoot(path)
     if (g == path) path
-    else {
-      val (fs, qp) = hadoopFs(spark, s"$g/quantizer")
-      if (fs.exists(qp)) g else path
-    }
+    else if (Generations.exists(s"$g/quantizer")) g
+    else path
   }
 
   /** The live quantizer's centroids in cell order (resolved via
@@ -754,26 +710,24 @@ object IvfIndex {
     * lets `retainFolded` drop from the head. */
   private def foldedEpochsOrdered(spark: SparkSession,
       path: String): Seq[String] =
-    readMarker(spark, s"${baseRoot(path)}/_folded")
-      .map(_.split("\n").filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
+    Generations.readLines(s"${baseRoot(path)}/_folded")
 
   /** Directories of CLAIMED ingest epochs under `path/epochs` — an
     * epoch becomes visible only once its `_claim` marker exists, which
     * [[appendEpoch]] writes LAST, so a half-written epoch (crash
     * mid-batch) is invisible to every load. */
   private def claimedEpochs(spark: SparkSession, path: String): Seq[String] = {
-    val (fs, root) = hadoopFs(spark, s"$path/epochs")
-    if (!fs.exists(root)) Seq.empty
-    else {
-      val folded = foldedEpochs(spark, path)
-      fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_claim")))
-        .filterNot(p => folded(p.getName))
-        .map(_.toString).sorted
-    }
+    val root = s"$path/epochs"
+    val names = Generations.dirNames(root)
+    if (names.isEmpty) Seq.empty
+    else names.filterNot(foldedEpochs(spark, path))
+      .map(n => s"$root/$n").filter(e => Generations.exists(s"$e/_claim"))
   }
 
   // ── take-down tombstones (VERDICT r15 #5) ────────────────────────────
+
+  private[engine] def tombstones(path: String) =
+    new Generations.DeleteSet(path, "tombstones", "_tombstones")
 
   /** Commit a take-down TOMBSTONE of ids (the ingest-commit shape:
     * `tombstones/<name>/` parquet staged first, the content-less
@@ -788,11 +742,8 @@ object IvfIndex {
     * take-downs; appends require ids disjoint from stored ones). */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String, name: String, overwrite: Boolean = false): Unit = {
-    require(name.nonEmpty && !name.contains("/"),
-      "tombstone name must be a single path segment")
-    val (fs, root) = hadoopFs(spark, s"$path/_tombstones")
-    val marker = new org.apache.hadoop.fs.Path(root, name)
-    if (fs.exists(marker)) {
+    val tombs = tombstones(path)
+    if (tombs.isCommitted(name)) {
       // committed replay: a no-op for user deletes (the commit shape),
       // but the SemanticStore compact mirror must OVERWRITE — a crash
       // after the mirror landed but before the fold committed leaves
@@ -801,21 +752,9 @@ object IvfIndex {
       // stale subset while the retry retires every delete epoch
       // (resurrecting the newer ids).
       if (!overwrite) return
-      fs.delete(marker, false)
-      val (dfs, dd) = hadoopFs(spark, s"$path/tombstones/$name")
-      dfs.delete(dd, true)
+      tombs.retire(Seq(name))
     }
-    ids.select(col(idCol).as("__tomb_id")).distinct()
-      .write.mode("overwrite").parquet(s"$path/tombstones/$name")
-    fs.mkdirs(root)
-    fs.create(marker, true).close()
-  }
-
-  private def tombstoneNames(spark: SparkSession,
-      path: String): Seq[String] = {
-    val (fs, root) = hadoopFs(spark, s"$path/_tombstones")
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.map(_.getPath.getName).sorted
+    tombs.commit(name, ids.select(col(idCol).as("__tomb_id")).distinct())
   }
 
   /** All committed tombstoned ids as one `__tomb_id` column; None when
@@ -827,13 +766,10 @@ object IvfIndex {
     * data-first order. */
   private[graft] def tombstonedIds(spark: SparkSession,
       path: String): Option[DataFrame] = {
-    val names = tombstoneNames(spark, path).filter { n =>
-      val (fs, p) = hadoopFs(spark, s"$path/tombstones/$n")
-      fs.exists(p)
-    }
+    val tombs = tombstones(path)
+    val names = tombs.names
     if (names.isEmpty) None
-    else Some(spark.read
-      .parquet(names.map(n => s"$path/tombstones/$n"): _*)
+    else Some(spark.read.parquet(names.map(tombs.idsPath): _*)
       .distinct())
   }
 
@@ -867,11 +803,8 @@ object IvfIndex {
     * an empty frame) must be skipped by every union, or one empty
     * epoch wedges load/compact/addPqCodes forever (review finding; the
     * SemanticStore stored-side read applies the same filter). */
-  private def hasCellData(spark: SparkSession, dir: String): Boolean = {
-    val (fs, p) = hadoopFs(spark, dir)
-    fs.exists(p) && fs.listStatus(p).exists(s =>
-      s.isDirectory && s.getPath.getName.startsWith("__cell="))
-  }
+  private def hasCellData(spark: SparkSession, dir: String): Boolean =
+    Generations.dirNames(dir).exists(_.startsWith("__cell="))
 
   /** [[cellsWithEpochs]] over an EXPLICIT epoch snapshot — the
     * multi-step writers (compactEpochs, addPqCodes) list the claimed
@@ -907,7 +840,7 @@ object IvfIndex {
     * [[cellsOf]] for why the snapshot must be shared). */
   private def codesOf(spark: SparkSession, path: String,
       epochs: Seq[String]): DataFrame = {
-    val current = readMarker(spark, s"$path/codebook/_pqv")
+    val current = Generations.readText(s"$path/codebook/_pqv")
     // the base codes must match the committed codebook: a crash inside
     // addPqCodes' re-encode (codebook committed, base codes partial or
     // still old-codebook) MUST fail loudly here rather than serve
@@ -915,7 +848,7 @@ object IvfIndex {
     // skip-on-skew treatment because their rows provably re-enter via
     // the re-fit's full base re-encode; the base dir has no such
     // backstop — its rows would just be scored wrong.
-    val baseStamp = readMarker(spark, s"${baseRoot(path)}/codes/_pqv")
+    val baseStamp = Generations.readText(s"${baseRoot(path)}/codes/_pqv")
     // distinguish the two mismatch shapes (ADVICE r13): a MISSING base
     // stamp is the legacy pre-stamp sidecar layout (base codes written
     // before the _pqv stamp existed — consistent with the committed
@@ -937,7 +870,7 @@ object IvfIndex {
     Extensions.withDriverListing(spark) {
       excludeTombstoned(spark, path, epochs
         .filter(e => hasCellData(spark, s"$e/codes"))
-        .filter(e => readMarker(spark, s"$e/codes/_pqv") == current)
+        .filter(e => Generations.readText(s"$e/codes/_pqv") == current)
         .foldLeft(spark.read.parquet(s"${baseRoot(path)}/codes"))((df, e) =>
           df.unionByName(spark.read.parquet(s"$e/codes"))))
     }
@@ -967,36 +900,34 @@ object IvfIndex {
     // its dir swept but its rows in the base — a checkpoint replay of
     // that batch must still be refused or it would re-ingest them
     if (foldedEpochs(spark, path).contains(epochName)) return false
-    val (fs, epochRoot) = hadoopFs(spark, s"$path/epochs/$epochName")
-    val claim = new org.apache.hadoop.fs.Path(epochRoot, "_claim")
-    if (fs.exists(claim)) return false
-    if (fs.exists(epochRoot)) fs.delete(epochRoot, true)
+    val epochRoot = s"$path/epochs/$epochName"
+    val claim = s"$epochRoot/_claim"
+    if (Generations.exists(claim)) return false
+    Generations.delete(epochRoot)
     val cents = readQuantizer(spark, path)
     val assigned = emb.select(col(idCol), col(embCol),
         loadAssigner(spark, path, cents)(col(embCol)).as("__cell"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assigned.write.mode("errorifexists").partitionBy("__cell")
-      .parquet(s"$epochRoot/cells")
-    if (hadoopFs(spark, s"$path/codebook")._1
-        .exists(new org.apache.hadoop.fs.Path(s"$path/codebook"))) {
+    Generations.writePartitioned(assigned, "__cell", "errorifexists",
+      s"$epochRoot/cells")
+    if (Generations.exists(s"$path/codebook")) {
       val codebook = spark.read.parquet(s"$path/codebook")
         .collect().map(r => (r.getInt(0), r.getInt(1),
           r.getSeq[Float](2).toSeq))
         .groupBy(_._1).toSeq.sortBy(_._1)
         .map(_._2.sortBy(_._2).map(_._3).toSeq)
-      assigned.select(col(idCol),
+      Generations.writePartitioned(assigned.select(col(idCol),
           graft.functions.PqOps.pqEncode(col(embCol), codebook).as("codes"),
-          col("__cell"))
-        .write.mode("errorifexists").partitionBy("__cell")
-        .parquet(s"$epochRoot/codes")
+          col("__cell")),
+        "__cell", "errorifexists", s"$epochRoot/codes")
       // stamp the codebook these codes were encoded under — a later
       // re-fit flips the base _pqv and codesWithEpochs stops scoring
       // this dir (its rows re-enter via the re-fit's full re-encode)
-      readMarker(spark, s"$path/codebook/_pqv").foreach(v =>
-        writeMarker(spark, s"$epochRoot/codes/_pqv", v))
+      Generations.readText(s"$path/codebook/_pqv").foreach(v =>
+        Generations.writeText(s"$epochRoot/codes/_pqv", v))
     }
     assigned.unpersist()
-    fs.create(claim, false).close()
+    Generations.writeText(claim, "")
     // self-policing cadence (the appendSegment compactEvery twin,
     // r18): once this append brings the claimed epoch count to the
     // threshold, fold — an unbounded per-micro-batch append stream
@@ -1061,8 +992,7 @@ object IvfIndex {
       refit: Boolean = false,
       rowsPerCell: Long = defaultRowsPerCell,
       retainFolded: Int = 0): Boolean = {
-    val (sfs, sp) = hadoopFs(spark, s"$path/_SEMSTORE")
-    require(!sfs.exists(sp),
+    require(!Generations.exists(s"$path/_SEMSTORE"),
       s"$path is the inner index of a SemanticStore — its epoch dirs " +
         "are resolved by committed snapshot name, and folding claimed-" +
         "but-uncommitted epochs would surface phantom vectors; run " +
@@ -1129,7 +1059,7 @@ object IvfIndex {
     // tombstones snapshotted ONCE (the claimed-epoch-snapshot rule): a
     // delete committed while this runs is not part of this generation's
     // physical removal and stays a live filter for the next one
-    val tombs = tombstoneNames(spark, path)
+    val tombs = tombstones(path).markers
     if (epochs.isEmpty && !refit && tombs.isEmpty) {
       // nothing to fold, but an EARLIER run may have crashed inside
       // its post-publish sweep — and if no further epochs ever arrive,
@@ -1149,10 +1079,9 @@ object IvfIndex {
       case None    => 1
     }
     val stage = s"$path/gen-$nextGen"
-    val (stageFs, stagePath) = hadoopFs(spark, stage)
     // a crashed earlier attempt at this generation is unpublished by
     // construction — delete and restage
-    if (stageFs.exists(stagePath)) stageFs.delete(stagePath, true)
+    Generations.delete(stage)
     val liveCents = readQuantizer(spark, path)
     if (refit) {
       // detect the (id, emb) columns from the cells schema — the
@@ -1172,17 +1101,15 @@ object IvfIndex {
         else math.max(liveCents.size, cellBudget(liveCells, rowsPerCell))
       val (cents, assign, treeOpt) =
         fitFor(raw, embCol, idCol, targetCells)
-      raw.select(col(idCol), col(embCol), assign(col(embCol)).as("__cell"))
-        .repartition(cents.size, col("__cell"))
-        .write.mode("errorifexists").partitionBy("__cell")
-        .parquet(s"$stage/cells")
+      Generations.writePartitioned(
+        raw.select(col(idCol), col(embCol), assign(col(embCol)).as("__cell")),
+        "__cell", "errorifexists", s"$stage/cells")
       spark.createDataFrame(cents).toDF("__cell", "__centroid")
         .write.mode("overwrite").parquet(s"$stage/quantizer")
       treeOpt.foreach(tq => writeTreeSidecar(spark, stage, tq, cents))
     } else {
-      cells.repartition(col("__cell"))
-        .write.mode("errorifexists").partitionBy("__cell")
-        .parquet(s"$stage/cells")
+      Generations.writePartitioned(cells, "__cell", "errorifexists",
+        s"$stage/cells")
       // carry the LIVE quantizer (+ sidecar) into the generation: once
       // any refit has staged a quantizer in a generation, a later
       // generation without one would fall back to the stale
@@ -1195,9 +1122,7 @@ object IvfIndex {
     val writtenCells = spark.read.parquet(s"$stage/cells").count()
     require(writtenCells == liveCells,
       s"compaction audit failed: wrote $writtenCells cells, live $liveCells")
-    val hasCodes = hadoopFs(spark, s"$prevRoot/codes")._1
-      .exists(new org.apache.hadoop.fs.Path(s"$prevRoot/codes"))
-    if (hasCodes) {
+    if (Generations.exists(s"$prevRoot/codes")) {
       val codes = codesOf(spark, path, epochs)
       val liveCodes = codes.count()
       val stagedCodes =
@@ -1211,14 +1136,13 @@ object IvfIndex {
             spark.read.parquet(s"$stage/cells")
               .select(col(idCol), col("__cell")), idCol)
         } else codes
-      stagedCodes.repartition(col("__cell"))
-        .write.mode("errorifexists").partitionBy("__cell")
-        .parquet(s"$stage/codes")
+      Generations.writePartitioned(stagedCodes, "__cell", "errorifexists",
+        s"$stage/codes")
       val writtenCodes = spark.read.parquet(s"$stage/codes").count()
       require(writtenCodes == liveCodes,
         s"compaction audit failed: wrote $writtenCodes codes, live $liveCodes")
-      readMarker(spark, s"$path/codebook/_pqv").foreach(v =>
-        writeMarker(spark, s"$stage/codes/_pqv", v))
+      Generations.readText(s"$path/codebook/_pqv").foreach(v =>
+        Generations.writeText(s"$stage/codes/_pqv", v))
     }
     // _folded in fold order, new names at the tail. retainFolded
     // (r18 review finding F4) drops carried names from the HEAD —
@@ -1238,12 +1162,11 @@ object IvfIndex {
           val budget = math.max(0, retainFolded - own.length)
           val (beyondHorizon, withinHorizon) = carried.splitAt(
             math.max(0, carried.length - budget))
-          val (efs2, _) = hadoopFs(spark, s"$path/epochs")
-          beyondHorizon.filter(n => efs2.exists(
-            new org.apache.hadoop.fs.Path(s"$path/epochs/$n"))) ++
+          beyondHorizon.filter(n =>
+            Generations.exists(s"$path/epochs/$n")) ++
             withinHorizon ++ own
         }
-      writeMarker(spark, s"$stage/_folded", kept.mkString("\n"))
+      Generations.writeText(s"$stage/_folded", kept.mkString("\n"))
     }
     Generations.publish(path, s"gen-$nextGen") // the commit point
     // cleanup, driven by the PUBLISHED state rather than this run's
@@ -1265,12 +1188,7 @@ object IvfIndex {
     // two then leaves only an orphaned unreferenced dir, never a
     // committed marker whose parquet is gone (which would make every
     // tombstonedIds read throw until hand-repaired).
-    if (only.isEmpty) tombs.foreach { n =>
-      val (mfs, mp) = hadoopFs(spark, s"$path/_tombstones/$n")
-      mfs.delete(mp, false)
-      val (tfs, td) = hadoopFs(spark, s"$path/tombstones/$n")
-      tfs.delete(td, true)
-    }
+    if (only.isEmpty) tombstones(path).retire(tombs)
     true
   }
 
@@ -1286,19 +1204,12 @@ object IvfIndex {
       path: String): Unit = {
     val current = Generations.currentName(path).getOrElse(return)
     val folded = foldedEpochs(spark, path)
-    val (fs, _) = hadoopFs(spark, path)
-    val (efs, eroot) = hadoopFs(spark, s"$path/epochs")
-    if (efs.exists(eroot))
-      efs.listStatus(eroot).toSeq.filter(_.isDirectory).map(_.getPath)
-        .filter(p => folded(p.getName))
-        .foreach(p => efs.delete(p, true))
-    val (rfs, rpath) = hadoopFs(spark, path)
-    rfs.listStatus(rpath).toSeq.filter(_.isDirectory).map(_.getPath)
-      .filter(p => p.getName.startsWith("gen-") && p.getName != current)
-      .foreach(p => rfs.delete(p, true))
+    Generations.dirNames(s"$path/epochs").filter(folded)
+      .foreach(n => Generations.delete(s"$path/epochs/$n"))
+    Generations.dirNames(path).filter(n => n.startsWith("gen-") && n != current)
+      .foreach(n => Generations.delete(s"$path/$n"))
     // legacy in-place layout: the pre-generation cells/codes dirs
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/cells"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/codes"), true)
+    Seq(s"$path/cells", s"$path/codes").foreach(Generations.delete)
   }
 
   /** Open a saved index WITH its PQ sidecar (build → save →

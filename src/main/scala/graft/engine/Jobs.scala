@@ -111,8 +111,7 @@ object Jobs {
     * empty if nothing has been logged yet.
     */
   def listModels(spark: SparkSession, metricsLogPath: String): DataFrame = {
-    val f = new java.io.File(metricsLogPath)
-    if (!f.exists()) spark.emptyDataFrame
+    if (!Generations.exists(metricsLogPath)) spark.emptyDataFrame
     else spark.read.json(metricsLogPath)
   }
 
@@ -122,15 +121,10 @@ object Jobs {
     * Also evicts the serving cache entry.
     */
   def deleteModel(path: String): Boolean = {
-    val dir = new java.io.File(path)
-    require(dir.isDirectory && new java.io.File(dir, "metadata").exists(),
+    require(Generations.exists(s"$path/metadata"),
       s"$path is not a saved model directory (no metadata/) — refusing")
     Scoring.evict(path)
-    def rm(f: java.io.File): Boolean = {
-      if (f.isDirectory) f.listFiles().forall(rm) && f.delete()
-      else f.delete()
-    }
-    rm(dir)
+    Generations.delete(path)
   }
 
   /** Test hook: forget all jobs (process-local state). */

@@ -71,14 +71,9 @@ object Scale {
     if (!spark.catalog.tableExists(table)) {
       // files without a catalog entry = leftovers from a previous
       // session's in-memory catalog — dead weight; clear before writing
-      // (saveAsTable refuses to adopt an existing managed location).
-      // Hadoop FileSystem API, not java.io.File: the warehouse may be
-      // HDFS/S3, where a File-based delete silently no-ops (ADVICE r9).
-      val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-      val loc = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(warehouse), table)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) { fs.delete(loc, true); () }
+      // (saveAsTable refuses to adopt an existing managed location)
+      Generations.delete(
+        s"${spark.conf.get("spark.sql.warehouse.dir")}/$table")
       d.repartition(buckets, col(key)).write.mode("overwrite")
         .bucketBy(buckets, key).sortBy(key)
         .format("parquet").saveAsTable(table)
@@ -146,7 +141,6 @@ object Scale {
     require(version.nonEmpty && !version.contains("/"),
       "version must be a plain directory name")
     val spark = df.sparkSession
-    new java.io.File(path).mkdirs()
     val staged = s"$path/$version"
     df.write.mode("errorifexists").parquet(staged)
     val report = Quality.check(spark.read.parquet(staged), rules).collect()
@@ -171,7 +165,7 @@ object Scale {
       "version must be a plain directory name")
     val current = readPublished(spark, path)
     val staged = s"$path/$newVersion"
-    require(!new java.io.File(staged).exists(),
+    require(!Generations.exists(staged),
       s"version $newVersion already exists under $path")
     val cap = writeSized(current, staged, targetBytes)
     require(cap >= 1L)
@@ -246,18 +240,18 @@ object Scale {
       sampleRows: Int = 10000): Long = {
     require(targetBytes > 0, "targetBytes must be positive")
     val spark = df.sparkSession
-    val probe = new java.io.File(path + "__probe")
+    val probe = path + "__probe"
     val sample = df.limit(sampleRows).coalesce(1)
-    sample.write.mode("overwrite").parquet(probe.toString)
-    val sampled = spark.read.parquet(probe.toString).count()
-    val bytes = probe.listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(_.length()).sum
+    sample.write.mode("overwrite").parquet(probe)
+    val sampled = spark.read.parquet(probe).count()
+    val bytes = Generations.list(probe)
+      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val perRow = math.max(1L, if (sampled == 0) 1L else bytes / sampled)
     val cap = math.max(1L, targetBytes / perRow)
     df.write.mode("overwrite")
       .option("maxRecordsPerFile", cap)
       .parquet(path)
-    probe.listFiles().foreach(_.delete()); probe.delete()
+    Generations.delete(probe)
     cap
   }
 

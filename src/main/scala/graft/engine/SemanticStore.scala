@@ -83,36 +83,28 @@ import org.apache.spark.sql.functions._
   */
 object SemanticStore {
 
-  private def hadoopFs(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** One listing of `_epochs/`: (committed names in name order,
-    * folded names). A marker file's CONTENT lists the epoch names a
+  /** One listing of `_epochs/`: (marker names, folded names in
+    * manifest order), markers read in name order. A marker file's
+    * CONTENT lists the epoch names a
     * [[compact]] folded into it — carried forward across compactions
     * (the [[IvfIndex]] `_folded` precedent), so exclusion never
     * depends on a superseded marker surviving the cleanup sweep: the
     * live compacted marker always names EVERY folded epoch, and
     * deleting an older compacted marker can never resurrect one.
     * Ingest-order is not needed: pairs/meta/radii union symmetrically. */
+  private def epochMarkers(storePath: String): (Seq[String], Seq[String]) = {
+    val sts = Generations.list(s"$storePath/_epochs")
+      .sortBy(_.getPath.getName)
+    (sts.map(_.getPath.getName),
+      sts.flatMap(st => if (st.getLen == 0) Nil
+        else Generations.readLines(st.getPath.toString)).distinct)
+  }
+
+  /** (committed names in name order, folded names). */
   private def markerEntries(spark: SparkSession,
       storePath: String): (Seq[String], Set[String]) = {
-    val (fs, root) = hadoopFs(spark, s"$storePath/_epochs")
-    if (!fs.exists(root)) (Seq.empty, Set.empty)
-    else {
-      val sts = fs.listStatus(root).toSeq
-      val folded = sts.flatMap { st =>
-        if (st.getLen == 0) Nil
-        else {
-          val in = fs.open(st.getPath)
-          try new String(in.readAllBytes(), "UTF-8")
-            .split("\n").filter(_.nonEmpty).toSeq
-          finally in.close()
-        }
-      }.toSet
-      (sts.map(_.getPath.getName).filterNot(folded).sorted, folded)
-    }
+    val (names, folded) = epochMarkers(storePath)
+    (names.filterNot(folded.toSet), folded.toSet)
   }
 
   /** Committed epoch names, in name order. A name a [[compact]] run
@@ -142,11 +134,7 @@ object SemanticStore {
     val epochCells = committed
       .filterNot(ivfFolded)
       .map(e => s"$ivfPath/epochs/$e/cells")
-      .filter { p =>
-        val (f2, pp) = hadoopFs(spark, p)
-        f2.exists(pp) && f2.listStatus(pp).exists(s =>
-          s.isDirectory && s.getPath.getName.startsWith("__cell="))
-      }
+      .filter(p => Generations.dirNames(p).exists(_.startsWith("__cell=")))
     epochCells.foldLeft(baseCells)((df, p) =>
       df.unionByName(spark.read.parquet(p)))
   }
@@ -165,24 +153,7 @@ object SemanticStore {
     * cross-marker order only matters inside crash windows, where every
     * name is kept anyway (the drop guard below). */
   private def foldedOrdered(spark: SparkSession,
-      storePath: String): Seq[String] = {
-    val (fs, root) = hadoopFs(spark, s"$storePath/_epochs")
-    if (!fs.exists(root)) Seq.empty
-    else {
-      val names = fs.listStatus(root).toSeq
-        .sortBy(_.getPath.getName)
-        .flatMap { st =>
-          if (st.getLen == 0) Nil
-          else {
-            val in = fs.open(st.getPath)
-            try new String(in.readAllBytes(), "UTF-8")
-              .split("\n").filter(_.nonEmpty).toSeq
-            finally in.close()
-          }
-        }
-      names.distinct
-    }
-  }
+      storePath: String): Seq[String] = epochMarkers(storePath)._2
 
   // ── take-down deletes (VERDICT r15 #5) ───────────────────────────────
 
@@ -211,25 +182,13 @@ object SemanticStore {
     */
   def delete(storePath: String, ids: DataFrame, idCol: String,
       name: String): Unit = {
-    require(name.nonEmpty && !name.contains("/"),
-      "delete name must be a single path segment")
-    val spark = ids.sparkSession
-    val (fs, root) = hadoopFs(spark, s"$storePath/_deletes")
-    val marker = new org.apache.hadoop.fs.Path(root, name)
-    if (fs.exists(marker)) return // committed replay: no-op
-    ids.select(col(idCol).as("__del_id")).distinct()
-      .write.mode("overwrite").parquet(s"$storePath/deletes/$name")
-    fs.mkdirs(root)
-    fs.create(marker, true).close()
+    val dels = deleteSet(storePath)
+    if (dels.isCommitted(name)) return // committed replay: no-op
+    dels.commit(name, ids.select(col(idCol).as("__del_id")).distinct())
   }
 
-  /** Names of committed delete epochs. */
-  private def deleteNames(spark: SparkSession,
-      storePath: String): Seq[String] = {
-    val (fs, root) = hadoopFs(spark, s"$storePath/_deletes")
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.map(_.getPath.getName).sorted
-  }
+  private def deleteSet(storePath: String) =
+    new Generations.DeleteSet(storePath, "deletes", "_deletes")
 
   /** All committed deleted ids as a one-column (`__del_id`) frame;
     * None when no delete has ever committed — the zero-cost common
@@ -240,13 +199,10 @@ object SemanticStore {
     * wedged by the pre-r17 data-first order (ADVICE r16). */
   private def deletedIds(spark: SparkSession,
       storePath: String): Option[DataFrame] = {
-    val names = deleteNames(spark, storePath).filter { n =>
-      val (fs, p) = hadoopFs(spark, s"$storePath/deletes/$n")
-      fs.exists(p)
-    }
+    val dels = deleteSet(storePath)
+    val names = dels.names
     if (names.isEmpty) None
-    else Some(spark.read
-      .parquet(names.map(n => s"$storePath/deletes/$n"): _*)
+    else Some(spark.read.parquet(names.map(dels.idsPath): _*)
       .distinct())
   }
 
@@ -375,13 +331,10 @@ object SemanticStore {
       // the fast-path check below requires every committed dir to be
       // stamped with the live version, and one unstamped empty epoch
       // would otherwise force the heal scan on every later ingest
-      IvfIndex.writeMarker(spark, s"$storePath/radii/$epochName/_qv",
+      Generations.writeText(s"$storePath/radii/$epochName/_qv",
         IvfIndex.quantizerDigest(IvfIndex.readQuantizer(spark, ivfPath)))
       batch.unpersist()
-      val (fs0, root0) = hadoopFs(spark, s"$storePath/_epochs")
-      fs0.mkdirs(root0)
-      fs0.create(new org.apache.hadoop.fs.Path(root0, epochName), true)
-        .close()
+      commitEpoch(storePath, epochName)
       // even an empty epoch is a metadata dir the threshold counts
       if (compactEvery > 0 && committed.size + 1 >= compactEvery) {
         compact(spark, storePath, retainFolded = retainFolded)
@@ -413,8 +366,7 @@ object SemanticStore {
         // inner index (ADVICE r14 — the committed-union law was only
         // stated in a comment before); SemanticStore.compact is the
         // store-aware fold path
-        val (sfs, sp) = hadoopFs(spark, s"$ivfPath/_SEMSTORE")
-        sfs.create(sp, true).close()
+        Generations.writeText(s"$ivfPath/_SEMSTORE", "")
         Some(IvfIndex.centroidPairsOf(built))
       } else None
     // the LIVE quantizer, resolved via quantizerRoot: after a refit
@@ -474,8 +426,8 @@ object SemanticStore {
     def toRadiiMap(rows: Array[org.apache.spark.sql.Row]): Map[Int, Double] =
       rows.map(r => r.getInt(0) -> r.getDouble(1)).toMap
     val stampedFast = committed.nonEmpty &&
-      committed.forall(e => IvfIndex.readMarker(spark,
-        s"$storePath/radii/$e/_qv").contains(qv))
+      committed.forall(e =>
+        Generations.readText(s"$storePath/radii/$e/_qv").contains(qv))
     // ONE collect for both radii maps on the stamped fast path (opt
     // r19): the batch aggregate and the committed-radii fold union
     // under a side flag and split driver-side — each side's aggregate
@@ -598,7 +550,7 @@ object SemanticStore {
       .write.mode("overwrite").parquet(s"$storePath/meta/$epochName")
     spark.createDataFrame(batchRadii.toSeq).toDF("__cell", "__r")
       .write.mode("overwrite").parquet(s"$storePath/radii/$epochName")
-    IvfIndex.writeMarker(spark, s"$storePath/radii/$epochName/_qv", qv)
+    Generations.writeText(s"$storePath/radii/$epochName/_qv", qv)
     // the base snapshot's vectors were saved by build(); later
     // snapshots append as an IVF epoch (false = claimed by a previous
     // torn run after its cells landed — the retry just proceeds to
@@ -607,9 +559,7 @@ object SemanticStore {
       IvfIndex.appendEpoch(spark, ivfPath, vecs, embCol, idCol, epochName)
     batchA.unpersist()
     batch.unpersist()
-    val (fs, root) = hadoopFs(spark, s"$storePath/_epochs")
-    fs.mkdirs(root)
-    fs.create(new org.apache.hadoop.fs.Path(root, epochName), true).close()
+    commitEpoch(storePath, epochName)
     // auto-compaction AFTER the commit marker: the ingest is already
     // durable, so the fold is ordinary maintenance — and the returned
     // state must be rebuilt from the POST-fold listing (the folded
@@ -628,6 +578,15 @@ object SemanticStore {
         qualityCol)
     else null
   }
+
+  /** The `_epochs/<name>` commit marker: its content is the folded-name
+    * manifest (empty for an ingest), so it is staged at the store root —
+    * a torn stage inside `_epochs` would be read as a committed epoch
+    * folding nothing, every old epoch's rows visible twice. */
+  private def commitEpoch(storePath: String, name: String,
+      manifest: String = ""): Unit =
+    Generations.writeText(s"$storePath/_epochs/$name", manifest,
+      stageDir = Some(storePath))
 
   /** Dedup state of the accumulated corpus WITHOUT ingesting: ids ∪
     * quality from the committed meta, transitive closure over the
@@ -734,48 +693,22 @@ object SemanticStore {
       rowsPerCell: Long = IvfIndex.defaultRowsPerCell,
       retainFolded: Int = 0): Boolean = {
     sweepFolded(spark, storePath) // heal an earlier run's crashed sweep
-    // an earlier run's crash between marker staging and rename leaves
-    // an orphan staging file at the store root — unreadable by any
-    // path (markerEntries only lists _epochs) but worth reclaiming
-    locally {
-      val (fs, rootP) = hadoopFs(spark, storePath)
-      if (fs.exists(rootP))
-        fs.listStatus(rootP).toSeq.map(_.getPath)
-          .filter(_.getName.startsWith("_staging-marker-"))
-          .foreach(p => fs.delete(p, false))
-    }
-    // reclaim delete-ids dirs whose marker is gone (ADVICE r17): the
-    // marker-first retire order means a crash between the two retire
-    // deletes orphans the ids dir, and the retire loops iterate
-    // marker names only — once the marker is deleted the orphan was
-    // never listed again. Markerless dirs are invisible to every
-    // reader (deletes resolve via markers), so this is pure GC. The
-    // staged-ids-THEN-marker commit order cannot race this under the
-    // single-maintenance-writer contract. Mirrored for the inner
-    // index's store-named tombstones below (same crash shape).
-    def sweepMarkerless(idsRoot: String, markerRoot: String,
-        prefix: String): Unit = {
-      val (fs, ip) = hadoopFs(spark, idsRoot)
-      if (fs.exists(ip))
-        fs.listStatus(ip).toSeq
-          .filter(st => prefix.isEmpty ||
-            st.getPath.getName.startsWith(prefix))
-          .filterNot(st => fs.exists(new org.apache.hadoop.fs.Path(
-            s"$markerRoot/${st.getPath.getName}")))
-          .foreach(st => fs.delete(st.getPath, true))
-    }
-    sweepMarkerless(s"$storePath/deletes", s"$storePath/_deletes", "")
-    sweepMarkerless(s"$storePath/ivf/tombstones",
-      s"$storePath/ivf/_tombstones", "store-")
+    // reclaim an earlier run's crash leftovers: staging files at the
+    // roots, ids dirs whose marker is gone — for the store's deletes
+    // and the inner index's mirror tombstones alike
+    val ivfPath = s"$storePath/ivf"
+    val dels = deleteSet(storePath)
+    val mirrors = IvfIndex.tombstones(ivfPath)
+    dels.reclaim()
+    mirrors.reclaim()
     val (committed, folded) = markerEntries(spark, storePath)
     // delete state snapshotted ONCE: a delete committed while this
     // runs is not applied by this fold and stays a live filter until
     // the next one (single-writer, as everywhere in the lifecycle)
-    val delNames = deleteNames(spark, storePath)
+    val delNames = dels.markers
     val deleted = deletedIds(spark, storePath)
     if (committed.isEmpty || (committed.size < 2 && delNames.isEmpty))
       return false
-    val ivfPath = s"$storePath/ivf"
     val n = (committed ++ folded).filter(_.startsWith("compact-"))
       .flatMap(_.stripPrefix("compact-").toIntOption)
       .maxOption.getOrElse(0) + 1
@@ -819,15 +752,15 @@ object SemanticStore {
     // non-refit consolidates only when the stamps all match and
     // otherwise recomputes from the rewritten base it just staged —
     // the same one-scan heal the ingest path runs on stamp mismatch.
-    if (refit || !committed.forall(e => IvfIndex.readMarker(spark,
-        s"$storePath/radii/$e/_qv").contains(qv)))
+    if (refit || !committed.forall(e =>
+        Generations.readText(s"$storePath/radii/$e/_qv").contains(qv)))
       writeRadiiFromBase(spark, storePath, ivfPath, cName, cents)
     else
       spark.read.parquet(committed.map(e => s"$storePath/radii/$e"): _*)
         .groupBy("__cell").agg(max("__r").as("__r"))
         .coalesce(1) // ≤ nCells rows
         .write.mode("overwrite").parquet(s"$storePath/radii/$cName")
-    IvfIndex.writeMarker(spark, s"$storePath/radii/$cName/_qv", qv)
+    Generations.writeText(s"$storePath/radii/$cName/_qv", qv)
     // Manifest in fold order, this fold's names at the tail.
     // retainFolded (the r18 F4 horizon, third manifest) drops carried
     // names from the HEAD — never this fold's own names, and never a
@@ -850,32 +783,12 @@ object SemanticStore {
           def lingers(e: String): Boolean =
             Seq(s"$storePath/_epochs/$e", s"$storePath/pairs/$e",
               s"$storePath/meta/$e", s"$storePath/radii/$e")
-              .exists { p =>
-                val (f2, pp) = hadoopFs(spark, p)
-                f2.exists(pp)
-              }
+              .exists(Generations.exists)
           beyondHorizon.filter(lingers) ++ withinHorizon ++ committed
         }
       kept.mkString("\n")
     }
-    val (fs, root) = hadoopFs(spark, s"$storePath/_epochs")
-    // the marker's CONTENT is the commit (it carries the folded-name
-    // manifest), so create-write-close is NOT atomic enough here: a
-    // crash mid-write would leave a zero-length/partial compact-N that
-    // markerEntries reads as a committed epoch folding NOTHING — every
-    // old epoch's rows visible twice, forever (review finding; the
-    // plain ingest markers are exempt — they are content-less, their
-    // EXISTENCE is the commit and everything is staged before it).
-    // Stage the manifest OUTSIDE _epochs (a torn temp there would be
-    // read as a committed epoch name) and rename in — one atomic
-    // metadata op on any production filesystem.
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$storePath/_staging-marker-$cName")
-    val out = fs.create(tmp, true)
-    out.write(manifest.getBytes("UTF-8"))
-    out.close()
-    require(fs.rename(tmp, new org.apache.hadoop.fs.Path(root, cName)),
-      s"could not publish compaction marker $cName") // the commit point
+    commitEpoch(storePath, cName, manifest) // the commit point
     sweepFolded(spark, storePath)
     // the snapshotted deletes are now physically realized everywhere
     // (vectors out of the IVF generation, pairs/meta out of the
@@ -888,23 +801,8 @@ object SemanticStore {
     // missing parquet dir — every later deletedIds read would throw
     // and wedge the store. Idempotent; a crash mid-sweep leaves no-op
     // filters the next compact retires.
-    delNames.foreach { dn =>
-      Seq(s"$storePath/_deletes/$dn", s"$storePath/deletes/$dn")
-        .foreach { p =>
-          val (dfs, dp) = hadoopFs(spark, p)
-          dfs.delete(dp, true)
-        }
-    }
-    val (tfs, troot) = hadoopFs(spark, s"$ivfPath/_tombstones")
-    if (tfs.exists(troot))
-      tfs.listStatus(troot).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("store-"))
-        .foreach { m =>
-          tfs.delete(m, false) // marker first (same rationale)
-          val (ddfs, dd) = hadoopFs(spark,
-            s"$ivfPath/tombstones/${m.getName}")
-          ddfs.delete(dd, true)
-        }
+    dels.retire(delNames)
+    mirrors.retire(mirrors.markers.filter(_.startsWith("store-")))
     true
   }
 
@@ -960,10 +858,7 @@ object SemanticStore {
     folded.foreach { e =>
       Seq(s"$storePath/pairs/$e", s"$storePath/meta/$e",
         s"$storePath/radii/$e", s"$storePath/_epochs/$e")
-        .foreach { p =>
-          val (fs, pp) = hadoopFs(spark, p)
-          fs.delete(pp, true)
-        }
+        .foreach(Generations.delete)
     }
   }
 }

@@ -189,7 +189,6 @@ final class TextIndex private[engine] (
   def save(path: String): Unit = {
     val spark = postings.sparkSession
     import spark.implicits._
-    val (fs, _) = TextIndex.hadoopFs(spark, path)
     val oldRoot = TextIndex.plainRoot(path)
     val nextGen =
       oldRoot.map(_.stripPrefix("plain-").toInt + 1).getOrElse(1)
@@ -197,8 +196,7 @@ final class TextIndex private[engine] (
     // a crashed earlier attempt at this generation is unpublished by
     // construction (the pointer flip below is the only commit) —
     // delete and restage (the compactSegments restage rule)
-    val stale = new java.io.File(s"$path/$newRoot")
-    if (stale.exists()) TextIndex.deleteRecursively(stale)
+    Generations.delete(s"$path/$newRoot")
     val livePostings = deleted match {
       case None => postings
       case Some(del) =>
@@ -211,14 +209,8 @@ final class TextIndex private[engine] (
             col("df") - coalesce(col("__df_del"), lit(0L)))
           .drop("__df_del")
     }
-    // cluster by the partition column before partitionBy (the
-    // IvfIndex.save note): unclustered, every task writes a sliver
-    // into every bucket dir — tasks × buckets small files; clustered,
-    // each bucket lands as a handful of full files. Raise the count
-    // past nBuckets when buckets outgrow executor-sized files.
-    livePostings.repartition(nBuckets, col("__bucket"))
-      .write.mode("errorifexists").partitionBy("__bucket")
-      .parquet(s"$path/$newRoot/postings")
+    Generations.writePartitioned(livePostings, "__bucket", "errorifexists",
+      s"$path/$newRoot/postings")
     Seq((nDocs, sumDl, nBuckets, idCol)).toDF(
         "n_docs", "sum_dl", "n_buckets", "id_col")
       .write.mode("errorifexists").parquet(s"$path/$newRoot/stats")
@@ -228,13 +220,10 @@ final class TextIndex private[engine] (
     // manifest here (ADVICE r17: the carried-forever manifest grew
     // without bound; deleteEntries already skips missing ids dirs,
     // so a retired name needs no exclusion claim).
-    val appliedBefore = TextIndex.appliedDeletes(spark, path)
-      .filter(n => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$path/_deletes/$n")))
-    val delRoot = new org.apache.hadoop.fs.Path(s"$path/_deletes")
-    val allMarkers =
-      if (!fs.exists(delRoot)) Set.empty[String]
-      else fs.listStatus(delRoot).map(_.getPath.getName).toSet
+    val dels = TextIndex.deleteSet(path)
+    val allMarkers = dels.markers.toSet
+    val appliedBefore =
+      TextIndex.appliedDeletes(spark, path).intersect(allMarkers)
     // which target markers does the STAGED layout actually realize?
     // In-place re-save (target == the path this instance was loaded
     // from): exactly the epochs the load consumed into
@@ -254,35 +243,18 @@ final class TextIndex private[engine] (
       if (inPlace)
         (appliedBefore ++ consumedDeletes).intersect(allMarkers)
       else allMarkers
-    if (realized.nonEmpty) {
-      val (mfs, mp) = TextIndex.hadoopFs(spark,
-        s"$path/$newRoot/_dels_applied")
-      val out = mfs.create(mp, true)
-      out.write(realized.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-      out.close()
-    }
+    if (realized.nonEmpty)
+      Generations.writeText(s"$path/$newRoot/_dels_applied",
+        realized.toSeq.sorted.mkString("\n"))
     Generations.publish(path, newRoot) // the commit point
-    // retire (a) the epochs whose grace cycle just ended — marker
-    // first, ids dir second (the r17 retire order) — and (b) the
+    // retire (a) the epochs whose grace cycle just ended and (b) the
     // legacy flat layout's dirs once a generation beyond plain-1
-    // supersedes them (they got plain-1's lifetime as THEIR grace)
-    appliedBefore.toSeq.sorted.foreach { n =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_deletes/$n"), false)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/deletes/$n"), true)
-    }
+    // supersedes them (they got plain-1's lifetime as THEIR grace);
+    // reclaim crash leftovers — the same GC compactSegments runs
+    dels.retire(appliedBefore.toSeq.sorted)
     if (oldRoot.isDefined)
-      Seq(s"$path/postings", s"$path/stats").foreach { p =>
-        fs.delete(new org.apache.hadoop.fs.Path(p), true)
-      }
-    // reclaim markerless ids dirs (crash between the two retire
-    // deletes above) and crashed delete stagings — the same GC
-    // compactSegments runs; markerless dirs are invisible to readers
-    val (dfs, droot) = TextIndex.hadoopFs(spark, s"$path/deletes")
-    if (dfs.exists(droot))
-      dfs.listStatus(droot).toSeq
-        .filterNot(st => dfs.exists(new org.apache.hadoop.fs.Path(
-          s"$path/_deletes/${st.getPath.getName}")))
-        .foreach(st => dfs.delete(st.getPath, true))
+      Seq(s"$path/postings", s"$path/stats").foreach(Generations.delete)
+    dels.reclaim()
     Generations.retain(path, keep = 2, _.startsWith("plain-"))
   }
 }
@@ -352,10 +324,11 @@ final class SegmentedTextIndex private[engine] (
 
 object TextIndex {
 
-  private[engine] def hadoopFs(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
+  /** The take-down delete set: ids under `deletes/`, markers (content
+    * `<nDocs>|<sumDl>`, the delete's exact stats correction) under
+    * `_deletes/`. */
+  private def deleteSet(path: String) =
+    new Generations.DeleteSet(path, "deletes", "_deletes")
 
   /** A query batch's vocabulary, resolved once on the driver: the
     * distinct (query id, term) `pairs` and distinct `terms` as local
@@ -418,21 +391,6 @@ object TextIndex {
   private[graft] def plainDataDir(path: String): String =
     plainRoot(path).map(r => s"$path/$r").getOrElse(path)
 
-  /** Reclaim `_staging-del-*` orphans a crashed [[delete]] left at the
-    * index root (ADVICE r17: a crash between staging the marker
-    * content and the rename strands the staging file forever — a
-    * retry under a DIFFERENT name never overwrites it). Safe under
-    * the single-maintenance-writer contract: no delete() is mid-
-    * commit while another maintenance call runs. */
-  private def sweepStagingOrphans(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(root))
-      fs.listStatus(root).toSeq
-        .filter(_.getPath.getName.startsWith("_staging-del-"))
-        .foreach(st => fs.delete(st.getPath, false))
-  }
-
   // ── take-down deletes (VERDICT r16 #2) ───────────────────────────────
 
   /** Commit a take-down DELETE of document ids against a saved index —
@@ -465,12 +423,11 @@ object TextIndex {
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String, name: String): Unit = {
-    require(name.nonEmpty && !name.contains("/"),
-      "delete name must be a single path segment")
-    val (fs, _) = hadoopFs(spark, path)
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_deletes/$name")
-    if (fs.exists(marker)) return // committed replay: no-op
-    sweepStagingOrphans(fs, path)
+    val dels = deleteSet(path)
+    if (dels.isCommitted(name)) return // committed replay: no-op
+    // a crash between staging a marker and its rename strands the
+    // staging file; a retry under a DIFFERENT name never overwrites it
+    dels.reclaim()
     val postings = allPostings(spark, path)
     val docCol = savedIdCol(spark, path)
     val fresh = ids.select(col(idCol).as("__del_id")).distinct()
@@ -481,24 +438,19 @@ object TextIndex {
       case None      => fresh
       case Some(old) => fresh.join(old, Seq("__del_id"), "left_anti")
     }
-    newIds.write.mode("overwrite").parquet(s"$path/deletes/$name")
     // the correction counts only docs PRESENT in the live postings —
     // deleting an absent id is a no-op in every statistic. (id, dl) is
     // unique per doc (dl is denormalized onto each posting; a doc
     // lives in exactly one segment by the append contract).
-    val st = postings
-      .join(newIds.withColumnRenamed("__del_id", docCol),
-        Seq(docCol), "left_semi")
-      .select(col(docCol), col("dl")).distinct()
-      .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s"))
-      .collect().head
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_deletes"))
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/_staging-del-$name")
-    val out = fs.create(tmp, true)
-    out.write(s"${st.getLong(0)}|${st.getLong(1)}".getBytes("UTF-8"))
-    out.close()
-    require(fs.rename(tmp, marker),
-      s"could not publish delete marker $name") // the commit point
+    dels.commit(name, newIds, {
+      val st = postings
+        .join(newIds.withColumnRenamed("__del_id", docCol),
+          Seq(docCol), "left_semi")
+        .select(col(docCol), col("dl")).distinct()
+        .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s"))
+        .collect().head
+      s"${st.getLong(0)}|${st.getLong(1)}"
+    })
   }
 
   /** The live postings union regardless of layout — plain (the
@@ -508,13 +460,12 @@ object TextIndex {
     * flat `postings` dir lingers one grace cycle and must not be
     * mistaken for the live corpus. */
   private def allPostings(spark: SparkSession, path: String): DataFrame = {
-    val (fs, _) = hadoopFs(spark, path)
     val plain = plainDataDir(path)
     // driver-side partition discovery (opt r19, §6 — the IvfIndex
     // cellsOf rationale): bucket-partitioned dirs past Spark's 32-path
     // default otherwise pay a distributed listing job per open
     Extensions.withDriverListing(spark) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$plain/postings")))
+      if (Generations.exists(s"$plain/postings"))
         spark.read.parquet(s"$plain/postings")
       else segmentDirs(path).map(d =>
         spark.read.parquet(s"$d/postings")).reduce(_.unionByName(_))
@@ -525,10 +476,9 @@ object TextIndex {
     * layout: the live generation's `stats`; segmented: any segment's —
     * load validates they agree). */
   private def savedIdCol(spark: SparkSession, path: String): String = {
-    val (fs, _) = hadoopFs(spark, path)
     val plain = plainDataDir(path)
     val statsPath =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$plain/stats")))
+      if (Generations.exists(s"$plain/stats"))
         s"$plain/stats"
       else s"${segmentDirs(path).head}/stats"
     val st = spark.read.parquet(statsPath).collect().head
@@ -544,14 +494,7 @@ object TextIndex {
   private[engine] def appliedDeletes(spark: SparkSession,
       path: String): Set[String] = {
     val root = plainRoot(path).getOrElse(segmentsRoot(path))
-    val (fs, p) = hadoopFs(spark, s"$path/$root/_dels_applied")
-    if (!fs.exists(p)) Set.empty
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8")
-        .split("\n").filter(_.nonEmpty).toSet
-      finally in.close()
-    }
+    Generations.readLines(s"$path/$root/_dels_applied").toSet
   }
 
   /** Committed UNAPPLIED delete epochs: (name, nDocs corr, sumDl corr).
@@ -559,23 +502,13 @@ object TextIndex {
     * window — ids already physically gone). */
   private def deleteEntries(spark: SparkSession,
       path: String): Seq[(String, Long, Long)] = {
-    val (fs, root) = hadoopFs(spark, s"$path/_deletes")
-    if (!fs.exists(root)) Seq.empty
-    else {
-      val applied = appliedDeletes(spark, path)
-      fs.listStatus(root).toSeq
-        .filterNot(st => applied(st.getPath.getName))
-        .filter(st => fs.exists(new org.apache.hadoop.fs.Path(
-          s"$path/deletes/${st.getPath.getName}")))
-        .map { st =>
-          val in = fs.open(st.getPath)
-          val parts =
-            try new String(in.readAllBytes(), "UTF-8").split('|')
-            finally in.close()
-          require(parts.length == 2,
-            s"corrupt delete marker ${st.getPath}")
-          (st.getPath.getName, parts(0).toLong, parts(1).toLong)
-        }.sortBy(_._1)
+    val dels = deleteSet(path)
+    val names = dels.names
+    if (names.isEmpty) Seq.empty
+    else names.filterNot(appliedDeletes(spark, path)).map { n =>
+      val parts = dels.content(n).split('|')
+      require(parts.length == 2, s"corrupt delete marker $path/_deletes/$n")
+      (n, parts(0).toLong, parts(1).toLong)
     }
   }
 
@@ -590,11 +523,8 @@ object TextIndex {
     * generation or the legacy flat root) as opposed to the segmented
     * one. */
   private[engine] def isPlainLayout(spark: SparkSession,
-      path: String): Boolean = {
-    val (fs, _) = hadoopFs(spark, path)
-    fs.exists(new org.apache.hadoop.fs.Path(
-      s"${plainDataDir(path)}/postings"))
-  }
+      path: String): Boolean =
+    Generations.exists(s"${plainDataDir(path)}/postings")
 
   /** All unapplied deleted ids as one `__del_id` frame; None when none
     * exist (the common case — query paths add no plan step). */
@@ -603,7 +533,7 @@ object TextIndex {
     val names = deleteEntries(spark, path).map(_._1)
     if (names.isEmpty) None
     else Some(spark.read
-      .parquet(names.map(n => s"$path/deletes/$n"): _*)
+      .parquet(names.map(deleteSet(path).idsPath): _*)
       .distinct())
   }
 
@@ -615,17 +545,8 @@ object TextIndex {
     * names at the tail), which is what lets `retainFolded` drop from
     * the head. */
   private def foldedSegmentsOrdered(spark: SparkSession,
-      path: String): Seq[String] = {
-    val (fs, p) = hadoopFs(spark,
-      s"$path/${segmentsRoot(path)}/_segs_folded")
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8")
-        .split("\n").filter(_.nonEmpty).toSeq
-      finally in.close()
-    }
-  }
+      path: String): Seq[String] =
+    Generations.readLines(s"$path/${segmentsRoot(path)}/_segs_folded")
 
   private def foldedSegments(spark: SparkSession,
       path: String): Set[String] =
@@ -664,10 +585,9 @@ object TextIndex {
     require(nBuckets > 0, "nBuckets must be positive")
     val spark = docs.sparkSession
     import spark.implicits._
-    val (fs, _) = hadoopFs(spark, path)
     if (foldedSegments(spark, path).contains(segmentName)) return false
     val seg = s"$path/${segmentsRoot(path)}/$segmentName"
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$seg/stats"))) {
+    if (Generations.exists(s"$seg/stats")) {
       // committed replay: no-op — but verify the refused batch IS a
       // redelivery, not a caller naming bug reusing the name for a
       // different corpus snapshot, which would otherwise drop the
@@ -696,8 +616,7 @@ object TextIndex {
           "immutable; use a fresh name for a new snapshot")
       return false
     }
-    if (fs.exists(new org.apache.hadoop.fs.Path(seg)))
-      fs.delete(new org.apache.hadoop.fs.Path(seg), true) // crashed half-write
+    Generations.delete(seg) // a crashed half-write, if any
     val tf = docs
       .select(col(idCol), explode(Extensions.tokens(col(textCol))).as("term"))
       .filter(col("term") =!= "")
@@ -708,8 +627,8 @@ object TextIndex {
       .withColumn("__bucket",
         pmod(xxhash64(col("term")), lit(nBuckets)).cast("int"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    postings.write.mode("errorifexists").partitionBy("__bucket")
-      .parquet(s"$seg/postings")
+    Generations.writePartitioned(postings, "__bucket", "errorifexists",
+      s"$seg/postings")
     val stats = dl.agg(count(lit(1)).as("n"), sum("dl").as("s"))
       .collect().head
     Seq((stats.getLong(0), stats.getLong(1), nBuckets, idCol)).toDF(
@@ -721,19 +640,13 @@ object TextIndex {
     true
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty)
-      .foreach(deleteRecursively)
-    f.delete()
-  }
-
-  private def segmentDirs(path: String): Array[java.io.File] = {
-    // directories only: the root also carries the `_dels_applied`
-    // manifest file once a delete-applying compaction has run
-    val dirs = Option(new java.io.File(s"$path/${segmentsRoot(path)}")
-      .listFiles()).getOrElse(Array.empty).filter(_.isDirectory)
+  /** The live segment directories, in name order. */
+  private def segmentDirs(path: String): Seq[String] = {
+    val root = s"$path/${segmentsRoot(path)}"
+    // directories only: the root also carries the compaction manifests
+    val dirs = Generations.dirNames(root)
     require(dirs.nonEmpty, s"no segments under $path")
-    dirs.sorted
+    dirs.map(d => s"$root/$d")
   }
 
   /** Open all segments under `path` as one queryable index; global
@@ -822,11 +735,9 @@ object TextIndex {
     // grace cycle already retired need no exclusion claim
     // (deleteEntries skips missing ids dirs) — carrying them forever
     // grew the manifest and the retire loop without bound
-    val (pfs, _) = hadoopFs(spark, path)
-    sweepStagingOrphans(pfs, path)
-    val appliedBefore = appliedDeletes(spark, path)
-      .filter(n => pfs.exists(
-        new org.apache.hadoop.fs.Path(s"$path/_deletes/$n")))
+    val del = deleteSet(path)
+    val appliedBefore =
+      appliedDeletes(spark, path).intersect(del.markers.toSet)
     val nextGen = if (oldRoot == "segments") 1
       else oldRoot.stripPrefix("segments-").toInt + 1
     val newRoot = s"segments-$nextGen"
@@ -835,11 +746,10 @@ object TextIndex {
     // delete and restage; without this, errorifexists wedges EVERY
     // future compaction on the leftover (the IvfIndex.compactEpochs
     // restage rule, r16 heal)
-    val stale = new java.io.File(s"$path/$newRoot")
-    if (stale.exists()) deleteRecursively(stale)
+    Generations.delete(s"$path/$newRoot")
     val seg = s"$path/$newRoot/compact-${"%06d".format(nextGen)}"
-    postings.write.mode("errorifexists").partitionBy("__bucket")
-      .parquet(s"$seg/postings")
+    Generations.writePartitioned(postings, "__bucket", "errorifexists",
+      s"$seg/postings")
     import spark.implicits._
     Seq((idx.nDocs, idx.sumDl, idx.nBuckets, idx.idCol)).toDF(
         "n_docs", "sum_dl", "n_buckets", "id_col")
@@ -853,13 +763,9 @@ object TextIndex {
     // every previously applied name forward, the _folded rule): from
     // the flip on they stop filtering and stop correcting stats, even
     // while their epoch dirs await the grace-cycle retire below
-    if (appliedBefore.nonEmpty || dels.nonEmpty) {
-      val (mfs, mp) = hadoopFs(spark, s"$path/$newRoot/_dels_applied")
-      val out = mfs.create(mp, true)
-      out.write((appliedBefore ++ dels.map(_._1)).toSeq.sorted
-        .mkString("\n").getBytes("UTF-8"))
-      out.close()
-    }
+    if (appliedBefore.nonEmpty || dels.nonEmpty)
+      Generations.writeText(s"$path/$newRoot/_dels_applied",
+        (appliedBefore ++ dels.map(_._1)).toSeq.sorted.mkString("\n"))
     // record every segment name this merge folded (carrying the old
     // root's manifest forward, the SemanticStore `_folded` rule): an
     // appendSegment replaying one of these names — a checkpoint
@@ -868,16 +774,14 @@ object TextIndex {
     // File order = fold order (new names at the tail); retainFolded
     // drops from the HEAD, never below this merge's own names.
     locally {
-      val own = segDirs.map(_.getName).sorted
+      val own = segDirs.map(d => new org.apache.hadoop.fs.Path(d).getName)
       val carried = foldedSegmentsOrdered(spark, path)
         .filterNot(own.contains)
       val kept =
         if (retainFolded <= 0) carried ++ own
         else carried.takeRight(math.max(0, retainFolded - own.length)) ++ own
-      val (sfs, sp) = hadoopFs(spark, s"$path/$newRoot/_segs_folded")
-      val out = sfs.create(sp, true)
-      out.write(kept.mkString("\n").getBytes("UTF-8"))
-      out.close()
+      Generations.writeText(s"$path/$newRoot/_segs_folded",
+        kept.mkString("\n"))
     }
     Generations.publish(path, newRoot)
     // sweep only segment roots: unfiltered, a recent deletes/ or
@@ -887,25 +791,10 @@ object TextIndex {
     // retire delete epochs the PREVIOUS generation had applied — they
     // served their one grace cycle (a reader that resolved the old
     // root before the flip still filters through them; that root was
-    // itself just swept by retain). Marker first, ids dir second (the
-    // r17 retire order); names retired by an earlier cycle no-op.
-    val (fs, _) = hadoopFs(spark, path)
-    appliedBefore.toSeq.sorted.foreach { n =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_deletes/$n"), false)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/deletes/$n"), true)
-    }
-    // reclaim ids dirs whose marker is gone — the crash-between-the-
-    // two-retire-deletes orphan (ADVICE r17 on the SemanticStore twin
-    // of this sweep: the retire loops iterate marker names only, so
-    // once the marker is deleted a crash-orphaned ids dir was never
-    // listed again). Markerless dirs are invisible to every reader
-    // (reads resolve via markers), so collecting them is pure GC.
-    val (dfs, droot) = hadoopFs(spark, s"$path/deletes")
-    if (dfs.exists(droot))
-      dfs.listStatus(droot).toSeq
-        .filterNot(st => dfs.exists(new org.apache.hadoop.fs.Path(
-          s"$path/_deletes/${st.getPath.getName}")))
-        .foreach(st => dfs.delete(st.getPath, true))
+    // itself just swept by retain), then reclaim crash leftovers;
+    // names retired by an earlier cycle no-op.
+    del.retire(appliedBefore.toSeq.sorted)
+    del.reclaim()
     true
   }
 

@@ -107,8 +107,13 @@ case class MmrSelect(
             maxSim = Long.MinValue
             var j = 0
             while (j < step) {
-              val s = buf.sims.get((id, selected(j)))
-              if (s != null && s > maxSim) maxSim = s
+              // an absent (candidate, selected) pair has no similarity
+              // to count — skipped, not read as 0
+              val key = (id, selected(j))
+              if (buf.sims.containsKey(key)) {
+                val s = buf.sims.get(key)
+                if (s > maxSim) maxSim = s
+              }
               j += 1
             }
             if (maxSim == Long.MinValue) maxSim = 0L

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Analytics
+import graft.engine.{Analytics, Generations}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, TTLConfig, ValueState}
 import org.apache.spark.sql.types._
 
@@ -343,7 +343,6 @@ object Streaming {
     require(keyCols.nonEmpty, "mergeSink needs at least one key column")
     require(nBuckets > 0, "mergeSink needs nBuckets > 0")
     require(retainGenerations > 0, "mergeSink needs retainGenerations > 0")
-    new java.io.File(path).mkdirs()
     updates.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
@@ -503,8 +502,6 @@ object Streaming {
     val clash = batch.columns.toSet.intersect(Set("__bucket", "__ms_rn"))
     require(clash.isEmpty,
       s"input uses reserved internal column names: ${clash.mkString(", ")}")
-    val root = new java.io.File(path)
-    root.mkdirs()
     // the bucket layout is a property of the TARGET, not of a call:
     // a later epoch with a different nBuckets would prune the wrong
     // bucket directories and hard-link stale rows forward, silently
@@ -512,17 +509,14 @@ object Streaming {
     // layout in a meta file and every subsequent batch must match
     // (the same cross-write validation loadSegments does for the
     // text index's n_buckets)
-    val bucketMeta = new java.io.File(root, "_NBUCKETS")
+    val bucketMeta = s"$path/_NBUCKETS"
     val genDir = s"gen-$epochId"
-    val cur = graft.engine.Generations.currentName(path)
-    if (bucketMeta.exists()) {
-      val stamped = new String(
-        java.nio.file.Files.readAllBytes(bucketMeta.toPath), "UTF-8")
-        .trim.toInt
-      require(stamped == nBuckets,
-        s"target $path was written with nBuckets=$stamped; " +
-          s"this batch was invoked with nBuckets=$nBuckets")
-    } else if (cur.isDefined) {
+    val cur = Generations.currentName(path)
+    val stamped = Generations.readText(bucketMeta).map(_.trim.toInt)
+    stamped.foreach(n => require(n == nBuckets,
+      s"target $path was written with nBuckets=$n; " +
+        s"this batch was invoked with nBuckets=$nBuckets"))
+    if (stamped.isEmpty && cur.isDefined) {
       // generations exist but no stamp: a target written before the
       // stamp existed. The true bucket count is NOT derivable from the
       // layout (absent high buckets are indistinguishable from a
@@ -536,9 +530,7 @@ object Streaming {
           "originally written with before appending")
     }
     if (cur.contains(genDir) || batch.isEmpty) return
-    if (!bucketMeta.exists())
-      java.nio.file.Files.write(bucketMeta.toPath,
-        nBuckets.toString.getBytes("UTF-8"))
+    if (stamped.isEmpty) Generations.writeText(bucketMeta, nBuckets.toString)
     val bucketOf = pmod(xxhash64(keyCols.map(col): _*), lit(nBuckets))
       .cast("int")
     val latest = batch
@@ -567,33 +559,29 @@ object Streaming {
           latest.select(cols.toSeq: _*).limit(0)
       }
       val merged = Analytics.mergeUpsert(target, latest, keyCols, deleteCol)
-      val newGen = new java.io.File(root, genDir)
+      val newGen = s"$path/$genDir"
       // overwrite also clears a half-written generation left by a
       // crash BEFORE the pointer flip
-      merged.withColumn("__bucket", bucketOf)
-        .write.mode("overwrite").partitionBy("__bucket")
-        .parquet(newGen.toString)
+      Generations.writePartitioned(merged.withColumn("__bucket", bucketOf),
+        "__bucket", "overwrite", newGen)
       // carry every untouched bucket forward by hard link — the data
       // files keep their inode, provably un-rewritten
       cur.foreach { gen =>
-        new java.io.File(root, gen).listFiles()
-          .filter(d => d.isDirectory && d.getName.startsWith("__bucket="))
-          .filterNot(d =>
-            touched.contains(d.getName.stripPrefix("__bucket=").toInt))
-          .foreach { d =>
-            graft.engine.Generations.linkOrCopyInto(d,
-              new java.io.File(newGen, d.getName))
-          }
+        Generations.dirNames(s"$path/$gen")
+          .filter(d => d.startsWith("__bucket=") &&
+            !touched.contains(d.stripPrefix("__bucket=").toInt))
+          .foreach(d => Generations.linkOrCopyInto(s"$path/$gen/$d",
+            s"$newGen/$d"))
       }
       // an all-delete merge can leave zero bucket dirs; stamp the
       // schema so the generation stays readable as an empty target
-      if (!newGen.listFiles().exists(_.getName.startsWith("__bucket=")))
+      if (!Generations.dirNames(newGen).exists(_.startsWith("__bucket=")))
         merged.limit(0).withColumn("__bucket", lit(0).cast("int"))
-          .coalesce(1).write.mode("append").parquet(newGen.toString)
+          .coalesce(1).write.mode("append").parquet(newGen)
       // commit point: the pointer names the new generation only after
       // its files (written + linked) are all in place
-      graft.engine.Generations.publish(path, genDir)
-      graft.engine.Generations.retain(path, retainGenerations)
+      Generations.publish(path, genDir)
+      Generations.retain(path, retainGenerations)
       ()
     } finally latest.unpersist()
   }
@@ -660,12 +648,11 @@ object Streaming {
     require(retainGenerations > 0,
       "distinctCountSink needs retainGenerations > 0")
     val spark = updates.sparkSession
-    new java.io.File(path).mkdirs()
     updates.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         val genDir = s"gen-$epochId"
-        val cur = graft.engine.Generations.currentName(path)
+        val cur = Generations.currentName(path)
         // checkpoint replay after a crash between pointer flip and
         // offset commit: the fold already happened — folding the same
         // batch twice WOULD be idempotent for HLL, but reading gen-N
@@ -679,8 +666,8 @@ object Streaming {
             case None => snap
           }
           graft.engine.DistinctStore.save(merged, s"$path/$genDir")
-          graft.engine.Generations.publish(path, genDir)
-          graft.engine.Generations.retain(path, retainGenerations)
+          Generations.publish(path, genDir)
+          Generations.retain(path, retainGenerations)
         }
         ()
       }
@@ -730,7 +717,7 @@ object Streaming {
     * named by the `_CURRENT` pointer).
     */
   def readMergeTarget(spark: SparkSession, path: String): DataFrame = {
-    val gen = graft.engine.Generations.currentName(path)
+    val gen = Generations.currentName(path)
       .getOrElse(throw new IllegalArgumentException(
         s"no _CURRENT pointer under $path"))
     // the key-hash layout column is an internal of the merge protocol

@@ -57,6 +57,17 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .head().getSeq[org.apache.spark.sql.Row](0)
       assert(mmr.map(r => (r.getLong(0), r.getLong(3), r.getInt(4)))
         == Seq((2L, 140L, 1)))
+      // k = 3: the third pick has a negative similarity to the first
+      // and NO pair with the second — the absent pair is skipped, so
+      // its max similarity is the negative one, not a clamped 0
+      val mmr3 = s2.sql(
+        """SELECT mmr_select(nid, rel, cb, sim, 3) FROM VALUES
+          |(1L, 30L, 2L, 5L), (2L, 20L, 1L, 5L), (3L, 10L, 1L, -4L)
+          |t(nid, rel, cb, sim)""".stripMargin)
+        .head().getSeq[org.apache.spark.sql.Row](0)
+      assert(mmr3.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getInt(4))) == Seq((1L, 30L, 0L, 210L, 1),
+        (2L, 20L, 5L, 125L, 2), (3L, 10L, -4L, 82L, 3)))
     } finally {
       SparkSession.setActiveSession(base)
       SparkSession.setDefaultSession(base)

@@ -1,0 +1,42 @@
+package graft
+
+import java.net.URI
+
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.spark.sql.SparkSession
+
+/** The local disk under its own scheme, `graftfs:`. Lifecycle code that
+  * reaches for `java.io.File` instead of the Hadoop `FileSystem` of its
+  * path fails on a `graftfs:///…` root, or litters a relative `graftfs:`
+  * directory in the working directory, instead of passing by accident
+  * as it would on `file:` paths. A rename onto a destination named by
+  * [[GraftFs.failRenameTo]] throws: a crash at that commit point. */
+class GraftFs extends RawLocalFileSystem {
+  override def getUri: URI = GraftFs.uri
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    if (GraftFs.failRenameTo.contains(dst.getName))
+      throw new java.io.IOException(s"injected rename failure onto $dst")
+    super.rename(src, dst)
+  }
+}
+
+object GraftFs {
+  val uri: URI = URI.create("graftfs:///")
+
+  @volatile var failRenameTo: Option[String] = None
+
+  def register(spark: SparkSession): Unit =
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftfs.impl", classOf[GraftFs].getName)
+
+  /** A fresh empty directory, as a `graftfs:` URI. */
+  def tempRoot(prefix: String): String =
+    "graftfs://" + java.nio.file.Files.createTempDirectory(prefix)
+
+  /** Run `body` with the rename onto `name` failing. */
+  def failingRenameTo[T](name: String)(body: => T): T = {
+    failRenameTo = Some(name)
+    try body finally failRenameTo = None
+  }
+}

@@ -74,6 +74,23 @@ class JobsSpec extends AnyFunSuite {
     assert(new java.io.File(plain).exists(), "refused dir must survive")
   }
 
+  test("deleteModel finds and removes a model saved on a non-local " +
+      "Hadoop filesystem, and still refuses non-models there") {
+    GraftFs.register(spark)
+    Jobs.reset()
+    val dir = GraftFs.tempRoot("graft-jobs-gfs")
+    val id = Jobs.submitTrain(sample, features, "logistic_regression",
+      "classification", dir)
+    val path = Jobs.jobStatus(id).get.modelPath.get
+    assert(path.startsWith("graftfs:"))
+    assert(Jobs.deleteModel(path))
+    assert(!graft.engine.Generations.exists(path))
+    val plain = s"${GraftFs.tempRoot("graft-gfs-not-a-model")}/data"
+    Seq(1L).toDF("x").write.parquet(plain)
+    intercept[IllegalArgumentException] { Jobs.deleteModel(plain) }
+    assert(graft.engine.Generations.exists(plain), "refused dir must survive")
+  }
+
   test("quality contracts run as registered jobs: pass completes with " +
       "per-rule metrics, violation fails naming the rule") {
     import graft.engine.Quality
