@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.functions.{MinHashSig, SimHash64, TokenHash}
 
 /** North-star training-data pipeline operators (SURVEY.md §7 step 4,
@@ -101,23 +101,6 @@ object Extensions {
   /** Tokenized lowercase words — the shared text preprocessing. */
   def tokens(c: Column): Column = split(lower(c), " ")
 
-  /** Unsplittable-source relief (opt guide §2.5/§6): a scan whose
-    * planned split count is below the session's parallelism (a
-    * single-row-group parquet file, one gzip member, one huge file)
-    * serializes EVERY pre-exchange operator — tokenize, explode,
-    * hash, decode, pair scoring — on one core no matter how many the
-    * machine has. Round-robin repartition to the default parallelism
-    * immediately after the read unlocks the machine; the guard makes
-    * it a strict no-op whenever the source already splits wide enough
-    * (any real table at cluster scale), so nothing here is tuned to
-    * local mode.
-    *
-    * Apply ONLY where the downstream result is order-independent
-    * (per-row projections, integer/decimal aggregation, sorted
-    * collects, bounded heaps with total tiebreaks): round-robin
-    * changes per-partition accumulation order, which is observable
-    * through float-sum rounding.
-    */
   /** Run `body` (a partitioned-layout `spark.read.parquet`) with
     * partition discovery kept ON THE DRIVER up to
     * `spark.graft.io.driverListThreshold` paths (default 1024; opt
@@ -153,17 +136,42 @@ object Extensions {
     }
   }
 
-  /** Collect a small per-request frame ONCE and re-enter it as a local
-    * relation — the search paths' request binding
-    * ([[IvfIndex.resolveProbes]], [[HybridIndex.query]]). Downstream projections over the
-    * bound frame fold into the relation on the driver (no job), and
-    * the values travel through the search plan as DATA: a literal would
-    * be inlined into generated code and recompile every stage it
-    * reaches on every request. Collecting an already-local frame runs
-    * no job. */
-  private[graft] def bindLocal(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(df.collect(): _*), df.schema)
+  /** Projections over driver-held request values — term buckets, probe
+    * cells, query norms — built ONCE per index handle and evaluated per
+    * request on the driver, with no plan: the Spark expressions a
+    * search plan would run, analyzed once over an empty relation of
+    * `input`'s schema and interpreted row by row, so the values are the
+    * bits the plan would compute. Evaluating them by folding a
+    * projection over a per-request local relation cost a full analysis
+    * and optimization per search. Thread-safe (evaluation is
+    * serialized: interpreted lambda variables hold state). */
+  private[graft] final class DriverProjection private[Extensions] (
+      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) {
+    private val proj = org.apache.spark.sql.catalyst.expressions
+      .InterpretedMutableProjection.createProjection(exprs)
+
+    /** The projected values of one input row (catalyst values). */
+    def apply(values: Any*): org.apache.spark.sql.catalyst.InternalRow =
+      synchronized {
+        proj(new org.apache.spark.sql.catalyst.expressions
+          .GenericInternalRow(values.toArray)).copy()
+      }
+  }
+
+  private[graft] def driverProjection(spark: SparkSession,
+      input: StructType, cols: Column*): DriverProjection = {
+    import org.apache.spark.sql.catalyst.expressions.BindReferences
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val analyzed = spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row], input)
+      .select(cols: _*).queryExecution.analyzed
+    org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(analyzed) match {
+      case Project(list, child) =>
+        new DriverProjection(BindReferences.bindReferences(list, child.output))
+      case other => throw new IllegalStateException(
+        s"a driver projection must analyze to one Project, got $other")
+    }
+  }
 
   /** Partition-pruning filter `c IN values` over an int partition
     * column (IVF cells, term-hash buckets) — the one place a search
@@ -185,7 +193,8 @@ object Extensions {
     * switch anyway). */
   private[graft] def idsIn(df: DataFrame, c: String,
       ids: Seq[Long]): Column =
-    df.select(col(c)).schema.head.dataType match {
+    df.schema.find(_.name == c).getOrElse(df.select(col(c)).schema.head)
+      .dataType match {
       case org.apache.spark.sql.types.LongType =>
         import org.apache.spark.sql.graft.ColumnBridge
         ColumnBridge.column(
@@ -194,6 +203,23 @@ object Extensions {
       case _ => col(c).isin(ids: _*)
     }
 
+  /** Unsplittable-source relief (opt guide §2.5/§6): a scan whose
+    * planned split count is below the session's parallelism (a
+    * single-row-group parquet file, one gzip member, one huge file)
+    * serializes EVERY pre-exchange operator — tokenize, explode,
+    * hash, decode, pair scoring — on one core no matter how many the
+    * machine has. Round-robin repartition to the default parallelism
+    * immediately after the read unlocks the machine; the guard makes
+    * it a strict no-op whenever the source already splits wide enough
+    * (any real table at cluster scale), so nothing here is tuned to
+    * local mode.
+    *
+    * Apply ONLY where the downstream result is order-independent
+    * (per-row projections, integer/decimal aggregation, sorted
+    * collects, bounded heaps with total tiebreaks): round-robin
+    * changes per-partition accumulation order, which is observable
+    * through float-sum rounding.
+    */
   private[graft] def widen(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     // Exchange-bearing frames are left alone (ADVICE r18): calling
@@ -1347,7 +1373,9 @@ object Extensions {
         // k rows per query: persist + count materializes the result so
         // the corpus-sized assignment cache can be released here
         val result = IvfPqIndex.search(assigned, coded, idCol, embCol,
-            cents, codebook, tree, queries, k, nprobe, refineFactor)
+            new IvfIndex.Prober(emb.sparkSession, cents, tree, pqSqDist),
+            codebook, IvfIndex.QueryVectors.collect(queries), k, nprobe,
+            refineFactor)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         result.count()
         result
@@ -4002,28 +4030,29 @@ object Extensions {
     def branch(r: Column): Column =
       when(r.isNotNull, lit(1.0) / (lit(rrfK) + r.cast("double")))
         .otherwise(0.0)
+    val rrf = branch(col("lex_rank")) + branch(col("vec_rank"))
     // union + per-(query, candidate) max == the full outer join on
     // (query_id, idCol): each branch ranks a candidate at most once per
     // query, so a group holds at most one rank per branch. Partitioning
     // by query_id FIRST satisfies both the grouping and the rank
-    // window below — one exchange where the join paid three
+    // window below — one exchange where the join paid three, and none
+    // when both branches arrive partitioned by query_id already (the
+    // union keeps their common partitioning and the repartition is
+    // planned away)
     val noRank = lit(null).cast("int")
-    val fused = lex.select(col("query_id"), col(idCol), col("lex_rank"),
+    lex.select(col("query_id"), col(idCol), col("lex_rank"),
         noRank.as("vec_rank"))
       .unionByName(dense.select(col("query_id"), col(idCol),
         noRank.as("lex_rank"), col("vec_rank")))
       .repartition(col("query_id"))
       .groupBy(col("query_id"), col(idCol))
       .agg(max("lex_rank").as("lex_rank"), max("vec_rank").as("vec_rank"))
-      .withColumn("__rrf", branch(col("lex_rank")) + branch(col("vec_rank")))
-    val wFuse = Window.partitionBy("query_id")
-      .orderBy(desc("__rrf"), asc(idCol))
-    fused
-      .withColumn("rank", row_number().over(wFuse).cast("int"))
-      .filter(col("rank") <= k)
       .select(col("query_id"), col(idCol), col("lex_rank"),
-        col("vec_rank"), round(col("__rrf"), 6).as("rrf_score"),
-        col("rank"))
+        col("vec_rank"), round(rrf, 6).as("rrf_score"),
+        row_number().over(Window.partitionBy("query_id")
+          .orderBy(rrf.desc, col(idCol).asc))
+          .cast("int").as("rank"))
+      .filter(col("rank") <= k)
   }
 
   /** Bigram language-model statistics per document: bigram count,

@@ -4,6 +4,8 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, FloatType,
+  IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Build-once / query-many IVF (inverted-file) similarity index over an
   * embedding column. A vector store builds the index ONCE and serves
@@ -14,23 +16,25 @@ import org.apache.spark.sql.functions._
   *     size, [[IvfIndex.fitFor]]) + one corpus pass to assign cells;
   *   - '''save''': the corpus written parquet-partitioned BY CELL,
   *     beside the quantizer centroids;
-  *   - '''query''': resolve the probe once on the driver
-  *     ([[IvfIndex.resolveProbes]]: one collect of the query rows, the
-  *     centroid ranking evaluated over a folded local relation), then
-  *     read ONLY the probed cells — on the saved layout that is
-  *     file-level partition pruning: a 100 TB corpus probed at
+  *   - '''query''': resolve the probe on the driver
+  *     ([[IvfIndex.Prober]]: one collect of the query rows, the
+  *     centroid ranking evaluated by a projection analyzed once per
+  *     handle), then read ONLY the probed cells — on the saved layout
+  *     that is file-level partition pruning: a 100 TB corpus probed at
   *     nprobe=4 of 256 cells touches ~1.6 TB of files, not 100 TB.
   *
   * The only data that ever reaches the driver is the query rows and
-  * the probe set (≤ queries × nprobe rows). The probe rows join the
-  * scan as a local relation — data, so two requests compile the same
-  * code — and only the probed cell ids become literals, as a partition
-  * filter, because that is what lets the scan prune files. Corpus rows
-  * never leave the executors.
+  * their probe sets. The queries are bound into the scan by reference
+  * — one [[graft.functions.QueryBatch]] mapping each cell to the query
+  * slots that probe it, so each row is scored once, against those
+  * queries only, and two requests compile the same code — and only
+  * the probed cell ids become literals, as a partition filter, because
+  * that is what lets the scan prune files. Corpus rows never leave the
+  * executors.
   */
 final class IvfIndex private (
     centroids: Seq[(Int, Array[Float])],
-    corpus: DataFrame,
+    private[engine] val corpus: DataFrame,
     val idCol: String,
     val embCol: String,
     tree: Option[Extensions.TreeQuantizer] = None) {
@@ -52,46 +56,56 @@ final class IvfIndex private (
   private[graft] def treeQuantizer: Option[Extensions.TreeQuantizer] =
     tree
 
+  // the probe rule, analyzed once per handle and nprobe
+  private lazy val prober = new IvfIndex.Prober(corpus.sparkSession,
+    centroids, tree, (q, c) => -Extensions.cosine(q, c))
+
+  /** The corpus rows of `queryIds` as (query_id, __q): the lookup
+    * [[queryByIds]] collects, and the one [[HybridIndex.queryByIds]]
+    * folds into its single request collect. A filter by id prunes no
+    * cell, so it reads every cell directory. */
+  private[engine] def queryVectors(queryIds: Seq[Long]): DataFrame =
+    corpus.filter(Extensions.idsIn(corpus, idCol, queryIds))
+      .select(col(idCol).as("query_id"), col(embCol).as("__q"))
+
   /** Exact cosine top-k within the probed cells for each query id
     * (query vectors are looked up in the corpus; each copy of a
     * duplicated id probes its own cells):
     * (query_id, neighbor_id, cosine_sim, rank).
     */
   def queryByIds(queryIds: Seq[Long], k: Int, nprobe: Int): DataFrame =
-    query(corpus.filter(Extensions.idsIn(corpus, idCol, queryIds))
-      .select(col(idCol).as("query_id"), col(embCol).as("__q")),
-      k, nprobe)
+    query(queryVectors(queryIds), k, nprobe)
 
   /** Exact cosine top-k within the probed cells for external query
-    * vectors: `queries` must carry (query_id, __q: array<float>).
+    * vectors: `queries` must carry (query_id, __q: array<float>), the
+    * ids integral; a null id queries nothing.
     */
-  def query(queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
+  def query(queries: DataFrame, k: Int, nprobe: Int): DataFrame =
+    search(IvfIndex.QueryVectors.collect(queries), k, nprobe)
+
+  /** [[query]] over query rows the driver already holds. The norms
+    * are computed once per row inside the batch ([[graft.functions
+    * .QueryBatch.Cosine]]) and the scalar formula is the Catalyst one
+    * every cosine path runs, so scores are those of the per-pair
+    * `join(probed, "__cell")` plan bit for bit. */
+  private[engine] def search(qv: IvfIndex.QueryVectors, k: Int,
+      nprobe: Int): DataFrame = {
     require(k > 0 && nprobe > 0, "k and nprobe must be positive")
-    // the probe is resolved once on the driver (one collect of the
-    // query rows) and bound as a local relation; only the probed cell
-    // ids become literals, because only a partition filter prunes
-    // files. Catalyst also infers the cell filter across the __cell
-    // join onto the probe side: over a computed probe that inferred
-    // filter was a generated Filter with the cells inlined (one new
-    // class per request); over the local relation it folds on the
-    // driver, so no generated code ever sees a cell id
-    val probe = IvfIndex.resolveProbes(queries, centroids, tree, nprobe,
-      (q, c) => -Extensions.cosine(q, c))
-    // norms hoisted to one per-row column (the knnJoin optimization):
-    // cosine() would refold |e| and |q| per candidate; d / (ne * nq)
-    // with precomputed norms is the identical op sequence, so scores
-    // are bit-unchanged
-    corpus.filter(Extensions.partitionIn("__cell", probe.cells))
-      .select(col(idCol).as("neighbor_id"), col(embCol).as("__e"),
-        sqrt(Extensions.dot(col(embCol), col(embCol))).as("__ne"),
-        col("__cell"))
-      .join(broadcast(probe.probed), Seq("__cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(when(col("__ne") =!= 0 && col("__nq") =!= 0,
-          Extensions.dot(col("__e"), col("__q")) /
-            (col("__ne") * col("__nq")))
-          .otherwise(0.0), 6).as("cosine_sim"))
+    val probes = prober.resolve(qv, nprobe)
+    val vecs = qv.vecs.map(v =>
+      graft.functions.QueryBatch.decodeVector(v, qv.vecFloat))
+    val batch = new graft.functions.QueryBatch.Cosine(qv.ids,
+      vecs.map(_._1), vecs.map(_._2), probes.nq, probes.cellSlots)
+    val p = (f: String) => col(s"__p.$f")
+    corpus.filter(Extensions.partitionIn("__cell", probes.cells))
+      .select(col(idCol).as("neighbor_id"),
+        explode(graft.functions.QueryBatch.scoreProbed(col(embCol),
+          col(idCol).cast("long"), col("__cell"), batch)).as("__p"))
+      .select(p("query_id").cast(qv.idType).as("query_id"),
+        col("neighbor_id"),
+        round(when(p("ne") =!= 0 && p("nq") =!= 0,
+          p("dot") / (p("ne") * p("nq"))).otherwise(0.0), 6)
+          .as("cosine_sim"))
       // probed cells bound the EXPECTED candidate count, not the worst
       // case (skewed clustering) — bounded-heap rank, not a per-query
       // window sort (see Extensions.topKBy)
@@ -168,17 +182,53 @@ final class IvfIndex private (
 
 object IvfIndex {
 
-  /** A query batch's probe set, resolved once on the driver: `queries`
-    * is the bound (query_id, __q) local relation, `probed` the local
-    * (query_id, __q, __nq, __cell) rows, one per probed cell, and
-    * `cells` the sorted distinct probed cell ids. */
-  private[engine] final case class ResolvedProbes(queries: DataFrame,
-      probed: DataFrame, cells: Seq[Int])
+  /** A search request's query vectors as the driver holds them: the
+    * non-null ids (widened to long; `idType` is the type results carry
+    * them back in) and their vectors (catalyst arrays of `vecType`,
+    * null for a null vector). */
+  private[engine] final case class QueryVectors(ids: Array[Long],
+      vecs: Array[org.apache.spark.sql.catalyst.util.ArrayData],
+      idType: DataType, vecType: DataType) {
+    def vecFloat: Boolean = vecType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+  }
 
-  /** The probe rule shared by [[IvfIndex.query]] and
-    * [[IvfPqIndex.query]]: ONE collect binds the query rows, then one
-    * projection over the local relation — folded by the optimizer, no
-    * job — evaluates each query's probed cells with Spark expressions:
+  private[engine] object QueryVectors {
+
+    /** (id, vector) internal rows at ordinals `idAt` / `vecAt`. */
+    def of(rows: Seq[org.apache.spark.sql.catalyst.InternalRow], idAt: Int,
+        vecAt: Int, idType: DataType, vecType: DataType): QueryVectors = {
+      require(idType match {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
+      }, s"query ids must be integral, got ${idType.simpleString}")
+      val kept = rows.filterNot(_.isNullAt(idAt))
+      QueryVectors(
+        kept.map(_.get(idAt, idType).asInstanceOf[Number].longValue).toArray,
+        kept.map(r => if (r.isNullAt(vecAt)) null else r.getArray(vecAt))
+          .toArray, idType, vecType)
+    }
+
+    /** ONE collect of `queries`' (query_id, __q). */
+    def collect(queries: DataFrame): QueryVectors = {
+      val q = queries.select(col("query_id"), col("__q"))
+      of(Extensions.collectInternal(q).toSeq, 0, 1,
+        q.schema(0).dataType, q.schema(1).dataType)
+    }
+  }
+
+  /** The probed cells of a request ([[Prober.resolve]]): per query, its
+    * norm `nq` (sqrt(dot(__q, __q)), null where DotF32 is), the query
+    * slots per cell ([[graft.functions.QueryBatch.cellSlots]]), and the
+    * sorted distinct probed cells — the partition filter. */
+  private[engine] final case class Probes(nq: Array[java.lang.Double],
+      cellSlots: Array[Array[Int]], cells: Seq[Int])
+
+  /** The probe rule shared by [[IvfIndex]] and [[IvfPqIndex]], as one
+    * projection per nprobe ([[Extensions.driverProjection]]: analyzed
+    * once per handle, evaluated on the driver per query):
     *
     *   - flat: (`dist(__q, centroid)`, cell) structs sorted ascending,
     *     first nprobe — Spark's double ordering, ties to the lower
@@ -191,47 +241,56 @@ object IvfIndex {
     *     contract), self cell always first; `nprobe >= nLeaves` probes
     *     every leaf.
     *
-    * `__nq = sqrt(dot(__q, __q))` rides along, so scoring needs no
-    * per-candidate query norm. */
-  private[engine] def resolveProbes(queries: DataFrame,
+    * Null cells are dropped; a query probes each of its cells once. */
+  private[engine] final class Prober(spark: SparkSession,
       centroids: Seq[(Int, Array[Float])],
-      tree: Option[Extensions.TreeQuantizer], nprobe: Int,
+      tree: Option[Extensions.TreeQuantizer],
       dist: (org.apache.spark.sql.Column, org.apache.spark.sql.Column)
-        => org.apache.spark.sql.Column): ResolvedProbes = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, IntegerType,
-      StructField, StructType}
-    val bound = Extensions.bindLocal(
-      queries.select(col("query_id"), col("__q")))
-    val probeCells = tree match {
-      case Some(tq) if nprobe >= tq.nLeaves =>
-        typedLit((0 until tq.nLeaves).toList)
-      case Some(tq) =>
-        val self = graft.functions.TreeCells.nearestLeaf(col("__q"),
-          tq.supFlat, tq.leafFlat, tq.groupStart, tq.dim)
-        val pr = graft.functions.TreeCells.probes(col("__q"),
-          tq.supFlat, tq.leafFlat, tq.groupStart, tq.dim, nprobe,
-          tq.superProbeFor(nprobe))
-        slice(array_distinct(concat(array(self), pr)), 1, nprobe)
-      case None =>
-        val ranked = array_sort(array(centroids.sortBy(_._1).map {
-          case (cell, c) =>
-            struct(dist(col("__q"), typedLit(c)).as("d"), lit(cell).as("c"))
-        }: _*))
-        transform(slice(ranked, 1, nprobe), _.getField("c"))
-    }
-    val rows = bound.select(col("query_id"), col("__q"),
-        sqrt(Extensions.dot(col("__q"), col("__q"))).as("__nq"),
-        probeCells)
-      .collect().toSeq.flatMap { r =>
-        Option(r.getSeq[Any](3)).getOrElse(Nil)
-          .collect { case c: Int => Row(r.get(0), r.get(1), r.get(2), c) }
+        => org.apache.spark.sql.Column) {
+
+    private val rules = new java.util.concurrent.ConcurrentHashMap[
+      (Int, DataType), Extensions.DriverProjection]()
+
+    private def probeCells(nprobe: Int): org.apache.spark.sql.Column =
+      tree match {
+        case Some(tq) if nprobe >= tq.nLeaves =>
+          typedLit((0 until tq.nLeaves).toList)
+        case Some(tq) =>
+          val self = graft.functions.TreeCells.nearestLeaf(col("__q"),
+            tq.supFlat, tq.leafFlat, tq.groupStart, tq.dim)
+          val pr = graft.functions.TreeCells.probes(col("__q"),
+            tq.supFlat, tq.leafFlat, tq.groupStart, tq.dim, nprobe,
+            tq.superProbeFor(nprobe))
+          slice(array_distinct(concat(array(self), pr)), 1, nprobe)
+        case None =>
+          val ranked = array_sort(array(centroids.sortBy(_._1).map {
+            case (cell, c) =>
+              struct(dist(col("__q"), typedLit(c)).as("d"), lit(cell).as("c"))
+          }: _*))
+          transform(slice(ranked, 1, nprobe), _.getField("c"))
       }
-    val probed = bound.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*),
-      StructType(bound.schema.fields ++ Seq(StructField("__nq", DoubleType),
-        StructField("__cell", IntegerType, nullable = false))))
-    ResolvedProbes(bound, probed, rows.map(_.getInt(3)).distinct.sorted)
+
+    def resolve(qv: QueryVectors, nprobe: Int): Probes = {
+      val rule = rules.computeIfAbsent((nprobe, qv.vecType), _ =>
+        Extensions.driverProjection(spark,
+          StructType(Seq(StructField("__q", qv.vecType))), probeCells(nprobe),
+          sqrt(Extensions.dot(col("__q"), col("__q")))))
+      val evaluated = qv.vecs.toSeq.map(v => rule(v))
+      val cells = evaluated.map { r =>
+        if (r.isNullAt(0)) Nil
+        else {
+          val a = r.getArray(0)
+          (0 until a.numElements()).filterNot(a.isNullAt).map(a.getInt)
+        }
+      }
+      val all = cells.flatten.distinct.sorted
+      val nCells = (all ++ centroids.map(_._1)).max + 1
+      Probes(
+        evaluated.map(r =>
+          if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1)))
+          .toArray,
+        graft.functions.QueryBatch.slotsByCell(cells, nCells), all)
+    }
   }
 
   /** Fit the coarse quantizer and assign every corpus row to its cell.
@@ -1242,6 +1301,10 @@ final class IvfPqIndex private[engine] (
     embCol: String,
     tree: Option[Extensions.TreeQuantizer] = None) {
 
+  // the probe rule, analyzed once per handle and nprobe
+  private lazy val prober =
+    new IvfIndex.Prober(spark, centroids, tree, Extensions.pqSqDist)
+
   private def cellsDf = IvfIndex.cellsWithEpochs(spark, path)
 
   def queryByIds(queryIds: Seq[Long], k: Int, nprobe: Int,
@@ -1256,46 +1319,63 @@ final class IvfPqIndex private[engine] (
   def query(queries: DataFrame, k: Int, nprobe: Int,
       refineFactor: Int): DataFrame =
     IvfPqIndex.search(cellsDf, IvfIndex.codesWithEpochs(spark, path),
-      idCol, embCol, centroids, codebook, tree, queries, k, nprobe,
-      refineFactor)
+      idCol, embCol, prober, codebook, IvfIndex.QueryVectors.collect(queries),
+      k, nprobe, refineFactor)
 }
 
 object IvfPqIndex {
 
   /** The IVF+PQ query over a cell-assigned corpus: `cells` carries
     * (idCol, embCol, __cell), `codes` (idCol, codes, __cell) encoded
-    * under `codebook`, `queries` (query_id, __q). Each query probes its
-    * `nprobe` cells ([[IvfIndex.resolveProbes]], ranked by squared L2
-    * on a flat quantizer), ADC-scores only the codes inside them, keeps
-    * the best `k·refineFactor` in a bounded heap, and re-ranks that
-    * shortlist by exact squared L2 on the full vectors. The probed cell
-    * ids filter both scans as literals, so a saved layout prunes files
-    * on each. */
+    * under `codebook`. Each query probes its `nprobe` cells
+    * ([[IvfIndex.Prober]], ranked by squared L2 on a flat quantizer),
+    * ADC-scores only the codes inside them — one
+    * [[graft.functions.QueryBatch.PqAdc]] call per row, against the
+    * queries probing the row's cell, from per-query tables built on the
+    * driver (the sums [[graft.functions.PqOps.adc]] forms, so the same
+    * bits) — keeps the best `k·refineFactor` in a bounded heap, and
+    * re-ranks that shortlist by exact squared L2 on the full vectors,
+    * the query vectors bound by reference under their ids. The probed
+    * cell ids filter both scans as literals, so a saved layout prunes
+    * files on each. */
   private[engine] def search(cells: DataFrame, codes: DataFrame,
-      idCol: String, embCol: String, centroids: Seq[(Int, Array[Float])],
-      codebook: Seq[Seq[Seq[Float]]], tree: Option[Extensions.TreeQuantizer],
-      queries: DataFrame, k: Int, nprobe: Int,
-      refineFactor: Int): DataFrame = {
+      idCol: String, embCol: String, prober: IvfIndex.Prober,
+      codebook: Seq[Seq[Seq[Float]]], qv: IvfIndex.QueryVectors, k: Int,
+      nprobe: Int, refineFactor: Int): DataFrame = {
     require(k > 0 && nprobe > 0 && refineFactor > 0,
       "k, nprobe and refineFactor must be positive")
-    val probe = IvfIndex.resolveProbes(queries, centroids, tree, nprobe,
-      Extensions.pqSqDist)
-    val adc = graft.functions.PqOps.pqAdc(col("__q"), col("codes"),
-      codebook)
+    val probes = prober.resolve(qv, nprobe)
+    val (flat, m, kk, sub) = graft.functions.PqOps.flatten(codebook)
+    // one ADC table per query; a query with a null element or the wrong
+    // length gets none (its per-pair ADC was null)
+    val tables = qv.vecs.map { v =>
+      val (x, hasNull) =
+        graft.functions.QueryBatch.decodeVector(v, qv.vecFloat)
+      if (x == null || hasNull || x.length != m * sub) null
+      else graft.functions.PqOps.adcTable(x, flat, m, kk, sub)
+    }
+    val batch = new graft.functions.QueryBatch.PqAdc(qv.ids, tables, m, kk,
+      probes.cellSlots)
     val shortlist = codes
-      .filter(Extensions.partitionIn("__cell", probe.cells))
-      .select(col(idCol).as("neighbor_id"), col("codes"), col("__cell"))
-      .join(broadcast(probe.probed), Seq("__cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(adc, 6).as("adc_dist"))
+      .filter(Extensions.partitionIn("__cell", probes.cells))
+      .select(col(idCol).as("neighbor_id"),
+        explode(graft.functions.QueryBatch.scoreProbed(col("codes"),
+          col(idCol).cast("long"), col("__cell"), batch)).as("__p"))
+      .select(col("__p.query_id").cast(qv.idType).as("query_id"),
+        col("neighbor_id"), round(col("__p.adc"), 6).as("adc_dist"))
       .transform(Extensions.topKBy(_, "query_id", "neighbor_id",
         "adc_dist", k * refineFactor, smallestFirst = true))
-    val full = cells.filter(Extensions.partitionIn("__cell", probe.cells))
+    // every copy of a query id re-ranks against its own vector, as the
+    // join on query_id did
+    val vectors = graft.functions.RequestTable(
+      qv.ids.toSeq.zip(qv.vecs.toSeq), LongType, qv.vecType)
+    cells.filter(Extensions.partitionIn("__cell", probes.cells))
       .select(col(idCol).as("neighbor_id"), col(embCol).as("__e"))
-    shortlist.select(col("query_id"), col("neighbor_id"))
-      .join(full, Seq("neighbor_id"))
-      .join(probe.queries, Seq("query_id"))
+      .join(shortlist.select(col("query_id"), col("neighbor_id")),
+        Seq("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), col("__e"),
+        explode(graft.functions.RequestTable.lookup(
+          col("query_id").cast("long"), vectors)).as("__q"))
       .select(col("query_id"), col("neighbor_id"),
         round(Extensions.pqSqDist(col("__e"), col("__q")), 6)
           .as("l2_dist"))

@@ -1,7 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** The query surface the plain ([[TextIndex]]) and segmented
   * ([[SegmentedTextIndex]]) layouts share — what hybrid serving
@@ -9,11 +11,26 @@ import org.apache.spark.sql.functions._
   * segment-store serves through the same fused path as a batch-built
   * plain index (r18). Both implementations return the identical
   * (queryIdCol, idCol, bm25, rank) schema with bit-equal scores (the
-  * TextIndexSpec layout-equivalence law). */
+  * TextIndexSpec layout-equivalence law).
+  *
+  * One scoring plan serves both layouts ([[scoresOf]]): the query
+  * text is resolved on the driver ([[TextIndex.QueryText]]) into a
+  * term → query-ids table bound BY REFERENCE ([[graft.functions
+  * .RequestTable]]) and the bucket ids the terms hash to, computed by
+  * the build's own bucket expression, analyzed once per handle. The
+  * bucket ids prune the postings scan at the file level; each pruned
+  * posting then takes its query ids from the table (one hash probe per
+  * posting, whatever the batch's vocabulary) and the stream is keyed
+  * by query from there on: one shuffle, after which `df`, the
+  * (query, doc) sum and the top-k need no further exchange. */
 trait Bm25Queryable {
   def nDocs: Long
   def sumDl: Long
   def idCol: String
+  def nBuckets: Int
+
+  /** The saved postings: (term, idCol, tf, dl, …, __bucket). */
+  private[engine] def postings: DataFrame
 
   /** BM25 top-k per query; `queries` carries (queryIdCol,
     * queryTextCol). Output matches [[Extensions.bm25TopK]]:
@@ -26,11 +43,64 @@ trait Bm25Queryable {
   }
 
   /** The unranked (queryIdCol, idCol, __score_int) stream [[query]]
-    * ranks: integer micro-unit BM25 per (query, doc). Exposed to the
-    * engine so [[HybridIndex]] can drop self BEFORE the bounded-heap
-    * rank instead of re-ranking a kBranch+1 heap in a window. */
+    * ranks: integer micro-unit BM25 per (query, doc), after one
+    * collect of the query text. */
   private[engine] def scores(queries: DataFrame, queryTextCol: String,
-      queryIdCol: String): DataFrame
+      queryIdCol: String): DataFrame =
+    scoresOf(TextIndex.QueryText.collect(queries, queryTextCol, queryIdCol),
+      queryIdCol, excludeSelf = false)
+
+  // the build's bucket rule, analyzed once per handle
+  private lazy val bucketOf = Extensions.driverProjection(
+    postings.sparkSession,
+    StructType(Seq(StructField("term", StringType))), TextIndex.bucket(nBuckets))
+
+  /** [[scores]] over query text the driver already holds. With
+    * `excludeSelf`, a query's own document leaves its stream BEFORE the
+    * bounded-heap rank (after `df` counted it), which is the direct
+    * non-self top-k [[HybridIndex.queryByIds]] needs.
+    *
+    * `df` is a window count over (query, term): each such group holds
+    * every live posting of the term exactly once (a term's ENTIRE
+    * posting list lives in one hash bucket, and the table lists a query
+    * once per term), so it equals the per-term count — and it is keyed
+    * by query, which the shuffle already partitions on. The trade: one
+    * task holds all probed postings of one query. */
+  private[engine] def scoresOf(text: TextIndex.QueryText, queryIdCol: String,
+      excludeSelf: Boolean): DataFrame = {
+    val (slots, buckets) = text.resolve(bucketOf)
+    val byQuery = Window.partitionBy(queryIdCol, "term")
+    val (live, carried, df, keep) = matched(
+      postings.filter(Extensions.partitionIn("__bucket", buckets)), byQuery)
+    val keyed = live.select((
+        explode(graft.functions.RequestTable.lookup(col("term"), slots))
+          .as(queryIdCol) +:
+        (Seq(idCol, "term", "tf", "dl") ++ carried).map(col)): _*)
+      .repartition(col(queryIdCol))
+    val idf = log(lit(1.0) +
+      (lit(nDocs.toDouble) - df + lit(0.5)) / (df + lit(0.5)))
+    val fTf = (col("tf") * lit(2.2)) /
+      (col("tf") + lit(1.2) * (lit(0.25) +
+        (lit(0.75) * col("dl")) / lit(sumDl.toDouble / nDocs)))
+    val contrib = round(idf * fTf * lit(1000000.0)).cast("long")
+      .as("__contrib")
+    val scored = (keep ++ Option.when(excludeSelf)(
+        col(idCol) =!= col(queryIdCol))).reduceOption(_ && _) match {
+      case None => keyed.select(col(queryIdCol), col(idCol), contrib)
+      case Some(k) => keyed
+        .select(col(queryIdCol), col(idCol), contrib, k.as("__keep"))
+        .filter(col("__keep"))
+    }
+    scored.groupBy(col(queryIdCol), col(idCol))
+      .agg(sum("__contrib").as("__score_int"))
+  }
+
+  /** The layout's share of [[scoresOf]]: the live postings among the
+    * pruned ones, the extra columns the rest reads, the per-(query,
+    * term) document frequency over `byQuery`, and the condition a
+    * posting must meet to score (None: every live one scores). */
+  protected def matched(pruned: DataFrame, byQuery: WindowSpec)
+      : (DataFrame, Seq[String], Column, Option[Column])
 }
 
 /** Build-once / query-many inverted text index — the persisted form of
@@ -50,10 +120,10 @@ trait Bm25Queryable {
   *     (`pmod(xxhash64(term), nBuckets)`), global stats beside them;
   *   - '''query''': the query vocabulary is tiny (distinct terms of
   *     the query batch), so it is resolved ONCE on the driver
-  *     ([[TextIndex.queryVocabulary]]: one collect of the query ids
-  *     and their tokens, then the build's own bucket expression over a
-  *     folded local relation). The (query, term) pairs enter the plan
-  *     as a local relation — data, never generated code — and only the
+  *     ([[TextIndex.QueryText]]: one collect of the query ids and
+  *     their tokens, then the build's own bucket expression, analyzed
+  *     once per handle). The term → query-ids table is bound into the
+  *     plan by reference — data, never generated code — and only the
   *     bucket ids become literals, as a partition filter: on the saved
   *     layout the scan prunes to the matching bucket directories at the
   *     FILE level. A 100 TB posting store queried with 20 terms over
@@ -69,10 +139,10 @@ trait Bm25Queryable {
 final class TextIndex private[engine] (
     val nDocs: Long,
     val sumDl: Long,
-    postings: DataFrame,
+    private[engine] val postings: DataFrame,
     val idCol: String,
     val nBuckets: Int,
-    deleted: Option[DataFrame] = None,
+    private[engine] val deleted: Option[DataFrame] = None,
     // where this instance was loaded from and which delete epochs its
     // deleted/nDocs/sumDl snapshot CONSUMED — what save() needs to
     // decide which target markers the staged layout actually realizes
@@ -82,10 +152,7 @@ final class TextIndex private[engine] (
     srcPath: Option[String] = None,
     consumedDeletes: Set[String] = Set.empty) extends Bm25Queryable {
 
-  /** BM25 micro-unit scores per (query, doc) — [[Bm25Queryable.query]]
-    * ranks them.
-    *
-    * When the loaded layout carries committed take-down deletes
+  /** When the loaded layout carries committed take-down deletes
     * ([[TextIndex.delete]]), the deleted docs leave the result AND the
     * statistics, exactly: `nDocs`/`sumDl` were already adjusted at
     * load by the per-delete corrections, and the per-term `df` (a
@@ -93,61 +160,20 @@ final class TextIndex private[engine] (
     * query time by counting the deleted postings among the probed
     * terms — complete because a term's ENTIRE posting list lives in
     * one hash bucket, so the pruned scan sees every posting of every
-    * probed term, deleted docs' included. Scores therefore equal a
-    * fresh build over the surviving corpus bit for bit (the
-    * never-ingested law, TextIndexSpec). Without deletes the plan is
-    * unchanged.
-    */
-  private[engine] def scores(queries: DataFrame, queryTextCol: String,
-      queryIdCol: String): DataFrame = {
-    val vocab = TextIndex.queryVocabulary(queries, queryTextCol,
-      queryIdCol, nBuckets)
-    def idfOf(dfCol: org.apache.spark.sql.Column) = log(lit(1.0) +
-      (lit(nDocs.toDouble) - dfCol + lit(0.5)) / (dfCol + lit(0.5)))
-    val fTf = (col("tf") * lit(2.2)) /
-      (col("tf") + lit(1.2) * (lit(0.25) +
-        (lit(0.75) * col("dl")) / lit(sumDl.toDouble / nDocs)))
-    val pruned =
-      postings.filter(Extensions.partitionIn("__bucket", vocab.buckets))
-    deleted match {
-      case None =>
-        pruned
-          .join(broadcast(vocab.pairs), "term")
-          .withColumn("__contrib",
-            round(idfOf(col("df")) * fTf * lit(1000000.0)).cast("long"))
-          .groupBy(col(queryIdCol), col(idCol))
-          .agg(sum("__contrib").as("__score_int"))
-      case Some(del) =>
-        // per-term count of DELETED postings among the probed terms —
-        // the exact df correction (term → one bucket, so the pruned
-        // read is complete per term); df - __df_del is what a fresh
-        // build over the survivors would have denormalized.
-        // ONE pruned-postings scan (opt r19, guide §1.2/§2): the old
-        // shape evaluated `matched` twice (a df-correction aggregate
-        // plus a left_anti of the same scan). Deleted ids are globally
-        // DISTINCT by construction ([[TextIndex.delete]] dedups and
-        // excludes already-committed ids), so a left join with a
-        // marker column is exactly the anti-join's row set, the
-        // correction is a whole-partition window count over the probed
-        // stream — same integers (count of deleted postings per term;
-        // a term with none counts 0, the old coalesce(_, 0L)) — and
-        // the deleted rows drop AFTER the count, BEFORE the per-query
-        // fan-out (counting after the pairs fan-out would multiply
-        // the correction by the number of queries sharing the term).
-        val delKeyed = del.withColumnRenamed("__del_id", idCol)
-        pruned
-          .join(broadcast(vocab.terms), "term")
-          .join(delKeyed.withColumn("__del", lit(1)), Seq(idCol), "left")
-          .withColumn("__df_del", count(col("__del")).over(
-            org.apache.spark.sql.expressions.Window.partitionBy("term")))
-          .filter(col("__del").isNull)
-          .join(broadcast(vocab.pairs), "term")
-          .withColumn("__contrib",
-            round(idfOf(col("df") - col("__df_del")) * fTf *
-              lit(1000000.0)).cast("long"))
-          .groupBy(col(queryIdCol), col(idCol))
-          .agg(sum("__contrib").as("__score_int"))
-    }
+    * probed term, deleted docs' included. Deleted ids are globally
+    * DISTINCT ([[TextIndex.delete]] dedups them), so a left join with a
+    * marker column keeps each posting once and marks the deleted ones;
+    * they are counted, then dropped. Scores therefore equal a fresh
+    * build over the surviving corpus bit for bit (the never-ingested
+    * law, TextIndexSpec). Without deletes `df` is the stored column. */
+  protected def matched(pruned: DataFrame, byQuery: WindowSpec)
+      : (DataFrame, Seq[String], Column, Option[Column]) = deleted match {
+    case None => (pruned, Seq("df"), col("df"), None)
+    case Some(del) =>
+      (pruned.join(del.select(col("__del_id").as(idCol), lit(1).as("__del")),
+          Seq(idCol), "left"),
+        Seq("df", "__del"), col("df") - count(col("__del")).over(byQuery),
+        Some(col("__del").isNull))
   }
 
   /** Persist: postings partitioned by term-hash bucket + 1-row stats.
@@ -276,49 +302,27 @@ final class TextIndex private[engine] (
 final class SegmentedTextIndex private[engine] (
     val nDocs: Long,
     val sumDl: Long,
-    postings: DataFrame,
+    private[engine] val postings: DataFrame,
     val idCol: String,
     val nBuckets: Int,
-    deleted: Option[DataFrame] = None) extends Bm25Queryable {
+    private[engine] val deleted: Option[DataFrame] = None) extends Bm25Queryable {
 
-  /** BM25 micro-unit scores per (query, doc), as [[TextIndex]]'s.
-    * Take-down deletes are simpler here than on the plain index: the
+  /** Take-down deletes are simpler here than on the plain index: the
     * segmented layout derives `df` from the probed postings at query
     * time, so excluding deleted docs' postings BEFORE that count makes
     * the correction automatic — with `nDocs`/`sumDl` already adjusted
     * at load, scores equal a fresh build over the survivors bit for
-    * bit (the never-ingested law). */
-  private[engine] def scores(queries: DataFrame, queryTextCol: String,
-      queryIdCol: String): DataFrame = {
-    val vocab = TextIndex.queryVocabulary(queries, queryTextCol,
-      queryIdCol, nBuckets)
-    val pruned =
-      postings.filter(Extensions.partitionIn("__bucket", vocab.buckets))
+    * bit (the never-ingested law). `df` is counted from the pruned
+    * postings: complete per probed term because term → bucket is a
+    * pure function. */
+  protected def matched(pruned: DataFrame, byQuery: WindowSpec)
+      : (DataFrame, Seq[String], Column, Option[Column]) = {
     val live = deleted match {
       case None => pruned
-      case Some(del) => pruned.join(
-        del.withColumnRenamed("__del_id", idCol), Seq(idCol), "left_anti")
+      case Some(del) => pruned.join(del.select(col("__del_id").as(idCol)),
+        Seq(idCol), "left_anti")
     }
-    // global df reconstructed from the pruned postings: complete per
-    // probed term because term→bucket is a pure function. Counted
-    // BEFORE query ids are attached — joining (queryId, term) pairs
-    // first would duplicate each posting once per query sharing the
-    // term and inflate df — as a whole-partition window count, so the
-    // pruned postings are read once and the scoring plan stays ONE
-    // chain of stages (the TextIndex delete path's shape)
-    val idf = log(lit(1.0) +
-      (lit(nDocs.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val fTf = (col("tf") * lit(2.2)) /
-      (col("tf") + lit(1.2) * (lit(0.25) +
-        (lit(0.75) * col("dl")) / lit(sumDl.toDouble / nDocs)))
-    live.join(broadcast(vocab.terms), "term")
-      .withColumn("df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("term")))
-      .join(broadcast(vocab.pairs), "term")
-      .withColumn("__contrib",
-        round(idf * fTf * lit(1000000.0)).cast("long"))
-      .groupBy(col(queryIdCol), col(idCol))
-      .agg(sum("__contrib").as("__score_int"))
+    (live, Nil, count(lit(1)).over(byQuery), None)
   }
 }
 
@@ -330,43 +334,50 @@ object TextIndex {
   private def deleteSet(path: String) =
     new Generations.DeleteSet(path, "deletes", "_deletes")
 
-  /** A query batch's vocabulary, resolved once on the driver: the
-    * distinct (query id, term) `pairs` and distinct `terms` as local
-    * relations, and the sorted bucket ids those terms hash to. */
-  private[engine] final case class QueryVocabulary(pairs: DataFrame,
-      terms: DataFrame, buckets: Seq[Int])
+  /** The build's term-hash bucket rule. */
+  private[engine] def bucket(nBuckets: Int): Column =
+    pmod(xxhash64(col("term")), lit(nBuckets)).cast("int")
 
-  /** Resolve the vocabulary of `queries` with ONE collect — the query
-    * ids and their [[Extensions.tokens]] arrays; a frame already bound
-    * locally folds, no job — then explode, drop empty tokens and
-    * dedupe on the driver, and hash the terms over a local relation
-    * (folded again: the build's own bucket expression, no job). Shared by both layouts' query paths and both delete modes.
-    * Pairs and terms enter the search plan as local relations; only
-    * the bucket ids become literals ([[Extensions.partitionIn]]),
-    * because only a literal partition filter prunes files. */
-  private[engine] def queryVocabulary(queries: DataFrame,
-      queryTextCol: String, queryIdCol: String,
-      nBuckets: Int): QueryVocabulary = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val tokenized = queries
-      .select(col(queryIdCol), Extensions.tokens(col(queryTextCol)))
-    val pairs = tokenized.collect().toSeq.flatMap { r =>
-      if (r.isNullAt(1)) Nil
-      else r.getSeq[String](1).filter(_ != "").map(t => Row(r.get(0), t))
-    }.distinct
-    val termField = StructField("term", StringType, nullable = false)
-    val terms = queries.sparkSession.createDataFrame(
-      java.util.Arrays.asList(pairs.map(_.getString(1)).distinct
-        .map(Row(_)): _*), StructType(Seq(termField)))
-    // the build's bucket rule, evaluated over the bound terms
-    val buckets = terms
-      .select(pmod(xxhash64(col("term")), lit(nBuckets)).cast("int"))
-      .collect().map(_.getInt(0)).distinct.sorted.toSeq
-    QueryVocabulary(
-      queries.sparkSession.createDataFrame(java.util.Arrays.asList(pairs: _*),
-        StructType(Seq(tokenized.schema.fields(0), termField))),
-      terms, buckets)
+  /** A query batch's text as the driver holds it: one (query id,
+    * tokens) row per query, ids as catalyst values of `idType`, tokens
+    * the [[Extensions.tokens]] array Spark computed (null for null
+    * text). */
+  private[engine] final case class QueryText(
+      rows: Seq[(Any, org.apache.spark.sql.catalyst.util.ArrayData)],
+      idType: DataType) {
+
+    /** The distinct (query id, term) pairs — empty tokens dropped — as
+      * a term → query-ids table, and the sorted bucket ids of the terms
+      * under `bucketOf` (the build's [[bucket]] rule). Only the bucket
+      * ids become literals, as a partition filter
+      * ([[Extensions.partitionIn]]), because only a literal partition
+      * filter prunes files. */
+    def resolve(bucketOf: Extensions.DriverProjection)
+        : (graft.functions.RequestTable, Seq[Int]) = {
+      val pairs = rows.flatMap { case (id, toks) =>
+        if (toks == null) Nil
+        else (0 until toks.numElements()).filterNot(toks.isNullAt)
+          .map(i => (toks.getUTF8String(i).clone(), id))
+          .filter(_._1.numBytes() > 0)
+      }.distinct
+      val buckets = pairs.map(_._1).distinct
+        .map(t => bucketOf(t).getInt(0)).distinct.sorted
+      (graft.functions.RequestTable(pairs, StringType, idType), buckets)
+    }
+  }
+
+  private[engine] object QueryText {
+
+    /** ONE collect of the query ids and their tokens. */
+    def collect(queries: DataFrame, queryTextCol: String,
+        queryIdCol: String): QueryText = {
+      val q = queries.select(col(queryIdCol),
+        Extensions.tokens(col(queryTextCol)))
+      val idType = q.schema.head.dataType
+      QueryText(Extensions.collectInternal(q).toSeq.map(r =>
+        (if (r.isNullAt(0)) null else r.get(0, idType),
+          if (r.isNullAt(1)) null else r.getArray(1))), idType)
+    }
   }
 
   /** Directory (relative to the index path) holding the LIVE segment
@@ -434,7 +445,8 @@ object TextIndex {
     // exclude ids an EARLIER delete already committed: their postings
     // are already excluded (or physically gone), and counting them
     // again would double-subtract the stats corrections
-    val newIds = deletedIdsDf(spark, path) match {
+    val prior = deleteEntries(spark, path).map(_._1)
+    val newIds = deletedIdsDf(spark, path, prior) match {
       case None      => fresh
       case Some(old) => fresh.join(old, Seq("__del_id"), "left_anti")
     }
@@ -526,16 +538,17 @@ object TextIndex {
       path: String): Boolean =
     Generations.exists(s"${plainDataDir(path)}/postings")
 
-  /** All unapplied deleted ids as one `__del_id` frame; None when none
-    * exist (the common case — query paths add no plan step). */
-  private def deletedIdsDf(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val names = deleteEntries(spark, path).map(_._1)
+  /** The ids of the unapplied deletes `names` ([[deleteEntries]]) as
+    * one `__del_id` frame; None when there are none (the common case —
+    * query paths add no plan step). Callers pass the names they
+    * resolved, so one load reads one delete set: a delete committing
+    * in between cannot exclude ids whose stats were not corrected. */
+  private def deletedIdsDf(spark: SparkSession, path: String,
+      names: Seq[String]): Option[DataFrame] =
     if (names.isEmpty) None
     else Some(spark.read
       .parquet(names.map(deleteSet(path).idsPath): _*)
       .distinct())
-  }
 
   /** Segment names the current root's compaction folded into its
     * merged segment (`_segs_folded` manifest) — an append replaying
@@ -624,8 +637,7 @@ object TextIndex {
       .agg(count(lit(1)).as("tf"))
     val dl = tf.groupBy(idCol).agg(sum("tf").as("dl"))
     val postings = tf.join(dl, idCol)
-      .withColumn("__bucket",
-        pmod(xxhash64(col("term")), lit(nBuckets)).cast("int"))
+      .withColumn("__bucket", bucket(nBuckets))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Generations.writePartitioned(postings, "__bucket", "errorifexists",
       s"$seg/postings")
@@ -654,8 +666,13 @@ object TextIndex {
     * sets are disjoint by the append contract), minus the exact
     * corrections of any committed unapplied deletes.
     */
-  def loadSegments(spark: SparkSession, path: String): SegmentedTextIndex = {
-    val segDirs = segmentDirs(path)
+  def loadSegments(spark: SparkSession, path: String): SegmentedTextIndex =
+    openSegments(spark, path, segmentDirs(path), deleteEntries(spark, path))
+
+  /** [[loadSegments]] over a resolved segment list and delete set. */
+  private def openSegments(spark: SparkSession, path: String,
+      segDirs: Seq[String], dels: Seq[(String, Long, Long)])
+      : SegmentedTextIndex = {
     val stats = segDirs.map(d =>
       spark.read.parquet(s"$d/stats").collect().head)
     val buckets = stats.map(_.getInt(2)).distinct
@@ -666,12 +683,11 @@ object TextIndex {
       s"segments disagree on id column: ${idCols.mkString(", ")}")
     val postings = segDirs.map(d =>
       spark.read.parquet(s"$d/postings")).reduce(_.unionByName(_))
-    val dels = deleteEntries(spark, path)
     new SegmentedTextIndex(
       stats.map(_.getLong(0)).sum - dels.map(_._2).sum,
       stats.map(_.getLong(1)).sum - dels.map(_._3).sum,
       postings, idCols.head, buckets.head,
-      deletedIdsDf(spark, path))
+      deletedIdsDf(spark, path, dels.map(_._1)))
   }
 
   /** Merge every live segment into ONE — the maintenance job a
@@ -717,13 +733,14 @@ object TextIndex {
     // layout's only physical-removal path)
     val dels = deleteEntries(spark, path)
     if (segDirs.length == 1 && dels.isEmpty) return false
-    val idx = loadSegments(spark, path) // validates buckets + id column
+    // validates buckets + id column
+    val idx = openSegments(spark, path, segDirs, dels)
     // idx.nDocs/sumDl are already NET of the unapplied deletes (exact
     // per-delete corrections), so they are exactly the stats of the
     // filtered postings staged below
     val rawPostings = segDirs.map(d =>
       spark.read.parquet(s"$d/postings")).reduce(_.unionByName(_))
-    val postings = deletedIdsDf(spark, path) match {
+    val postings = deletedIdsDf(spark, path, dels.map(_._1)) match {
       case None      => rawPostings
       case Some(del) => rawPostings.join(
         del.withColumnRenamed("__del_id", idx.idCol),
@@ -822,8 +839,7 @@ object TextIndex {
     val dfreq = tf.groupBy("term")
       .agg(count(when(col("tf") > 0, 1)).as("df"))
     val postings = tf.join(dl, idCol).join(dfreq, "term")
-      .withColumn("__bucket",
-        pmod(xxhash64(col("term")), lit(nBuckets)).cast("int"))
+      .withColumn("__bucket", bucket(nBuckets))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val stats = dl.agg(count(lit(1)).as("n"), sum("dl").as("s"))
       .collect().head
@@ -850,7 +866,7 @@ object TextIndex {
         spark.read.parquet(s"$base/postings")),
       st.getString(st.fieldIndex("id_col")),
       st.getInt(st.fieldIndex("n_buckets")),
-      deletedIdsDf(spark, path),
+      deletedIdsDf(spark, path, dels.map(_._1)),
       // save() needs to know which target markers this snapshot
       // realizes: exactly these names, at exactly this path — a
       // delete committed after this load stays live through an

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -32,6 +32,11 @@ import org.apache.spark.sql.types._
   * semantics are Spark's by construction and every reduction
   * accumulates in the order of the kernel it replaces ([[DotF32]],
   * [[PqOps.adc]]), which makes the scores bit-identical.
+  *
+  * A PROBED batch (`cellSlots` set: the IVF search paths) scores a row
+  * only against the queries that probe the row's cell — the slots the
+  * driver resolved for that cell ([[ScoreProbed]]) — which is what the
+  * per-pair `join(probed, "__cell")` plan it replaces matched.
   */
 abstract class QueryBatch extends Serializable {
 
@@ -45,14 +50,29 @@ abstract class QueryBatch extends Serializable {
   /** Whether the kernel accepts this input column type. */
   def inputOk(dt: DataType): Boolean
 
-  /** The pairs of one non-null-id row against every query. */
-  protected def score(row: ArrayData, rowFloat: Boolean, rowId: Long): ArrayData
+  /** Per cell id, the ascending query slots that probe it (null: none);
+    * null for a batch that scores every row against every query. */
+  def cellSlots: Array[Array[Int]]
+
+  /** The pairs of one non-null-id row against the queries at `slots`
+    * (null: every query). */
+  protected def score(row: ArrayData, rowFloat: Boolean, rowId: Long,
+      slots: Array[Int]): ArrayData
 
   /** Generated-code entry point: a row with a null id matches no query
     * (the per-pair plan's `neighbor_id <> query_id` dropped it). */
   final def scoreRow(row: ArrayData, rowFloat: Boolean, idNull: Boolean,
       rowId: Long): ArrayData =
-    if (idNull) QueryBatch.Empty else score(row, rowFloat, rowId)
+    if (idNull) QueryBatch.Empty else score(row, rowFloat, rowId, null)
+
+  /** Generated-code entry point of a probed batch: the row is scored
+    * against the queries probing its cell; a null or unprobed cell
+    * matches none. */
+  final def scoreInCell(row: ArrayData, rowFloat: Boolean, idNull: Boolean,
+      rowId: Long, cellNull: Boolean, cell: Int): ArrayData =
+    if (idNull || cellNull || cell < 0 || cell >= cellSlots.length ||
+        cellSlots(cell) == null) QueryBatch.Empty
+    else score(row, rowFloat, rowId, cellSlots(cell))
 
   override def toString: String =
     s"${getClass.getSimpleName}(${ids.length} queries)"
@@ -108,6 +128,23 @@ object QueryBatch {
     case _ => false
   }
 
+  /** A driver-held query vector (catalyst array, nullable) widened as
+    * [[decodeCollected]] widens a collected one. */
+  def decodeVector(v: ArrayData, vFloat: Boolean): (Array[Double], Boolean) =
+    if (v == null) (null, false)
+    else {
+      val out = new Array[Double](v.numElements())
+      (out, decode(v, vFloat, out) >= 0)
+    }
+
+  /** Invert per-query cell lists into [[QueryBatch.cellSlots]]: per cell
+    * id below `nCells`, the ascending slots of the queries probing it. */
+  def slotsByCell(cells: Seq[Seq[Int]], nCells: Int): Array[Array[Int]] = {
+    val b = Array.fill(nCells)(Array.newBuilder[Int])
+    for ((cs, q) <- cells.zipWithIndex; c <- cs) b(c) += q
+    b.map { x => val a = x.result(); if (a.isEmpty) null else a }
+  }
+
   private[functions] def pairs(out: Array[Any], n: Int): ArrayData =
     if (n == 0) Empty
     else new GenericArrayData(
@@ -118,14 +155,15 @@ object QueryBatch {
     * it. A null row, a null element or a length mismatch gives the null
     * reductions DotF32 gives. */
   final class Cosine(val ids: Array[Long], qs: Array[Array[Double]],
-      qNull: Array[Boolean], nq: Array[java.lang.Double])
+      qNull: Array[Boolean], nq: Array[java.lang.Double],
+      val cellSlots: Array[Array[Int]] = null)
       extends QueryBatch {
 
     def fields: Seq[String] = Seq("dot", "ne", "nq")
     def inputOk(dt: DataType): Boolean = vectorOk(dt)
 
     protected def score(row: ArrayData, rowFloat: Boolean,
-        rowId: Long): ArrayData = {
+        rowId: Long, slots: Array[Int]): ArrayData = {
       var x: Array[Double] = null
       var ne: java.lang.Double = null
       if (row != null) {
@@ -133,10 +171,12 @@ object QueryBatch {
         if (decode(row, rowFloat, x) < 0) ne = Math.sqrt(dot(x, x))
         else x = null
       }
-      val out = new Array[Any](ids.length)
+      val nSlots = if (slots == null) ids.length else slots.length
+      val out = new Array[Any](nSlots)
       var n = 0
-      var q = 0
-      while (q < ids.length) {
+      var i = 0
+      while (i < nSlots) {
+        val q = if (slots == null) i else slots(i)
         if (ids(q) != rowId) {
           val v = qs(q)
           val d: java.lang.Double =
@@ -146,7 +186,7 @@ object QueryBatch {
           out(n) = new GenericInternalRow(Array[Any](ids(q), d, ne, nq(q)))
           n += 1
         }
-        q += 1
+        i += 1
       }
       pairs(out, n)
     }
@@ -160,7 +200,8 @@ object QueryBatch {
     * wrong length), score no pair — the per-pair ADC was null there,
     * and the ranking skips nulls. */
   final class PqAdc(val ids: Array[Long], tables: Array[Array[Double]],
-      m: Int, k: Int) extends QueryBatch {
+      m: Int, k: Int, val cellSlots: Array[Array[Int]] = null)
+      extends QueryBatch {
 
     def fields: Seq[String] = Seq("adc")
     def inputOk(dt: DataType): Boolean = dt match {
@@ -169,7 +210,7 @@ object QueryBatch {
     }
 
     protected def score(codes: ArrayData, rowFloat: Boolean,
-        rowId: Long): ArrayData = {
+        rowId: Long, slots: Array[Int]): ArrayData = {
       if (codes == null || codes.numElements() != m) return Empty
       val c = new Array[Int](m)
       var j = 0
@@ -179,10 +220,12 @@ object QueryBatch {
         if (c(j) < 0 || c(j) >= k) return Empty
         j += 1
       }
-      val out = new Array[Any](ids.length)
+      val nSlots = if (slots == null) ids.length else slots.length
+      val out = new Array[Any](nSlots)
       var n = 0
-      var q = 0
-      while (q < ids.length) {
+      var i = 0
+      while (i < nSlots) {
+        val q = if (slots == null) i else slots(i)
         val t = tables(q)
         if (t != null && ids(q) != rowId) {
           var s = 0.0
@@ -191,7 +234,7 @@ object QueryBatch {
           out(n) = new GenericInternalRow(Array[Any](ids(q), s))
           n += 1
         }
-        q += 1
+        i += 1
       }
       pairs(out, n)
     }
@@ -211,19 +254,22 @@ object QueryBatch {
 
     def fields: Seq[String] = Seq("qq", "ee", "qe")
     def inputOk(dt: DataType): Boolean = vectorOk(dt)
+    def cellSlots: Array[Array[Int]] = null
 
     protected def score(row: ArrayData, rowFloat: Boolean,
-        rowId: Long): ArrayData = {
+        rowId: Long, slots: Array[Int]): ArrayData = {
       if (row == null || row.numElements() < dim) return Empty
       val x = new Array[Double](row.numElements())
       val firstNull = decode(row, rowFloat, x)
       if (firstNull >= 0 && firstNull < dim) return Empty
       val b = SignBuckets.bucketsOf(x, planes, numTables, bitsPerTable, dim)
       val ee: java.lang.Double = if (firstNull < 0) dot(x, x) else null
-      val out = new Array[Any](ids.length)
+      val nSlots = if (slots == null) ids.length else slots.length
+      val out = new Array[Any](nSlots)
       var n = 0
-      var q = 0
-      while (q < ids.length) {
+      var i = 0
+      while (i < nSlots) {
+        val q = if (slots == null) i else slots(i)
         val qb = qBuckets(q)
         if (qb != null && ids(q) != rowId) {
           var t = 0
@@ -237,7 +283,7 @@ object QueryBatch {
             n += 1
           }
         }
-        q += 1
+        i += 1
       }
       pairs(out, n)
     }
@@ -250,17 +296,26 @@ object QueryBatch {
     ColumnBridge.column(ScoreBatch(ColumnBridge.expression(vec),
       ColumnBridge.expression(id), batch))
   }
+
+  /** [[scoreBatch]] for a probed batch: `cell` is the row's int cell. */
+  def scoreProbed(vec: Column, id: Column, cell: Column,
+      batch: QueryBatch): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    require(batch.cellSlots != null, s"$batch is not probed")
+    ColumnBridge.column(ScoreProbed(ColumnBridge.expression(vec),
+      ColumnBridge.expression(id), ColumnBridge.expression(cell), batch))
+  }
 }
 
-/** See [[QueryBatch]]. The batch is bound into generated code as one
+/** What [[ScoreBatch]] and [[ScoreProbed]] share: the pair type and the
+  * input checks. The batch is bound into generated code as one
   * reference object, so the code is the same for every request of the
   * plan's shape — no query value is ever inlined — and expression
   * equality degrades to reference equality on it. */
-case class ScoreBatch(vec: Expression, id: Expression, batch: QueryBatch)
-    extends BinaryExpression {
-
-  override def left: Expression = vec
-  override def right: Expression = id
+sealed trait ScoresBatch extends Expression {
+  def vec: Expression
+  def id: Expression
+  def batch: QueryBatch
 
   override def dataType: DataType = ArrayType(
     // query ids come from the id column the rows are read from
@@ -269,19 +324,34 @@ case class ScoreBatch(vec: Expression, id: Expression, batch: QueryBatch)
     containsNull = false)
   override def nullable: Boolean = false
 
+  protected def extraInputsOk: Boolean = true
+
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (batch.inputOk(vec.dataType) && id.dataType == LongType)
+    if (batch.inputOk(vec.dataType) && id.dataType == LongType &&
+        extraInputsOk)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"score_batch: unsupported inputs (${vec.dataType.simpleString(10)}, " +
-          s"${id.dataType.simpleString(10)}) for $batch")
+        s"score_batch: unsupported inputs " +
+          children.map(_.dataType.simpleString(10)).mkString("(", ", ", ")") +
+          s" for $batch")
 
-  private def rowFloat: Boolean = vec.dataType match {
+  protected def rowFloat: Boolean = vec.dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
   }
+
+  protected def batchRef(ctx: CodegenContext): String =
+    ctx.addReferenceObj("queryBatch", batch, classOf[QueryBatch].getName)
+}
+
+/** See [[QueryBatch]]: one row against every query of the batch. */
+case class ScoreBatch(vec: Expression, id: Expression, batch: QueryBatch)
+    extends BinaryExpression with ScoresBatch {
+
+  override def left: Expression = vec
+  override def right: Expression = id
 
   override def eval(input: InternalRow): Any = {
     val i = id.eval(input)
@@ -290,8 +360,7 @@ case class ScoreBatch(vec: Expression, id: Expression, batch: QueryBatch)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("queryBatch", batch,
-      classOf[QueryBatch].getName)
+    val ref = batchRef(ctx)
     val v = vec.genCode(ctx)
     val i = id.genCode(ctx)
     ev.copy(code = code"""
@@ -304,4 +373,44 @@ case class ScoreBatch(vec: Expression, id: Expression, batch: QueryBatch)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): ScoreBatch = copy(vec = newLeft, id = newRight)
+}
+
+/** See [[QueryBatch]]: one row against the queries probing its `cell`
+  * ([[QueryBatch.cellSlots]]). */
+case class ScoreProbed(vec: Expression, id: Expression, cell: Expression,
+    batch: QueryBatch) extends TernaryExpression with ScoresBatch {
+
+  override def first: Expression = vec
+  override def second: Expression = id
+  override def third: Expression = cell
+
+  override protected def extraInputsOk: Boolean =
+    cell.dataType == IntegerType && batch.cellSlots != null
+
+  override def eval(input: InternalRow): Any = {
+    val i = id.eval(input)
+    val c = cell.eval(input)
+    batch.scoreInCell(vec.eval(input).asInstanceOf[ArrayData], rowFloat,
+      i == null, if (i == null) 0L else i.asInstanceOf[Long],
+      c == null, if (c == null) 0 else c.asInstanceOf[Int])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = batchRef(ctx)
+    val v = vec.genCode(ctx)
+    val i = id.genCode(ctx)
+    val c = cell.genCode(ctx)
+    ev.copy(code = code"""
+      |${v.code}
+      |${i.code}
+      |${c.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} = $ref.scoreInCell(
+      |  ${v.isNull} ? null : ${v.value}, $rowFloat, ${i.isNull}, ${i.value},
+      |  ${c.isNull}, ${c.value});
+      |""".stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression): ScoreProbed =
+    copy(vec = newFirst, id = newSecond, cell = newThird)
 }

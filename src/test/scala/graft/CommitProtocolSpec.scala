@@ -292,4 +292,23 @@ class CommitProtocolSpec extends AnyFunSuite {
         oneFileEach(s"$target/gen-0")
       }
   }
+
+  test("a text index load lists its delete markers once: the excluded " +
+      "ids and the stats corrections come from one listing") {
+    val plain = s"${GraftFs.tempRoot("graft-del-list")}/plain"
+    TextIndex.build(corpus, "text", "doc_id", nBuckets = 8).save(plain)
+    val seg = s"${GraftFs.tempRoot("graft-del-list")}/seg"
+    TextIndex.appendSegment(corpus, "text", "doc_id", seg, "a", nBuckets = 8)
+    for (dir <- Seq(plain, seg)) {
+      TextIndex.delete(spark, dir, Seq(3L, 4L).toDF("doc_id"), "doc_id", "d1")
+      TextIndex.delete(spark, dir, Seq(5L).toDF("doc_id"), "doc_id", "d2")
+    }
+    val (p, plainLists) = GraftFs.listings("_deletes")(
+      TextIndex.load(spark, plain))
+    val (s, segLists) = GraftFs.listings("_deletes")(
+      TextIndex.loadSegments(spark, seg))
+    assert(plainLists == 1 && segLists == 1,
+      s"_deletes listed $plainLists (plain) and $segLists (segmented) times")
+    assert(p.nDocs == 197L && s.nDocs == 197L)
+  }
 }

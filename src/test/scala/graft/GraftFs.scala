@@ -2,7 +2,7 @@ package graft
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 
 /** The local disk under its own scheme, `graftfs:`. Lifecycle code that
@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * path fails on a `graftfs:///…` root, or litters a relative `graftfs:`
   * directory in the working directory, instead of passing by accident
   * as it would on `file:` paths. A rename onto a destination named by
-  * [[GraftFs.failRenameTo]] throws: a crash at that commit point. */
+  * [[GraftFs.failRenameTo]] throws: a crash at that commit point. Every
+  * directory listing is counted by the directory's name
+  * ([[GraftFs.listings]]). */
 class GraftFs extends RawLocalFileSystem {
   override def getUri: URI = GraftFs.uri
 
@@ -19,12 +21,27 @@ class GraftFs extends RawLocalFileSystem {
       throw new java.io.IOException(s"injected rename failure onto $dst")
     super.rename(src, dst)
   }
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    GraftFs.listed.merge(f.getName, 1, (a: Int, b: Int) => a + b)
+    super.listStatus(f)
+  }
 }
 
 object GraftFs {
   val uri: URI = URI.create("graftfs:///")
 
   @volatile var failRenameTo: Option[String] = None
+
+  private val listed = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+
+  /** Run `body`; also return how often it listed a directory named
+    * `name`. */
+  def listings[T](name: String)(body: => T): (T, Int) = {
+    listed.clear()
+    val r = body
+    (r, listed.getOrDefault(name, 0))
+  }
 
   def register(spark: SparkSession): Unit =
     spark.sparkContext.hadoopConfiguration

@@ -324,10 +324,12 @@ class HybridIndexSpec extends AnyFunSuite {
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.catalyst.expressions.{InSet, Literal}
-    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
       QueryStageExec}
     import org.apache.spark.sql.execution.debug.codegenStringSeq
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+      ShuffleExchangeLike}
     val docs = Tables.documents(spark, sf)
     val jobs = new AtomicInteger()
     val markers = new LinkedBlockingQueue[String]()
@@ -386,9 +388,24 @@ class HybridIndexSpec extends AnyFunSuite {
       for ((df, id) <- Seq((a, 317L), (b, 442L)))
         assert(!literals(df).exists(_ == id),
           s"query id $id is a literal of the executed plan")
-      // every job of one search, from request resolution to the fused
-      // collect
-      assert(jobsA == 8 && jobsB == 8, s"jobs per search: $jobsA, $jobsB")
+      // every job of one search: the one request collect, then the
+      // fused collect's two shuffle-map stages and its result stage
+      assert(jobsA == 4 && jobsB == 4, s"jobs per search: $jobsA, $jobsB")
+      for (df <- Seq(a, b)) {
+        val plan = nodes(df.queryExecution.executedPlan)
+        // request data is bound by reference: broadcasting a local
+        // relation would run a job of its own
+        assert(!plan.exists {
+          case x: BroadcastExchangeLike =>
+            x.exists(_.isInstanceOf[LocalTableScanExec])
+          case _ => false
+        }, "a local relation is broadcast into the search plan")
+        // one shuffle per branch: the lexical repartition by query and
+        // the dense top-k; the union and the fusion add none
+        val shuffles = plan.collect { case x: ShuffleExchangeLike => x }
+        assert(shuffles.length == 2,
+          s"${shuffles.length} shuffle exchanges in one search")
+      }
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
