@@ -103,7 +103,7 @@ object ExtensionQueries {
   // shared by the flat and tree pairs (r18 review finding F5: keying
   // it under nCells built and saved the same text index twice)
   private val hybridTextCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), TextIndex]()
+    (org.apache.spark.sql.SparkSession, String), SegmentedTextIndex]()
 
   /** Temp dir removed RECURSIVELY at JVM exit: `File.deleteOnExit`
     * silently no-ops on non-empty directories, so a per-run store
@@ -155,7 +155,7 @@ object ExtensionQueries {
   }
 
   private def hybridIndexes(s: org.apache.spark.sql.SparkSession,
-      d: String, nCells: Int): (TextIndex, IvfIndex) = {
+      d: String, nCells: Int): (SegmentedTextIndex, IvfIndex) = {
     val text = hybridTextCache.computeIfAbsent((s, d), _ => {
       val dir = tempDir("graft-hybrid-text")
       TextIndex.build(documents(s, d), "text", "doc_id", nBuckets = 16)
@@ -1359,8 +1359,8 @@ object ExtensionQueries {
     // (r17): build + save a TextIndex, commit a delete of doc_id < 25,
     // load, query. The deleted docs leave the RESULT and the
     // STATISTICS exactly — n_docs shifts every term's idf, sum_dl
-    // shifts every fTf, and each probed term's denormalized df is
-    // corrected at query time — so the scores hash-match a twin
+    // shifts every fTf, and each probed term's df is counted over the
+    // surviving postings — so the scores hash-match a twin
     // computed over the surviving corpus alone. This is never a
     // vacuous check: deleting ANY present doc moves every bm25 value
     // in the output. The vector-side twin is semantic_dedup_delete;

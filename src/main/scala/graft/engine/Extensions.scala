@@ -118,7 +118,7 @@ object Extensions {
     * Single-threaded assumption: the conf is SESSION-global, so the
     * set/restore pair is only clean while no other thread plans on the
     * same session. A serving process that reloads its indexes
-    * ([[TextIndex.loadSegments]], [[IvfIndex.load]]) while HTTP
+    * ([[IvfIndex.load]]) while HTTP
     * threads answer searches can plan a concurrent query under the
     * raised threshold (harmless: it only moves where listing runs) or
     * interleave two restores and leave the raised value behind —
@@ -3844,7 +3844,6 @@ object Extensions {
     // subtree as the main join input and reuse its exchange; with
     // count(lit(1)) / a bare count_distinct Catalyst prunes tf's count
     // from each branch and every one re-scans + re-tokenizes the corpus
-    // (see Extensions.bm25TopK)
     val dfreq = tf.groupBy("term")
       .agg(count(when(col("tf") > 0, 1)).as("df"))
     val nDocs = tf.agg(count_distinct(
@@ -3870,74 +3869,35 @@ object Extensions {
     * always positive), k1 = 1.2, b = 0.75. Query terms are set-distinct.
     * Returns (query_id, doc id, bm25, rank ≤ k).
     *
-    * Cross-engine determinism — the integer-accumulate trick
-    * generalized: tf, df, dl, N, Σdl are exact integers, every rational
-    * step is a correctly-rounded IEEE op written in the same order on
-    * both engines, and each per-term contribution is rounded to integer
-    * MICRO-UNITS (·1e6 → BIGINT) before the per-document sum — so the
-    * sum is exact integer arithmetic, immune to float addition order
-    * (Spark partial aggregation order is nondeterministic), and the
-    * final score is a single bigint/1e6 division. The only
-    * engine-dependent op is ln(), contained by the micro-unit rounding.
+    * A query on a transient [[SegmentedTextIndex]] over `docs`
+    * ([[TextIndex.build]]): the one BM25 scoring plan, with its
+    * integer micro-unit determinism argument, written to nothing.
+    * Before the final collect it runs two jobs: the corpus stats
+    * (documents, total length) and the collect of the query text.
     *
-    * Scale shape: queries broadcast onto the (doc, term, tf) inverted
-    * index, so only documents sharing at least one query term are ever
-    * scored; doc-length and corpus stats ride a broadcast 1-row agg;
-    * the top-k cut is the bounded-heap [[bm25RankTail]], never a
-    * window sort of the scored postings.
+    * Scale shape: only postings whose terms occur in a query are
+    * scored, keyed by query after one shuffle; the top-k cut is the
+    * bounded-heap [[bm25RankTail]], never a window sort of the scored
+    * postings.
     */
   def bm25TopK(docs: DataFrame, textCol: String, idCol: String,
       queries: DataFrame, queryTextCol: String, queryIdCol: String,
-      k: Int = 10): DataFrame = {
-    // widened (opt r18, guide §2.5): tokenize+explode is tf's map side
-    // — one task on a one-row-group source; every downstream stat is
+      k: Int = 10): DataFrame =
+    // widened (opt r18, guide §2.5): tokenize+explode is the postings'
+    // map side — one task on a one-row-group source; every statistic is
     // an integer count/sum and the contribs are micro-unit ints, so
-    // partitioning is invisible to the result (the docstring's own
-    // determinism argument)
-    val toks = widen(docs)
-      .select(col(idCol), explode(tokens(col(textCol))).as("term"))
-      .filter(col("term") =!= "")
-    val tf = toks.groupBy(col(idCol), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val dl = tf.groupBy(idCol).agg(sum("tf").as("dl"))
-    // count(when(tf > 0, 1)), not count(lit(1)): same value (tf is a
-    // count, always ≥ 1), but the predicate genuinely CONSUMES tf's
-    // aggregate so this branch plans the identical subtree dl reuses —
-    // with count(lit(1)) (or anything Catalyst can fold away, e.g.
-    // count(tf) on the non-nullable column) tf's count is pruned, the
-    // exchange subtrees stop matching, and the df branch re-scans and
-    // re-tokenizes the whole corpus instead of reusing tf's shuffle
-    val dfreq = tf.groupBy("term")
-      .agg(count(when(col("tf") > 0, 1)).as("df"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-    val qterms = queries
-      .select(col(queryIdCol), explode(tokens(col(queryTextCol))).as("term"))
-      .filter(col("term") =!= "")
-      .distinct()
-    val idf = log(lit(1.0) +
-      (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val fTf = (col("tf") * lit(2.2)) /
-      (col("tf") + lit(1.2) * (lit(0.25) +
-        (lit(0.75) * col("dl")) / (col("sum_dl") / col("n_docs"))))
-    val scored = tf
-      .join(broadcast(qterms), "term")
-      .join(dfreq, "term")
-      .join(dl, idCol)
-      .crossJoin(broadcast(stats))
-      .withColumn("__contrib",
-        round(idf * fTf * lit(1000000.0)).cast("long"))
-      .groupBy(col(queryIdCol), col(idCol))
-      .agg(sum("__contrib").as("__score_int"))
-    bm25RankTail(scored, queryIdCol, idCol, k)
-  }
+    // partitioning is invisible to the result
+    TextIndex.build(widen(docs.select(col(idCol), col(textCol))), textCol,
+        idCol)
+      .query(queries, queryTextCol, queryIdCol, k)
 
-  /** Shared BM25 ranking tail ([[bm25TopK]], [[TextIndex]],
-    * [[SegmentedTextIndex]]): bounded-heap top-k on the exact integer
-    * micro-unit score (a common query term matches most of the corpus —
-    * a per-query window sort over the scored postings is the same
-    * scale-killer topKBy exists to remove; micro-unit scores are ~1e10,
-    * far below the 2^53 exact-double bound), then the single
-    * bigint→double division of the displayed score.
+  /** The BM25 ranking tail ([[SegmentedTextIndex#query]]): bounded-heap
+    * top-k on the exact integer micro-unit score (a common query term
+    * matches most of the corpus — a per-query window sort over the
+    * scored postings is the same scale-killer topKBy exists to remove;
+    * micro-unit scores are ~1e10, far below the 2^53 exact-double
+    * bound), then the single bigint→double division of the displayed
+    * score.
     */
   private[engine] def bm25RankTail(scored: DataFrame, queryIdCol: String,
       idCol: String, k: Int): DataFrame =
@@ -3970,8 +3930,8 @@ object Extensions {
     * the SQL twin.
     *
     * Scale shape: both branches are the already-scale-shaped search
-    * paths (broadcast query terms onto the inverted index + bounded
-    * heap [[bm25TopK]]; broadcast query vectors + bounded heap
+    * paths (the query-keyed transient index of [[bm25TopK]];
+    * broadcast query vectors + bounded heap
     * [[cosineTopK]]) — the fusion itself joins two |Q|·kBranch-row
     * rankings, and every window partition is ≤ kBranch+1 (the de-self
     * re-rank) or ≤ 2·kBranch (the fused rank) rows BY CONSTRUCTION,

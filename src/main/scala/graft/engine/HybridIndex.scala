@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** Hybrid retrieval over PERSISTED indexes — the production 100 TB
-  * search shape: the BM25 branch queries a [[TextIndex]] (term-hash
-  * bucket partitions), the dense branch queries an [[IvfIndex]] (cell
+  * search shape: the BM25 branch queries a [[SegmentedTextIndex]]
+  * (term-hash bucket partitions), the dense branch queries an [[IvfIndex]] (cell
   * partitions), and the two ≤ |Q|·kBranch-row rank tables fuse with
   * reciprocal-rank fusion — the same tail as the in-memory
   * [[Extensions.rrfFusion]], shared code, shared laws.
@@ -45,18 +45,15 @@ import org.apache.spark.sql.types.LongType
   */
 object HybridIndex {
 
-  /** Take-down DELETE mirrored through BOTH persisted branches
-    * (VERDICT r16 #2): one call commits the ids as a [[TextIndex]]
-    * delete epoch (BM25 exclusion + exact df/nDocs/sumDl corrections)
-    * AND an [[IvfIndex]] tombstone (dense-branch exclusion), so a
+  /** Take-down DELETE mirrored through BOTH persisted branches: one
+    * call commits the ids as a [[TextIndex.delete]] epoch (BM25
+    * exclusion with exact df/nDocs/sumDl corrections) AND an
+    * [[IvfIndex.delete]] tombstone (dense-branch exclusion), so a
     * deleted doc stops ranking in lexical, dense, and fused results
-    * together. Each side keeps its own commit (staged ids, marker
-    * last) and its own physical-removal point ([[TextIndex
-    * .compactSegments]] / re-save; [[IvfIndex.compactEpochs]]); a
-    * crash between the two sides leaves one side committed — re-run
-    * the SAME name to finish (both sides replay committed names as
-    * no-ops), the idempotent-retry shape every lifecycle commit here
-    * uses.
+    * together. Each side keeps its own commit (staged ids, marker last)
+    * and its own physical removal ([[compact]]); a crash between the
+    * two sides leaves one side committed — re-run the SAME name to
+    * finish (both sides replay committed names as no-ops).
     */
   def delete(spark: org.apache.spark.sql.SparkSession, textPath: String,
       ivfPath: String, ids: DataFrame, idCol: String,
@@ -65,37 +62,22 @@ object HybridIndex {
     IvfIndex.delete(spark, ivfPath, ids, idCol, name)
   }
 
-  /** Unified MAINTENANCE mirrored through both persisted branches
-    * (VERDICT r17 #2c — [[delete]] mirrored take-downs, but bounding
-    * the maintenance debt still took two layout-specific calls): one
-    * call folds the text side — [[TextIndex.compactSegments]] on a
-    * segmented layout, an in-place generational re-save on a plain
-    * one when committed deletes await physical removal — and
-    * [[IvfIndex.compactEpochs]] on the vector side. Each side keeps
-    * its own commit protocol (generation stage + pointer flip), so a
-    * crash between the two leaves one side compacted and the other
-    * untouched — re-run to finish, the same idempotent-retry shape as
-    * [[delete]]; results are identical throughout (compaction is
-    * physical-layout work, never answer work).
+  /** MAINTENANCE mirrored through both persisted branches:
+    * [[TextIndex.compactSegments]] on the text side (merges segments,
+    * removes committed deletes physically, migrates a plain layout) and
+    * [[IvfIndex.compactEpochs]] on the vector side. Each side keeps its
+    * own commit protocol (generation stage + pointer flip), so a crash
+    * between the two leaves one side compacted and the other untouched
+    * — re-run to finish; results are identical throughout (compaction
+    * is physical-layout work, never answer work).
     *
     * Returns (textCompacted, vectorCompacted) — false = that side had
     * nothing to do.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, textPath: String,
-      ivfPath: String, refit: Boolean = false): (Boolean, Boolean) = {
-    val textDid =
-      if (!TextIndex.isPlainLayout(spark, textPath))
-        TextIndex.compactSegments(spark, textPath)
-      else if (TextIndex.hasUnappliedDeletes(spark, textPath)) {
-        // the plain layout's physical-removal path: load applies the
-        // exact corrections, the generational save realizes them and
-        // starts the applied epochs' grace cycle
-        TextIndex.load(spark, textPath).save(textPath)
-        true
-      } else false
-    val ivfDid = IvfIndex.compactEpochs(spark, ivfPath, refit)
-    (textDid, ivfDid)
-  }
+      ivfPath: String, refit: Boolean = false): (Boolean, Boolean) =
+    (TextIndex.compactSegments(spark, textPath),
+      IvfIndex.compactEpochs(spark, ivfPath, refit))
 
   /** RRF-fused top-k for EXTERNAL queries — (id, text, vector) rows
     * that are NOT corpus members: the search-box serving shape, where
@@ -119,7 +101,7 @@ object HybridIndex {
     * (query_id, <text index idCol>, lex_rank, vec_rank, rrf_score,
     * rank ≤ k).
     */
-  def query(textIndex: Bm25Queryable, ivfIndex: IvfIndex,
+  def query(textIndex: SegmentedTextIndex, ivfIndex: IvfIndex,
       queries: DataFrame, queryIdCol: String, queryTextCol: String,
       queryVecCol: String, kBranch: Int = 20, k: Int = 10,
       nprobe: Int = 4, rrfK: Int = 60): DataFrame = {
@@ -147,7 +129,7 @@ object HybridIndex {
     * (query_id, <text index idCol>, lex_rank, vec_rank, rrf_score,
     * rank ≤ k).
     */
-  def queryByIds(textIndex: Bm25Queryable, ivfIndex: IvfIndex,
+  def queryByIds(textIndex: SegmentedTextIndex, ivfIndex: IvfIndex,
       queryDocs: DataFrame, queryTextCol: String, queryIds: Seq[Long],
       kBranch: Int = 20, k: Int = 10, nprobe: Int = 4,
       rrfK: Int = 60): DataFrame = {
@@ -182,7 +164,7 @@ object HybridIndex {
     * which is what the in-memory form's kBranch+1 heap + de-self
     * re-rank computes (see [[Extensions.deSelfRerank]]); the dense
     * branch always excludes a row under the query's own id. */
-  private def fuse(textIndex: Bm25Queryable, ivfIndex: IvfIndex,
+  private def fuse(textIndex: SegmentedTextIndex, ivfIndex: IvfIndex,
       text: TextIndex.QueryText, vectors: IvfIndex.QueryVectors,
       excludeSelf: Boolean, kBranch: Int, k: Int, nprobe: Int,
       rrfK: Int): DataFrame = {

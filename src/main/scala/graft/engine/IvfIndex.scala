@@ -623,8 +623,9 @@ object IvfIndex {
     // re-fit that reproduces the identical codebook still mints a NEW
     // version once it folds any epoch, and the stale dirs fail the
     // [[codesWithEpochs]] stamp check.
-    val epochs = claimedEpochs(spark, path)
-    val corpus = cellsOf(spark, path, epochs)
+    val snap = Snapshot.of(spark, path)
+    val epochs = snap.epochs
+    val corpus = cellsOf(spark, path, snap)
     val dim = corpus.select(size(col(embCol))).head().getInt(0)
     require(dim % m == 0, s"embedding dim $dim must divide into m=$m " +
       "equal subvectors")
@@ -835,8 +836,8 @@ object IvfIndex {
   /** Anti-join committed tombstones out of a cells/codes union. The id
     * column is the one non-array column beside `__cell` (cells carry
     * the embedding array, codes the codes array). */
-  private def excludeTombstoned(spark: SparkSession, path: String,
-      df: DataFrame): DataFrame = tombstonedIds(spark, path) match {
+  private def excludeTombstoned(df: DataFrame,
+      tombs: Option[DataFrame]): DataFrame = tombs match {
     case None => df
     case Some(t) =>
       val idCol = df.schema.fields
@@ -853,7 +854,7 @@ object IvfIndex {
     * never widens what a query scans beyond its probed cells. */
   private[graft] def cellsWithEpochs(spark: SparkSession,
       path: String): DataFrame =
-    cellsOf(spark, path, claimedEpochs(spark, path))
+    cellsOf(spark, path, Snapshot.of(spark, path))
 
   /** True iff `dir` exists AND holds at least one `__cell=` partition
     * dir: a ZERO-ROW dynamic-partitioned write leaves a dir with only
@@ -865,22 +866,32 @@ object IvfIndex {
   private def hasCellData(spark: SparkSession, dir: String): Boolean =
     Generations.dirNames(dir).exists(_.startsWith("__cell="))
 
-  /** [[cellsWithEpochs]] over an EXPLICIT epoch snapshot — the
-    * multi-step writers (compactEpochs, addPqCodes) list the claimed
-    * set ONCE and derive every union and the `_folded` manifest from
-    * that single snapshot; re-listing per step would let an epoch
-    * claimed mid-operation be folded into the staged data but never
-    * recorded as folded (its rows then count twice forever). */
-  private def cellsOf(spark: SparkSession, path: String,
-      epochs: Seq[String]): DataFrame =
+  /** The claimed epochs and the tombstoned ids, resolved ONCE: every
+    * union one call builds derives from one snapshot. The multi-step
+    * writers (compactEpochs, addPqCodes) also derive the `_folded`
+    * manifest from it — re-listing per step would let an epoch claimed
+    * mid-operation be folded into the staged data but never recorded as
+    * folded (its rows then count twice forever) — and a search's id
+    * lookup and scans see the same epochs. */
+  private[engine] final case class Snapshot(epochs: Seq[String],
+      tombstoned: Option[DataFrame])
+
+  private[engine] object Snapshot {
+    def of(spark: SparkSession, path: String): Snapshot =
+      Snapshot(claimedEpochs(spark, path), tombstonedIds(spark, path))
+  }
+
+  /** [[cellsWithEpochs]] over a resolved [[Snapshot]]. */
+  private[engine] def cellsOf(spark: SparkSession, path: String,
+      snap: Snapshot): DataFrame =
     // driver-side partition discovery (opt r19, §6): each branch is a
     // cell-partitioned dir fan-out; Spark's 32-path default launched a
     // distributed listing job per load on the 64-cell tree layout
     Extensions.withDriverListing(spark) {
-      excludeTombstoned(spark, path, epochs
+      excludeTombstoned(snap.epochs
         .filter(e => hasCellData(spark, s"$e/cells"))
         .foldLeft(spark.read.parquet(s"${baseRoot(path)}/cells"))((df, e) =>
-          df.unionByName(spark.read.parquet(s"$e/cells"))))
+          df.unionByName(spark.read.parquet(s"$e/cells"))), snap.tombstoned)
     }
 
   /** PQ-codes twin of [[cellsWithEpochs]], version-gated: an epoch
@@ -893,12 +904,11 @@ object IvfIndex {
     * at all) contribute nothing here yet still get searched. */
   private[graft] def codesWithEpochs(spark: SparkSession,
       path: String): DataFrame =
-    codesOf(spark, path, claimedEpochs(spark, path))
+    codesOf(spark, path, Snapshot.of(spark, path))
 
-  /** [[codesWithEpochs]] over an explicit epoch snapshot (see
-    * [[cellsOf]] for why the snapshot must be shared). */
-  private def codesOf(spark: SparkSession, path: String,
-      epochs: Seq[String]): DataFrame = {
+  /** [[codesWithEpochs]] over a resolved [[Snapshot]]. */
+  private[engine] def codesOf(spark: SparkSession, path: String,
+      snap: Snapshot): DataFrame = {
     val current = Generations.readText(s"$path/codebook/_pqv")
     // the base codes must match the committed codebook: a crash inside
     // addPqCodes' re-encode (codebook committed, base codes partial or
@@ -927,11 +937,11 @@ object IvfIndex {
         "re-run addPqCodes to re-encode the corpus under the " +
         "committed codebook")
     Extensions.withDriverListing(spark) {
-      excludeTombstoned(spark, path, epochs
+      excludeTombstoned(snap.epochs
         .filter(e => hasCellData(spark, s"$e/codes"))
         .filter(e => Generations.readText(s"$e/codes/_pqv") == current)
         .foldLeft(spark.read.parquet(s"${baseRoot(path)}/codes"))((df, e) =>
-          df.unionByName(spark.read.parquet(s"$e/codes"))))
+          df.unionByName(spark.read.parquet(s"$e/codes"))), snap.tombstoned)
     }
   }
 
@@ -1131,7 +1141,8 @@ object IvfIndex {
       return false
     }
     val prevRoot = baseRoot(path)
-    val cells = cellsOf(spark, path, epochs)
+    val snap = Snapshot(epochs, tombstonedIds(spark, path))
+    val cells = cellsOf(spark, path, snap)
     val liveCells = cells.count()
     val nextGen = Generations.currentName(path) match {
       case Some(g) => g.stripPrefix("gen-").toInt + 1
@@ -1182,7 +1193,7 @@ object IvfIndex {
     require(writtenCells == liveCells,
       s"compaction audit failed: wrote $writtenCells cells, live $liveCells")
     if (Generations.exists(s"$prevRoot/codes")) {
-      val codes = codesOf(spark, path, epochs)
+      val codes = codesOf(spark, path, snap)
       val liveCodes = codes.count()
       val stagedCodes =
         if (refit) {
@@ -1305,22 +1316,32 @@ final class IvfPqIndex private[engine] (
   private lazy val prober =
     new IvfIndex.Prober(spark, centroids, tree, Extensions.pqSqDist)
 
-  private def cellsDf = IvfIndex.cellsWithEpochs(spark, path)
-
   def queryByIds(queryIds: Seq[Long], k: Int, nprobe: Int,
       refineFactor: Int = 8): DataFrame = {
-    val cells = cellsDf
-    query(cells.filter(Extensions.idsIn(cells, idCol, queryIds))
+    val snap = IvfIndex.Snapshot.of(spark, path)
+    val cells = IvfIndex.cellsOf(spark, path, snap)
+    search(snap, cells, cells.filter(Extensions.idsIn(cells, idCol, queryIds))
       .select(col(idCol).as("query_id"), col(embCol).as("__q")),
       k, nprobe, refineFactor)
   }
 
   /** `queries` must carry (query_id, __q: array<float>). */
   def query(queries: DataFrame, k: Int, nprobe: Int,
+      refineFactor: Int): DataFrame = {
+    val snap = IvfIndex.Snapshot.of(spark, path)
+    search(snap, IvfIndex.cellsOf(spark, path, snap), queries, k, nprobe,
+      refineFactor)
+  }
+
+  /** The search over one resolved layout ([[IvfIndex.Snapshot]]): the
+    * query lookup, the cells and the codes see the same epochs and
+    * tombstones. */
+  private def search(snap: IvfIndex.Snapshot, cells: DataFrame,
+      queries: DataFrame, k: Int, nprobe: Int,
       refineFactor: Int): DataFrame =
-    IvfPqIndex.search(cellsDf, IvfIndex.codesWithEpochs(spark, path),
-      idCol, embCol, prober, codebook, IvfIndex.QueryVectors.collect(queries),
-      k, nprobe, refineFactor)
+    IvfPqIndex.search(cells, IvfIndex.codesOf(spark, path, snap), idCol,
+      embCol, prober, codebook, IvfIndex.QueryVectors.collect(queries), k,
+      nprobe, refineFactor)
 }
 
 object IvfPqIndex {

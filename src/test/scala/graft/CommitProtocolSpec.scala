@@ -150,10 +150,19 @@ class CommitProtocolSpec extends AnyFunSuite {
       val segmented = textAnswers(TextIndex.loadSegments(spark, seg)
         .query(textQueries, "qtext", "query_id", k = 5))
       assert(segmented == before)
+      // a saved index and a plain layout (as older releases saved it)
+      // take the same delete and compaction
+      val saved = s"$root/saved"
+      TextIndex.build(docs, "text", "doc_id", nBuckets = 8).save(saved)
       val pl = s"$root/plain"
-      TextIndex.build(docs, "text", "doc_id", nBuckets = 8).save(pl)
-      TextIndex.delete(spark, pl, Seq(1L, 2L).toDF("doc_id"), "doc_id", "d1")
-      TextIndex.load(spark, pl).save(pl)
+      PlainTextLayout.write(docs, "text", "doc_id", pl, nBuckets = 8)
+      for (dir <- Seq(saved, pl)) {
+        TextIndex.delete(spark, dir, Seq(1L, 2L).toDF("doc_id"), "doc_id",
+          "d1")
+        assert(TextIndex.compactSegments(spark, dir))
+      }
+      assert(textAnswers(TextIndex.load(spark, saved)
+        .query(textQueries, "qtext", "query_id", k = 5)) == segmented)
       (Generations.currentName(seg), Generations.currentName(pl), segmented,
         textAnswers(TextIndex.load(spark, pl)
           .query(textQueries, "qtext", "query_id", k = 5)))
@@ -293,10 +302,36 @@ class CommitProtocolSpec extends AnyFunSuite {
       }
   }
 
+  test("an IVF-PQ search resolves its layout once: the claimed epochs " +
+      "and the tombstones are listed once per queryByIds") {
+    val emb = vectors
+    val dir = s"${GraftFs.tempRoot("graft-pq-snap")}/ivf"
+    IvfIndex.build(emb.filter(col("vec_id") % 2 === 0), "embedding",
+      "vec_id", nCells = 4).save(dir)
+    IvfIndex.addPqCodes(spark, dir, "vec_id", "embedding", m = 4, kCode = 8)
+    assert(IvfIndex.appendEpoch(spark, dir,
+      emb.filter(col("vec_id") % 2 === 1), "embedding", "vec_id", "e1"))
+    IvfIndex.delete(spark, dir, Seq(3L, 4L).toDF("vec_id"), "vec_id", "t1")
+    val pq = IvfIndex.loadPq(spark, dir, "vec_id", "embedding")
+    val q = Seq(0L, 1L, 5L)
+    def search() = pq.queryByIds(q, k = 5, nprobe = 4)
+    val (_, epochLists) = GraftFs.listings("epochs")(search())
+    val (_, tombLists) = GraftFs.listings("_tombstones")(search())
+    assert(epochLists == 1 && tombLists == 1,
+      s"epochs/ listed $epochLists times, _tombstones/ $tombLists times")
+    val got = vecAnswers(search())
+    val viaQuery = vecAnswers(pq.query(IvfIndex.cellsWithEpochs(spark, dir)
+      .filter(col("vec_id").isin(q: _*))
+      .select(col("vec_id").as("query_id"), col("embedding").as("__q")),
+      k = 5, nprobe = 4, refineFactor = 8))
+    assert(got.nonEmpty && got == viaQuery)
+    assert(got.map(_._1) == q.toSet && !got.exists(r => r._2 == 3L || r._2 == 4L))
+  }
+
   test("a text index load lists its delete markers once: the excluded " +
       "ids and the stats corrections come from one listing") {
     val plain = s"${GraftFs.tempRoot("graft-del-list")}/plain"
-    TextIndex.build(corpus, "text", "doc_id", nBuckets = 8).save(plain)
+    PlainTextLayout.write(corpus, "text", "doc_id", plain, nBuckets = 8)
     val seg = s"${GraftFs.tempRoot("graft-del-list")}/seg"
     TextIndex.appendSegment(corpus, "text", "doc_id", seg, "a", nBuckets = 8)
     for (dir <- Seq(plain, seg)) {

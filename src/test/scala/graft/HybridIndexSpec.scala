@@ -5,7 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{Extensions, HybridIndex, IvfIndex, Tables, TextIndex}
+import graft.engine.{Extensions, HybridIndex, IvfIndex, SegmentedTextIndex,
+  Tables, TextIndex}
 
 /** The persisted hybrid query path must answer exactly like the
   * in-memory rrfFusion under exhaustive dense probes, and keep its
@@ -21,7 +22,12 @@ class HybridIndexSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[String] =
     df.orderBy("query_id", "rank").collect().map(_.toString).toSeq
 
-  private lazy val (savedText, savedIvf): (TextIndex, IvfIndex) = {
+  /** The postings files of the live text layout. */
+  private def textPostings(dir: String): DataFrame =
+    TextIndex.segmentDirs(dir).map(d => spark.read.parquet(s"$d/postings"))
+      .reduce(_.unionByName(_))
+
+  private lazy val (savedText, savedIvf): (SegmentedTextIndex, IvfIndex) = {
     val docs = Tables.documents(spark, sf)
     val emb = Tables.embeddings(spark, sf)
     val tDir = Files.createTempDirectory("graft-hyb-t").toString
@@ -120,15 +126,11 @@ class HybridIndexSpec extends AnyFunSuite {
     // must be IDENTICAL to the twin's — logical-exclusion mode first
     assert(rows(after) == rows(twin),
       "post-delete hybrid result must equal the never-ingested twin")
-    // physical removal on both sides (text re-save — IN PLACE, the
-    // generation-staged save supports the target it was loaded from
-    // since r18; ivf compact), then the same equality through the
-    // cleaned layouts
-    TextIndex.load(spark, tDir).save(tDir)
+    // physical removal on both sides (text and ivf compaction), then
+    // the same equality through the cleaned layouts
+    assert(TextIndex.compactSegments(spark, tDir))
     IvfIndex.compactEpochs(spark, vDir, refit = false)
-    assert(spark.read
-      .parquet(s"${TextIndex.plainDataDir(tDir)}/postings")
-      .filter(col("doc_id") === delId).count() == 0L)
+    assert(textPostings(tDir).filter(col("doc_id") === delId).count() == 0L)
     assert(spark.read
       .parquet(s"${IvfIndex.baseRoot(vDir)}/cells")
       .filter(col("vec_id") === delId).count() == 0L)
@@ -271,14 +273,12 @@ class HybridIndexSpec extends AnyFunSuite {
       docs, "text", ids, kBranch = 10, k = 10, nprobe = NCells)
     assert(rows(query()) == rows(twin))
     // unified maintenance (VERDICT r17 #2c): one call realizes the
-    // delete physically on BOTH branches — plain text layout re-saves
-    // generationally, vector side folds epochs
+    // delete physically on BOTH branches — the text side compacts its
+    // segment, the vector side folds epochs
     val (textDid, ivfDid) = HybridIndex.compact(spark, tDir, vDir)
-    assert(textDid, "plain layout with unapplied deletes must re-save")
+    assert(textDid, "a text index with unapplied deletes must compact")
     assert(ivfDid, "vector side must fold the tombstoned epochs")
-    assert(spark.read
-      .parquet(s"${TextIndex.plainDataDir(tDir)}/postings")
-      .filter(col("doc_id") === delId).count() == 0L)
+    assert(textPostings(tDir).filter(col("doc_id") === delId).count() == 0L)
     assert(spark.read
       .parquet(s"${IvfIndex.baseRoot(vDir)}/cells")
       .filter(col("vec_id") === delId).count() == 0L)
@@ -461,7 +461,7 @@ class HybridIndexSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Tables.documents(spark, sf)
     val tDir = Files.createTempDirectory("graft-hyb-dfcorr").toString
-    TextIndex.build(docs, "text", "doc_id", nBuckets = 16).save(tDir)
+    PlainTextLayout.write(docs, "text", "doc_id", tDir, nBuckets = 16)
     val dels = Seq(1L, 2L, 40L)
     TextIndex.delete(spark, tDir, dels.toDF("doc_id"), "doc_id", "td-1")
     val twinDir = Files.createTempDirectory("graft-hyb-dfcorr-t").toString

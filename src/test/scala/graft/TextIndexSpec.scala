@@ -283,7 +283,7 @@ class TextIndexSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val docs = Tables.documents(spark, sf)
     val dir = Files.createTempDirectory("graft-tidx-del").toString
-    TextIndex.build(docs, "text", "doc_id", nBuckets = 16).save(dir)
+    PlainTextLayout.write(docs, "text", "doc_id", dir, nBuckets = 16)
     val pre = TextIndex.load(spark, dir)
       .query(queries, "qtext", "query_id", k = 10)
     // delete two docs that actually RANK for the test queries (so the
@@ -313,29 +313,28 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.delete(spark, dir, Seq(1L).toDF("doc_id"), "doc_id", "d1")
     assert(resultSet(TextIndex.load(spark, dir)
       .query(queries, "qtext", "query_id", k = 10)) == after)
-    // re-save = the plain layout's physical removal: rows gone from
-    // the files, delete epochs cleared, answers unchanged
+    // re-save to a new path writes the live documents only: rows gone
+    // from the files, no delete epochs, answers unchanged
     val dir2 = Files.createTempDirectory("graft-tidx-del2").toString
     loaded.save(dir2)
-    assert(spark.read
-      .parquet(s"${TextIndex.plainDataDir(dir2)}/postings")
-      .filter(col("doc_id").isin(delIds: _*)).count() == 0L,
-      "deleted docs' postings survived the physical re-save")
+    def postingsOf(p: String) = TextIndex.segmentDirs(p)
+      .map(d => spark.read.parquet(s"$d/postings")).reduce(_.unionByName(_))
+    assert(postingsOf(dir2).filter(col("doc_id").isin(delIds: _*))
+      .count() == 0L, "deleted docs' postings survived the re-save")
     assert(!new java.io.File(dir2, "_deletes").exists())
     val resaved = TextIndex.load(spark, dir2)
     assert(resaved.nDocs == twin.nDocs && resaved.sumDl == twin.sumDl)
     assert(resultSet(resaved.query(queries, "qtext", "query_id",
       k = 10)) == after)
-    // and the re-saved postings carry the CORRECTED df (fresh-build
-    // equality at the file level, not just through the query path)
+    // and the re-saved postings equal a fresh build's over the
+    // survivors at the file level, not just through the query path
     val twinDir = Files.createTempDirectory("graft-tidx-del-twin").toString
     twin.save(twinDir)
-    val dfOf = (p: String) => spark.read.parquet(p)
-      .select("doc_id", "term", "tf", "dl", "df")
+    val rowsOf = (p: String) => postingsOf(p)
+      .select("doc_id", "term", "tf", "dl", "__bucket")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSet
-    assert(dfOf(s"${TextIndex.plainDataDir(dir2)}/postings")
-      == dfOf(s"${TextIndex.plainDataDir(twinDir)}/postings"))
+        r.getLong(3), r.getInt(4))).toSet
+    assert(rowsOf(dir2) == rowsOf(twinDir))
   }
 
   test("take-down delete on the SEGMENTED layout: logical exclusion " +
@@ -422,23 +421,24 @@ class TextIndexSpec extends AnyFunSuite {
       == resultSet(twin3.query(queries, "qtext", "query_id", k = 10)))
   }
 
-  test("generation-staged plain save (VERDICT r17 #1): a crash at ANY " +
+  test("compaction of a plain layout (VERDICT r17 #1): a crash at ANY " +
       "point before the pointer flip leaves committed take-downs " +
       "intact; after the flip the grace-cycle manifest prevents " +
-      "double-subtraction; the next save retires the applied epochs; " +
-      "in-place re-save is supported") {
+      "double-subtraction; the next compaction retires the applied " +
+      "epochs; a delete committed after a load stays excluded") {
     import org.apache.spark.sql.functions.col
     val docs = Tables.documents(spark, sf)
     val dir = Files.createTempDirectory("graft-tidx-crash").toString
-    TextIndex.build(docs, "text", "doc_id", nBuckets = 16).save(dir)
+    PlainTextLayout.write(docs, "text", "doc_id", dir, nBuckets = 16)
     val pre = TextIndex.load(spark, dir)
       .query(queries, "qtext", "query_id", k = 10)
     val delId = pre.select("doc_id").collect().map(_.getLong(0)).head
     TextIndex.delete(spark, dir, Seq(delId).toDF("doc_id"), "doc_id",
       "takedown")
-    val survivors = docs.filter(col("doc_id") =!= delId)
-    val twin = TextIndex.build(survivors, "text", "doc_id",
+    def twinWithout(ids: Long*) = TextIndex.build(
+      docs.filter(!col("doc_id").isin(ids: _*)), "text", "doc_id",
       nBuckets = 16)
+    val twin = twinWithout(delId)
     val want = resultSet(twin.query(queries, "qtext", "query_id",
       k = 10))
     def checkLoaded(): Unit = {
@@ -450,49 +450,34 @@ class TextIndexSpec extends AnyFunSuite {
         == want)
     }
     checkLoaded()
-    // crash BEFORE the flip: a re-save that staged everything —
+    // crash BEFORE the flip: a compaction that staged everything —
     // postings, stats, even the manifest — but never flipped the
     // pointer. The live state is untouched: the delete still excludes
-    // and corrects (pre-r18, save() had already CLEARED the delete
-    // epochs at this point — the silent resurrection). Faked by
-    // staging a full plain-2 the way save() would, sans publish.
-    val staged = TextIndex.load(spark, dir)
-    spark.read
-      .parquet(s"${TextIndex.plainDataDir(dir)}/postings")
-      .filter(col("doc_id") =!= delId)
-      .write.partitionBy("__bucket").parquet(s"$dir/plain-2/postings")
-    spark.read.parquet(s"${TextIndex.plainDataDir(dir)}/stats")
-      .write.parquet(s"$dir/plain-2/stats")
+    // and corrects. Faked by staging a full segments-1 the way the
+    // compaction would, sans publish.
+    val stage = s"$dir/segments-1/compact-000001"
+    PlainTextLayout.postings(dir).filter(col("doc_id") =!= delId)
+      .drop("df").write.partitionBy("__bucket").parquet(s"$stage/postings")
+    spark.read.parquet(s"$dir/plain-1/stats").write.parquet(s"$stage/stats")
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/plain-2/_dels_applied"),
+      java.nio.file.Paths.get(s"$dir/segments-1/_dels_applied"),
       "takedown".getBytes("UTF-8"))
     assert(new java.io.File(s"$dir/_deletes/takedown").exists(),
-      "the staged-but-unpublished save must not have touched epochs")
+      "the staged-but-unpublished compaction must not have touched epochs")
     checkLoaded()
-    // the interrupted save RETRIES: the stale unpublished plain-2 is
-    // restaged, the flip commits, and the state equals the twin with
-    // the applied epoch held for one grace cycle (the crash-AFTER-
-    // flip-before-retire state is exactly this post-save state)
-    staged.save(dir)
-    assert(TextIndex.plainDataDir(dir).endsWith("plain-2"))
+    // the interrupted compaction RETRIES: the stale unpublished stage
+    // is restaged, the flip commits, and the state equals the twin with
+    // the applied epoch held for one grace cycle
+    assert(TextIndex.compactSegments(spark, dir))
+    assert(graft.engine.Generations.currentName(dir).contains("segments-1"))
     assert(new java.io.File(s"$dir/_deletes/takedown").exists(),
       "the applied epoch gets one grace generation")
-    assert(spark.read
-      .parquet(s"${TextIndex.plainDataDir(dir)}/postings")
+    assert(spark.read.parquet(s"$stage/postings")
       .filter(col("doc_id") === delId).count() == 0L,
       "the published generation must have removed the postings")
     checkLoaded() // manifest exclusion: no double-subtraction
-    // next in-place save: grace over, epoch retired, answers unchanged
-    TextIndex.load(spark, dir).save(dir)
-    assert(TextIndex.plainDataDir(dir).endsWith("plain-3"))
-    assert(!new java.io.File(s"$dir/_deletes/takedown").exists() &&
-      !new java.io.File(s"$dir/deletes/takedown").exists(),
-      "the applied epoch must retire after its grace cycle")
-    assert(!new java.io.File(s"$dir/plain-1").exists(),
-      "retain must sweep generations beyond the keep window")
-    checkLoaded()
     // a crashed delete's staging orphan is reclaimed by the next
-    // maintenance call (ADVICE r17)
+    // maintenance call
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/_staging-del-zombie"),
       "9|9".getBytes("UTF-8"))
@@ -501,33 +486,163 @@ class TextIndexSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$dir/_staging-del-zombie").exists(),
       "delete() must sweep crashed staging files")
     checkLoaded()
-    // STALE-instance in-place re-save (r18 review finding F1): a
-    // delete committed AFTER this instance loaded is NOT in its
-    // staged postings, so the manifest must leave it LIVE — claiming
-    // it applied would silently resurrect the take-down (the exact
-    // failure class the generational protocol exists to close)
-    val stale3 = TextIndex.load(spark, dir)
+    // a delete committed AFTER a load: the loaded handle predates it,
+    // the compaction resolves it and applies it, and it stays excluded
+    val stale = TextIndex.load(spark, dir)
     val lateId = want.head._2
     TextIndex.delete(spark, dir, Seq(lateId).toDF("doc_id"),
       "doc_id", "late-del")
-    stale3.save(dir) // staged postings still CONTAIN lateId's rows
-    assert(new java.io.File(s"$dir/_deletes/late-del").exists(),
-      "a post-load delete must stay live through a stale re-save")
-    val twinLate = TextIndex.build(
-      docs.filter(col("doc_id") =!= delId && col("doc_id") =!= lateId),
-      "text", "doc_id", nBuckets = 16)
+    assert(resultSet(stale.query(queries, "qtext", "query_id", k = 10))
+      == want, "a handle answers from the layout it loaded")
+    assert(TextIndex.compactSegments(spark, dir))
+    // grace over: the first epoch retires, the plain root is swept
+    assert(!new java.io.File(s"$dir/_deletes/takedown").exists() &&
+      !new java.io.File(s"$dir/deletes/takedown").exists(),
+      "the applied epoch must retire after its grace cycle")
+    assert(!new java.io.File(s"$dir/plain-1").exists(),
+      "retain must sweep generations beyond the keep window")
+    assert(new java.io.File(s"$dir/_deletes/late-del").exists())
+    val twinLate = twinWithout(delId, lateId)
     val afterLate = TextIndex.load(spark, dir)
     assert(afterLate.nDocs == twinLate.nDocs &&
       afterLate.sumDl == twinLate.sumDl,
       s"stats (${afterLate.nDocs}, ${afterLate.sumDl}) vs late twin " +
-        s"(${twinLate.nDocs}, ${twinLate.sumDl}) — a stale re-save " +
-        "must not realize a delete it never consumed")
+        s"(${twinLate.nDocs}, ${twinLate.sumDl})")
     val lateRows = resultSet(afterLate.query(queries, "qtext",
       "query_id", k = 10))
     assert(!lateRows.exists(_._2 == lateId),
-      "the post-load take-down must still exclude after the stale save")
+      "the late take-down must still exclude after the compaction")
     assert(lateRows == resultSet(twinLate.query(queries, "qtext",
       "query_id", k = 10)))
+  }
+
+  for (flat <- Seq(false, true)) {
+    val form = if (flat) "a legacy flat root" else "a plain-<n> generation"
+    test(s"a plain layout saved as $form loads bit-identically to a " +
+        "fresh build over the survivors, takes deletes, and compaction " +
+        "migrates it to segments-<n> with equal answers") {
+      import org.apache.spark.sql.functions.col
+      val docs = Tables.documents(spark, sf)
+      val emb = Tables.embeddings(spark, sf)
+      val dir = Files.createTempDirectory("graft-tidx-compat").toString
+      // an older delete the plain layout already applied (its postings
+      // are gone, its marker awaits retirement) ...
+      val (oldIds, newIds) = (Seq(3L, 4L), Seq(7L, 11L))
+      PlainTextLayout.write(docs.filter(!col("doc_id").isin(oldIds: _*)),
+        "text", "doc_id", dir, nBuckets = 16, flat = flat,
+        applied = Seq("d-old"))
+      oldIds.toDF("__del_id").write.parquet(s"$dir/deletes/d-old")
+      graft.engine.Generations.writeText(s"$dir/_deletes/d-old", "2|17",
+        stageDir = Some(dir))
+      // ... and a live one, committed against the plain layout
+      TextIndex.delete(spark, dir, newIds.toDF("doc_id"), "doc_id", "d-new")
+      assert(new java.io.File(s"$dir/_deletes/d-new").exists())
+      val survivors = docs.filter(!col("doc_id").isin(oldIds ++ newIds: _*))
+      val twin = TextIndex.build(survivors, "text", "doc_id", nBuckets = 16)
+      val want = resultSet(twin.query(queries, "qtext", "query_id", k = 10))
+      val loaded = TextIndex.load(spark, dir)
+      assert((loaded.nDocs, loaded.sumDl) == ((twin.nDocs, twin.sumDl)))
+      assert(resultSet(loaded.query(queries, "qtext", "query_id", k = 10))
+        == want)
+      assert(want.nonEmpty)
+      // maintenance migrates the text side to a segment root
+      val ivf = Files.createTempDirectory("graft-tidx-compat-v").toString
+      graft.engine.IvfIndex.build(emb, "embedding", "vec_id", nCells = 4)
+        .save(ivf)
+      assert(graft.engine.HybridIndex.compact(spark, dir, ivf)._1)
+      assert(graft.engine.Generations.currentName(dir)
+        .contains("segments-1"))
+      val migrated = TextIndex.load(spark, dir)
+      assert((migrated.nDocs, migrated.sumDl) == ((twin.nDocs, twin.sumDl)))
+      assert(resultSet(migrated.query(queries, "qtext", "query_id",
+        k = 10)) == want)
+      assert(!new java.io.File(s"$dir/_deletes/d-old").exists(),
+        "the delete the plain layout applied has served its grace cycle")
+      // appends land in the migrated root
+      assert(TextIndex.appendSegment(
+        Seq((900001L, "zebrafish spark")).toDF("doc_id", "text"), "text",
+        "doc_id", dir, "snap-new", nBuckets = 16))
+      assert(TextIndex.load(spark, dir).nDocs == twin.nDocs + 1)
+      // the next compaction sweeps the superseded plain root
+      assert(TextIndex.compactSegments(spark, dir))
+      val plainRoot = if (flat) s"$dir/postings" else s"$dir/plain-1"
+      assert(!new java.io.File(plainRoot).exists())
+    }
+  }
+
+  test("save writes a new index: onto a path that already holds one it " +
+      "fails loudly, and compaction is the rewrite of an index") {
+    val docs = Tables.documents(spark, sf)
+    val dir = Files.createTempDirectory("graft-tidx-once").toString
+    val idx = TextIndex.build(docs, "text", "doc_id", nBuckets = 16)
+    idx.save(dir)
+    val e = intercept[IllegalArgumentException](idx.save(dir))
+    assert(e.getMessage.contains("already holds a text index"))
+    intercept[IllegalArgumentException](TextIndex.load(spark, dir).save(dir))
+    val seg = Files.createTempDirectory("graft-tidx-once-seg").toString
+    TextIndex.appendSegment(docs, "text", "doc_id", seg, "a", nBuckets = 16)
+    intercept[IllegalArgumentException](idx.save(seg))
+    assert(resultSet(TextIndex.load(spark, dir)
+      .query(queries, "qtext", "query_id", k = 10))
+      == resultSet(idx.query(queries, "qtext", "query_id", k = 10)))
+  }
+
+  test("build, save and a collected bm25TopK leave no cached frame " +
+      "behind") {
+    val docs = Tables.documents(spark, sf)
+    def cached = spark.sparkContext.getPersistentRDDs.size
+    val before = cached
+    TextIndex.build(docs, "text", "doc_id", nBuckets = 16)
+      .save(Files.createTempDirectory("graft-tidx-cache").toString)
+    assert(cached == before, "build(...).save(p) left a cached frame")
+    assert(Extensions.bm25TopK(docs, "text", "doc_id", queries, "qtext",
+      "query_id", k = 5).collect().nonEmpty)
+    assert(cached == before, "bm25TopK left a cached frame")
+  }
+
+  test("bm25TopK equals the broadcast-join formulation it replaced, " +
+      "bit for bit") {
+    import org.apache.spark.sql.functions._
+    val docs = Tables.documents(spark, sf)
+    val shared = Seq((1L, "spark window join"), (2L, "spark stream merge"),
+      (3L, "join join"), (4L, "   ")).toDF("query_id", "qtext")
+    // the reference: corpus statistics as aggregates, the query terms
+    // broadcast onto the (doc, term, tf) postings
+    val tf = docs
+      .select(col("doc_id"), explode(Extensions.tokens(col("text"))).as("term"))
+      .filter(col("term") =!= "")
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
+    val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
+    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
+    val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
+    val qterms = shared
+      .select(col("query_id"), explode(Extensions.tokens(col("qtext"))).as("term"))
+      .filter(col("term") =!= "").distinct()
+    val idf = log(lit(1.0) +
+      (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+    val fTf = (col("tf") * lit(2.2)) /
+      (col("tf") + lit(1.2) * (lit(0.25) +
+        (lit(0.75) * col("dl")) / (col("sum_dl") / col("n_docs"))))
+    val reference = tf.join(broadcast(qterms), "term")
+      .join(dfreq, "term").join(dl, "doc_id")
+      .crossJoin(broadcast(stats))
+      .withColumn("__contrib", round(idf * fTf * lit(1000000.0)).cast("long"))
+      .groupBy(col("query_id"), col("doc_id"))
+      .agg(sum("__contrib").as("__score_int"))
+    val ranked = reference
+      .withColumn("rank", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+          .orderBy(desc("__score_int"), asc("doc_id"))).cast("int"))
+      .filter(col("rank") <= 10)
+      .select(col("query_id"), col("doc_id"),
+        (col("__score_int") / lit(1000000.0)).as("bm25"), col("rank"))
+    def bits(df: DataFrame) = df.collect().map(r => (r.getLong(0),
+      r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+      r.getInt(3))).toSet
+    val got = bits(Extensions.bm25TopK(docs, "text", "doc_id", shared,
+      "qtext", "query_id", k = 10))
+    assert(got.nonEmpty)
+    assert(got == bits(ranked))
   }
 
   test("build rejects reserved internal column names") {

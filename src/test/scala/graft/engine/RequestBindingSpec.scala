@@ -15,7 +15,8 @@ import graft.TestSpark
   * the IVF and IVF-PQ scans, the one-request-collect hybrid — against
   * the formulation they replaced, kept below as the reference: request
   * rows collected and re-entered as local relations, joined onto the
-  * pruned scans, `df` counted per term. Same rows, same double BITS, on
+  * pruned scans, `df` counted per term (stored per posting on the plain
+  * layout older releases saved). Same rows, same double BITS, on
   * both text layouts with and without deletes, flat and tree
   * quantizers, and a query batch with shared terms, a duplicated id,
   * an absent id, an empty text and a zero vector. */
@@ -48,8 +49,9 @@ class RequestBindingSpec extends AnyFunSuite {
       terms, buckets)
   }
 
-  private def refScores(idx: Bm25Queryable, queries: DataFrame,
+  private def refScores(text: Text, queries: DataFrame,
       textCol: String, qidCol: String): DataFrame = {
+    val idx = text.idx
     val (pairs, terms, buckets) =
       refVocabulary(queries, textCol, qidCol, idx.nBuckets)
     val (nDocs, sumDl, idCol) = (idx.nDocs, idx.sumDl, idx.idCol)
@@ -58,17 +60,19 @@ class RequestBindingSpec extends AnyFunSuite {
     val fTf = (col("tf") * lit(2.2)) /
       (col("tf") + lit(1.2) * (lit(0.25) +
         (lit(0.75) * col("dl")) / lit(sumDl.toDouble / nDocs)))
-    val pruned =
-      idx.postings.filter(Extensions.partitionIn("__bucket", buckets))
+    def pruned(p: DataFrame) =
+      p.filter(Extensions.partitionIn("__bucket", buckets))
     val byTerm = Window.partitionBy("term")
-    val contribs = idx match {
-      case t: TextIndex => t.deleted match {
+    val contribs = text.stored match {
+      // a plain layout: the df stored on each posting, less the term's
+      // deleted postings
+      case Some(stored) => idx.deleted match {
         case None =>
-          pruned.join(broadcast(pairs), "term")
+          pruned(stored).join(broadcast(pairs), "term")
             .withColumn("__contrib",
               round(idf(col("df")) * fTf * lit(1000000.0)).cast("long"))
         case Some(del) =>
-          pruned.join(broadcast(terms), "term")
+          pruned(stored).join(broadcast(terms), "term")
             .join(del.withColumnRenamed("__del_id", idCol)
               .withColumn("__del", lit(1)), Seq(idCol), "left")
             .withColumn("__df_del", count(col("__del")).over(byTerm))
@@ -78,10 +82,10 @@ class RequestBindingSpec extends AnyFunSuite {
               round(idf(col("df") - col("__df_del")) * fTf *
                 lit(1000000.0)).cast("long"))
       }
-      case s: SegmentedTextIndex =>
-        val live = s.deleted match {
-          case None => pruned
-          case Some(del) => pruned.join(
+      case None =>
+        val live = idx.deleted match {
+          case None => pruned(idx.postings)
+          case Some(del) => pruned(idx.postings).join(
             del.withColumnRenamed("__del_id", idCol), Seq(idCol), "left_anti")
         }
         live.join(broadcast(terms), "term")
@@ -177,10 +181,10 @@ class RequestBindingSpec extends AnyFunSuite {
         col("rank"))
   }
 
-  private def refQueryByIds(text: Bm25Queryable, ivf: IvfIndex,
+  private def refQueryByIds(text: Text, ivf: IvfIndex,
       docs: DataFrame, ids: Seq[Long], kBranch: Int, k: Int,
       nprobe: Int): DataFrame = {
-    val idCol = text.idCol
+    val idCol = text.idx.idCol
     val qDocs = docs.filter(col(idCol).isin(ids: _*))
       .select(col(idCol).as("query_id"), col("text").as("__qtext"))
     val lex = Extensions.bm25RankTail(
@@ -271,21 +275,28 @@ class RequestBindingSpec extends AnyFunSuite {
 
   private def tmp(p: String) = Files.createTempDirectory(p).toString
 
-  private def plainText(deletes: Boolean): TextIndex = {
+  /** A loaded text index and, for a plain layout, the postings it
+    * stored (with their `df` column). */
+  private final class Text(val idx: SegmentedTextIndex,
+      val stored: Option[DataFrame])
+
+  /** The plain layout as older releases saved it. */
+  private def plainText(deletes: Boolean): Text = {
     val dir = tmp("graft-rb-plain")
-    TextIndex.build(docs, "text", "doc_id", nBuckets = 16).save(dir)
+    graft.PlainTextLayout.write(docs, "text", "doc_id", dir, nBuckets = 16)
     if (deletes) deleteText(dir)
-    TextIndex.load(spark, dir)
+    new Text(TextIndex.load(spark, dir),
+      Some(graft.PlainTextLayout.postings(dir)))
   }
 
-  private def segmentedText(deletes: Boolean): SegmentedTextIndex = {
+  private def segmentedText(deletes: Boolean): Text = {
     val dir = tmp("graft-rb-seg")
     TextIndex.appendSegment(docs.filter(col("doc_id") < 300), "text",
       "doc_id", dir, "a", nBuckets = 16)
     TextIndex.appendSegment(docs.filter(col("doc_id") >= 300), "text",
       "doc_id", dir, "b", nBuckets = 16)
     if (deletes) deleteText(dir)
-    TextIndex.loadSegments(spark, dir)
+    new Text(TextIndex.loadSegments(spark, dir), None)
   }
 
   private def deleteText(dir: String): Unit = {
@@ -334,7 +345,7 @@ class RequestBindingSpec extends AnyFunSuite {
       val text = plainText(deletes)
       val q = docs.filter(col("doc_id").isin(ids: _*))
         .select(col("doc_id").as("qid"), col("text").as("qtext"))
-      assertSame(text.query(q, "qtext", "qid", k = 50),
+      assertSame(text.idx.query(q, "qtext", "qid", k = 50),
         Extensions.bm25RankTail(refScores(text, q, "qtext", "qid"), "qid",
           "doc_id", 50))
     }
@@ -344,7 +355,7 @@ class RequestBindingSpec extends AnyFunSuite {
       val text = segmentedText(deletes)
       val q = docs.filter(col("doc_id").isin(ids: _*))
         .select(col("doc_id").as("qid"), col("text").as("qtext"))
-      assertSame(text.query(q, "qtext", "qid", k = 50),
+      assertSame(text.idx.query(q, "qtext", "qid", k = 50),
         Extensions.bm25RankTail(refScores(text, q, "qtext", "qid"), "qid",
           "doc_id", 50))
     }
@@ -372,7 +383,7 @@ class RequestBindingSpec extends AnyFunSuite {
     }
   }
 
-  for ((tname, text) <- Seq[(String, Boolean => Bm25Queryable)](
+  for ((tname, text) <- Seq[(String, Boolean => Text)](
         "plain" -> plainText, "segmented" -> segmentedText);
       deletes <- Seq(false, true);
       (qname, dir) <- Seq("flat" -> (() => flatDir),
@@ -384,7 +395,7 @@ class RequestBindingSpec extends AnyFunSuite {
       val v = ivf(dir())
       for (nprobe <- Seq(2, 64))
         assertSame(
-          HybridIndex.queryByIds(t, v, docs, "text", ids, kBranch = 10,
+          HybridIndex.queryByIds(t.idx, v, docs, "text", ids, kBranch = 10,
             k = 10, nprobe = nprobe),
           refQueryByIds(t, v, docs, ids, 10, 10, nprobe))
     }
@@ -408,7 +419,7 @@ class RequestBindingSpec extends AnyFunSuite {
     val dense = refIvfQuery(v, bound.select("query_id", "__q"), 10, 2)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("vec_rank"))
-    assertSame(HybridIndex.query(t, v, q, "qid", "qtext", "qvec",
+    assertSame(HybridIndex.query(t.idx, v, q, "qid", "qtext", "qvec",
         kBranch = 10, k = 10, nprobe = 2),
       refRrfFuseRanked(lex, dense, "doc_id", 10, 60))
   }
