@@ -6,10 +6,10 @@ import org.apache.spark.sql.types.LongType
 
 /** Hybrid retrieval over PERSISTED indexes — the production 100 TB
   * search shape: the BM25 branch queries a [[SegmentedTextIndex]]
-  * (term-hash bucket partitions), the dense branch queries an [[IvfIndex]] (cell
-  * partitions), and the two ≤ |Q|·kBranch-row rank tables fuse with
-  * reciprocal-rank fusion — the same tail as the in-memory
-  * [[Extensions.rrfFusion]], shared code, shared laws.
+  * (term-hash bucket partitions), the dense branch queries an
+  * [[IvfIndex]] (cell partitions), and the two ≤ |Q|·kBranch-row rank
+  * tables fuse with reciprocal-rank fusion — the same tail as the
+  * in-memory [[Extensions.rrfFusion]], shared code, shared laws.
   *
   * Request resolution (the serving hot path): a search runs ONE
   * request collect — the query rows' ids, tokens and vectors — and

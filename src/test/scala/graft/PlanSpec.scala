@@ -424,16 +424,21 @@ class PlanSpec extends AnyFunSuite {
       }
     }
     // annIvf queries a transient IvfIndex, whose probe is resolved on
-    // the driver: no centroid cross join and no rank window. Neither
-    // annIvf nor bm25_topk has a window — the corpus-sized candidate
-    // rank is heap-based in both
+    // the driver: no centroid cross join and no rank window. In annIvf
+    // and bm25_topk the corpus-sized candidate rank is heap-based; the
+    // one window bm25_topk has is the text index's document frequency,
+    // a count over (query, term), never a rank
     val ivfPlan = executedPlan(graft.engine.Extensions.annIvf(
       emb, "embedding", "vec_id", Seq(0L, 1L, 2L), k = 5))
     assert(!ivfPlan.contains("Window") &&
       !ivfPlan.contains("BroadcastNestedLoopJoin"),
       s"annIvf plan was:\n$ivfPlan")
     val bmPlan = executedPlan(SparkEntry.queries("bm25_topk")(spark, sf))
-    assert(!bmPlan.contains("Window"), s"bm25_topk plan was:\n$bmPlan")
+    val bmWindows = bmPlan.linesIterator.filter(_.contains("Window [")).toSeq
+    assert(bmWindows.forall(w => w.contains("count(1)") &&
+      !w.contains("row_number") && !w.contains("rank(")),
+      s"bm25_topk plan was:\n$bmPlan")
+    assert(bmPlan.contains("topkpairs"), s"bm25_topk plan was:\n$bmPlan")
   }
 
   test("lastTouchAttribution exchanges on the user exactly once " +
