@@ -101,41 +101,6 @@ object Extensions {
   /** Tokenized lowercase words — the shared text preprocessing. */
   def tokens(c: Column): Column = split(lower(c), " ")
 
-  /** Run `body` (a partitioned-layout `spark.read.parquet`) with
-    * partition discovery kept ON THE DRIVER up to
-    * `spark.graft.io.driverListThreshold` paths (default 1024; opt
-    * r19, guide §6). Spark's default threshold (32) launches a
-    * DISTRIBUTED listing job for any store past 32 partition dirs —
-    * on the 64-cell tree index that job alone cost 0.2-0.7 s per
-    * load, orders of magnitude more than listing 64 dirs from the
-    * driver. Production posture: the raised threshold still hands
-    * thousand-dir layouts (the true 100 TB cell counts) to the
-    * distributed lister; the knob parameterizes the crossover.
-    * Set/restore is scoped to `body` — listing happens eagerly inside
-    * `spark.read` resolution, so the restored conf never leaks into
-    * query execution.
-    *
-    * Single-threaded assumption: the conf is SESSION-global, so the
-    * set/restore pair is only clean while no other thread plans on the
-    * same session. A serving process that reloads its indexes
-    * ([[IvfIndex.load]]) while HTTP
-    * threads answer searches can plan a concurrent query under the
-    * raised threshold (harmless: it only moves where listing runs) or
-    * interleave two restores and leave the raised value behind —
-    * serialize reloads against each other when that matters. */
-  private[graft] def withDriverListing[T](
-      spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, spark.conf.getOption(
-      "spark.graft.io.driverListThreshold").getOrElse("1024"))
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   /** Projections over driver-held request values — term buckets, probe
     * cells, query norms — built ONCE per index handle and evaluated per
     * request on the driver, with no plan: the Spark expressions a

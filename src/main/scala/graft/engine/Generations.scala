@@ -1,10 +1,21 @@
 package graft.engine
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+  BoundReference, Expression, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
 
-/** How a persisted layout is written and committed — the one module
+/** How a persisted layout is written, committed and read — the one module
   * every versioned writer ([[TextIndex]], [[IvfIndex]],
   * [[SemanticStore]], [[Scale.writeAuditPublish]],
   * [[graft.streaming.Streaming]]'s sinks, [[Jobs]]) goes through, on
@@ -29,6 +40,8 @@ import org.apache.spark.sql.functions.col
   *     retire marker first, ids second.
   *   - '''Partitioned index writes''' cluster by their partition
   *     column ([[writePartitioned]]).
+  *   - '''Reads''': every layout frame is one [[scan]] over files
+  *     listed on the driver.
   *
   * The rename requirement, stated once: [[writeText]] needs a rename
   * that replaces its destination atomically. On the local disk that is
@@ -253,6 +266,14 @@ object Generations {
 
     def content(name: String): String = readText(markerPath(name)).getOrElse("")
 
+    /** The distinct ids of the deletes `names` (default: every live
+      * one; a caller that also reads the markers passes the names it
+      * resolved, so one read sees one delete set) as one frame; None
+      * when there are none — read paths then add no plan step. */
+    def ids(of: Seq[String] = names): Option[DataFrame] =
+      if (of.isEmpty) None
+      else Some(scan(of.map(idsPath)).distinct())
+
     /** Retire `names`: marker first, ids dir second — a crash between
       * the two leaves an unreferenced ids dir ([[reclaim]] collects
       * it), never a marker naming missing ids. */
@@ -273,6 +294,90 @@ object Generations {
           st.getPath.getName.startsWith("_staging-"))
         .foreach(st => delete(st.getPath.toString))
     }
+  }
+
+  // ── reading a layout ────────────────────────────────────────────────
+
+  /** The one reader of every persisted layout: ONE frame over the
+    * parquet files under `roots`, listed on the driver at call time —
+    * each root once, and each `<partCol>=<int>` directory under it
+    * once — so N roots are one scan node and no job runs (no partition
+    * discovery, no schema inference). Hidden names (`_SUCCESS`,
+    * `_claim`, `_pqv`, `.crc`) are skipped, so a root without data
+    * files adds no rows. The schema is one footer's per root, nullable
+    * as `spark.read` makes it; roots that disagree fail loudly. The
+    * plan's partition filters prune directories before a file opens. */
+  def scan(roots: Seq[String], partCol: Option[String] = None): DataFrame = {
+    def visible(fs: FileSystem, dir: Path): Seq[FileStatus] =
+      fs.listStatus(dir).toSeq.filterNot { st =>
+        val n = st.getPath.getName
+        (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+      }.sortBy(_.getPath.getName)
+    val listed = roots.map { root =>
+      val (fs, dir) = fsOf(root)
+      val parts = partCol match {
+        case None => Seq(PartitionDirectory(InternalRow.empty,
+          visible(fs, dir).filter(_.isFile).toArray))
+        case Some(c) => visible(fs, dir).map { st =>
+          val name = st.getPath.getName
+          val value = name.stripPrefix(s"$c=").toIntOption
+          require(st.isDirectory && name.startsWith(s"$c=") && value.nonEmpty,
+            s"${st.getPath} is not a $c=<int> partition of $root")
+          PartitionDirectory(InternalRow(value.get),
+            visible(fs, st.getPath).filter(_.isFile).toArray)
+        }
+      }
+      (parts, parts.flatMap(_.files).headOption
+        .map(f => footerSchema(fs, f.fileStatus)))
+    }
+    val schemas = listed.flatMap(_._2)
+    require(schemas.nonEmpty, s"no data files under ${roots.mkString(", ")}")
+    require(schemas.map(_.toSet).distinct.size == 1,
+      s"the roots ${roots.mkString(", ")} disagree on their schema: " +
+        schemas.distinct.map(_.simpleString).mkString(" vs "))
+    val partSchema = StructType(partCol.toSeq.map(StructField(_, IntegerType)))
+    val spark = SparkSession.active
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new ListedFiles(roots.map(new Path(_)), listed.flatMap(_._1), partSchema),
+      partSchema, schemas.head, None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** The Spark schema a parquet footer records (Spark's own rule: its
+    * row metadata, else the converted parquet schema), made nullable. */
+  private def footerSchema(fs: FileSystem, file: FileStatus): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file,
+      fs.getConf))
+    val footer = try reader.getFooter finally reader.close()
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(nullable(e), true)
+      case MapType(k, v, _) => MapType(nullable(k), nullable(v), true)
+      case other => other
+    }
+    nullable(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(SQLConf.get))).asInstanceOf[StructType]
+  }
+
+  /** The files [[scan]] listed; `listFiles` keeps the partitions that
+    * pass the plan's partition filters. */
+  private final class ListedFiles(val rootPaths: Seq[Path],
+      parts: Seq[PartitionDirectory], val partitionSchema: StructType)
+      extends FileIndex {
+    def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      partitionFilters.reduceOption(And).fold(parts) { filter =>
+        val keep = Predicate.createInterpreted(filter.transform {
+          case a: AttributeReference => BoundReference(
+            partitionSchema.fieldIndex(a.name), a.dataType, nullable = true)
+        })
+        parts.filter(p => keep.eval(p.values))
+      }
+    def inputFiles: Array[String] =
+      parts.flatMap(_.files).map(_.getPath.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = parts.flatMap(_.files).map(_.getLen).sum
   }
 
   // ── partitioned writes ──────────────────────────────────────────────

@@ -529,7 +529,7 @@ object IvfIndex {
             "different quantizer (a torn re-save) — rebuild and re-save " +
             "the index")
       }
-      val rows = spark.read.parquet(sidecar)
+      val rows = Generations.scan(Seq(sidecar))
         .collect()
         .map(r => (r.getInt(0), r.getSeq[Float](1).toArray,
           r.getInt(2), r.getInt(3)))
@@ -701,11 +701,7 @@ object IvfIndex {
   def appendPqToSaved(spark: SparkSession, path: String, emb: DataFrame,
       embCol: String, idCol: String): Unit = {
     val cents = readQuantizer(spark, path)
-    val codebook = spark.read.parquet(s"$path/codebook")
-      .collect().map(r => (r.getInt(0), r.getInt(1),
-        r.getSeq[Float](2).toSeq))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3).toSeq)
+    val codebook = readCodebook(path)
     Generations.writePartitioned(emb.select(col(idCol),
         graft.functions.PqOps.pqEncode(col(embCol), codebook).as("codes"),
         loadAssigner(spark, path, cents)(col(embCol)).as("__cell")),
@@ -742,14 +738,21 @@ object IvfIndex {
     * [[quantizerRoot]]) — the one read every growth/query path shares. */
   private[graft] def readQuantizer(spark: SparkSession,
       path: String): Seq[(Int, Array[Float])] = {
-    val cents = spark.read
-      .parquet(s"${quantizerRoot(spark, path)}/quantizer")
+    val cents = Generations.scan(Seq(s"${quantizerRoot(spark, path)}/quantizer"))
       .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1).toSeq
     require(cents.zipWithIndex.forall { case ((id, _), i) => id == i },
       "saved quantizer cell ids must be contiguous 0..n-1")
     cents
   }
+
+  /** The PQ sidecar's m codebooks, each its codewords in code order. */
+  private def readCodebook(path: String): Seq[Seq[Seq[Float]]] =
+    Generations.scan(Seq(s"$path/codebook"))
+      .collect().map(r => (r.getInt(0), r.getInt(1),
+        r.getSeq[Float](2).toSeq))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map(_._2.sortBy(_._2).map(_._3).toSeq)
 
   /** Epoch names already folded into the CURRENT base generation by
     * [[compactEpochs]] — excluded from every union even while their
@@ -817,22 +820,6 @@ object IvfIndex {
     tombs.commit(name, ids.select(col(idCol).as("__tomb_id")).distinct())
   }
 
-  /** All committed tombstoned ids as one `__tomb_id` column; None when
-    * none exist (the common case — read paths add no plan step). A
-    * marker whose ids dir is MISSING is skipped rather than thrown on:
-    * under the marker-first retire order that combination only arises
-    * mid-sweep (ids already physically removed — the filter is a
-    * no-op), and skipping also heals stores wedged by the pre-r17
-    * data-first order. */
-  private[graft] def tombstonedIds(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val tombs = tombstones(path)
-    val names = tombs.names
-    if (names.isEmpty) None
-    else Some(spark.read.parquet(names.map(tombs.idsPath): _*)
-      .distinct())
-  }
-
   /** Anti-join committed tombstones out of a cells/codes union. The id
     * column is the one non-array column beside `__cell` (cells carry
     * the embedding array, codes the codes array). */
@@ -848,23 +835,15 @@ object IvfIndex {
         "left_anti")
   }
 
-  /** The corpus = base cells ∪ every claimed epoch's cells. Each
-    * branch keeps its own __cell partition layout, so a probed query's
-    * isin filter file-prunes every branch independently — epoch growth
-    * never widens what a query scans beyond its probed cells. */
+  /** The corpus = base cells ∪ every claimed epoch's cells, one scan
+    * ([[Generations.scan]]) whose `__cell` partitions span every root,
+    * so a probed query's cell filter file-prunes base and epochs alike —
+    * epoch growth never widens what a query scans beyond its probed
+    * cells. An epoch of zero rows (a raw [[appendEpoch]] of an empty
+    * frame) holds no data file and adds nothing. */
   private[graft] def cellsWithEpochs(spark: SparkSession,
       path: String): DataFrame =
     cellsOf(spark, path, Snapshot.of(spark, path))
-
-  /** True iff `dir` exists AND holds at least one `__cell=` partition
-    * dir: a ZERO-ROW dynamic-partitioned write leaves a dir with only
-    * _SUCCESS, and schema inference on it throws — such dirs (a
-    * pre-r15 store's empty-snapshot epoch, or a raw [[appendEpoch]] of
-    * an empty frame) must be skipped by every union, or one empty
-    * epoch wedges load/compact/addPqCodes forever (review finding; the
-    * SemanticStore stored-side read applies the same filter). */
-  private def hasCellData(spark: SparkSession, dir: String): Boolean =
-    Generations.dirNames(dir).exists(_.startsWith("__cell="))
 
   /** The claimed epochs and the tombstoned ids, resolved ONCE: every
     * union one call builds derives from one snapshot. The multi-step
@@ -878,21 +857,15 @@ object IvfIndex {
 
   private[engine] object Snapshot {
     def of(spark: SparkSession, path: String): Snapshot =
-      Snapshot(claimedEpochs(spark, path), tombstonedIds(spark, path))
+      Snapshot(claimedEpochs(spark, path), tombstones(path).ids())
   }
 
   /** [[cellsWithEpochs]] over a resolved [[Snapshot]]. */
   private[engine] def cellsOf(spark: SparkSession, path: String,
       snap: Snapshot): DataFrame =
-    // driver-side partition discovery (opt r19, §6): each branch is a
-    // cell-partitioned dir fan-out; Spark's 32-path default launched a
-    // distributed listing job per load on the 64-cell tree layout
-    Extensions.withDriverListing(spark) {
-      excludeTombstoned(snap.epochs
-        .filter(e => hasCellData(spark, s"$e/cells"))
-        .foldLeft(spark.read.parquet(s"${baseRoot(path)}/cells"))((df, e) =>
-          df.unionByName(spark.read.parquet(s"$e/cells"))), snap.tombstoned)
-    }
+    excludeTombstoned(Generations.scan(
+      (baseRoot(path) +: snap.epochs).map(r => s"$r/cells"), Some("__cell")),
+      snap.tombstoned)
 
   /** PQ-codes twin of [[cellsWithEpochs]], version-gated: an epoch
     * codes dir joins the union ONLY when its `_pqv` stamp matches the
@@ -936,13 +909,14 @@ object IvfIndex {
           "addPqCodes run did not complete; ") +
         "re-run addPqCodes to re-encode the corpus under the " +
         "committed codebook")
-    Extensions.withDriverListing(spark) {
-      excludeTombstoned(snap.epochs
-        .filter(e => hasCellData(spark, s"$e/codes"))
-        .filter(e => Generations.readText(s"$e/codes/_pqv") == current)
-        .foldLeft(spark.read.parquet(s"${baseRoot(path)}/codes"))((df, e) =>
-          df.unionByName(spark.read.parquet(s"$e/codes"))), snap.tombstoned)
-    }
+    // an epoch appended before the sidecar existed has no codes dir (a
+    // legacy unstamped codebook matches its missing stamp)
+    val stamped = snap.epochs.filter(e =>
+      Generations.readText(s"$e/codes/_pqv") == current &&
+        Generations.exists(s"$e/codes"))
+    excludeTombstoned(Generations.scan(
+      (baseRoot(path) +: stamped).map(r => s"$r/codes"), Some("__cell")),
+      snap.tombstoned)
   }
 
   /** Exactly-once epoch append under the FROZEN quantizer (and frozen
@@ -980,11 +954,7 @@ object IvfIndex {
     Generations.writePartitioned(assigned, "__cell", "errorifexists",
       s"$epochRoot/cells")
     if (Generations.exists(s"$path/codebook")) {
-      val codebook = spark.read.parquet(s"$path/codebook")
-        .collect().map(r => (r.getInt(0), r.getInt(1),
-          r.getSeq[Float](2).toSeq))
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map(_._2.sortBy(_._2).map(_._3).toSeq)
+      val codebook = readCodebook(path)
       Generations.writePartitioned(assigned.select(col(idCol),
           graft.functions.PqOps.pqEncode(col(embCol), codebook).as("codes"),
           col("__cell")),
@@ -1141,7 +1111,7 @@ object IvfIndex {
       return false
     }
     val prevRoot = baseRoot(path)
-    val snap = Snapshot(epochs, tombstonedIds(spark, path))
+    val snap = Snapshot(epochs, tombstones(path).ids())
     val cells = cellsOf(spark, path, snap)
     val liveCells = cells.count()
     val nextGen = Generations.currentName(path) match {
@@ -1189,7 +1159,8 @@ object IvfIndex {
       loadTree(spark, path, liveCents)
         .foreach(tq => writeTreeSidecar(spark, stage, tq, liveCents))
     }
-    val writtenCells = spark.read.parquet(s"$stage/cells").count()
+    val stagedCells = Generations.scan(Seq(s"$stage/cells"), Some("__cell"))
+    val writtenCells = stagedCells.count()
     require(writtenCells == liveCells,
       s"compaction audit failed: wrote $writtenCells cells, live $liveCells")
     if (Generations.exists(s"$prevRoot/codes")) {
@@ -1203,12 +1174,12 @@ object IvfIndex {
           val idCol = codes.columns
             .filterNot(c => c == "__cell" || c == "codes").head
           codes.drop("__cell").join(
-            spark.read.parquet(s"$stage/cells")
-              .select(col(idCol), col("__cell")), idCol)
+            stagedCells.select(col(idCol), col("__cell")), idCol)
         } else codes
       Generations.writePartitioned(stagedCodes, "__cell", "errorifexists",
         s"$stage/codes")
-      val writtenCodes = spark.read.parquet(s"$stage/codes").count()
+      val writtenCodes =
+        Generations.scan(Seq(s"$stage/codes"), Some("__cell")).count()
       require(writtenCodes == liveCodes,
         s"compaction audit failed: wrote $writtenCodes codes, live $liveCodes")
       Generations.readText(s"$path/codebook/_pqv").foreach(v =>
@@ -1257,7 +1228,7 @@ object IvfIndex {
     // MARKER FIRST, ids dir second (ADVICE r16): a crash between the
     // two then leaves only an orphaned unreferenced dir, never a
     // committed marker whose parquet is gone (which would make every
-    // tombstonedIds read throw until hand-repaired).
+    // tombstone read throw until hand-repaired).
     if (only.isEmpty) tombstones(path).retire(tombs)
     true
   }
@@ -1287,12 +1258,7 @@ object IvfIndex {
   def loadPq(spark: SparkSession, path: String, idCol: String,
       embCol: String): IvfPqIndex = {
     val cents = readQuantizer(spark, path)
-    val cb = spark.read.parquet(s"$path/codebook")
-      .collect().map(r => (r.getInt(0), r.getInt(1),
-        r.getSeq[Float](2).toSeq))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3).toSeq)
-    new IvfPqIndex(cents, cb, path, spark, idCol, embCol,
+    new IvfPqIndex(cents, readCodebook(path), path, spark, idCol, embCol,
       loadTree(spark, path, cents))
   }
 }

@@ -122,22 +122,21 @@ object SemanticStore {
     * (the compact step-1/step-3 crash window — reading both sides
     * would score every stored vector twice; review finding r15); a
     * committed name with NO epoch dir is the normal post-compaction
-    * shape (its vectors live in the base), and an epoch dir without a
-    * `__cell=` partition dir is a pre-r15 empty snapshot whose
-    * schema-less dir would wedge schema inference (ADVICE r14). */
+    * shape (its vectors live in the base) and the shape of an empty
+    * snapshot, which commits no IVF epoch. */
   private def storedCellsDf(spark: SparkSession, storePath: String,
       committed: Seq[String]): DataFrame = {
     val ivfPath = s"$storePath/ivf"
-    val baseCells =
-      spark.read.parquet(s"${IvfIndex.baseRoot(ivfPath)}/cells")
-    val ivfFolded = IvfIndex.foldedEpochs(spark, ivfPath)
-    val epochCells = committed
-      .filterNot(ivfFolded)
-      .map(e => s"$ivfPath/epochs/$e/cells")
-      .filter(p => Generations.dirNames(p).exists(_.startsWith("__cell=")))
-    epochCells.foldLeft(baseCells)((df, p) =>
-      df.unionByName(spark.read.parquet(p)))
+    val epochs = committed.filterNot(IvfIndex.foldedEpochs(spark, ivfPath))
+      .map(e => s"$ivfPath/epochs/$e")
+      .filter(e => Generations.exists(s"$e/cells"))
+    IvfIndex.cellsOf(spark, ivfPath, IvfIndex.Snapshot(epochs, None))
   }
+
+  /** One scan of `kind` (pairs, meta, radii) over the epochs `names`. */
+  private def epochsOf(storePath: String, kind: String,
+      names: Seq[String]): DataFrame =
+    Generations.scan(names.map(e => s"$storePath/$kind/$e"))
 
   /** Epoch names folded by [[compact]] — a replay of one of these is
     * a no-op exactly like a replay of a live committed name. */
@@ -189,22 +188,6 @@ object SemanticStore {
 
   private def deleteSet(storePath: String) =
     new Generations.DeleteSet(storePath, "deletes", "_deletes")
-
-  /** All committed deleted ids as a one-column (`__del_id`) frame;
-    * None when no delete has ever committed — the zero-cost common
-    * case (every read path skips its anti-joins entirely). A marker
-    * whose ids dir is missing is skipped, not thrown on — only the
-    * mid-retire window produces it under the marker-first sweep order
-    * (ids already physically removed), and skipping heals stores
-    * wedged by the pre-r17 data-first order (ADVICE r16). */
-  private def deletedIds(spark: SparkSession,
-      storePath: String): Option[DataFrame] = {
-    val dels = deleteSet(storePath)
-    val names = dels.names
-    if (names.isEmpty) None
-    else Some(spark.read.parquet(names.map(dels.idsPath): _*)
-      .distinct())
-  }
 
   /** Exclude deleted ids from a frame on `keyCol` — an anti-join (the
     * scalable exclusion at any delete-list size; AQE broadcasts small
@@ -310,14 +293,11 @@ object SemanticStore {
         col(qualityCol), lit(0).as("keep"))
     }
     if (batchIsEmpty) {
-      // empty LATER snapshot (ADVICE r14, medium): commit empty
-      // pairs/meta/radii and the marker, but NO IVF epoch — a
-      // zero-row dynamic-partitioned cells write emits only _SUCCESS,
-      // and once such an epoch committed, every subsequent stored-side
-      // read would fail schema inference forever, permanently wedging
-      // the store (the streaming sink's empty-micro-batch case). The
-      // three staged dirs are NON-partitioned, so their empty parquet
-      // keeps its schema and the symmetric unions stay well-typed.
+      // empty LATER snapshot (ADVICE r14, medium; the streaming sink's
+      // empty micro-batch): commit empty pairs/meta/radii and the
+      // marker, but NO IVF epoch — there are no cells to append. The
+      // three dirs are NON-partitioned, so their empty parquet keeps
+      // its schema and every epoch scan stays well-typed.
       batch.limit(0)
         .select(col(idCol).as("id_a"), col(idCol).as("id_b"),
           lit(0.0).as("cosine_sim"))
@@ -383,7 +363,7 @@ object SemanticStore {
     // Committed RADII keep their contribution until a refit compaction
     // recomputes them — a too-large radius only admits extra candidate
     // cell pairs, never drops one, so pruning stays sound.
-    val deleted = deletedIds(spark, storePath)
+    val deleted = deleteSet(storePath).ids()
     // batch side: literal-centroid cell assignment RESOLVED FROM THE
     // SAVED LAYOUT (IvfIndex.loadAssigner — the flat rule, or the
     // two-level tree rule when the index was built past the tree
@@ -437,8 +417,7 @@ object SemanticStore {
       if (stampedFast) {
         val rows = batchRadiiAgg
           .select(col("__cell"), col("__r"), lit(true).as("__batch"))
-          .unionByName(spark.read
-            .parquet(committed.map(e => s"$storePath/radii/$e"): _*)
+          .unionByName(epochsOf(storePath, "radii", committed)
             .groupBy("__cell").agg(max("__r").as("__r"))
             .select(col("__cell"), col("__r"), lit(false).as("__batch")))
           .collect()
@@ -611,12 +590,10 @@ object SemanticStore {
     // touching them leaves the closure (the [[delete]] policy — a
     // deleted document must stop bridging components), so survivors
     // re-derive exactly as if the ids were never ingested
-    val deleted = deletedIds(spark, storePath)
-    val meta = notDeleted(spark.read
-      .parquet(committed.map(e => s"$storePath/meta/$e"): _*),
-      deleted, idCol)
-    val pairs = notDeleted(notDeleted(spark.read
-      .parquet(committed.map(e => s"$storePath/pairs/$e"): _*),
+    val deleted = deleteSet(storePath).ids()
+    val meta = notDeleted(epochsOf(storePath, "meta", committed), deleted,
+      idCol)
+    val pairs = notDeleted(notDeleted(epochsOf(storePath, "pairs", committed),
       deleted, "id_a"), deleted, "id_b")
     val comps = graft.operators.ConnectedComponents.components(
       meta.select(col(idCol)), pairs, idCol, "id_a", "id_b")
@@ -706,7 +683,7 @@ object SemanticStore {
     // runs is not applied by this fold and stays a live filter until
     // the next one (single-writer, as everywhere in the lifecycle)
     val delNames = dels.markers
-    val deleted = deletedIds(spark, storePath)
+    val deleted = deleteSet(storePath).ids()
     if (committed.isEmpty || (committed.size < 2 && delNames.isEmpty))
       return false
     val n = (committed ++ folded).filter(_.startsWith("compact-"))
@@ -727,13 +704,12 @@ object SemanticStore {
       rowsPerCell, retainFolded)
     // physical removal of deleted PAIRS and META from the consolidated
     // epoch (the read-path filters applied once, at rest)
-    notDeleted(notDeleted(spark.read
-        .parquet(committed.map(e => s"$storePath/pairs/$e"): _*),
+    notDeleted(notDeleted(epochsOf(storePath, "pairs", committed),
         deleted, "id_a"), deleted, "id_b")
       .write.mode("overwrite").parquet(s"$storePath/pairs/$cName")
-    notDeleted(spark.read
-        .parquet(committed.map(e => s"$storePath/meta/$e"): _*),
-        deleted, metaIdCol(spark, storePath, committed))
+    // the meta id column is the one ingest writes first
+    val meta = epochsOf(storePath, "meta", committed)
+    notDeleted(meta, deleted, meta.columns.head)
       .write.mode("overwrite").parquet(s"$storePath/meta/$cName")
     // the live quantizer AFTER step 1: under refit these are the NEW
     // centroids staged inside the published generation
@@ -756,7 +732,7 @@ object SemanticStore {
         Generations.readText(s"$storePath/radii/$e/_qv").contains(qv)))
       writeRadiiFromBase(spark, storePath, ivfPath, cName, cents)
     else
-      spark.read.parquet(committed.map(e => s"$storePath/radii/$e"): _*)
+      epochsOf(storePath, "radii", committed)
         .groupBy("__cell").agg(max("__r").as("__r"))
         .coalesce(1) // ≤ nCells rows
         .write.mode("overwrite").parquet(s"$storePath/radii/$cName")
@@ -798,7 +774,7 @@ object SemanticStore {
     // the two in the marker-first order leaves only an orphaned
     // unreferenced ids dir (reclaimed by the next sweep), while the
     // old data-first order left a committed marker pointing at a
-    // missing parquet dir — every later deletedIds read would throw
+    // missing parquet dir — every later delete-id read would throw
     // and wedge the store. Idempotent; a crash mid-sweep leaves no-op
     // filters the next compact retires.
     dels.retire(delNames)
@@ -819,8 +795,8 @@ object SemanticStore {
   private def writeRadiiFromBase(spark: SparkSession, storePath: String,
       ivfPath: String, cName: String,
       cents: Seq[(Int, Array[Float])]): Unit = {
-    val base = spark.read
-      .parquet(s"${IvfIndex.baseRoot(ivfPath)}/cells")
+    val base = Generations.scan(Seq(s"${IvfIndex.baseRoot(ivfPath)}/cells"),
+      Some("__cell"))
     val embCol = base.schema.fields
       .find(f => f.dataType.isInstanceOf[
         org.apache.spark.sql.types.ArrayType] && f.name != "__cell")
@@ -841,12 +817,6 @@ object SemanticStore {
       .coalesce(1) // ≤ nCells rows
       .write.mode("overwrite").parquet(s"$storePath/radii/$cName")
   }
-
-  /** The id column of the committed meta (ingest writes it first). */
-  private def metaIdCol(spark: SparkSession, storePath: String,
-      committed: Seq[String]): String =
-    spark.read.parquet(s"$storePath/meta/${committed.head}")
-      .columns.head
 
   /** Delete every pairs/meta/radii dir and marker whose name the
     * committed manifest marks FOLDED — reads only committed state, so

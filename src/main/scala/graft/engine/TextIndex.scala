@@ -206,17 +206,18 @@ object TextIndex {
   private def rootDir(path: String, root: String): String =
     if (root.isEmpty) path else s"$path/$root"
 
-  /** The live segment directories under `root` ([[liveRoot]]), in name
-    * order; a plain root is its own single segment. */
+  /** The committed segment directories under `root` ([[liveRoot]]), in
+    * name order; a plain root is its own single segment. A directory
+    * without `stats` — the segment's commit point — is a crashed append
+    * that its retry restages, and no read sees it. */
   private def segmentDirs(path: String, root: String): Seq[String] = {
     val dir = rootDir(path, root)
-    if (isPlain(root)) Seq(dir)
-    else {
-      // directories only: the root also carries the compaction manifests
-      val dirs = Generations.dirNames(dir)
-      require(dirs.nonEmpty, s"no segments under $path")
-      dirs.map(d => s"$dir/$d")
-    }
+    // directories only: the root also carries the compaction manifests
+    val dirs = (if (isPlain(root)) Seq(dir)
+      else Generations.dirNames(dir).map(d => s"$dir/$d"))
+      .filter(d => Generations.exists(s"$d/stats"))
+    require(dirs.nonEmpty, s"no committed segments under $path")
+    dirs
   }
 
   /** The live segment directories of the index at `path`. */
@@ -296,18 +297,6 @@ object TextIndex {
       (n, parts(0).toLong, parts(1).toLong)
     }
   }
-
-  /** The ids of the unapplied deletes `names` ([[deleteEntries]]) as
-    * one `__del_id` frame; None when there are none (the common case —
-    * query paths add no plan step). Callers pass the names they
-    * resolved, so one load reads one delete set: a delete committing
-    * in between cannot exclude ids whose stats were not corrected. */
-  private def deletedIdsDf(spark: SparkSession, path: String,
-      names: Seq[String]): Option[DataFrame] =
-    if (names.isEmpty) None
-    else Some(spark.read
-      .parquet(names.map(deleteSet(path).idsPath): _*)
-      .distinct())
 
   // ── writing ──────────────────────────────────────────────────────────
 
@@ -396,7 +385,7 @@ object TextIndex {
     if (Generations.exists(s"$seg/stats")) {
       // a FOLDED name can't be checked (its rows merged away) — the
       // immutable-name contract is all that guards that path
-      val st = spark.read.parquet(s"$seg/stats").collect().head
+      val st = Generations.scan(Seq(s"$seg/stats")).collect().head
       val (n, s) = (st.getLong(st.fieldIndex("n_docs")),
         st.getLong(st.fieldIndex("sum_dl")))
       require(idx.nDocs == n && idx.sumDl == s,
@@ -434,29 +423,31 @@ object TextIndex {
   def load(spark: SparkSession, path: String): SegmentedTextIndex =
     loadSegments(spark, path)
 
-  /** [[loadSegments]] over a resolved segment list and delete set. */
+  /** [[loadSegments]] over a resolved segment list and delete set: one
+    * collect of every segment's stats row, and one scan of every
+    * segment's postings. The delete ids are read from the names the
+    * caller resolved, so a delete committing in between cannot exclude
+    * ids whose stats were not corrected. */
   private def openSegments(spark: SparkSession, path: String,
       segDirs: Seq[String], dels: Seq[(String, Long, Long)])
       : SegmentedTextIndex = {
-    val stats = segDirs.map(d =>
-      spark.read.parquet(s"$d/stats").collect().head)
+    val stats = Generations.scan(segDirs.map(d => s"$d/stats")).collect()
     def field[T](name: String): Seq[T] =
-      stats.map(st => st.getAs[T](st.fieldIndex(name)))
+      stats.toSeq.map(st => st.getAs[T](st.fieldIndex(name)))
     val buckets = field[Int]("n_buckets").distinct
     require(buckets.length == 1,
       s"segments disagree on n_buckets: ${buckets.mkString(", ")}")
     val idCols = field[String]("id_col").distinct
     require(idCols.length == 1,
       s"segments disagree on id column: ${idCols.mkString(", ")}")
-    val postings = segDirs.map { d =>
-      val p = spark.read.parquet(s"$d/postings")
-      if (p.columns.contains("df")) p.drop("df") else p
-    }.reduce(_.unionByName(_))
+    // a plain layout's stored df is ignored: df is counted at query time
+    val postings = Generations.scan(segDirs.map(d => s"$d/postings"),
+      Some("__bucket")).drop("df")
     new SegmentedTextIndex(
       field[Long]("n_docs").sum - dels.map(_._2).sum,
       field[Long]("sum_dl").sum - dels.map(_._3).sum,
       postings, idCols.head, buckets.head,
-      deletedIdsDf(spark, path, dels.map(_._1)))
+      deleteSet(path).ids(dels.map(_._1)))
   }
 
   /** Merge every live segment into ONE — the maintenance job a
@@ -536,7 +527,8 @@ object TextIndex {
     writeSegment(idx, seg)
     // audit ON THE WRITTEN FILES before the flip (write corruption
     // would survive a df-side check)
-    val written = spark.read.parquet(s"$seg/postings").count()
+    val written = Generations.scan(Seq(s"$seg/postings"), Some("__bucket"))
+      .count()
     require(written == liveCount,
       s"compaction audit failed: wrote $written postings, live $liveCount")
     if (appliedBefore.nonEmpty || dels.nonEmpty)

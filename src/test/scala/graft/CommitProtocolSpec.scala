@@ -328,6 +328,44 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(got.map(_._1) == q.toSet && !got.exists(r => r._2 == 3L || r._2 == 4L))
   }
 
+  test("a text load and an IVF-PQ load list each segment and epoch root " +
+      "once, and answer the same on any scheme") {
+    def pathOf(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
+    sameOnBothSchemes("layout-list") { root =>
+      val text = s"$root/text"
+      (0 until 3).foreach(s => TextIndex.appendSegment(
+        corpus.filter(col("doc_id") % 3 === s), "text", "doc_id", text,
+        s"s$s", nBuckets = 8))
+      TextIndex.delete(spark, text, Seq(3L, 4L).toDF("doc_id"), "doc_id", "d1")
+      val ivf = s"$root/ivf"
+      IvfIndex.build(vectors.filter(col("vec_id") % 3 === 0), "embedding",
+        "vec_id", nCells = 4).save(ivf)
+      IvfIndex.addPqCodes(spark, ivf, "vec_id", "embedding", m = 4, kCode = 8)
+      (1 to 2).foreach(e => assert(IvfIndex.appendEpoch(spark, ivf,
+        vectors.filter(col("vec_id") % 3 === e), "embedding", "vec_id",
+        s"e$e")))
+      IvfIndex.delete(spark, ivf, Seq(3L, 4L).toDF("vec_id"), "vec_id", "t1")
+      val (idx, textLists) = GraftFs.listingsByPath(TextIndex.load(spark, text))
+      val (pqSearch, pqLists) = GraftFs.listingsByPath(
+        IvfIndex.loadPq(spark, ivf, "vec_id", "embedding")
+          .queryByIds(Seq(0L, 1L, 5L), k = 5, nprobe = 4))
+      if (root.startsWith("graftfs:")) {
+        for (lists <- Seq(textLists, pqLists))
+          assert(lists.nonEmpty && lists.values.forall(_ == 1),
+            s"directories listed more than once: ${lists.filter(_._2 > 1)}")
+        val segRoots = (0 until 3).flatMap(s =>
+          Seq("postings", "stats").map(d => s"$text/segments/s$s/$d"))
+        val epochRoots = Seq(ivf, s"$ivf/epochs/e1", s"$ivf/epochs/e2")
+          .flatMap(r => Seq(s"$r/cells", s"$r/codes"))
+        assert(segRoots.forall(r => textLists.contains(pathOf(r))) &&
+          epochRoots.forall(r => pqLists.contains(pathOf(r))),
+          s"unlisted roots: text $textLists, IVF-PQ $pqLists")
+      }
+      (idx.nDocs, textAnswers(idx.query(textQueries, "qtext", "query_id",
+        k = 5)), vecAnswers(pqSearch))
+    }
+  }
+
   test("a text index load lists its delete markers once: the excluded " +
       "ids and the stats corrections come from one listing") {
     val plain = s"${GraftFs.tempRoot("graft-del-list")}/plain"

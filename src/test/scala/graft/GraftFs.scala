@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * as it would on `file:` paths. A rename onto a destination named by
   * [[GraftFs.failRenameTo]] throws: a crash at that commit point. Every
   * directory listing is counted by the directory's name
-  * ([[GraftFs.listings]]). */
+  * ([[GraftFs.listings]]) and by its path ([[GraftFs.listingsByPath]]). */
 class GraftFs extends RawLocalFileSystem {
   override def getUri: URI = GraftFs.uri
 
@@ -24,6 +24,7 @@ class GraftFs extends RawLocalFileSystem {
 
   override def listStatus(f: Path): Array[FileStatus] = {
     GraftFs.listed.merge(f.getName, 1, (a: Int, b: Int) => a + b)
+    GraftFs.listedPaths.merge(f.toUri.getPath, 1, (a: Int, b: Int) => a + b)
     super.listStatus(f)
   }
 }
@@ -35,12 +36,24 @@ object GraftFs {
 
   private val listed = new java.util.concurrent.ConcurrentHashMap[String, Int]()
 
+  private val listedPaths =
+    new java.util.concurrent.ConcurrentHashMap[String, Int]()
+
   /** Run `body`; also return how often it listed a directory named
     * `name`. */
   def listings[T](name: String)(body: => T): (T, Int) = {
     listed.clear()
     val r = body
     (r, listed.getOrDefault(name, 0))
+  }
+
+  /** Run `body`; also return how often it listed each directory, by
+    * path (the path part of its URI). */
+  def listingsByPath[T](body: => T): (T, Map[String, Int]) = {
+    import scala.jdk.CollectionConverters._
+    listedPaths.clear()
+    val r = body
+    (r, listedPaths.asScala.toMap)
   }
 
   def register(spark: SparkSession): Unit =

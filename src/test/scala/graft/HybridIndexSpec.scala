@@ -409,6 +409,61 @@ class HybridIndexSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("a search plan does not grow with the layout: over 2 segments " +
+      "and 2 epochs and over 6 and 6, each index side is one file scan " +
+      "and both compile the same whole-stage code and answer the same") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val docs = Tables.documents(spark, sf)
+    val emb = Tables.embeddings(spark, sf)
+    val inBase = col("vec_id") % 7 === 0
+    // one quantizer for both layouts: the same base, saved twice
+    val base = IvfIndex.build(emb.filter(inBase), "embedding", "vec_id",
+      nCells = NCells)
+    def search(parts: Int): DataFrame = {
+      val tDir = Files.createTempDirectory("graft-hyb-layout-t").toString
+      val vDir = Files.createTempDirectory("graft-hyb-layout-v").toString
+      base.save(vDir)
+      (0 until parts).foreach { p =>
+        TextIndex.appendSegment(docs.filter(col("doc_id") % parts === p),
+          "text", "doc_id", tDir, s"s$p", nBuckets = 16)
+        assert(IvfIndex.appendEpoch(spark, vDir,
+          emb.filter(!inBase && col("vec_id") % parts === p), "embedding",
+          "vec_id", s"e$p"))
+      }
+      val df = HybridIndex.queryByIds(TextIndex.load(spark, tDir),
+        IvfIndex.load(spark, vDir, "vec_id", "embedding"), docs, "text",
+        ids, kBranch = 10, k = 10, nprobe = 2)
+      df.collect()
+      df
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec        => nodes(q.plan)
+      case o => o +: (o.children ++ o.subqueries).flatMap(nodes)
+    }
+    def scans(df: DataFrame, root: String): Int =
+      nodes(df.queryExecution.executedPlan).count {
+        case s: FileSourceScanExec =>
+          s.metadata.get("Location").exists(_.contains(root))
+        case _ => false
+      }
+    def stageCode(df: DataFrame): Set[String] =
+      codegenStringSeq(df.queryExecution.executedPlan).map(_._2
+        .replaceAll("(CodegenStage|codegenStageId=)\\d+", "$1")).toSet
+    val (two, six) = (search(2), search(6))
+    for (df <- Seq(two, six))
+      assert(scans(df, "postings") == 1 && scans(df, "cells") == 1,
+        s"scans per side: ${scans(df, "postings")} postings, " +
+          s"${scans(df, "cells")} cells")
+    assert(stageCode(two).nonEmpty && stageCode(two) == stageCode(six),
+      "the 2- and 6-part layouts compiled different whole-stage code")
+    assert(rows(two).nonEmpty && rows(two) == rows(six))
+  }
+
   test("a query id absent from the corpus resolves to no request rows: " +
       "alone it answers nothing, beside a present id it leaves that " +
       "id's answer unchanged") {

@@ -134,6 +134,35 @@ class TextIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("a load skips a segment directory without stats (a crashed " +
+      "append, the segment's commit point missing) and the retry " +
+      "commits it") {
+    import org.apache.spark.sql.functions.col
+    val docs = Tables.documents(spark, sf)
+    val part = (r: Int) => docs.filter(col("doc_id") % 3 === r)
+    val dir = Files.createTempDirectory("graft-tidx-torn").toString
+    TextIndex.appendSegment(part(0), "text", "doc_id", dir, "a",
+      nBuckets = 16)
+    TextIndex.appendSegment(part(1), "text", "doc_id", dir, "b",
+      nBuckets = 16)
+    // the crash: postings written, stats never committed
+    TextIndex.appendSegment(part(2), "text", "doc_id", dir, "c",
+      nBuckets = 16)
+    assert(graft.engine.Generations.delete(s"$dir/segments/c/stats"))
+    val torn = TextIndex.load(spark, dir)
+    val twoParts = TextIndex.build(part(0).union(part(1)), "text", "doc_id",
+      nBuckets = 16)
+    assert(torn.nDocs == twoParts.nDocs && torn.sumDl == twoParts.sumDl)
+    assert(resultSet(torn.query(queries, "qtext", "query_id", k = 10)) ==
+      resultSet(twoParts.query(queries, "qtext", "query_id", k = 10)))
+    assert(TextIndex.appendSegment(part(2), "text", "doc_id", dir, "c",
+      nBuckets = 16))
+    val fresh = TextIndex.build(docs, "text", "doc_id", nBuckets = 16)
+    assert(resultSet(TextIndex.load(spark, dir)
+      .query(queries, "qtext", "query_id", k = 10)) ==
+      resultSet(fresh.query(queries, "qtext", "query_id", k = 10)))
+  }
+
   test("segmented index: queries SHARING a term score identically to a " +
       "fresh full build (df must not be inflated per sharing query)") {
     val docs = Tables.documents(spark, sf)
