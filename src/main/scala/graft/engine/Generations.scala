@@ -1,6 +1,8 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil,
+  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -39,7 +41,8 @@ import org.apache.spark.sql.types._
   *   - '''Delete sets''' ([[DeleteSet]]): ids first, marker last;
   *     retire marker first, ids second.
   *   - '''Partitioned index writes''' cluster by their partition
-  *     column ([[writePartitioned]]).
+  *     column ([[writePartitioned]]) and, like every write an ingest or
+  *     a delete runs, take [[LayoutWrite]].
   *   - '''Reads''': every layout frame is one [[scan]] over files
   *     listed on the driver.
   *
@@ -252,7 +255,7 @@ object Generations {
       * the marker may carry `content` (evaluated after the ids land). */
     def commit(name: String, ids: DataFrame, content: => String = ""): Unit = {
       val marker = markerPath(name)
-      ids.write.mode("overwrite").parquet(idsPath(name))
+      ids.write.options(LayoutWrite).mode("overwrite").parquet(idsPath(name))
       writeText(marker, content, stageDir = Some(root))
     }
 
@@ -343,21 +346,15 @@ object Generations {
   }
 
   /** The Spark schema a parquet footer records (Spark's own rule: its
-    * row metadata, else the converted parquet schema), made nullable. */
+    * row metadata, else the converted parquet schema), made nullable by
+    * the rule `spark.read` applies. */
   private def footerSchema(fs: FileSystem, file: FileStatus): StructType = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file,
       fs.getConf))
     val footer = try reader.getFooter finally reader.close()
-    def nullable(t: DataType): DataType = t match {
-      case s: StructType => StructType(s.map(f =>
-        f.copy(dataType = nullable(f.dataType), nullable = true)))
-      case ArrayType(e, _) => ArrayType(nullable(e), true)
-      case MapType(k, v, _) => MapType(nullable(k), nullable(v), true)
-      case other => other
-    }
-    nullable(ParquetFileFormat.readSchemaFromFooter(
-      new Footer(file.getPath, footer),
-      new ParquetToSparkSchemaConverter(SQLConf.get))).asInstanceOf[StructType]
+    org.apache.spark.sql.graft.ColumnBridge.asNullable(
+      ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+        new ParquetToSparkSchemaConverter(SQLConf.get)))
   }
 
   /** The files [[scan]] listed; `listFiles` keeps the partitions that
@@ -380,7 +377,24 @@ object Generations {
     def sizeInBytes: Long = parts.flatMap(_.files).map(_.getLen).sum
   }
 
-  // ── partitioned writes ──────────────────────────────────────────────
+  // ── writing a layout ────────────────────────────────────────────────
+
+  /** The write options of the index writes an ingest or a delete runs:
+    * `file:` paths go through [[LocalFs]] (uncached: the cached `file:`
+    * filesystem would ignore the impl). */
+  val LayoutWrite: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[LocalFs].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** Hadoop's local filesystem, setting a new file's or directory's mode
+    * in-process: without Hadoop's native library the stock one forks a
+    * `chmod` for each, ≈95 per serving ingest, each costing what the
+    * host's load makes it. Same files, same modes. */
+  final class LocalFs extends LocalFileSystem(new RawLocalFileSystem {
+    override def setPermission(p: Path, perm: FsPermission): Unit =
+      java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath,
+        java.nio.file.attribute.PosixFilePermissions.fromString(perm.toString))
+  })
 
   /** The one partitioned index write. Clustered by the partition column
     * first, every partition directory gets ONE file whatever the
@@ -390,6 +404,6 @@ object Generations {
     * scan-time tax on every later search. */
   def writePartitioned(df: DataFrame, partCol: String, mode: String,
       path: String): Unit =
-    df.repartition(col(partCol)).write.mode(mode).partitionBy(partCol)
-      .parquet(path)
+    df.repartition(col(partCol)).write.options(LayoutWrite).mode(mode)
+      .partitionBy(partCol).parquet(path)
 }

@@ -116,11 +116,12 @@ final class SegmentedTextIndex private[engine] (
           col(idCol), col("term"), col("tf"), col("dl"))
         .repartition(col(queryIdCol))
     val df = count(lit(1)).over(Window.partitionBy(queryIdCol, "term"))
-    val idf = log(lit(1.0) +
-      (lit(nDocs.toDouble) - df + lit(0.5)) / (df + lit(0.5)))
+    // bound, not inlined: every append changes them
+    val (n, avgDl) = (graft.functions.RequestTable.bound(nDocs.toDouble),
+      graft.functions.RequestTable.bound(sumDl.toDouble / nDocs))
+    val idf = log(lit(1.0) + (n - df + lit(0.5)) / (df + lit(0.5)))
     val fTf = (col("tf") * lit(2.2)) /
-      (col("tf") + lit(1.2) * (lit(0.25) +
-        (lit(0.75) * col("dl")) / lit(sumDl.toDouble / nDocs)))
+      (col("tf") + lit(1.2) * (lit(0.25) + (lit(0.75) * col("dl")) / avgDl))
     val contrib = round(idf * fTf * lit(1000000.0)).cast("long")
       .as("__contrib")
     val scored =
@@ -322,7 +323,8 @@ object TextIndex {
     import spark.implicits._
     Seq((idx.nDocs, idx.sumDl, idx.nBuckets, idx.idCol)).toDF(
         "n_docs", "sum_dl", "n_buckets", "id_col")
-      .write.mode("errorifexists").parquet(s"$seg/stats")
+      .write.options(Generations.LayoutWrite)
+      .mode("errorifexists").parquet(s"$seg/stats")
   }
 
   /** [[SegmentedTextIndex#save]]: one segment, `base`, at a path that

@@ -2,11 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Request data resolved on the driver and bound into a search plan BY
   * REFERENCE: a hash table from a key (a term, a query id) to the
@@ -57,6 +58,27 @@ object RequestTable {
   def lookup(key: Column, table: RequestTable): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(RequestLookup(ColumnBridge.expression(key), table))
+  }
+
+  /** Column API: `value` bound by reference ([[BoundDouble]]). */
+  def bound(value: Double): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(BoundDouble(value))
+}
+
+/** A double resolved from the data (a corpus size, a mean length) and
+  * bound into the plan BY REFERENCE: a literal is inlined into the
+  * generated source, so each new value would compile new code. Not
+  * foldable, so the optimizer keeps it a leaf; the arithmetic around
+  * it, and so every result bit, is the literal's. */
+case class BoundDouble(value: Double) extends LeafExpression {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("bound", Double.box(value), "java.lang.Double")
+    ev.copy(code = code"double ${ev.value} = $ref.doubleValue();",
+      isNull = FalseLiteral)
   }
 }
 

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge for the library's custom Catalyst
   * functions. Spark 4 made `ExpressionUtils` private[sql]; a subpackage
@@ -19,4 +20,7 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `t` with every field, element and value nullable: `spark.read`'s rule. */
+  def asNullable(t: StructType): StructType = t.asNullable
 }

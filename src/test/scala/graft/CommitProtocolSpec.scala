@@ -384,4 +384,31 @@ class CommitProtocolSpec extends AnyFunSuite {
       s"_deletes listed $plainLists (plain) and $segLists (segmented) times")
     assert(p.nDocs == 197L && s.nDocs == 197L)
   }
+
+  test("a layout write goes through Generations.LocalFs on the local " +
+      "disk and leaves the files and modes the stock filesystem leaves") {
+    import java.nio.file.{Path => JPath}
+    import scala.jdk.CollectionConverters._
+    val conf = new org.apache.hadoop.conf.Configuration(
+      spark.sparkContext.hadoopConfiguration)
+    Generations.LayoutWrite.foreach { case (k, v) => conf.set(k, v) }
+    assert(new org.apache.hadoop.fs.Path("file:///").getFileSystem(conf)
+      .isInstanceOf[Generations.LocalFs])
+    val df = corpus.withColumn("__bucket", ($"doc_id" % 4).cast("int"))
+    val (stock, layout) = (fileRoot("graft-cp-stock"),
+      fileRoot("graft-cp-local"))
+    df.repartition($"__bucket").write.mode("overwrite")
+      .partitionBy("__bucket").parquet(stock)
+    Generations.writePartitioned(df, "__bucket", "overwrite", layout)
+    // part-file names carry a per-write id: compare names without it
+    def tree(root: String): Seq[(String, String)] = {
+      val r = java.nio.file.Paths.get(root)
+      Files.walk(r).iterator().asScala.filter(_ != r).map { (p: JPath) =>
+        (r.relativize(p).toString.replaceAll("part-\\d+-[0-9a-f-]+", "part"),
+          java.nio.file.attribute.PosixFilePermissions.toString(
+            Files.getPosixFilePermissions(p)))
+      }.toSeq.sorted
+    }
+    assert(tree(layout).nonEmpty && tree(layout) == tree(stock))
+  }
 }

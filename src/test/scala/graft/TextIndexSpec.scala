@@ -163,6 +163,31 @@ class TextIndexSpec extends AnyFunSuite {
       resultSet(fresh.query(queries, "qtext", "query_id", k = 10)))
   }
 
+  test("an append that changes the corpus stats leaves a query's " +
+      "whole-stage code unchanged: N and the mean length are bound, " +
+      "not inlined") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val docs = Tables.documents(spark, sf)
+    val dir = Files.createTempDirectory("graft-tidx-bound").toString
+    def code(): Set[String] = {
+      val df = TextIndex.load(spark, dir)
+        .query(queries, "qtext", "query_id", k = 10)
+      df.collect()
+      codegenStringSeq(df.queryExecution.executedPlan).map(_._2
+        .replaceAll("(CodegenStage|codegenStageId=)\\d+", "$1")).toSet
+    }
+    TextIndex.appendSegment(docs.filter(col("doc_id") % 3 === 0), "text",
+      "doc_id", dir, "a", nBuckets = 16)
+    val before = (TextIndex.load(spark, dir).nDocs, code())
+    TextIndex.appendSegment(docs.filter(col("doc_id") % 3 =!= 0), "text",
+      "doc_id", dir, "b", nBuckets = 16)
+    val after = (TextIndex.load(spark, dir).nDocs, code())
+    assert(after._1 > before._1)
+    assert(before._2.nonEmpty && after._2 == before._2,
+      "the append compiled new whole-stage code for the query")
+  }
+
   test("segmented index: queries SHARING a term score identically to a " +
       "fresh full build (df must not be inflated per sharing query)") {
     val docs = Tables.documents(spark, sf)
